@@ -54,56 +54,65 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from dm_spark.operators.identity import ladder_identity_expr
 
 LINEAGE_COLS = ["_cdc_ts", "_cdc_file_seq", "_cdc_pos"]
-HASH_SEED_COL = "__dm_bucket"
 
-# ------------------------------------------------------------------ AQE guard
+# ------------------------------------------------------- session confs
 # The merge/compact write plan is union -> fixed repartition(B) ->
 # window -> filter -> write: no joins, and AQE never coalesces an
 # explicit repartition, so adaptive execution cannot improve the plan
-# at ANY scale — it only inserts a QueryStage materialization barrier
-# and a replanning pass per micro-batch (measured at sf0.1: ~0.4-0.7s
-# per 4-merge replay query; the per-batch latency also rides every
-# streaming trigger). AQE is therefore toggled off around these
-# actions and restored after. Depth-counted per session so the
-# multi-target merge thread pool (plans/replay.py) cannot interleave
-# a restore under a sibling's toggle; DM_SPARK_MERGE_AQE=keep opts
-# out for callers that merge join-heavy upstream plans.
+# at ANY scale — it only runs each query stage as a job of its own and
+# adds a replanning pass (measured at sf0.1: ~0.4-0.7s per 4-merge
+# replay query; the per-batch latency also rides every streaming
+# trigger). AQE is therefore toggled off around these actions, on the
+# session that plans them: the DataFrame's own (a `foreachBatch`
+# DataFrame runs on the stream's cloned session, not the lake's).
+# Depth-counted per JVM session and key so the multi-target merge
+# thread pool (plans/replay.py) cannot interleave a restore under a
+# sibling's toggle; DM_SPARK_MERGE_AQE=keep opts out for callers that
+# merge join-heavy upstream plans.
 import threading as _threading
 from contextlib import contextmanager as _contextmanager
 
-_AQE_LOCK = _threading.Lock()
-_AQE_STATE: dict[int, list] = {}  # id(spark) -> [depth, prev_value]
+_CONF_LOCK = _threading.Lock()
+_CONF_STATE: dict[tuple[str, str], list] = {}  # (session uuid, key) -> [depth, prev]
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 @_contextmanager
-def _merge_aqe_off(spark):
-    if os.environ.get("DM_SPARK_MERGE_AQE") == "keep":
-        yield
-        return
-    key = "spark.sql.adaptive.enabled"
-    sid = id(spark)
-    with _AQE_LOCK:
-        st = _AQE_STATE.setdefault(sid, [0, None])
+def _session_conf(spark: SparkSession, key: str, value: str):
+    sid = (spark._jsparkSession.sessionUUID(), key)  # noqa: SLF001
+    with _CONF_LOCK:
+        st = _CONF_STATE.setdefault(sid, [0, None])
         if st[0] == 0:
-            try:
-                st[1] = spark.conf.get(key)
-            except Exception:  # noqa: BLE001
-                st[1] = "true"
-            spark.conf.set(key, "false")
+            st[1] = spark.conf.get(key, None)
+            spark.conf.set(key, value)
         st[0] += 1
     try:
         yield
     finally:
-        with _AQE_LOCK:
-            st = _AQE_STATE[sid]
+        with _CONF_LOCK:
             st[0] -= 1
             if st[0] == 0:
-                spark.conf.set(key, st[1])
-                del _AQE_STATE[sid]
+                if st[1] is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, st[1])
+                del _CONF_STATE[sid]
+
+
+@_contextmanager
+def _merge_aqe_off(spark: SparkSession):
+    if os.environ.get("DM_SPARK_MERGE_AQE") == "keep":
+        yield
+        return
+    with _session_conf(spark, "spark.sql.adaptive.enabled", "false"):
+        yield
+
+
 # failpoint seam (the reference's gofail analog, used all over its
 # integration suites): tests inject a stall between the manifest write
 # and the HEAD swap to exercise the fencing re-read; None in production
@@ -251,16 +260,145 @@ def _merge_key_exprs(meta: "_Meta") -> list:
     return _norm_key_cols(meta.key, fields)
 
 
-def _bucket_expr(meta: "_Meta"):
-    """Bucket id == Spark's own shuffle slot MOD n_buckets for
-    `repartition(k*B, keys)`: pmod(murmur3(keys), B) ==
-    pmod(murmur3(keys), k*B) % B for any k >= 1. This identity lets the
-    merge write FLAT parquet (no dynamic-partition writer, ~2x faster
-    commit) — the output task index mod B IS the bucket id, recovered
-    from part-NNNNN file names for the manifest — while the shuffle
-    fans out over k*B slots so a merge into few buckets still uses
-    every core (see `LakeTable._merge_slots`)."""
-    return F.pmod(F.hash(*_merge_key_exprs(meta)), F.lit(meta.n_buckets)).cast("int")
+_CHANGE_TYPES = {"op": "string", "_cdc_ts": "timestamp", "_cdc_file_seq": "bigint", "_cdc_pos": "bigint"}
+
+
+class _Shape:
+    """Every Column a table's writes and reads are built from, compiled
+    once per table shape (schema fields, key, unique_keys, lww_strategy)
+    — as the reference resolves a table's schema once through its
+    tracker and reuses it for every event (syncer/syncer.go:2021,
+    getTableInfo :673-716). A Column costs several py4j round trips:
+    rebuilding these per micro-batch was ~1,000 round trips before the
+    merge's first Spark job. Observations stay fresh per action."""
+
+    def __init__(self, meta: "_Meta"):
+        self._fields = meta.fields()
+        self._strategy = meta.lww_strategy
+        self.key_exprs = _merge_key_exprs(meta)
+        nkeys = [f"__k{i}" for i in range(len(self.key_exprs))]
+        self.payload_cols = [F.col(f["name"]) for f in self._fields]
+        self.lineage_cols = [F.col(c) for c in LINEAGE_COLS]
+        sel = [*self.payload_cols, F.col("op"), *self.lineage_cols]
+        # the normalized merge keys ride as columns so the shuffle and
+        # the LWW group reuse one evaluation
+        self._keyed = sel + [c.alias(n) for n, c in zip(nkeys, self.key_exprs)]
+        self._slots = [F.col(n) for n in nkeys]
+        desc = [F.col(c).desc() for c in LINEAGE_COLS]
+        if self._strategy == "sort":
+            self._rn = F.row_number().over(Window.partitionBy(*self._slots).orderBy(*desc))
+            self._first = F.col("__rn") == 1
+        else:
+            self._winner = F.max_by(F.struct(*sel), F.struct(*self.lineage_cols)).alias("__w")
+            self._unwrap = F.col("__w.*")
+        self._not_delete = F.col("op") != "D"
+        self._cow_out = self.payload_cols + self.lineage_cols
+        self._mor_out = sel
+        # merge-on-read reads resolve base+delta on the key expressions
+        self._read_rn = F.row_number().over(
+            Window.partitionBy(*self.key_exprs).orderBy(*desc)
+        )
+        self._read_keep = (F.col("__rn") == 1) & self._not_delete
+        # incoming-batch stats, observed on (or aggregated over) the batch
+        self.in_aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
+            F.max(F.struct("_cdc_file_seq", "_cdc_pos")).alias("loc"),
+            F.max("_cdc_ts").alias("mts"),
+        ]
+        self.rows_agg = F.count(F.lit(1)).alias("rows")
+        self._ins: dict[tuple, list] = {}
+        self._buckets: dict[int, object] = {}
+        self._projections: dict[tuple, tuple] = {}
+
+    def ins(self, in_cols: tuple[str, ...]) -> list:
+        """Select list turning an incoming change batch with columns
+        `in_cols` into exactly payload + op + lineage. Schema-evolution
+        tolerance: a source still emitting the old shape fills columns
+        added downstream — with the column's declared literal DEFAULT
+        when it has one, else NULL — and payload types are cast to the
+        current schema (downstream_more_column / widen scenarios in the
+        reference's suites; the reference's generated INSERT simply
+        omits unknown columns and the downstream TiDB applies ITS
+        default, syncer/dml.go — the default-fill mirrors that exactly).
+        Lineage is cast to its declared types so every data file's
+        physical schema is the one its manifest entry declares."""
+        cols = self._ins.get(in_cols)
+        if cols is None:
+            have = set(in_cols)
+            cols = [
+                (F.col(f["name"]) if f["name"] in have else F.lit(f.get("default")))
+                .cast(f["type"]).alias(f["name"])
+                for f in self._fields
+            ] + [F.col(c).cast(_CHANGE_TYPES[c]).alias(c) for c in ["op"] + LINEAGE_COLS]
+            self._ins[in_cols] = cols
+        return cols
+
+    def bucket(self, n_buckets: int):
+        """Bucket id == Spark's own shuffle slot MOD n_buckets for
+        `repartition(k*B, keys)`: pmod(murmur3(keys), B) ==
+        pmod(murmur3(keys), k*B) % B for any k >= 1. This identity lets
+        the merge write FLAT parquet (no dynamic-partition writer, ~2x
+        faster commit) — the output task index mod B IS the bucket id,
+        recovered from part-NNNNN file names for the manifest — while
+        the shuffle fans out over k*B slots so a merge into few buckets
+        still uses every core (see `LakeTable._merge_slots`). Only the
+        copy-on-write prune pass evaluates it."""
+        b = self._buckets.get(n_buckets)
+        if b is None:
+            b = self._buckets[n_buckets] = F.pmod(
+                F.hash(*self.key_exprs), F.lit(n_buckets)
+            ).cast("int")
+        return b
+
+    def lww(self, df: DataFrame, n_slots: int, keep_deletes: bool) -> DataFrame:
+        """The one LWW write plan of merge, compaction and rescale: key
+        the payload + op + lineage rows, repartition them on the keys
+        (slot == bucket, see `bucket`), keep each key's newest row by
+        (ts, file_seq, pos). Merge-on-read deltas keep tombstones;
+        base files drop them. One shuffle: the window (or the max_by
+        aggregate, lww_strategy="hash") reuses the repartition."""
+        rep = df.select(*self._keyed).repartition(n_slots, *self._slots)
+        if self._strategy == "sort":
+            res = rep.withColumn("__rn", self._rn).where(self._first)
+        else:
+            res = rep.groupBy(*self._slots).agg(self._winner).select(self._unwrap)
+        if keep_deletes:
+            return res.select(*self._mor_out)
+        return res.where(self._not_delete).select(*self._cow_out)
+
+    def resolve_read(self, df: DataFrame) -> DataFrame:
+        """Merge-on-read resolution at read time: each key's newest row
+        across base + delta files, tombstones dropped (keeps `__rn`)."""
+        return df.withColumn("__rn", self._read_rn).where(self._read_keep)
+
+    def projection(self, meta: "_Meta", sv: int, is_delta: bool, extra: bool, with_op: bool):
+        """(file schema DDL, select list) reading files written under
+        schema version `sv` in the current shape, by field id: a rename
+        aliases, an add fills the literal DEFAULT (MySQL existing-row
+        backfill) or NULL, a widen casts. The file schema is the one
+        the writer cast to, so the read never infers it."""
+        old_fields = meta.schema_history[str(sv)]
+        pk = (sv, is_delta, extra, with_op, json.dumps(old_fields, sort_keys=True))
+        hit = self._projections.get(pk)
+        if hit is None:
+            old = {f["id"]: f for f in old_fields}
+            cols = []
+            for f_ in self._fields:
+                o = old.get(f_["id"])
+                src = F.lit(f_.get("default")) if o is None else F.col(o["name"])
+                cols.append(src.cast(f_["type"]).alias(f_["name"]))
+            if extra:
+                cols += self.lineage_cols
+            if with_op:
+                cols.append(F.col("op") if is_delta else F.lit("I").alias("op"))
+            stored = [(f["name"], f["type"]) for f in old_fields]
+            stored += [(c, _CHANGE_TYPES[c]) for c in LINEAGE_COLS]
+            if is_delta:
+                stored.append(("op", "string"))
+            ddl = ", ".join(f"`{n}` {t}" for n, t in stored)
+            hit = self._projections[pk] = (ddl, cols)
+        return hit
 
 
 class LakeTable:
@@ -269,6 +407,19 @@ class LakeTable:
         self.path = path
         self.meta_dir = os.path.join(path, "_meta")
         self.data_dir = os.path.join(path, "data")
+        self._shapes: dict[str, _Shape] = {}
+
+    def _shape(self, meta: _Meta) -> _Shape:
+        """The compiled expressions of `meta`'s shape (keeps the last few)."""
+        k = json.dumps(
+            [meta.fields(), meta.key, meta.unique_keys, meta.lww_strategy], sort_keys=True
+        )
+        shape = self._shapes.get(k)
+        if shape is None:
+            if len(self._shapes) >= 4:
+                self._shapes.pop(next(iter(self._shapes)))
+            shape = self._shapes[k] = _Shape(meta)
+        return shape
 
     # ------------------------------------------------------------- meta
     def _head_version(self) -> int:
@@ -530,38 +681,25 @@ class LakeTable:
         return t
 
     # -------------------------------------------------------------- read
-    def _projection(self, file_sv: int, cur: list[dict], meta: _Meta, extra: list[str]):
-        old = {f["id"]: f for f in meta.schema_history[str(file_sv)]}
-        cols = []
-        for f_ in cur:
-            o = old.get(f_["id"])
-            if o is None:
-                # column added after this file was written: fill the
-                # declared literal DEFAULT (MySQL existing-row backfill
-                # semantics) — None when the ADD carried no literal
-                cols.append(F.lit(f_.get("default")).cast(f_["type"]).alias(f_["name"]))
-            else:
-                cols.append(F.col(o["name"]).cast(f_["type"]).alias(f_["name"]))
-        cols += [F.col(c) for c in extra]
-        return cols
-
     def _read_files(
         self, meta: _Meta, entries: list[dict], with_lineage: bool, with_op: bool = False
     ) -> DataFrame | None:
+        """One scan per (schema version, delta) group of `entries`,
+        projected to the current schema. The manifest names every file
+        and its schema, so the read passes the schema and lists paths
+        driver-side: above 32 explicit paths Spark would otherwise run a
+        listing job (one task per path) and a schema-inference job."""
         if not entries:
             return None
-        cur = meta.fields()
-        extra = LINEAGE_COLS if with_lineage else []
+        shape = self._shape(meta)
         by_grp: dict[tuple, list[str]] = {}
         for e in entries:
             by_grp.setdefault((e["schema_version"], bool(e.get("delta"))), []).append(e["path"])
         parts = []
-        for (sv, is_delta), paths in by_grp.items():
-            df = self.spark.read.parquet(*paths)
-            cols = self._projection(sv, cur, meta, extra)
-            if with_op:
-                cols.append((F.col("op") if is_delta else F.lit("I")).alias("op"))
-            parts.append(df.select(*cols))
+        with _session_conf(self.spark, _LISTING_THRESHOLD, str(2**31 - 1)):
+            for (sv, is_delta), paths in by_grp.items():
+                ddl, cols = shape.projection(meta, sv, is_delta, with_lineage, with_op)
+                parts.append(self.spark.read.schema(ddl).parquet(*paths).select(*cols))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -582,15 +720,8 @@ class LakeTable:
             ddl = ", ".join(f"{f['name']} {f['type']}" for f in meta.fields())
             return self.spark.createDataFrame([], ddl)
         if has_delta:
-            payload = [f["name"] for f in meta.fields()]
-            w = Window.partitionBy(*_merge_key_exprs(meta)).orderBy(
-                *[F.col(c).desc() for c in LINEAGE_COLS]
-            )
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .where((F.col("__rn") == 1) & (F.col("op") != "D"))
-                .select(*payload)
-            )
+            shape = self._shape(meta)
+            df = shape.resolve_read(df).select(*shape.payload_cols)
         return df
 
     def schema_fields(self) -> list[dict]:
@@ -601,8 +732,8 @@ class LakeTable:
         """The change-row schema string: payload + op + lineage
         (+ _change_version) — single source for the three surfaces that
         must agree (snapshot_changes, changes, changes_stream)."""
-        ddl = ", ".join(f"{f['name']} {f['type']}" for f in meta.fields())
-        ddl += ", op string, _cdc_ts timestamp, _cdc_file_seq bigint, _cdc_pos bigint"
+        cols = [(f["name"], f["type"]) for f in meta.fields()] + list(_CHANGE_TYPES.items())
+        ddl = ", ".join(f"{n} {t}" for n, t in cols)
         if with_tag:
             ddl += ", _change_version int"
         return ddl
@@ -622,16 +753,8 @@ class LakeTable:
         df = self._read_files(meta, entries, with_lineage=True, with_op=True)
         if df is None:
             return self.spark.createDataFrame([], self._changes_ddl(meta))
-        has_delta = any(e.get("delta") for e in entries)
-        if has_delta:
-            w = Window.partitionBy(*_merge_key_exprs(meta)).orderBy(
-                *[F.col(c).desc() for c in LINEAGE_COLS]
-            )
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .where((F.col("__rn") == 1) & (F.col("op") != "D"))
-                .drop("__rn")
-            )
+        if any(e.get("delta") for e in entries):
+            df = self._shape(meta).resolve_read(df)
         return df.select(*payload, F.lit("I").alias("op"), *LINEAGE_COLS)
 
     def changes(
@@ -832,14 +955,15 @@ class LakeTable:
         """
         meta = self._load_meta()
         meta._merge_epoch = int(epoch)  # transient; _commit strips _-keys
+        shape = self._shape(meta)
         if pre_reduce:
             from dm_spark.operators.dedup import lww_latest_salted
 
             if meta.unique_keys:
                 # ladder tables pre-reduce on the computed identity (the
                 # PK alone would conflate all null-PK rows into one key)
-                changes = self._tolerant(changes, meta).withColumn(
-                    "__dm_ident", _merge_key_exprs(meta)[0]
+                changes = changes.select(*shape.ins(tuple(changes.columns))).withColumn(
+                    "__dm_ident", shape.key_exprs[0]
                 )
                 changes = lww_latest_salted(
                     changes, ["__dm_ident"], LINEAGE_COLS, n_salts=pre_reduce
@@ -866,64 +990,22 @@ class LakeTable:
                 if prev is None or tuple(prev) < tuple(cand):
                     meta.table_points[t] = cand
 
-        bexpr = _bucket_expr(meta)
         # merge makes two passes over the incoming batch (bucket/stats
         # agg, then the LWW merge) — persist so an expensive upstream
         # (pandas-UDF wire decode) runs once. MEMORY_AND_DISK: a micro-
         # batch must never OOM the executor at scale.
-        from pyspark.storagelevel import StorageLevel
-
-        with _merge_aqe_off(self.spark):
+        with _merge_aqe_off(changes.sparkSession):
             if meta.write_mode == "mor":
                 return self._merge_mor(changes, meta, batch_id)
             if not prune:
                 # bulk path is single-pass (stats ride the write job as
                 # observed metrics) — no second pass, so no cache needed
-                return self._merge_persisted(changes, meta, batch_id, bexpr, prune)
+                return self._merge_persisted(changes, meta, batch_id, prune)
             changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
             try:
-                return self._merge_persisted(changes, meta, batch_id, bexpr, prune)
+                return self._merge_persisted(changes, meta, batch_id, prune)
             finally:
                 changes.unpersist()
-
-    @staticmethod
-    def _tolerant(changes: DataFrame, meta: _Meta) -> DataFrame:
-        """Schema-evolution tolerance: a source still emitting the old
-        shape fills columns added downstream — with the column's
-        declared literal DEFAULT when it has one, else NULL — and
-        payload types are cast to the current schema
-        (downstream_more_column / widen scenarios in the reference's
-        suites; the reference's generated INSERT simply omits unknown
-        columns and the downstream TiDB applies ITS default,
-        syncer/dml.go — the default-fill mirrors that exactly)."""
-        # ONE select, not a withColumn per field: each withColumn copies
-        # and re-analyzes the whole logical plan driver-side — measured
-        # overhead on the per-batch merge path (guide §1.2 step 2; the
-        # resulting projection is identical)
-        have = set(changes.columns)
-        declared = {f_["name"] for f_ in meta.fields()}
-        cols = [
-            (
-                F.col(f_["name"]).cast(f_["type"]).alias(f_["name"])
-                if f_["name"] in have
-                else F.lit(f_.get("default")).cast(f_["type"]).alias(f_["name"])
-            )
-            for f_ in meta.fields()
-        ]
-        passthrough = [F.col(c) for c in changes.columns if c not in declared]
-        return changes.select(*cols, *passthrough)
-
-    def _resolve_lww(self, rep: DataFrame, meta: _Meta, payload: list[str], nkeys: list[str]) -> DataFrame:
-        """One-shuffle-reused LWW resolution; keeps op (tombstones)."""
-        if meta.lww_strategy == "sort":
-            w = Window.partitionBy(*nkeys).orderBy(
-                *[F.col(c).desc() for c in LINEAGE_COLS]
-            )
-            return rep.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1)
-        winner = F.max_by(
-            F.struct(*payload, "op", *LINEAGE_COLS), F.struct(*LINEAGE_COLS)
-        ).alias("__w")
-        return rep.groupBy(*nkeys).agg(winner).select("__w.*")
 
     def _commit_files(self, out: DataFrame, meta: _Meta, allowed: list[int], delta: bool) -> dict:
         """Write `out` flat (slot==bucket identity) and return
@@ -952,30 +1034,13 @@ class LakeTable:
         """Merge-on-read write path: LWW-dedupe the batch, append it as
         per-bucket DELTA files (tombstones kept) — write cost O(batch),
         no base read (Iceberg MoR / equality-delete shape). Readers and
-        `compact()` resolve base+delta LWW."""
-        key = meta.key
-        payload = [f["name"] for f in meta.fields()]
-        changes = self._tolerant(changes, meta)
-        sel = payload + ["op"] + LINEAGE_COLS
-        obs_in = Observation()
-        inc = changes.select(*sel).observe(
-            obs_in,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
-            F.max(F.struct("_cdc_file_seq", "_cdc_pos")).alias("loc"),
-            F.max("_cdc_ts").alias("mts"),
-        )
-        kexprs = _merge_key_exprs(meta)
-        nkeys = [f"__k{i}" for i in range(len(kexprs))]
-        inc = inc.select(
-            "*", *[c.alias(n) for n, c in zip(nkeys, kexprs)]
-        )
-        obs = Observation()
-        rep = inc.repartition(self._merge_slots(meta), *[F.col(n) for n in nkeys])
-        out = (
-            self._resolve_lww(rep, meta, payload, nkeys)
-            .select(*payload, "op", *LINEAGE_COLS)
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
+        `compact()` resolve base+delta LWW. One Spark job: the batch
+        stats ride the write as observed metrics."""
+        shape = self._shape(meta)
+        obs_in, obs = Observation(), Observation()
+        inc = changes.select(*shape.ins(tuple(changes.columns))).observe(obs_in, *shape.in_aggs)
+        out = shape.lww(inc, self._merge_slots(meta), keep_deletes=True).observe(
+            obs, shape.rows_agg
         )
         new_lists = self._commit_files(out, meta, list(range(meta.n_buckets)), delta=True)
         if meta.change_feed:
@@ -1012,27 +1077,8 @@ class LakeTable:
                 targets.append(b)
         if not targets:
             return 0
-        payload = [f["name"] for f in meta.fields()]
         entries = [e for b in targets for e in meta.buckets[str(b)]]
-        base = self._read_files(meta, entries, with_lineage=True, with_op=True)
-        if base is None:
-            return 0
-        with _merge_aqe_off(self.spark):
-            return self._compact_exec(meta, targets, payload, base)
-
-    def _compact_exec(self, meta, targets, payload, base) -> int:
-        kexprs = _merge_key_exprs(meta)
-        nkeys = [f"__k{i}" for i in range(len(kexprs))]
-        base = base.select(
-            "*", *[c.alias(n) for n, c in zip(nkeys, kexprs)]
-        )
-        rep = base.repartition(self._merge_slots(meta), *[F.col(n) for n in nkeys])
-        out = (
-            self._resolve_lww(rep, meta, payload, nkeys)
-            .where(F.col("op") != "D")
-            .select(*payload, *LINEAGE_COLS)
-        )
-        new_lists = self._commit_files(out, meta, targets, delta=False)
+        new_lists = self._rewrite_base(meta, entries, targets)
         for b in targets:
             meta.buckets[str(b)] = new_lists.get(str(b), [])
         meta.version += 1
@@ -1040,6 +1086,16 @@ class LakeTable:
         meta.lineage = meta.lineage[-200:]
         self._commit(meta, dirty=set(targets))
         return len(targets)
+
+    def _rewrite_base(self, meta: _Meta, entries: list[dict], targets: list[int]) -> dict:
+        """LWW-resolve `entries` into base files (no tombstones) of the
+        buckets `targets`; bucket -> new file entries."""
+        base = self._read_files(meta, entries, with_lineage=True, with_op=True)
+        if base is None:
+            return {}
+        with _merge_aqe_off(base.sparkSession):
+            out = self._shape(meta).lww(base, self._merge_slots(meta), keep_deletes=False)
+            return self._commit_files(out, meta, targets, delta=False)
 
     def rescale(self, n_buckets: int) -> int:
         """Re-bucket the table to a new bucket count — the grow/split
@@ -1052,28 +1108,12 @@ class LakeTable:
         meta = self._load_meta()
         if n_buckets == meta.n_buckets:
             return meta.version
-        payload = [f["name"] for f in meta.fields()]
         entries = [e for lst in meta.buckets.values() for e in lst]
         old_count = meta.n_buckets
         meta.n_buckets = n_buckets
         meta.bucket_chunks = {}  # chunk geometry changes with the count
-        base = self._read_files(meta, entries, with_lineage=True, with_op=True)
-        meta.buckets = {str(b): [] for b in range(n_buckets)}
-        if base is not None:
-            kexprs = _merge_key_exprs(meta)
-            nkeys = [f"__k{i}" for i in range(len(kexprs))]
-            base = base.select(
-                "*", *[c.alias(n) for n, c in zip(nkeys, kexprs)]
-            )
-            rep = base.repartition(self._merge_slots(meta), *[F.col(n) for n in nkeys])
-            out = (
-                self._resolve_lww(rep, meta, payload, nkeys)
-                .where(F.col("op") != "D")
-                .select(*payload, *LINEAGE_COLS)
-            )
-            new_lists = self._commit_files(out, meta, list(range(n_buckets)), delta=False)
-            for b, files in new_lists.items():
-                meta.buckets[str(b)] = files
+        new_lists = self._rewrite_base(meta, entries, list(range(n_buckets)))
+        meta.buckets = {str(b): new_lists.get(str(b), []) for b in range(n_buckets)}
         meta.version += 1
         meta.lineage.append(
             {"version": meta.version, "rescaled_from": old_count, "n_buckets": n_buckets}
@@ -1165,24 +1205,15 @@ class LakeTable:
         meta.lineage = meta.lineage[-200:]
         self._commit(meta, dirty=dirty)
 
-    def _merge_persisted(self, changes, meta, batch_id, bexpr, prune) -> MergeStats:
-        key = meta.key
-        payload = [f["name"] for f in meta.fields()]
-        changes = self._tolerant(changes, meta)
-        # the bucket column only feeds the prune pass; the bulk path
-        # repartitions on the key exprs directly (slot == bucket)
-        inc = changes.withColumn(HASH_SEED_COL, bexpr) if prune else changes
-
+    def _merge_persisted(self, changes, meta, batch_id, prune) -> MergeStats:
+        shape = self._shape(meta)
+        changes = changes.select(*shape.ins(tuple(changes.columns)))
         obs_in = None
         loc = None
         if prune:
             # extra pass over incoming: touched buckets + checkpoint + counts
-            agg = inc.agg(
-                F.collect_set(HASH_SEED_COL).alias("bks"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
-                F.max(F.struct("_cdc_file_seq", "_cdc_pos")).alias("loc"),
-                F.max("_cdc_ts").alias("mts"),
+            agg = changes.agg(
+                F.collect_set(shape.bucket(meta.n_buckets)).alias("bks"), *shape.in_aggs
             ).collect()[0]
             touched = sorted(agg["bks"] or [])
             loc = agg["loc"]
@@ -1201,6 +1232,7 @@ class LakeTable:
                 meta.totals["batches"] += 1
                 self._commit(meta, dirty=set())
                 return stats
+            inc = changes
         else:
             # bulk path: all buckets in play; stats ride the write job
             touched = list(range(meta.n_buckets))
@@ -1209,44 +1241,19 @@ class LakeTable:
             )
             obs_in = Observation()
             max_ts = None
-            inc = inc.observe(
-                obs_in,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
-                F.max(F.struct("_cdc_file_seq", "_cdc_pos")).alias("loc"),
-                F.max("_cdc_ts").alias("mts"),
-            )
+            inc = changes.observe(obs_in, *shape.in_aggs)
 
         base_entries = [e for b in touched for e in meta.buckets[str(b)]]
         base = self._read_files(meta, base_entries, with_lineage=True, with_op=True)
-        sel = payload + ["op"] + LINEAGE_COLS
-        inc = inc.select(*sel)
-        if base is not None:
-            merged = inc.unionByName(base.select(*sel))
-        else:
-            merged = inc
-
-        # normalize key columns once; repartition on THEM so the shuffle
-        # slot equals the bucket id (see _bucket_expr). The LWW step is a
-        # hash aggregation (max_by on the lineage-ordering struct) that
-        # reuses that clustering — single shuffle, no sort (hash agg
-        # scales better with cores than a window sort and replaces the
-        # reference's per-queue ordered apply, syncer/dml_worker.go).
-        kexprs = _merge_key_exprs(meta)
-        nkeys = [f"__k{i}" for i in range(len(kexprs))]
-        merged = merged.select(
-            "*", *[c.alias(n) for n, c in zip(nkeys, kexprs)]
-        )
+        merged = inc if base is None else inc.unionByName(base)
         obs = Observation()
-        rep = merged.repartition(self._merge_slots(meta), *[F.col(n) for n in nkeys])
-        resolved = self._resolve_lww(rep, meta, payload, nkeys)
-        out = (
-            resolved.where(F.col("op") != "D")
-            .select(*payload, *LINEAGE_COLS)
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
+        out = shape.lww(merged, self._merge_slots(meta), keep_deletes=False).observe(
+            obs, shape.rows_agg
         )
-        commit_dir = os.path.join(self.data_dir, f"commit-{meta.version + 1}-{uuid.uuid4().hex[:8]}")
-        out.write.mode("errorifexists").parquet(commit_dir)
+        # manifest: part-NNNNN index % n_buckets == bucket id (empty
+        # slots write no file; see _merge_slots). Touched buckets now
+        # point at the new commit's files.
+        new_lists = self._commit_files(out, meta, touched, delta=False)
         stats.rows_written = obs.get["rows"]
         if meta.change_feed:
             # CoW change feed: one extra flat write of the incoming
@@ -1257,7 +1264,7 @@ class LakeTable:
             chdir = os.path.join(
                 self.path, "_changes", f"v{meta.version + 1}-{uuid.uuid4().hex[:8]}"
             )
-            changes.select(*sel).write.mode("errorifexists").parquet(chdir)
+            changes.write.mode("errorifexists").parquet(chdir)
             meta.change_log[str(meta.version + 1)] = [
                 {"path": os.path.join(chdir, fn), "schema_version": meta.schema_version,
                  "delta": True}
@@ -1270,26 +1277,8 @@ class LakeTable:
             stats.n_deletes_in = m["nd"] or 0
             loc = m["loc"]
             max_ts = m["mts"]
-
-        # manifest: part-NNNNN index % n_buckets == bucket id (empty
-        # slots write no file; see _merge_slots). Touched buckets now
-        # point at the new commit's files.
-        new_lists: dict[str, list[dict]] = {str(b): [] for b in touched}
-        if os.path.isdir(commit_dir):
-            for fn, nrows in _parquet_files_with_rows(commit_dir):
-                if nrows == 0:
-                    continue  # schema-preserving empty part file
-                b = int(fn.split("-")[1]) % meta.n_buckets
-                new_lists.setdefault(str(b), []).append(
-                    {"path": os.path.join(commit_dir, fn), "schema_version": meta.schema_version}
-                )
-        stray = [b for b in new_lists if int(b) not in touched]
-        if stray:  # would mean the slot==bucket identity broke — refuse
-            raise RuntimeError(f"bucket/slot identity violated: {stray}")
-        for b, files in new_lists.items():
-            meta.buckets[str(b)] = files
-
-        stats.n_buckets_touched = len(touched)
+        for b in touched:
+            meta.buckets[str(b)] = new_lists.get(str(b), [])
         self._finish_commit(
             meta, batch_id, stats, loc, max_ts, mode="cow", dirty=set(touched)
         )
@@ -1301,14 +1290,15 @@ class LakeTable:
         replaces all data with `df` (payload columns only; lineage zeroed).
         """
         meta = self._load_meta()
-        payload = [f["name"] for f in meta.fields()]
-        out = (
-            df.select(*payload)
-            .withColumn("_cdc_ts", F.to_timestamp(F.lit("1970-01-01 00:00:00")))
-            .withColumn("_cdc_file_seq", F.lit(-1).cast("long"))
-            .withColumn("_cdc_pos", F.lit(-1).cast("long"))
+        # payload cast to the declared types: every data file's physical
+        # schema is the one its manifest entry declares (see _read_files)
+        out = df.select(
+            *[F.col(f["name"]).cast(f["type"]).alias(f["name"]) for f in meta.fields()],
+            F.to_timestamp(F.lit("1970-01-01 00:00:00")).alias("_cdc_ts"),
+            F.lit(-1).cast("long").alias("_cdc_file_seq"),
+            F.lit(-1).cast("long").alias("_cdc_pos"),
         )
-        out = out.repartition(self._merge_slots(meta), *_merge_key_exprs(meta))
+        out = out.repartition(self._merge_slots(meta), *self._shape(meta).key_exprs)
         commit_dir = os.path.join(self.data_dir, f"commit-{meta.version + 1}-{uuid.uuid4().hex[:8]}")
         out.write.mode("errorifexists").parquet(commit_dir)
         meta.buckets = {str(b): [] for b in range(meta.n_buckets)}
@@ -1377,7 +1367,7 @@ class LakeTable:
                 # MySQL/TiDB backfill EXISTING rows with a literal
                 # DEFAULT on ADD COLUMN (the reference inherits this by
                 # executing the DDL on live TiDB, syncer/syncer.go:
-                # 1117-1232); stored on the field so _projection fills
+                # 1117-1232); stored on the field so _Shape.projection fills
                 # it into files written under pre-DDL schema versions —
                 # no data rewrite, same field-id evolution
                 fld["default"] = action["default"]

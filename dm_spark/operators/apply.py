@@ -16,9 +16,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dm_spark.config import TaskConfig
-from dm_spark.operators.filters import ba_list_filter, event_type_filter, expression_filter
-from dm_spark.operators.mapping import apply_column_mappings, prune_generated_columns
-from dm_spark.operators.router import route_tables
+from dm_spark.operators.filters import (
+    all_of,
+    ba_list_predicate,
+    event_type_predicate,
+    expression_predicate,
+)
+from dm_spark.operators.mapping import column_mapping_steps, prune_generated_steps
+from dm_spark.operators.router import route_expr
 
 
 def _img_ladder_identity(
@@ -86,6 +91,21 @@ def flatten_changes(
     """
     if payload_fields is None:
         payload_fields = df.schema["after"].dataType.fieldNames()
+    keep = [c for c in ("target_table",) if c in df.columns]
+    for cols in flatten_selects(payload_fields, keep, key, unique_keys):
+        df = df.select(*cols)
+    return df
+
+
+def flatten_selects(
+    payload_fields: list[str],
+    keep: list[str],
+    key: list[str] | None = None,
+    unique_keys: list[list[str]] | None = None,
+) -> list[list]:
+    """The select lists :func:`flatten_changes` applies in order, for an
+    envelope whose `after` image has `payload_fields` and whose columns
+    `keep` pass through."""
     if key is None:
         from dm_spark.feed import KEY_COLS
 
@@ -93,7 +113,7 @@ def flatten_changes(
     key = [k for k in key if k in payload_fields]
     op, before, after = F.col("op"), F.col("before"), F.col("after")
     img = F.when(op == "D", before).otherwise(after)
-    keep = [c for c in ("target_table",) if c in df.columns]
+    keep = [F.col(c) for c in keep]
     lineage = [
         F.col("ts").alias("_cdc_ts"),
         F.col("file_seq").alias("_cdc_file_seq"),
@@ -101,9 +121,7 @@ def flatten_changes(
     ]
     if not key and not unique_keys:
         # no identity columns known: plain flatten (no split possible)
-        return df.select(
-            *keep, *[img.getField(f).alias(f) for f in payload_fields], op, *lineage
-        )
+        return [[*keep, *[img.getField(f).alias(f) for f in payload_fields], op, *lineage]]
     if unique_keys:
         b_id = _img_ladder_identity(before, key, unique_keys, payload_fields)
         a_id = _img_ladder_identity(after, key, unique_keys, payload_fields)
@@ -118,15 +136,16 @@ def flatten_changes(
         F.lit("D").alias("op"), *[before.getField(f).alias(f) for f in payload_fields]
     )
     rows = F.when(moved, F.array(dhalf, main)).otherwise(F.array(main))
-    ex = df.select(*keep, F.explode(rows).alias("__r"), *lineage)
-    return ex.select(
-        *keep,
-        *[F.col("__r").getField(f).alias(f) for f in payload_fields],
-        F.col("__r").getField("op").alias("op"),
-        "_cdc_ts",
-        "_cdc_file_seq",
-        "_cdc_pos",
-    )
+    r = F.col("__r")
+    return [
+        [*keep, F.explode(rows).alias("__r"), *lineage],
+        [
+            *keep,
+            *[r.getField(f).alias(f) for f in payload_fields],
+            r.getField("op").alias("op"),
+            *[F.col(c) for c in ("_cdc_ts", "_cdc_file_seq", "_cdc_pos")],
+        ],
+    ]
 
 
 class ApplyPipeline:
@@ -144,10 +163,43 @@ class ApplyPipeline:
     ):
         self.config = config
         self.location_floor = location_floor
+        # compiled transforms by (config, floor, envelope `after` fields)
+        self._compiled: dict[tuple, list] = {}
+        self._no_queries = None
 
     def transform(self, feed: DataFrame) -> DataFrame:
+        """Envelope -> flat change batch. The stages compile once per
+        envelope shape into DataFrame steps over prebuilt Columns — the
+        schema-tracker analog (the reference resolves a table's schema
+        once, syncer/syncer.go:2021, and reuses it for every event):
+        every `F.*`/Column call is several py4j round trips, and
+        rebuilding them per micro-batch cost ~1,500 round trips of
+        driver time. The key holds the config's repr, so a config
+        mutated in place recompiles too."""
+        key = (
+            repr(self.config),
+            self.location_floor,
+            tuple(feed.schema["after"].dataType.fieldNames()),
+        )
+        steps = self._compiled.get(key)
+        if steps is None:
+            if len(self._compiled) >= 8:
+                self._compiled.pop(next(iter(self._compiled)))
+            steps = self._compiled[key] = self._compile(feed)
+        for step in steps:
+            feed = step(feed)
+        return feed
+
+    def without_queries(self, feed: DataFrame) -> DataFrame:
+        """Drop query events (op='Q'): they carry DDL, not row images."""
+        if self._no_queries is None:
+            self._no_queries = F.col("op") != "Q"
+        return feed.where(self._no_queries)
+
+    def _compile(self, feed: DataFrame) -> list:
         c = self.config
-        df = feed
+        cs = c.case_sensitive
+        preds = []
         if self.location_floor is not None:
             fs, pos = self.location_floor
             loc = F.struct(F.col("file_seq"), F.col("pos"))
@@ -155,24 +207,38 @@ class ApplyPipeline:
                 F.lit(fs).cast("bigint").alias("file_seq"),
                 F.lit(pos).cast("bigint").alias("pos"),
             )
-            df = df.filter(loc > lo)
+            preds.append(loc > lo)
         if c.online_ddl:
-            from dm_spark.schema.online_ddl import filter_online_ddl_tables
+            from dm_spark.schema.online_ddl import online_ddl_predicate
 
-            df = filter_online_ddl_tables(df)
-        cs = c.case_sensitive
-        df = ba_list_filter(df, c.allow_tables, c.deny_tables, case_sensitive=cs)
-        df = event_type_filter(df, c.event_filters, case_sensitive=cs)
-        df = expression_filter(df, c.expr_filters, case_sensitive=cs)
-        df = apply_column_mappings(df, c.column_mappings, case_sensitive=cs)
+            preds.append(online_ddl_predicate())
+        preds += [
+            p
+            for p in (
+                ba_list_predicate(c.allow_tables, c.deny_tables, case_sensitive=cs),
+                event_type_predicate(c.event_filters, case_sensitive=cs),
+                expression_predicate(c.expr_filters, case_sensitive=cs),
+            )
+            if p is not None
+        ]
+        # every row filter precedes the image rewrites, so they AND into one
+        keep = all_of(preds)
+        steps = [] if keep is None else [lambda df: df.filter(keep)]
+        images = column_mapping_steps(c.column_mappings, case_sensitive=cs)
         if c.generated_columns:
-            df = prune_generated_columns(df, c.generated_columns)
-        df = route_tables(df, c.routes, case_sensitive=cs)
+            images += prune_generated_steps(c.generated_columns)
+        images.append(("target_table", route_expr(c.routes, case_sensitive=cs)))
+        steps += [lambda df, n=n, v=v: df.withColumn(n, v) for n, v in images]
+        df = feed
+        for step in steps:
+            df = step(df)
         # the configured key drives the key-changing-update split — a
         # task keyed differently from the feed default must still split
         # moved identities into DELETE(old)+upsert(new) (ADVICE r02);
         # unique_keys switches the split to ladder-identity movement
-        return flatten_changes(df, key=c.key, unique_keys=c.unique_keys or None)
+        payload = df.schema["after"].dataType.fieldNames()
+        selects = flatten_selects(payload, ["target_table"], c.key, c.unique_keys or None)
+        return steps + [lambda df, cols=cols: df.select(*cols) for cols in selects]
 
     def apply_batch(self, lakes: dict[str, "LakeTable"], batch: DataFrame, batch_id: int | None = None) -> dict:
         """Route-partitioned MERGE: one atomic commit per target table.

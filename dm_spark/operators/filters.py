@@ -26,6 +26,38 @@ def _matches(col: Column, pattern: str, case_sensitive: bool = False) -> Column:
     return col.rlike(pattern_to_regex(pattern, case_sensitive))
 
 
+def all_of(preds: list[Column]) -> Column | None:
+    """AND of keep-predicates (None for none). One filter over the AND
+    keeps exactly the rows a chain of per-predicate filters keeps: a
+    row survives iff every predicate is TRUE."""
+    out = None
+    for p in preds:
+        out = p if out is None else out & p
+    return out
+
+
+def _and_filter(df: DataFrame, pred: Column | None) -> DataFrame:
+    return df if pred is None else df.filter(pred)
+
+
+def ba_list_predicate(
+    allow: list[str] | None = None,
+    deny: list[str] | None = None,
+    table_col: str = "source_table",
+    case_sensitive: bool = False,
+) -> Column | None:
+    """Keep-predicate of :func:`ba_list_filter` (None: keeps every row)."""
+    c = F.col(table_col)
+    preds = []
+    if allow:
+        keep = F.lit(False)
+        for p in allow:
+            keep = keep | _matches(c, p, case_sensitive)
+        preds.append(keep)
+    preds += [~_matches(c, p, case_sensitive) for p in deny or []]
+    return all_of(preds)
+
+
 def ba_list_filter(
     df: DataFrame,
     allow: list[str] | None = None,
@@ -36,15 +68,22 @@ def ba_list_filter(
     """Keep rows whose source table passes the allow list (if any) and
     is not denied. Allow is evaluated first, as in the reference's
     block-allow-list semantics (dm/config/task.go:323)."""
-    c = F.col(table_col)
-    if allow:
-        keep = F.lit(False)
-        for p in allow:
-            keep = keep | _matches(c, p, case_sensitive)
-        df = df.filter(keep)
-    for p in deny or []:
-        df = df.filter(~_matches(c, p, case_sensitive))
-    return df
+    return _and_filter(df, ba_list_predicate(allow, deny, table_col, case_sensitive))
+
+
+def event_type_predicate(
+    rules: list[EventFilterRule], table_col: str = "source_table",
+    case_sensitive: bool = False,
+) -> Column | None:
+    """Keep-predicate of :func:`event_type_filter` (None: keeps every row)."""
+    return all_of([
+        ~(
+            _matches(F.col(table_col), r.pattern, case_sensitive)
+            & F.col("op").isin(list(r.ignore_ops))
+        )
+        for r in rules
+        if r.ignore_ops
+    ])
 
 
 def event_type_filter(
@@ -52,28 +91,15 @@ def event_type_filter(
     case_sensitive: bool = False,
 ) -> DataFrame:
     """Drop event classes (I/U/D) per table pattern."""
-    for r in rules:
-        if r.ignore_ops:
-            df = df.filter(
-                ~(
-                    _matches(F.col(table_col), r.pattern, case_sensitive)
-                    & F.col("op").isin(list(r.ignore_ops))
-                )
-            )
-    return df
+    return _and_filter(df, event_type_predicate(rules, table_col, case_sensitive))
 
 
-def expression_filter(
-    df: DataFrame, rules: list[ExprFilterRule], table_col: str = "source_table",
+def expression_predicate(
+    rules: list[ExprFilterRule], table_col: str = "source_table",
     case_sensitive: bool = False,
-) -> DataFrame:
-    """Drop DMLs matching user SQL expressions over the row images.
-
-    DM recompiles these against the tracked schema after each DDL
-    (syncer/syncer.go:2758); here `F.expr` resolves lazily against the
-    envelope struct, so schema evolution is free — re-invoke on the
-    post-DDL DataFrame.
-    """
+) -> Column | None:
+    """Keep-predicate of :func:`expression_filter` (None: keeps every row)."""
+    preds = []
     for r in rules:
         tbl = _matches(F.col(table_col), r.pattern, case_sensitive)
         drop = F.lit(False)
@@ -92,5 +118,19 @@ def expression_filter(
         # group.go): a NULL-evaluating expression (e.g. a nullable
         # column in a comparison) must KEEP the row — plain ~(cond)
         # is NULL for NULL cond and filter() would silently drop it
-        df = df.filter(~(tbl & drop).eqNullSafe(F.lit(True)))
-    return df
+        preds.append(~(tbl & drop).eqNullSafe(F.lit(True)))
+    return all_of(preds)
+
+
+def expression_filter(
+    df: DataFrame, rules: list[ExprFilterRule], table_col: str = "source_table",
+    case_sensitive: bool = False,
+) -> DataFrame:
+    """Drop DMLs matching user SQL expressions over the row images.
+
+    DM recompiles these against the tracked schema after each DDL
+    (syncer/syncer.go:2758); here `F.expr` resolves lazily against the
+    envelope struct, so schema evolution is free — re-invoke on the
+    post-DDL DataFrame.
+    """
+    return _and_filter(df, expression_predicate(rules, table_col, case_sensitive))

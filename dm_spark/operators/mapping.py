@@ -11,25 +11,36 @@ Mappings are applied to BOTH images (before/after) with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dm_spark.config import ColumnMappingRule, pattern_to_regex
+
+
+def column_mapping_steps(
+    rules: list[ColumnMappingRule], table_col: str = "source_table",
+    case_sensitive: bool = False,
+) -> list[tuple[str, Column]]:
+    """(image column, new value) per step of :func:`apply_column_mappings`,
+    in order: a later step sees the images earlier steps rewrote."""
+    steps = []
+    for r in rules:
+        cond = F.col(table_col).rlike(pattern_to_regex(r.pattern, case_sensitive))
+        for img in ("before", "after"):
+            scoped = r.expr.replace("IMG.", f"{img}.")
+            new_img = F.col(img).withField(r.column, F.expr(scoped))
+            steps.append(
+                (img, F.when(cond & F.col(img).isNotNull(), new_img).otherwise(F.col(img)))
+            )
+    return steps
 
 
 def apply_column_mappings(
     df: DataFrame, rules: list[ColumnMappingRule], table_col: str = "source_table",
     case_sensitive: bool = False,
 ) -> DataFrame:
-    for r in rules:
-        cond = F.col(table_col).rlike(pattern_to_regex(r.pattern, case_sensitive))
-        for img in ("before", "after"):
-            scoped = r.expr.replace("IMG.", f"{img}.")
-            new_img = F.col(img).withField(r.column, F.expr(scoped))
-            df = df.withColumn(
-                img,
-                F.when(cond & F.col(img).isNotNull(), new_img).otherwise(F.col(img)),
-            )
+    for img, value in column_mapping_steps(rules, table_col, case_sensitive):
+        df = df.withColumn(img, value)
     return df
 
 
@@ -104,12 +115,20 @@ def unsigned_reinterpret(df: DataFrame, columns: dict[str, int]) -> DataFrame:
     return df
 
 
-def prune_generated_columns(df: DataFrame, generated: list[str]) -> DataFrame:
-    """Generated columns cannot be written downstream — drop them from
-    both images (syncer/dml.go:358-395)."""
+def prune_generated_steps(generated: list[str]) -> list[tuple[str, Column]]:
+    """(image column, new value) per step of :func:`prune_generated_columns`."""
+    steps = []
     for img in ("before", "after"):
         col = F.col(img)
         for g in generated:
             col = col.dropFields(g)
-        df = df.withColumn(img, F.when(F.col(img).isNotNull(), col))
+        steps.append((img, F.when(F.col(img).isNotNull(), col)))
+    return steps
+
+
+def prune_generated_columns(df: DataFrame, generated: list[str]) -> DataFrame:
+    """Generated columns cannot be written downstream — drop them from
+    both images (syncer/dml.go:358-395)."""
+    for img, value in prune_generated_steps(generated):
+        df = df.withColumn(img, value)
     return df

@@ -13,10 +13,25 @@ mapping table would be the shape for thousands of rules.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dm_spark.config import RouteRule, pattern_to_regex
+
+
+def route_expr(
+    routes: list[RouteRule],
+    table_col: str = "source_table",
+    default_keep: bool = True,
+    case_sensitive: bool = False,
+) -> Column:
+    """The target-table CASE of :func:`route_tables`."""
+    expr = None
+    for r in routes:
+        cond = F.col(table_col).rlike(pattern_to_regex(r.pattern, case_sensitive))
+        expr = F.when(cond, F.lit(r.target)) if expr is None else expr.when(cond, F.lit(r.target))
+    fallback = F.col(table_col) if default_keep else F.lit(None).cast("string")
+    return fallback if expr is None else expr.otherwise(fallback)
 
 
 def route_tables(
@@ -30,12 +45,6 @@ def route_tables(
     """Add `target_col`; first matching rule wins (reference router
     precedence). Unrouted tables keep their source name when
     `default_keep`, else get NULL (caller may drop them)."""
-    expr = None
-    for r in routes:
-        cond = F.col(table_col).rlike(pattern_to_regex(r.pattern, case_sensitive))
-        expr = F.when(cond, F.lit(r.target)) if expr is None else expr.when(cond, F.lit(r.target))
-    if expr is None:
-        expr = F.col(table_col) if default_keep else F.lit(None).cast("string")
-    else:
-        expr = expr.otherwise(F.col(table_col) if default_keep else F.lit(None).cast("string"))
-    return df.withColumn(target_col, expr)
+    return df.withColumn(
+        target_col, route_expr(routes, table_col, default_keep, case_sensitive)
+    )

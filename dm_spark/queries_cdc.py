@@ -1618,7 +1618,7 @@ def q_ddl_default_backfill(spark, sf_dir):
     the declared literal default — the reference inherits that by
     executing the DDL on live TiDB (syncer/syncer.go:1117-1232); the
     lake mirrors it by filling pre-DDL files at read time
-    (LakeTable._projection), with no data rewrite. The DDL arrives as
+    (lake.table._Shape.projection), with no data rewrite. The DDL arrives as
     SQL text through the real parser (ddl_parser._default_literal).
     Law: a key's final rating is 7 iff its LWW-winning event precedes
     the DDL, else the event's explicit pos % 5."""

@@ -107,7 +107,8 @@ def _default_literal(clause: str):
     literals). MySQL/TiDB give EXISTING rows the declared default on
     ADD COLUMN — the reference inherits that by executing the DDL on
     TiDB (syncer/syncer.go:1117-1232); the lake mirrors it by filling
-    pre-DDL rows with this literal at read time (LakeTable._projection).
+    pre-DDL rows with this literal at read time
+    (lake.table._Shape.projection).
     Non-literal defaults stay a NULL backfill: CURRENT_TIMESTAMP-style
     backfill is evaluation-time-dependent and cannot replay
     deterministically. The DEFAULT keyword is located on the MASKED

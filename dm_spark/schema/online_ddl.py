@@ -20,7 +20,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # gh-ost: _tbl_gho (ghost), _tbl_ghc/_tbl_del (trash)
@@ -40,8 +40,8 @@ def classify(source_table: str) -> tuple[str, str | None]:
     return "real", None
 
 
-def filter_online_ddl_tables(df: DataFrame, table_col: str = "source_table") -> DataFrame:
-    """Drop DMLs on ghost and trash tables (syncer/filter.go:74-78).
+def online_ddl_predicate(table_col: str = "source_table") -> Column:
+    """Keep-predicate of :func:`filter_online_ddl_tables`.
 
     The regexes only ever match names ending in one of five fixed
     suffixes, so each RLIKE is gated behind cheap endswith checks
@@ -52,9 +52,12 @@ def filter_online_ddl_tables(df: DataFrame, table_col: str = "source_table") -> 
     c = F.col(table_col)
     ghost_sfx = c.endswith("_gho") | c.endswith("_new")
     trash_sfx = c.endswith("_ghc") | c.endswith("_del") | c.endswith("_old")
-    return df.filter(
-        ~((ghost_sfx & c.rlike(GHOST_RE)) | (trash_sfx & c.rlike(TRASH_RE)))
-    )
+    return ~((ghost_sfx & c.rlike(GHOST_RE)) | (trash_sfx & c.rlike(TRASH_RE)))
+
+
+def filter_online_ddl_tables(df: DataFrame, table_col: str = "source_table") -> DataFrame:
+    """Drop DMLs on ghost and trash tables (syncer/filter.go:74-78)."""
+    return df.filter(online_ddl_predicate(table_col))
 
 
 @dataclass

@@ -56,6 +56,7 @@ class CdcStreamDriver:
         # stream identity ties the lake's batch-id gate to this checkpoint
         self.stream_id = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
         self.batch_stats: list[dict] = []
+        self._target_preds: dict = {}  # target -> Column, built once
         # DDL mode: batches route through a ReplayRunner so schema
         # actions interleave with DMLs at their exact location
         # (flush-before-DDL inside the batch); exactly-once then rests
@@ -219,24 +220,41 @@ class CdcStreamDriver:
                 mx = batch_df.agg(
                     F.max(F.struct(F.col("file_seq"), F.col("pos")))
                 ).collect()[0][0]
-                due = [
+                side = [
                     e for e in self.ddl_events
                     if mx is not None and e.loc()[:2] <= (mx["file_seq"], mx["pos"])
                 ]
-                self.ddl_events = self.ddl_events[len(due):]
-                due = sorted([*due, *inline], key=lambda e: e.loc())
-                self.runner.replay(batch_df.where(F.col("op") != "Q"), due)
+                due = sorted([*side, *inline], key=lambda e: e.loc())
+                self.runner.replay(self.pipeline.without_queries(batch_df), due)
+                # side-channel DDLs leave the queue only once applied: an
+                # interrupted batch (stop mid-merge) replays from the
+                # checkpoint and must find them still due (the lake's
+                # applied-DDL location gate makes the re-apply a no-op)
+                self.ddl_events = self.ddl_events[len(side):]
                 self._save_runner_state()
                 self._fold_txn_intervals(batch_df)
-                self.batch_stats.append({"batch_id": batch_id, "ddls": len(due)})
+                # the same timing fields as plain mode; lag is the
+                # furthest-behind target's
+                lags = [self._lag_sec(lk) for lk in self.runner.lakes.values()]
+                lags = [x for x in lags if x is not None]
+                self.batch_stats.append(
+                    {
+                        "batch_id": batch_id,
+                        "ddls": len(due),
+                        "lag_sec": max(lags) if lags else None,
+                        "sec": round(time.time() - t_start, 3),
+                    }
+                )
                 return
             # plain pipeline has no DDL surface: query events drop here
-            flat = self.pipeline.transform(batch_df.where(F.col("op") != "Q"))
+            flat = self.pipeline.transform(self.pipeline.without_queries(batch_df))
             if multi_pass:
                 flat.persist()
             pre = 16 if self.pipeline.config.salt_hot_keys else None
             for target, lake in self.lakes.items():
-                part = flat.where(F.col("target_table") == target).drop("target_table")
+                if target not in self._target_preds:
+                    self._target_preds[target] = F.col("target_table") == target
+                part = flat.where(self._target_preds[target]).drop("target_table")
                 stats = lake.merge_into(
                     part, batch_id=batch_id, stream_id=self.stream_id,
                     pre_reduce=pre, epoch=self.epoch,

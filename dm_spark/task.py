@@ -61,17 +61,22 @@ class Task:
         timeout_sec: int = 0,
         stop_when=None,
         max_files_per_trigger: int | None = 4,
+        compact_every: int | None = None,
     ) -> list[dict]:
         """Live-tail mode (the production shape: the syncer's
         forever-tailing loop, syncer/syncer.go:1280): keep consuming new
         relay files on a processing-time trigger until killed
         (timeout_sec=0 → no deadline) or `stop_when(driver)` fires;
-        resumes from checkpoint on restart."""
+        resumes from checkpoint on restart. `compact_every=N` folds a
+        merge-on-read lake's delta files back into base every N
+        batches; without it a MoR tail's files per bucket grow without
+        bound."""
         drv = CdcStreamDriver(
             self.spark, self.feed_dir, self.checkpoint_dir,
             ApplyPipeline(self.config),
             {self.config.target_table: self.lake},
             max_files_per_trigger=max_files_per_trigger,
+            compact_every=compact_every,
         )
         return drv.run_continuous(
             trigger_sec=trigger_sec,

@@ -24,6 +24,11 @@ from dm_spark.lake import LakeTable
 from dm_spark.session import get_spark
 from dm_spark.task import Task, replication_lag_sec
 
+# tail mode folds a merge-on-read lake's delta files into base every
+# this many batches (the tail kernel's cadence); without it a MoR
+# tail's files per bucket grow without bound
+TAIL_COMPACT_EVERY = 8
+
 
 def load_task_file(path: str) -> dict:
     with open(path) as f:
@@ -485,6 +490,7 @@ def main(argv: list[str]) -> int:
             trigger_sec=spec.get("trigger_sec", 1.0),
             timeout_sec=spec.get("timeout_sec", 0),
             max_files_per_trigger=spec.get("max_files_per_trigger", 4),
+            compact_every=TAIL_COMPACT_EVERY if lake.write_mode == "mor" else None,
         )
         print(json.dumps({"mode": mode, "batches": stats}))
     else:

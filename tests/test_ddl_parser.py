@@ -518,7 +518,7 @@ def test_backtick_identifiers_with_special_characters():
 
 def test_add_column_default_literal_extraction():
     """ADD COLUMN DEFAULT literals ride the event (MySQL backfills
-    existing rows with them — LakeTable._projection mirrors it);
+    existing rows with them — lake.table._Shape.projection mirrors it);
     non-literal defaults (NULL, CURRENT_TIMESTAMP, expressions) stay
     None, and a COMMENT string cannot fake the keyword (the scan runs
     on the masked copy)."""

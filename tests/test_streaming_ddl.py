@@ -236,3 +236,45 @@ def test_trailing_side_channel_ddl_applies_at_drain(spark, sf_dir, tmp_path):
     assert "rating" in lake.read().columns
     assert any(s.get("trailing") for s in stats)
     assert drv.ddl_events == []
+
+
+def test_side_channel_ddl_survives_failed_batch(spark, sf_dir, tmp_path, monkeypatch):
+    """A batch that fails mid-replay (a stop interrupting its merge)
+    replays from the stream checkpoint: the side-channel DDLs it was
+    due to apply must still be queued then, or the schema change is
+    lost for good."""
+    from tests.test_pipeline_e2e import assert_tables_equal
+
+    cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")])
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8)
+    runner = ReplayRunner(pipeline=ApplyPipeline(cfg), lake=lake)
+    feed = feedmod.change_feed(spark, sf_dir)
+    lo, hi = feed.agg(F.min("pos"), F.max("pos")).collect()[0]
+    ddl = DdlEvent("add_column", "shard_0.transcripts_0", 0, int((lo + hi) // 2),
+                   column="rating", new_type="int")
+    drv = CdcStreamDriver(
+        spark, str(tmp_path / "feed"), str(tmp_path / "cp"), runner.pipeline,
+        {"transcripts": lake}, max_files_per_trigger=10, runner=runner,
+        ddl_events=[ddl],
+    )
+    write_feed_chunks(feed, drv.feed_dir, n_chunks=2)
+    replay = ReplayRunner.replay
+
+    def fail_once(self, env, due):
+        monkeypatch.setattr(ReplayRunner, "replay", replay)
+        raise RuntimeError("interrupted mid-merge")
+
+    monkeypatch.setattr(ReplayRunner, "replay", fail_once)
+    with pytest.raises(Exception, match="interrupted mid-merge"):
+        drv.run_available_now()
+    drv.run_available_now()  # the failed batch replays
+    assert [d["column"] for d in lake.applied_ddl_log()] == ["rating"]
+    assert drv.ddl_events == []
+    got = (
+        lake.read()
+        .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+        .toPandas()
+        .sort_values(["conv_id", "turn_idx"])
+        .reset_index(drop=True)
+    )
+    assert_tables_equal(got, duck_replay(sf_dir))
