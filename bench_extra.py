@@ -1,12 +1,12 @@
 """Extra benchmarks for the optimization rounds (bench.py is frozen for
-measurement — this file holds the noop-sink isolation runs, per-query
-plan captures and kernel A/B probes whose numbers OPTIMIZATION_r06.md
-cites; guide §1.4/§1.5).
+measurement — this file holds the per-query timings, plan captures and
+the replay phase profile whose numbers OPTIMIZATION_r06.md cites;
+guide §1.4/§1.5).
 
 Usage:
     python bench_extra.py headline [reps] [query ...]   # time + plans
     python bench_extra.py explain <out_suffix> [query ...]  # plans only
-    python bench_extra.py kernel <kind> <master> <events> <parts> ...
+    python bench_extra.py profile_replay [reps]  # per-phase replay wall
 
 `headline` mimics bench.run_headline exactly (same session, same
 `.count()` action, min-of-reps) but optionally restricts to a query
@@ -98,8 +98,6 @@ def profile_replay(reps: int = 2) -> None:
     is the evidence for the merge-path numbers in OPTIMIZATION_r06.md)."""
     import tempfile
 
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
     from dm_spark import queries_cdc as qc
     from dm_spark.lake import LakeTable
@@ -123,27 +121,11 @@ def profile_replay(reps: int = 2) -> None:
             spark, tempfile.mkdtemp(prefix="dm_prof_"), qc.SCHEMA, qc.KEY, n_buckets=16
         )
         mark("lake_create")
-        b = batch.withColumn(
-            "__ord", F.col("_cdc_file_seq") * 1_000_000 + F.col("_cdc_pos")
-        )
-        fb = qc._feed_ord_bounds(SF_DIR)  # noqa: SLF001
-        if fb is None:
-            mm = b.agg(F.min("__ord"), F.max("__ord")).collect()[0]
-            fb = (int(mm[0]), int(mm[1]))
-        mark("ord_bounds")
-        lo_all, hi_all = fb
-        width = max(1, (hi_all - lo_all + 4) // 4)
-        cuts = [lo_all + width * i for i in range(1, 4) if lo_all + width * i < hi_all]
-        lo = None
-        for i, hi in enumerate([*cuts, None]):
-            part = b
-            if lo is not None:
-                part = part.where(F.col("__ord") > lo)
-            if hi is not None:
-                part = part.where(F.col("__ord") <= hi)
-            lake.merge_into(part.drop("__ord"), batch_id=i, prune=False)
+        ranges = qc._feed_ranges(batch, SF_DIR)  # noqa: SLF001
+        mark("pin_and_cuts")
+        for i, part in enumerate(ranges):
+            lake.merge_into(part, batch_id=i, prune=False)
             mark(f"merge_{i}")
-            lo = hi
         n = qc._final_us(lake).count()  # noqa: SLF001
         mark(f"final_read_n={n}")
         print(json.dumps({"rep": rep, "phases": marks,

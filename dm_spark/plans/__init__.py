@@ -1,3 +1,3 @@
-from dm_spark.plans.replay import DdlEvent, ReplayRunner
+from dm_spark.plans.replay import DdlEvent, ReplayRunner, location_ranges
 
-__all__ = ["DdlEvent", "ReplayRunner"]
+__all__ = ["DdlEvent", "ReplayRunner", "location_ranges"]

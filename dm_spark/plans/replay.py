@@ -20,9 +20,10 @@ micro-batches:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 import re
@@ -634,16 +635,9 @@ class ReplayRunner:
             if pts:
                 loc = F.struct(F.col("file_seq"), F.col("pos"))
                 obsolete = F.lit(False)
-                for t, (fs, pos) in sorted(pts.items()):
+                for t, pt in sorted(pts.items()):
                     obsolete = obsolete | (
-                        (F.col("source_table") == t)
-                        & (
-                            loc
-                            <= F.struct(
-                                F.lit(fs).cast("bigint").alias("file_seq"),
-                                F.lit(pos).cast("bigint").alias("pos"),
-                            )
-                        )
+                        (F.col("source_table") == t) & (loc <= _loc_lit(pt))
                     )
                 env = env.where(~obsolete)
         return env
@@ -965,29 +959,41 @@ class ReplayRunner:
         projected to the evolved schema by the pipeline's flatten (the
         envelope's `after` may lack new columns — they fill as null)."""
         evs = sorted(ddl_events, key=lambda e: e.loc())
-        lo: tuple | None = None
-        for i, ev in enumerate(evs):
-            part = self._range(envelope, lo, ev.loc())
-            self.apply_dml_batch(part, batch_id=None)
-            self.handle_ddl(ev)
-            self.drain_pending()
-            lo = ev.loc()
-        self.apply_dml_batch(self._range(envelope, lo, None))
+        for i, part in enumerate(location_ranges(envelope, [e.loc() for e in evs])):
+            if i:
+                self.handle_ddl(evs[i - 1])
+                self.drain_pending()
+            self.apply_dml_batch(part)
         self.drain_pending()
 
-    @staticmethod
-    def _range(env: DataFrame, lo: tuple | None, hi: tuple | None) -> DataFrame:
-        """DML rows have no suffix (only injected events do), so range
-        bounds compare on (file_seq, pos) — two DDLs at the same pos with
-        different suffixes simply yield an empty DML range between them."""
-        loc = F.struct(F.col("file_seq"), F.col("pos"))
-        def lit_loc(t):
-            return F.struct(
-                F.lit(t[0]).cast("bigint").alias("file_seq"),
-                F.lit(t[1]).cast("bigint").alias("pos"),
-            )
+
+def location_ranges(
+    df: DataFrame, cuts: list[tuple], loc: tuple[str, str] = ("file_seq", "pos")
+) -> Iterator[DataFrame]:
+    """The contiguous location ranges of a bounded feed, in order:
+    (-inf, cuts[0]], (cuts[0], cuts[1]], ..., (cuts[-1], +inf) over the
+    (file_seq, pos) struct named by `loc` — len(cuts) + 1 frames, every
+    row in exactly one. This is the one cut law behind flush-before-DDL
+    (syncer/syncer.go:2362-2366) and every bounded replay's batch split.
+
+    `cuts` must be nondecreasing. Only their first two components count:
+    DML rows have no suffix (only injected events do), so two DDLs at
+    one position with different suffixes cut an empty range between
+    them — yielded, not skipped, so range i always follows cut i-1.
+    Ranges are lazy filters; the input is never pinned (a caller that
+    reuses an expensive upstream pins it first)."""
+    key = F.struct(*[F.col(c) for c in loc])
+    lo = None
+    for hi in [*cuts, None]:
+        part = df
         if lo is not None:
-            env = env.filter(loc > lit_loc(lo[:2]))
+            part = part.where(key > _loc_lit(lo, loc))
         if hi is not None:
-            env = env.filter(loc <= lit_loc(hi[:2]))
-        return env
+            part = part.where(key <= _loc_lit(hi, loc))
+        yield part
+        lo = hi
+
+
+def _loc_lit(cut: tuple, loc: tuple[str, str] = ("file_seq", "pos")) -> Column:
+    """A (file_seq, pos) literal comparable with `F.struct(*loc)`."""
+    return F.struct(*[F.lit(v).cast("bigint").alias(c) for v, c in zip(cut[:2], loc)])

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +33,7 @@ from dm_spark.functions.text import (
 )
 from dm_spark.operators.mapping import apply_column_mappings, shard_prefix_rule
 from dm_spark.operators.router import route_tables
+from dm_spark.plans import location_ranges
 
 SCHEMA = [
     ("conv_id", "string"),
@@ -334,38 +336,31 @@ FROM pc GROUP BY 1
 )
 
 
-def _events_eid_bounds(sf_dir: str) -> tuple[int, int] | None:
+def _eid_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """(min, max) event_id of `<sf_dir>/events.parquet` from parquet
-    FOOTER statistics — zero Spark jobs, zero data scan (guide §1/§6).
-
-    The replay queries only need feed-location bounds to place their
-    equal-width batch cuts, and every location component is a strictly
-    increasing function of event_id (file_seq = eid//1000, pos =
-    eid%1000, txn_id = eid//10), so footer min/max of event_id gives the
-    EXACT same bounds the old min/max aggregation job computed — one
-    full feed-derivation job saved per replay query. Returns None when
-    statistics are unavailable (callers fall back to the agg job)."""
+    FOOTER statistics — zero Spark jobs, zero data scan (guide §1/§6) —
+    with one min/max agg job as the fallback when statistics are
+    missing. Every feed location component is a strictly increasing
+    function of event_id (file_seq = eid//1000, pos = eid%1000, txn_id =
+    eid//10), so these bounds place every fixture cut (_feed_ranges,
+    _txn_cut) exactly where an agg over the feed would."""
     from dm_spark.scan import parquet_column_bounds
 
-    b = parquet_column_bounds(os.path.join(sf_dir, "events.parquet"), "event_id")
-    return (int(b[0]), int(b[1])) if b is not None else None
+    path = os.path.join(sf_dir, "events.parquet")
+    b = parquet_column_bounds(path, "event_id")
+    if b is None:
+        b = spark.read.parquet(path).agg(F.min("event_id"), F.max("event_id")).first()
+    return int(b[0]), int(b[1])
 
 
-def _eid_ord(eid: int) -> int:
-    """The replay split ordinal of an event: __ord = file_seq * 1e6 +
-    pos = (eid // 1000) * 1_000_000 + eid % 1000 — strictly increasing
-    in eid (single source for the footer-bounds fast path)."""
-    return (eid // 1000) * 1_000_000 + (eid % 1000)
-
-
-def _feed_ord_bounds(sf_dir: str) -> tuple[int, int] | None:
-    b = _events_eid_bounds(sf_dir)
-    return (_eid_ord(b[0]), _eid_ord(b[1])) if b else None
-
-
-def _feed_txn_bounds(sf_dir: str) -> tuple[int, int] | None:
-    b = _events_eid_bounds(sf_dir)
-    return (b[0] // 10, b[1] // 10) if b else None
+def _txn_cut(spark: SparkSession, sf_dir: str, num: int, den: int) -> tuple[int, int]:
+    """Location of the last event of the txn `num/den` of the way
+    through the fixture feed's txn range: `location_ranges(feed, [cut])`
+    then splits the feed into txn_id <= t and txn_id > t exactly (txn t
+    ends at eid 10t+9, and location order is event_id order)."""
+    lo, hi = (eid // 10 for eid in _eid_bounds(spark, sf_dir))
+    t = lo + (hi - lo) * num // den
+    return divmod(10 * t + 9, 1000)
 
 
 def _fixture_buckets(sf_dir: str, default: int = 16) -> int:
@@ -400,79 +395,60 @@ def _final_us(lake: LakeTable) -> DataFrame:
     )
 
 
-def _replay_through_lake(
-    spark: SparkSession, batch: DataFrame, n_batches: int = 4,
-    n_buckets: int | None = None,
-    schema=None, key=None, write_mode: str = "cow", compact_after: bool = False,
-    pre_reduce: int | None = None, unique_keys=None, change_feed: bool = False,
-    sf_dir: str | None = None,
-) -> LakeTable:
-    # sf_dir powers the two footer fast paths: scale-adaptive bucket
-    # count and the ord-bound cuts below (both zero-scan; None keeps
-    # the old fixed-16 + agg-job behavior)
-    if n_buckets is None:
-        n_buckets = _fixture_buckets(sf_dir) if sf_dir else 16
-    ord_bounds = _feed_ord_bounds(sf_dir) if sf_dir else None
-    lake = LakeTable.create(
-        spark, tempfile.mkdtemp(prefix="dm_q_"), schema or SCHEMA, key or KEY,
-        n_buckets=n_buckets, write_mode=write_mode, unique_keys=unique_keys,
-        change_feed=change_feed,
-    )
-    batch = batch.withColumn(
-        "__ord", F.col("_cdc_file_seq") * 1_000_000 + F.col("_cdc_pos")
-    )
-    # localCheckpoint, not persist(): .persist() keeps the full lineage,
-    # so every merge ACTION still re-optimizes the scan+envelope+explode
-    # subtree driver-side (~0.2-0.3s/action — the dominant per-merge
-    # cost at bench scale, measured via noop isolation: the warm
-    # upstream compute is only ~0.05s); the eager local checkpoint
-    # materializes the flattened batch ONCE and truncates the plan, so
-    # each of the n_batches merges plans over a leaf scan. Measured at
-    # sf0.1: replay 3.9 -> 3.2s warm, 13.0 -> 4.2s cold (first-plan
-    # codegen paid once, not five times). Scale shape: one bounded
-    # batch materialized per replay — the same "materialize an
-    # expensive/reused upstream" rule the ANN candidate paths apply
-    # (guide §3.3/§5).
+def _feed_ranges(batch: DataFrame, sf_dir: str) -> Iterator[DataFrame]:
+    """Pin a flattened fixture batch and cut it into 4 contiguous
+    location ranges (over _cdc_file_seq/_cdc_pos) for the replay, fold
+    and profile loops.
+
+    Pin: localCheckpoint, not persist(): .persist() keeps the full
+    lineage, so every per-range ACTION still re-optimizes the
+    scan+envelope+explode subtree driver-side (~0.2-0.3s/action — the
+    dominant per-merge cost at bench scale, measured via noop isolation:
+    the warm upstream compute is only ~0.05s); the eager local
+    checkpoint materializes the flattened batch ONCE and truncates the
+    plan, so each range plans over a leaf scan. Measured at sf0.1:
+    replay 3.9 -> 3.2s warm, 13.0 -> 4.2s cold (first-plan codegen paid
+    once, not five times). Scale shape: one bounded batch materialized
+    per replay — the same "materialize an expensive/reused upstream"
+    rule the ANN candidate paths apply (guide §3.3/§5).
+
+    Cuts: equal-width over the location ordinal file_seq * 1e6 + pos,
+    between the footer bounds of the unfiltered feed (_eid_bounds); an
+    ordinal cut c becomes the location divmod(c, 1e6), which bounds the
+    same rows because pos < 1e6 (pos = eid % 1000). For the
+    unfiltered feed the bounds are EXACT; for a filtered batch they may
+    be wider, which only shifts the cut positions: the final state is
+    cut-invariant because ranges stay contiguous increasing location
+    ranges and the fixture feeds' LWW order (ts, file_seq, pos) is
+    consistent with location order (ts monotone in event_id), so a later
+    range can never lose LWW to — nor resurrect a delete from — an
+    earlier one. The DuckDB oracle (global single-window law) pins this
+    at every sf."""
     batch = batch.localCheckpoint(eager=True)
-    # equal-width location cuts. `ord_bounds` (parquet-footer bounds,
-    # see _feed_ord_bounds) skips the min/max aggregation job — for the
-    # unfiltered feed the bounds are EXACT (same cuts, same batches);
-    # for a filtered feed they may be wider, which only shifts the cut
-    # positions: the final state is cut-invariant because batches stay
-    # contiguous increasing location ranges and the fixture feeds'
-    # LWW order (ts, file_seq, pos) is consistent with location order
-    # (ts monotone in event_id), so a later batch can never lose LWW
-    # to — nor resurrect a delete from — an earlier one. The DuckDB
-    # oracle (global single-window law) pins this at every sf.
-    if ord_bounds is None:
-        mm = batch.agg(F.min("__ord"), F.max("__ord")).collect()[0]
-        if mm[0] is None:  # fully-filtered feed: an empty lake is the answer
-            return lake
-        lo_all, hi_all = int(mm[0]), int(mm[1])
-    else:
-        lo_all, hi_all = ord_bounds
-    width = max(1, (hi_all - lo_all + n_batches) // n_batches)
-    cuts = [
-        lo_all + width * i
-        for i in range(1, n_batches)
-        if lo_all + width * i < hi_all
-    ]
-    lo = None
-    for i, hi in enumerate([*cuts, None]):
-        part = batch
-        if lo is not None:
-            part = part.where(F.col("__ord") > lo)
-        if hi is not None:
-            part = part.where(F.col("__ord") <= hi)
+    lo, hi = (
+        (eid // 1000) * 1_000_000 + eid % 1000 for eid in _eid_bounds(batch.sparkSession, sf_dir)
+    )
+    width = max(1, (hi - lo + 4) // 4)  # 4 * width > hi - lo: at most 3 cuts
+    cuts = [divmod(c, 1_000_000) for c in range(lo + width, hi, width)]
+    return location_ranges(batch, cuts, loc=("_cdc_file_seq", "_cdc_pos"))
+
+
+def _replay_through_lake(
+    spark: SparkSession, batch: DataFrame, sf_dir: str,
+    schema=None, write_mode: str = "cow", compact_after: bool = False,
+    pre_reduce: int | None = None, unique_keys=None, change_feed: bool = False,
+) -> LakeTable:
+    lake = LakeTable.create(
+        spark, tempfile.mkdtemp(prefix="dm_q_"), schema or SCHEMA, KEY,
+        n_buckets=_fixture_buckets(sf_dir), write_mode=write_mode,
+        unique_keys=unique_keys, change_feed=change_feed,
+    )
+    for i, part in enumerate(_feed_ranges(batch, sf_dir)):
         # bulk replay touches all buckets: single-job path
-        lake.merge_into(
-            part.drop("__ord"), batch_id=i, prune=False, pre_reduce=pre_reduce
-        )
-        lo = hi
+        lake.merge_into(part, batch_id=i, prune=False, pre_reduce=pre_reduce)
     if compact_after:
         lake.compact()
     return lake
-
 
 
 _ROUTES = [RouteRule(pattern="shard_*.transcripts_*", target="transcripts")]
@@ -489,11 +465,7 @@ def _routed_batch(spark, sf_dir):
 def _replayed_fin(spark, sf_dir):
     """FINAL replayed state (conv_id, turn_idx, role, text, tool,
     ts_us) — the frame every off-the-lake composite aggregates."""
-    return _final_us(
-        _replay_through_lake(
-            spark, _routed_batch(spark, sf_dir), sf_dir=sf_dir
-        )
-    )
+    return _final_us(_replay_through_lake(spark, _routed_batch(spark, sf_dir), sf_dir))
 
 
 # ------------------------------------------------------------------ queries
@@ -618,9 +590,7 @@ def q_dedup_lww_salted(spark, sf_dir):
 
 def q_replay_merge(spark, sf_dir):
     batch = _routed_batch(spark, sf_dir)
-    return _final_us(
-        _replay_through_lake(spark, batch, sf_dir=sf_dir)
-    )
+    return _final_us(_replay_through_lake(spark, batch, sf_dir))
 
 
 def q_replay_scrubbed(spark, sf_dir):
@@ -643,9 +613,7 @@ def q_replay_scrubbed(spark, sf_dir):
         ],
     )
     batch = ApplyPipeline(cfg).transform(change_feed(spark, sf_dir)).drop("target_table")
-    return _final_us(
-        _replay_through_lake(spark, batch, sf_dir=sf_dir)
-    )
+    return _final_us(_replay_through_lake(spark, batch, sf_dir))
 
 
 def q_convo_hygiene(spark, sf_dir):
@@ -719,9 +687,7 @@ def q_change_feed_chain(spark, sf_dir):
     pipeline consume incremental table deltas instead of rescanning at
     every step."""
     batch = _routed_batch(spark, sf_dir)
-    lake1 = _replay_through_lake(
-        spark, batch, change_feed=True, sf_dir=sf_dir
-    )
+    lake1 = _replay_through_lake(spark, batch, sf_dir, change_feed=True)
     lake2 = LakeTable.create(
         spark, tempfile.mkdtemp(prefix="dm_q_"), SCHEMA, KEY,
         n_buckets=_fixture_buckets(sf_dir)
@@ -739,10 +705,7 @@ def q_change_feed_chain_mor(spark, sf_dir):
     from dm_spark.streaming import replicate_lake_poll
 
     batch = _routed_batch(spark, sf_dir)
-    lake1 = _replay_through_lake(
-        spark, batch, write_mode="mor", change_feed=True,
-        sf_dir=sf_dir,
-    )
+    lake1 = _replay_through_lake(spark, batch, sf_dir, write_mode="mor", change_feed=True)
     lake2 = LakeTable.create(
         spark, tempfile.mkdtemp(prefix="dm_q_"), SCHEMA, KEY,
         n_buckets=_fixture_buckets(sf_dir)
@@ -757,11 +720,7 @@ def q_replay_merge_salted(spark, sf_dir):
     shuffle) — must be state-identical to the plain replay (shared
     oracle)."""
     batch = _routed_batch(spark, sf_dir)
-    return _final_us(
-        _replay_through_lake(
-            spark, batch, pre_reduce=16, sf_dir=sf_dir
-        )
-    )
+    return _final_us(_replay_through_lake(spark, batch, sf_dir, pre_reduce=16))
 
 
 def q_replay_merge_mor(spark, sf_dir):
@@ -769,10 +728,7 @@ def q_replay_merge_mor(spark, sf_dir):
     + tombstones + compaction) — shares the CoW oracle, proving the two
     storage modes are state-equivalent."""
     batch = _routed_batch(spark, sf_dir)
-    lake = _replay_through_lake(
-        spark, batch, write_mode="mor", compact_after=True,
-        sf_dir=sf_dir,
-    )
+    lake = _replay_through_lake(spark, batch, sf_dir, write_mode="mor", compact_after=True)
     return _final_us(lake)
 
 
@@ -789,9 +745,7 @@ def q_replay_filtered(spark, sf_dir):
         routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")],
     )
     batch = ApplyPipeline(cfg).transform(change_feed(spark, sf_dir)).drop("target_table")
-    return _final_us(
-        _replay_through_lake(spark, batch, sf_dir=sf_dir)
-    )
+    return _final_us(_replay_through_lake(spark, batch, sf_dir))
 
 
 def q_shard_merge_mapped(spark, sf_dir):
@@ -800,9 +754,7 @@ def q_shard_merge_mapped(spark, sf_dir):
         column_mappings=[shard_prefix_rule("shard_*.transcripts_*")],
     )
     batch = ApplyPipeline(cfg).transform(change_feed(spark, sf_dir)).drop("target_table")
-    return _final_us(
-        _replay_through_lake(spark, batch, sf_dir=sf_dir)
-    )
+    return _final_us(_replay_through_lake(spark, batch, sf_dir))
 
 
 def q_safe_mode_replay(spark, sf_dir):
@@ -811,13 +763,9 @@ def q_safe_mode_replay(spark, sf_dir):
     cfg = TaskConfig(routes=list(_ROUTES))
     feed = change_feed(spark, sf_dir)
     batch = ApplyPipeline(cfg).transform(feed).drop("target_table")
-    lake = _replay_through_lake(spark, batch, sf_dir=sf_dir)
-    tb = _feed_txn_bounds(sf_dir)
-    if tb is None:
-        mm = feed.agg(F.min("txn_id"), F.max("txn_id")).collect()[0]
-        tb = (mm[0], mm[1])
-    cut = tb[0] + (tb[1] - tb[0]) * 4 // 5
-    tail = ApplyPipeline(cfg).transform(feed.where(F.col("txn_id") > cut)).drop("target_table")
+    lake = _replay_through_lake(spark, batch, sf_dir)
+    _, tail = location_ranges(feed, [_txn_cut(spark, sf_dir, 4, 5)])
+    tail = ApplyPipeline(cfg).transform(tail).drop("target_table")
     lake.merge_into(tail)  # redelivery, no batch gate
     return _final_us(lake)
 
@@ -831,9 +779,7 @@ def q_key_change_replay(spark, sf_dir):
     cfg = TaskConfig(routes=list(_ROUTES))
     feed = change_feed(spark, sf_dir, km_every=1)
     batch = ApplyPipeline(cfg).transform(feed).drop("target_table")
-    return _final_us(
-        _replay_through_lake(spark, batch, sf_dir=sf_dir)
-    )
+    return _final_us(_replay_through_lake(spark, batch, sf_dir))
 
 
 def _uk_feed(spark, sf_dir):
@@ -870,8 +816,7 @@ def q_uk_identity_replay(spark, sf_dir):
     feed = _uk_feed(spark, sf_dir)
     batch = flatten_changes(feed, key=KEY, unique_keys=[["uk_id"]])
     lake = _replay_through_lake(
-        spark, batch, schema=SCHEMA + [("uk_id", "string")], key=KEY,
-        unique_keys=[["uk_id"]], sf_dir=sf_dir,
+        spark, batch, sf_dir, schema=SCHEMA + [("uk_id", "string")], unique_keys=[["uk_id"]]
     )
     return lake.read().select(
         "conv_id", "turn_idx", "uk_id", "role", "text", "tool",
@@ -1150,36 +1095,11 @@ def q_preference_incremental(spark, sf_dir):
         preference_pairs_from_index,
     )
 
-    batch = _routed_batch(spark, sf_dir)
     index = create_pref_index(
         spark, tempfile.mkdtemp(prefix="dm_pref_"), n_buckets=_fixture_buckets(sf_dir)
     )
-    b = batch.withColumn(
-        "__ord", F.col("_cdc_file_seq") * 1_000_000 + F.col("_cdc_pos")
-    )
-    # materialize the flattened feed once (plan truncation — same
-    # measured rationale as _replay_through_lake): each fold makes
-    # multiple passes over its range and replans per action otherwise
-    b = b.localCheckpoint(eager=True)
-    fb = _feed_ord_bounds(sf_dir)  # exact footer bounds: unfiltered feed
-    if fb is None:
-        mm = b.agg(F.min("__ord"), F.max("__ord")).collect()[0]
-        if mm[0] is None:
-            return preference_pairs_from_index(index)
-        fb = (int(mm[0]), int(mm[1]))
-    lo_all, hi_all = fb
-    n_batches = 4
-    width = max(1, (hi_all - lo_all + n_batches) // n_batches)
-    cuts = [lo_all + width * i for i in range(1, n_batches) if lo_all + width * i < hi_all]
-    lo = None
-    for i, hi in enumerate([*cuts, None]):
-        part = b
-        if lo is not None:
-            part = part.where(F.col("__ord") > lo)
-        if hi is not None:
-            part = part.where(F.col("__ord") <= hi)
-        incremental_preference_batch(index, part.drop("__ord"))
-        lo = hi
+    for part in _feed_ranges(_routed_batch(spark, sf_dir), sf_dir):
+        incremental_preference_batch(index, part)
     return preference_pairs_from_index(index)
 
 
@@ -1396,36 +1316,11 @@ def q_best_of_incremental(spark, sf_dir):
         incremental_best_of_batch,
     )
 
-    batch = _routed_batch(spark, sf_dir)
     index = create_best_index(
         spark, tempfile.mkdtemp(prefix="dm_best_"), n_buckets=_fixture_buckets(sf_dir)
     )
-    b = batch.withColumn(
-        "__ord", F.col("_cdc_file_seq") * 1_000_000 + F.col("_cdc_pos")
-    )
-    # materialize the flattened feed once (plan truncation — same
-    # measured rationale as _replay_through_lake): each fold makes
-    # multiple passes over its range and replans per action otherwise
-    b = b.localCheckpoint(eager=True)
-    fb = _feed_ord_bounds(sf_dir)  # exact footer bounds: unfiltered feed
-    if fb is None:
-        mm = b.agg(F.min("__ord"), F.max("__ord")).collect()[0]
-        if mm[0] is None:
-            return best_of_from_index(index)
-        fb = (int(mm[0]), int(mm[1]))
-    lo_all, hi_all = fb
-    n_batches = 4
-    width = max(1, (hi_all - lo_all + n_batches) // n_batches)
-    cuts = [lo_all + width * i for i in range(1, n_batches) if lo_all + width * i < hi_all]
-    lo = None
-    for i, hi in enumerate([*cuts, None]):
-        part = b
-        if lo is not None:
-            part = part.where(F.col("__ord") > lo)
-        if hi is not None:
-            part = part.where(F.col("__ord") <= hi)
-        incremental_best_of_batch(index, part.drop("__ord"))
-        lo = hi
+    for part in _feed_ranges(_routed_batch(spark, sf_dir), sf_dir):
+        incremental_best_of_batch(index, part)
     return best_of_from_index(index)
 
 
@@ -1541,7 +1436,7 @@ def q_validator_checksum(spark, sf_dir):
     from dm_spark.validator import checksum_digests
 
     batch = _routed_batch(spark, sf_dir)
-    lake = _replay_through_lake(spark, batch, sf_dir=sf_dir)
+    lake = _replay_through_lake(spark, batch, sf_dir)
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts_us"]
     return checksum_digests(_final_us(lake), cols)
 
@@ -1563,25 +1458,25 @@ def q_checkpoint_locations(spark, sf_dir):
     return agg.select("source_table", "loc.file_seq", "loc.pos")
 
 
-def q_ddl_evolution(spark, sf_dir):
-    """Mid-feed schema evolution: add rating, rename tool->tool_name,
-    widen turn_idx to bigint (optimistic shard-DDL semantics:
-    pkg/shardddl/optimism/lock.go:115 schema join -> table-global ALTER)."""
-    feed = change_feed(spark, sf_dir)
-    tb = _feed_txn_bounds(sf_dir)  # footer-exact (txn_id = eid // 10)
-    if tb is None:
-        mm = feed.agg(F.min("txn_id"), F.max("txn_id")).collect()[0]
-        tb = (mm[0], mm[1])
-    mid = (tb[0] + tb[1]) // 2
-    cfg = TaskConfig(routes=list(_ROUTES))
-    pipe = ApplyPipeline(cfg)
-
+def _pre_ddl_lake(spark, sf_dir):
+    """The mid-feed DDL fixtures' first half: a lake holding the routed
+    feed through the middle txn (batch 0), the pipeline, and the raw
+    feed after that txn for the post-DDL merges."""
+    pre, post = location_ranges(change_feed(spark, sf_dir), [_txn_cut(spark, sf_dir, 1, 2)])
+    pipe = ApplyPipeline(TaskConfig(routes=list(_ROUTES)))
     lake = LakeTable.create(
         spark, tempfile.mkdtemp(prefix="dm_ddl_"), SCHEMA, KEY,
         n_buckets=_fixture_buckets(sf_dir)
     )
-    a = pipe.transform(feed.where(F.col("txn_id") <= mid)).drop("target_table")
-    lake.merge_into(a, batch_id=0)
+    lake.merge_into(pipe.transform(pre).drop("target_table"), batch_id=0)
+    return pipe, lake, post
+
+
+def q_ddl_evolution(spark, sf_dir):
+    """Mid-feed schema evolution: add rating, rename tool->tool_name,
+    widen turn_idx to bigint (optimistic shard-DDL semantics:
+    pkg/shardddl/optimism/lock.go:115 schema join -> table-global ALTER)."""
+    pipe, lake, post = _pre_ddl_lake(spark, sf_dir)
 
     for i, act in enumerate(
         [
@@ -1592,7 +1487,7 @@ def q_ddl_evolution(spark, sf_dir):
     ):
         lake.apply_ddl({**act, "file_seq": 10**6 + i, "pos": 0})
 
-    b = pipe.transform(feed.where(F.col("txn_id") > mid)).drop("target_table")
+    b = pipe.transform(post).drop("target_table")
     b = b.select(
         "conv_id",
         F.col("turn_idx").cast("bigint").alias("turn_idx"),
@@ -1624,21 +1519,7 @@ def q_ddl_default_backfill(spark, sf_dir):
     the DDL, else the event's explicit pos % 5."""
     from dm_spark.schema.ddl_parser import parse_ddl
 
-    feed = change_feed(spark, sf_dir)
-    tb = _feed_txn_bounds(sf_dir)  # footer-exact (txn_id = eid // 10)
-    if tb is None:
-        mm = feed.agg(F.min("txn_id"), F.max("txn_id")).collect()[0]
-        tb = (mm[0], mm[1])
-    mid = (tb[0] + tb[1]) // 2
-    cfg = TaskConfig(routes=list(_ROUTES))
-    pipe = ApplyPipeline(cfg)
-
-    lake = LakeTable.create(
-        spark, tempfile.mkdtemp(prefix="dm_dflt_"), SCHEMA, KEY,
-        n_buckets=_fixture_buckets(sf_dir)
-    )
-    a = pipe.transform(feed.where(F.col("txn_id") <= mid)).drop("target_table")
-    lake.merge_into(a, batch_id=0)
+    pipe, lake, post = _pre_ddl_lake(spark, sf_dir)
 
     (ev,) = parse_ddl(
         "ALTER TABLE transcripts ADD COLUMN rating INT DEFAULT 7", 10**6, 0
@@ -1646,7 +1527,7 @@ def q_ddl_default_backfill(spark, sf_dir):
     assert ev.default == 7
     lake.apply_ddl(ev.to_action())
 
-    b = pipe.transform(feed.where(F.col("txn_id") > mid)).drop("target_table")
+    b = pipe.transform(post).drop("target_table")
     b = b.select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts",
         (F.col("_cdc_pos") % 5).cast("int").alias("rating"),
@@ -1668,18 +1549,7 @@ def q_optimistic_ddl(spark, sf_dir):
     post-DDL rows carry rating = pos % 5."""
     from dm_spark.plans import DdlEvent, ReplayRunner
 
-    feed = change_feed(spark, sf_dir)
-    tb = _feed_txn_bounds(sf_dir)  # footer-exact (txn_id = eid // 10)
-    if tb is None:
-        mm = feed.agg(F.min("txn_id"), F.max("txn_id")).collect()[0]
-        tb = (mm[0], mm[1])
-    mid = (tb[0] + tb[1]) // 2
-    cfg = TaskConfig(routes=list(_ROUTES))
-    pipe = ApplyPipeline(cfg)
-    lake = LakeTable.create(
-        spark, tempfile.mkdtemp(prefix="dm_opt_"), SCHEMA, KEY,
-        n_buckets=_fixture_buckets(sf_dir)
-    )
+    pipe, lake, post = _pre_ddl_lake(spark, sf_dir)
     runner = ReplayRunner(
         pipeline=pipe,
         lake=lake,
@@ -1687,15 +1557,12 @@ def q_optimistic_ddl(spark, sf_dir):
             f"shard_{i}.transcripts_{j}" for i in range(4) for j in range(2)
         ],
     )
-    a = pipe.transform(feed.where(F.col("txn_id") <= mid)).drop("target_table")
-    lake.merge_into(a, batch_id=0)
     runner.handle_ddl(
         DdlEvent(
             "add_column", "shard_0.transcripts_0", 10**6, 0,
             column="rating", new_type="int",
         )
     )
-    post = feed.where(F.col("txn_id") > mid)
     # shard_0 adopted the new column; the other shards lag (old shape).
     # Keys are shard-local (conv_id derives from user_id derives shard),
     # so splitting the merge by shard cannot reorder any key's events.

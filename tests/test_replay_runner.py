@@ -14,7 +14,7 @@ from dm_spark.config import RouteRule, TaskConfig
 from dm_spark.feed import ENVELOPE_DDL
 from dm_spark.lake import LakeTable
 from dm_spark.operators import ApplyPipeline
-from dm_spark.plans import DdlEvent, ReplayRunner
+from dm_spark.plans import DdlEvent, ReplayRunner, location_ranges
 from dm_spark.streaming.ddl_coordinator import PendingSpill, ShardDdlBarrier
 
 SCHEMA = [
@@ -1089,3 +1089,22 @@ def test_optimistic_replace_with_generated_column_add(spark, tmp_path):
     cols = lake.read().columns
     assert "gcol" not in cols and "bad" not in cols
     assert rows(lake) == [("a", 1, "v1")]
+
+
+@pytest.mark.parametrize("loc", [("file_seq", "pos"), ("_cdc_file_seq", "_cdc_pos")])
+def test_location_ranges_partition_law(spark, loc):
+    """location_ranges splits a feed into len(cuts) + 1 contiguous
+    ranges in location order: every row lands in exactly one, and empty
+    ranges — a cut before the first row, a duplicate cut (two suffixed
+    DDLs at one position), a cut past the last row — are yielded."""
+    at = [(0, 1), (0, 5), (0, 900), (1, 0), (1, 3), (2, 7)]
+    feed = ev(spark, [("I", "a", i, "v", "shard_0.t", fs, pos) for i, (fs, pos) in enumerate(at)])
+    feed = feed.withColumnRenamed("file_seq", loc[0]).withColumnRenamed("pos", loc[1])
+    cuts = [(0, 0), (0, 5, 0), (0, 5, 1), (1, 3), (5, 0)]
+    got = [
+        sorted((r[0], r[1]) for r in part.select(*loc).collect())
+        for part in location_ranges(feed, cuts, loc=loc)
+    ]
+    assert got == [[], [(0, 1), (0, 5)], [], [(0, 900), (1, 0), (1, 3)], [(2, 7)], []]
+    flat = [x for part in got for x in part]
+    assert flat == sorted(at)  # each row once, ranges in location order
