@@ -167,6 +167,9 @@ class _Meta:
     unique_keys: list = field(default_factory=list)
     lww_strategy: str = "sort"  # "sort" (window; codegen, fastest) | "hash" (max_by agg)
     write_mode: str = "cow"  # "cow" (read+rewrite touched buckets) | "mor" (append deltas)
+    # merge-on-read delta files [ {path, schema_version, delta} ]: any
+    # bucket's rows in any file (Iceberg's unpartitioned delete files)
+    deltas: list[dict] = field(default_factory=list)
     applied_ddl: list[dict] = field(default_factory=list)
     # obsolete-DDL gate: max (file_seq, pos, suffix) applied so far —
     # the gate only needs the high water mark, so applied_ddl can stay
@@ -292,8 +295,7 @@ class _Shape:
             self._winner = F.max_by(F.struct(*sel), F.struct(*self.lineage_cols)).alias("__w")
             self._unwrap = F.col("__w.*")
         self._not_delete = F.col("op") != "D"
-        self._cow_out = self.payload_cols + self.lineage_cols
-        self._mor_out = sel
+        self._out = self.payload_cols + self.lineage_cols
         # merge-on-read reads resolve base+delta on the key expressions
         self._read_rn = F.row_number().over(
             Window.partitionBy(*self.key_exprs).orderBy(*desc)
@@ -351,21 +353,19 @@ class _Shape:
             ).cast("int")
         return b
 
-    def lww(self, df: DataFrame, n_slots: int, keep_deletes: bool) -> DataFrame:
+    def lww(self, df: DataFrame, n_slots: int) -> DataFrame:
         """The one LWW write plan of merge, compaction and rescale: key
         the payload + op + lineage rows, repartition them on the keys
         (slot == bucket, see `bucket`), keep each key's newest row by
-        (ts, file_seq, pos). Merge-on-read deltas keep tombstones;
-        base files drop them. One shuffle: the window (or the max_by
-        aggregate, lww_strategy="hash") reuses the repartition."""
+        (ts, file_seq, pos) and drop tombstone winners. One shuffle:
+        the window (or the max_by aggregate, lww_strategy="hash")
+        reuses the repartition."""
         rep = df.select(*self._keyed).repartition(n_slots, *self._slots)
         if self._strategy == "sort":
             res = rep.withColumn("__rn", self._rn).where(self._first)
         else:
             res = rep.groupBy(*self._slots).agg(self._winner).select(self._unwrap)
-        if keep_deletes:
-            return res.select(*self._mor_out)
-        return res.where(self._not_delete).select(*self._cow_out)
+        return res.where(self._not_delete).select(*self._out)
 
     def resolve_read(self, df: DataFrame) -> DataFrame:
         """Merge-on-read resolution at read time: each key's newest row
@@ -643,12 +643,12 @@ class LakeTable:
         UK, else the full row (syncer/dml.go:260-318) — see
         :func:`_merge_key_exprs`.
 
-        `change_feed=True`: every DML merge also records its applied
+        `change_feed=True`: every DML merge also records the batch's
         change rows (op + payload + lineage), readable incrementally
         via :meth:`changes` — the lake re-emits CDC so downstream
         pipelines chain without full rescans. MoR tables get this for
-        FREE (the per-batch delta files double as the change set);
-        CoW tables pay one extra flat write of the batch."""
+        FREE (the batch's delta files are the change set); CoW tables
+        pay one extra flat write of the batch."""
         t = cls(spark, path)
         if t.exists:
             raise ValueError(f"table already exists at {path}")
@@ -705,6 +705,11 @@ class LakeTable:
             out = out.unionByName(p)
         return out
 
+    @staticmethod
+    def _data_entries(meta: _Meta) -> list[dict]:
+        """Every live data file: each bucket's base files, then deltas."""
+        return [e for lst in meta.buckets.values() for e in lst] + meta.deltas
+
     def read(self, version: int | None = None) -> DataFrame:
         """Current (or time-travel) table contents as a DataFrame.
 
@@ -713,9 +718,10 @@ class LakeTable:
         tombstones (Iceberg MoR / position-delete semantics, done with
         one shuffle)."""
         meta = self._load_meta(version)
-        entries = [e for lst in meta.buckets.values() for e in lst]
-        has_delta = any(e.get("delta") for e in entries)
-        df = self._read_files(meta, entries, with_lineage=has_delta, with_op=has_delta)
+        has_delta = bool(meta.deltas)
+        df = self._read_files(
+            meta, self._data_entries(meta), with_lineage=has_delta, with_op=has_delta
+        )
         if df is None:
             ddl = ", ".join(f"{f['name']} {f['type']}" for f in meta.fields())
             return self.spark.createDataFrame([], ddl)
@@ -748,12 +754,11 @@ class LakeTable:
         regress the replica. CoW base files store lineage as written;
         MoR resolves base+delta LWW first (tombstones dropped)."""
         meta = self._load_meta()
-        entries = [e for lst in meta.buckets.values() for e in lst]
         payload = [f["name"] for f in meta.fields()]
-        df = self._read_files(meta, entries, with_lineage=True, with_op=True)
+        df = self._read_files(meta, self._data_entries(meta), with_lineage=True, with_op=True)
         if df is None:
             return self.spark.createDataFrame([], self._changes_ddl(meta))
-        if any(e.get("delta") for e in entries):
+        if meta.deltas:
             df = self._shape(meta).resolve_read(df)
         return df.select(*payload, F.lit("I").alias("op"), *LINEAGE_COLS)
 
@@ -763,7 +768,7 @@ class LakeTable:
         to_version: int | None = None,
         tag_versions: bool = True,
     ) -> DataFrame:
-        """Incremental change rows applied between versions (inclusive
+        """Incremental change rows merged between versions (inclusive
         bounds) — the lake re-emitting CDC, the Delta CDF analog. Rows:
         current payload + `op` ('I'|'U'|'D') + lineage
         (`_cdc_ts`, `_cdc_file_seq`, `_cdc_pos`) + `_change_version` —
@@ -771,6 +776,9 @@ class LakeTable:
         chains with `lake2.merge_into(lake1.changes(k).drop(
         "_change_version"))` and converges to the same state (LWW on
         the same lineage ordering; pinned in tests/test_change_feed).
+        Both write modes emit each merge's whole batch: in-batch
+        superseded rows and rows that lose LWW to stored state emit
+        too, and lose LWW downstream the same way.
 
         Scale shape: with `tag_versions=True` the plan has one parquet
         scan per consumed version — fine for bounded windows, wrong for
@@ -1007,80 +1015,75 @@ class LakeTable:
             finally:
                 changes.unpersist()
 
-    def _commit_files(self, out: DataFrame, meta: _Meta, allowed: list[int], delta: bool) -> dict:
-        """Write `out` flat (slot==bucket identity) and return
-        bucket -> new file entries; refuses stray buckets."""
+    def _commit_files(self, out: DataFrame, meta: _Meta, allowed: list[int] | None):
+        """Write `out` flat into a new commit dir. Base files: return
+        bucket -> new file entries by the slot==bucket identity,
+        refusing buckets outside `allowed`. `allowed=None` (a
+        merge-on-read delta append, any bucket's rows in any file):
+        return the list of delta entries."""
         commit_dir = os.path.join(self.data_dir, f"commit-{meta.version + 1}-{uuid.uuid4().hex[:8]}")
         out.write.mode("errorifexists").parquet(commit_dir)
+        files = _parquet_files_with_rows(commit_dir) if os.path.isdir(commit_dir) else []
+        entries = [
+            (fn, {"path": os.path.join(commit_dir, fn), "schema_version": meta.schema_version})
+            for fn, nrows in files
+            if nrows
+        ]
+        if allowed is None:
+            return [{**e, "delta": True} for _fn, e in entries]
         new_lists: dict[str, list[dict]] = {}
-        if os.path.isdir(commit_dir):
-            for fn, nrows in _parquet_files_with_rows(commit_dir):
-                if nrows == 0:
-                    continue
-                b = int(fn.split("-")[1]) % meta.n_buckets
-                entry = {
-                    "path": os.path.join(commit_dir, fn),
-                    "schema_version": meta.schema_version,
-                }
-                if delta:
-                    entry["delta"] = True
-                new_lists.setdefault(str(b), []).append(entry)
+        for fn, e in entries:
+            new_lists.setdefault(str(int(fn.split("-")[1]) % meta.n_buckets), []).append(e)
         stray = [b for b in new_lists if int(b) not in allowed]
         if stray:
             raise RuntimeError(f"bucket/slot identity violated: {stray}")
         return new_lists
 
     def _merge_mor(self, changes: DataFrame, meta: _Meta, batch_id: int | None) -> MergeStats:
-        """Merge-on-read write path: LWW-dedupe the batch, append it as
-        per-bucket DELTA files (tombstones kept) — write cost O(batch),
-        no base read (Iceberg MoR / equality-delete shape). Readers and
-        `compact()` resolve base+delta LWW. One Spark job: the batch
-        stats ride the write as observed metrics."""
+        """Merge-on-read write path: append the batch as-is (tombstones
+        and in-batch duplicates kept) as DELTA files, which are also its
+        change-feed entry — no shuffle, no base read, one file per input
+        partition. Readers, `compact()` and `rescale()` resolve LWW over
+        base+delta. One Spark job: stats ride the write as observations."""
         shape = self._shape(meta)
-        obs_in, obs = Observation(), Observation()
+        obs_in = Observation()
         inc = changes.select(*shape.ins(tuple(changes.columns))).observe(obs_in, *shape.in_aggs)
-        out = shape.lww(inc, self._merge_slots(meta), keep_deletes=True).observe(
-            obs, shape.rows_agg
-        )
-        new_lists = self._commit_files(out, meta, list(range(meta.n_buckets)), delta=True)
+        deltas = self._commit_files(inc, meta, None)
         if meta.change_feed:
-            # MoR change feed is free: the batch's delta files ARE the
-            # applied change set (post-LWW winners incl. tombstones) —
-            # record the same entries, write nothing extra
-            meta.change_log[str(meta.version + 1)] = [
-                dict(e) for files in new_lists.values() for e in files
-            ]
+            meta.change_log[str(meta.version + 1)] = [dict(e) for e in deltas]
         m = obs_in.get
         stats = MergeStats(
             version=meta.version + 1,
             batch_id=batch_id,
             n_incoming=m["n"],
             n_deletes_in=m["nd"] or 0,
-            n_buckets_touched=len(new_lists),
-            rows_written=obs.get["rows"],
+            rows_written=m["n"],
         )
-        for b, files in new_lists.items():
-            meta.buckets[str(b)] = meta.buckets[str(b)] + files
-        self._finish_commit(meta, batch_id, stats, m["loc"], m["mts"], mode="mor",
-                            dirty={int(b) for b in new_lists})
+        meta.deltas = meta.deltas + deltas
+        self._finish_commit(meta, batch_id, stats, m["loc"], m["mts"], mode="mor", dirty=set())
         return stats
 
     def compact(self, buckets: list[int] | None = None, min_files: int = 2) -> int:
-        """Rewrite buckets holding delta files (or >= min_files files)
-        into resolved base files; drops tombstones. The Iceberg
-        rewrite_data_files maintenance action."""
+        """Rewrite buckets holding >= min_files files into resolved base
+        files; drops tombstones. The Iceberg rewrite_data_files
+        maintenance action. Pending delta files hold rows of every
+        bucket, so while any exist every bucket is rewritten and the
+        delta list cleared; `buckets` narrows a delta-free table only."""
         meta = self._load_meta()
-        targets = []
-        for b in buckets if buckets is not None else range(meta.n_buckets):
-            es = meta.buckets[str(b)]
-            if any(e.get("delta") for e in es) or len(es) >= min_files:
-                targets.append(b)
+        if meta.deltas:
+            targets = list(range(meta.n_buckets))
+        else:
+            targets = [
+                b for b in (buckets if buckets is not None else range(meta.n_buckets))
+                if len(meta.buckets[str(b)]) >= min_files
+            ]
         if not targets:
             return 0
-        entries = [e for b in targets for e in meta.buckets[str(b)]]
+        entries = [e for b in targets for e in meta.buckets[str(b)]] + meta.deltas
         new_lists = self._rewrite_base(meta, entries, targets)
         for b in targets:
             meta.buckets[str(b)] = new_lists.get(str(b), [])
+        meta.deltas = []
         meta.version += 1
         meta.lineage.append({"version": meta.version, "compacted_buckets": len(targets)})
         meta.lineage = meta.lineage[-200:]
@@ -1094,8 +1097,8 @@ class LakeTable:
         if base is None:
             return {}
         with _merge_aqe_off(base.sparkSession):
-            out = self._shape(meta).lww(base, self._merge_slots(meta), keep_deletes=False)
-            return self._commit_files(out, meta, targets, delta=False)
+            out = self._shape(meta).lww(base, self._merge_slots(meta))
+            return self._commit_files(out, meta, targets)
 
     def rescale(self, n_buckets: int) -> int:
         """Re-bucket the table to a new bucket count — the grow/split
@@ -1108,12 +1111,13 @@ class LakeTable:
         meta = self._load_meta()
         if n_buckets == meta.n_buckets:
             return meta.version
-        entries = [e for lst in meta.buckets.values() for e in lst]
+        entries = self._data_entries(meta)
         old_count = meta.n_buckets
         meta.n_buckets = n_buckets
         meta.bucket_chunks = {}  # chunk geometry changes with the count
         new_lists = self._rewrite_base(meta, entries, list(range(n_buckets)))
         meta.buckets = {str(b): new_lists.get(str(b), []) for b in range(n_buckets)}
+        meta.deltas = []
         meta.version += 1
         meta.lineage.append(
             {"version": meta.version, "rescaled_from": old_count, "n_buckets": n_buckets}
@@ -1247,13 +1251,11 @@ class LakeTable:
         base = self._read_files(meta, base_entries, with_lineage=True, with_op=True)
         merged = inc if base is None else inc.unionByName(base)
         obs = Observation()
-        out = shape.lww(merged, self._merge_slots(meta), keep_deletes=False).observe(
-            obs, shape.rows_agg
-        )
+        out = shape.lww(merged, self._merge_slots(meta)).observe(obs, shape.rows_agg)
         # manifest: part-NNNNN index % n_buckets == bucket id (empty
         # slots write no file; see _merge_slots). Touched buckets now
         # point at the new commit's files.
-        new_lists = self._commit_files(out, meta, touched, delta=False)
+        new_lists = self._commit_files(out, meta, touched)
         stats.rows_written = obs.get["rows"]
         if meta.change_feed:
             # CoW change feed: one extra flat write of the incoming
@@ -1299,16 +1301,10 @@ class LakeTable:
             F.lit(-1).cast("long").alias("_cdc_pos"),
         )
         out = out.repartition(self._merge_slots(meta), *self._shape(meta).key_exprs)
-        commit_dir = os.path.join(self.data_dir, f"commit-{meta.version + 1}-{uuid.uuid4().hex[:8]}")
-        out.write.mode("errorifexists").parquet(commit_dir)
-        meta.buckets = {str(b): [] for b in range(meta.n_buckets)}
-        for fn, nrows in _parquet_files_with_rows(commit_dir):
-            if nrows == 0:
-                continue
-            b = str(int(fn.split("-")[1]) % meta.n_buckets)
-            meta.buckets[b].append(
-                {"path": os.path.join(commit_dir, fn), "schema_version": meta.schema_version}
-            )
+        everyone = list(range(meta.n_buckets))
+        new_lists = self._commit_files(out, meta, everyone)
+        meta.buckets = {str(b): new_lists.get(str(b), []) for b in everyone}
+        meta.deltas = []
         meta.version += 1
         self._invalidate_change_consumers(meta)
         self._commit(meta)
@@ -1320,6 +1316,7 @@ class LakeTable:
         time-travelable until vacuum)."""
         meta = self._load_meta()
         meta.buckets = {str(b): [] for b in range(meta.n_buckets)}
+        meta.deltas = []
         meta.version += 1
         meta.lineage.append({"version": meta.version, "truncated": True})
         meta.lineage = meta.lineage[-200:]
@@ -1426,7 +1423,7 @@ class LakeTable:
 
     @staticmethod
     def _prune_schema_history(meta: _Meta) -> None:
-        live = {e["schema_version"] for lst in meta.buckets.values() for e in lst}
+        live = {e["schema_version"] for e in LakeTable._data_entries(meta)}
         live |= {e["schema_version"] for lst in meta.change_log.values() for e in lst}
         live.add(meta.schema_version)
         meta.schema_history = {
@@ -1438,7 +1435,7 @@ class LakeTable:
         """Delete data files and bucket-chunk manifests not referenced
         by the HEAD manifest."""
         meta = self._load_meta()
-        live = {e["path"] for lst in meta.buckets.values() for e in lst}
+        live = {e["path"] for e in self._data_entries(meta)}
         # change-feed files stay live until prune_changes drops them
         live |= {e["path"] for lst in meta.change_log.values() for e in lst}
         removed = 0

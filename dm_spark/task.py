@@ -69,7 +69,7 @@ class Task:
         (timeout_sec=0 → no deadline) or `stop_when(driver)` fires;
         resumes from checkpoint on restart. `compact_every=N` folds a
         merge-on-read lake's delta files back into base every N
-        batches; without it a MoR tail's files per bucket grow without
+        batches; without it a MoR tail's delta files pile up without
         bound."""
         drv = CdcStreamDriver(
             self.spark, self.feed_dir, self.checkpoint_dir,

@@ -26,7 +26,7 @@ from dm_spark.task import Task, replication_lag_sec
 
 # tail mode folds a merge-on-read lake's delta files into base every
 # this many batches (the tail kernel's cadence); without it a MoR
-# tail's files per bucket grow without bound
+# tail's delta files pile up without bound
 TAIL_COMPACT_EVERY = 8
 
 
@@ -169,6 +169,9 @@ def _task_status(cp_dir: str, control: dict, lake_dirs: list[str]) -> dict:
             "checkpoint": cp,
             "lag_sec": lag,
             "write_mode": m.get("write_mode"),
+            # merge-on-read compaction backlog: delta files the next
+            # compact() folds into base
+            "pending_deltas": len(m["deltas"]),
         }
     return status
 

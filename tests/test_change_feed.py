@@ -74,16 +74,17 @@ def test_change_feed_incremental_consumption(spark, tmp_path):
 
 def test_mor_change_feed_is_free(spark, tmp_path):
     """MoR delta files double as the change set: every change entry
-    must point at a data file the manifest already owns (no extra
-    write), and changes() must carry the tombstones."""
+    must point at a delta file the manifest already owns (no extra
+    write), and changes() must carry the batch's change rows,
+    tombstones included — the same contract as the CoW feed."""
     src = _mk(spark, tmp_path, "src_free", write_mode="mor", change_feed=True)
     src.merge_into(_ev(spark, [("I", "a", 1, "a1", 0, 1), ("D", "a", None, None, 0, 9)]), batch_id=0)
     meta = src._load_meta()
-    data_paths = {e["path"] for lst in meta.buckets.values() for e in lst}
+    data_paths = {e["path"] for e in meta.deltas}
     ch_paths = {e["path"] for lst in meta.change_log.values() for e in lst}
     assert ch_paths and ch_paths <= data_paths
-    ops = {r.op for r in src.changes().collect()}
-    assert ops == {"D"}  # LWW already resolved within the batch
+    got = sorted((r.op, r.k) for r in src.changes().collect())
+    assert got == [("D", "a"), ("I", "a")]  # the batch as merged, not LWW-folded
 
 
 def test_changes_project_to_current_schema(spark, tmp_path):

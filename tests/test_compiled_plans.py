@@ -171,7 +171,8 @@ def test_streaming_mor_merge_is_one_non_adaptive_job(spark, sf_dir, tmp_path, mo
 
 def test_mor_run_tail_compacts(spark, sf_dir, tmp_path):
     """`Task.run_tail(compact_every=N)` folds a merge-on-read lake's
-    deltas every N batches, so files per bucket stay bounded."""
+    deltas every N batches, so files per bucket and pending delta
+    files stay bounded (a one-file batch appends one delta file)."""
     lake = LakeTable.create(
         spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8, write_mode="mor"
     )
@@ -185,6 +186,7 @@ def test_mor_run_tail_compacts(spark, sf_dir, tmp_path):
     assert len(stats) == len(staged)
     meta = lake._load_meta()
     assert max(len(files) for files in meta.buckets.values()) <= 2
+    assert len(meta.deltas) == len(staged) % 2
     assert sum(1 for r in lake.lineage_log() if "compacted_buckets" in r) == len(staged) // 2
     assert_tables_equal(spark_final(lake), duck_replay(sf_dir))
 

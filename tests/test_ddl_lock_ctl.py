@@ -22,6 +22,8 @@ from dm_spark.plans import DdlEvent, ReplayRunner
 from dm_spark.streaming import CdcStreamDriver
 from dm_spark.streaming.ddl_coordinator import PendingSpill, ShardDdlBarrier
 
+from tests.test_lake import CHANGE_DDL, ch
+from tests.test_lake import KEY as LAKE_KEY, SCHEMA as LAKE_SCHEMA
 from tests.test_replay_runner import KEY, SCHEMA, ev, rows
 
 
@@ -167,11 +169,21 @@ def test_unlock_and_status_via_ctl(spark, runner, tmp_path):
     assert offline == runner.pending_locks()
     lock_id = offline[0]["lock_id"]
 
-    # status: read-only, no Spark round-trip
-    st = mainmod._task_status(cp, {}, [runner.lake.path])
+    # status: read-only, no Spark round-trip; a merge-on-read lake
+    # also reports its compaction backlog (delta files not yet folded)
+    mor = LakeTable.create(
+        spark, str(tmp_path / "mor"), LAKE_SCHEMA, LAKE_KEY, n_buckets=4, write_mode="mor"
+    )
+    for i in range(2):
+        mor.merge_into(spark.createDataFrame([ch("m", i, "I", "v", 0, i, i)], CHANGE_DDL))
+    st = mainmod._task_status(cp, {}, [runner.lake.path, mor.path])
     assert st["runner"]["unresolved_locks"] == [lock_id]
     assert st["lakes"][runner.lake.path]["checkpoint"]["pos"] == 6
     assert st["lakes"][runner.lake.path]["lag_sec"] is not None
+    assert st["lakes"][runner.lake.path]["pending_deltas"] == 0
+    assert st["lakes"][mor.path]["pending_deltas"] == 2
+    mor.compact()
+    assert mainmod._task_status(cp, {}, [mor.path])["lakes"][mor.path]["pending_deltas"] == 0
 
     # compose-time refusal: unknown lock never reaches control.json
     with pytest.raises(SystemExit, match="no pending lock"):

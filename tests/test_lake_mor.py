@@ -44,13 +44,14 @@ def test_mor_delta_files_then_compact(spark, pair):
     _, mor = pair
     _apply_all(spark, mor)
     meta = mor._load_meta()
-    n_delta = sum(1 for es in meta.buckets.values() for e in es if e.get("delta"))
-    assert n_delta > 0  # MoR wrote deltas, no base rewrite
+    assert meta.deltas and all(e.get("delta") for e in meta.deltas)
+    assert not any(meta.buckets.values())  # MoR wrote deltas, no base rewrite
     before = rows(mor.read())
 
     n = mor.compact()
     assert n > 0
     meta2 = mor._load_meta()
+    assert meta2.deltas == []
     assert not any(e.get("delta") for es in meta2.buckets.values() for e in es)
     assert rows(mor.read()) == before
     # compaction dropped tombstones: total file rows == live rows
@@ -60,6 +61,50 @@ def test_mor_delta_files_then_compact(spark, pair):
         for e in es
     )
     assert total == len(before)
+
+
+def test_mor_one_file_batch_writes_one_delta_file(spark, pair, tmp_path):
+    """A merge-on-read append writes the batch as it comes: a batch
+    read from one small file is one input partition and one delta
+    file, however many buckets its keys span."""
+    _, mor = pair
+    src = str(tmp_path / "one_file")
+    spark.createDataFrame(
+        [ch(f"k{i}", i, "I", "v1", 0, i, i) for i in range(64)], CHANGE_DDL
+    ).coalesce(1).write.parquet(src)
+    batch = spark.read.parquet(src)
+    assert batch.rdd.getNumPartitions() == 1
+    s = mor.merge_into(batch, batch_id=0)
+    assert s.rows_written == 64
+    meta = mor._load_meta()
+    assert len(meta.deltas) == 1
+    assert not any(meta.buckets.values())
+    assert len(rows(mor.read())) == 64
+
+
+def test_mor_lww_across_input_partitions(spark, pair):
+    """I, U, then D of one key in ONE batch, each in a different input
+    partition: the append keeps all three rows (one delta file per
+    partition), so LWW across partitions happens at read and at
+    compaction — the key is gone from both."""
+    _, mor = pair
+    rdd = spark.sparkContext.parallelize(
+        [
+            ch("x", 1, "I", "v1", 0, 1, 1),
+            ch("x", 1, "U", "v2", 0, 2, 2),
+            ch("x", 1, "D", None, 0, 3, 3),
+            ch("y", 1, "I", "v1", 0, 4, 4),
+        ],
+        3,
+    )
+    assert [len(p) for p in rdd.glom().collect()] == [1, 1, 2]
+    mor.merge_into(spark.createDataFrame(rdd, CHANGE_DDL), batch_id=0)
+    meta = mor._load_meta()
+    assert len(meta.deltas) == 3
+    assert rows(mor.read()) == [("y", 1, "v1")]
+    assert mor.compact() > 0
+    assert mor._load_meta().deltas == []
+    assert rows(mor.read()) == [("y", 1, "v1")]
 
 
 def test_mor_batch_gate_and_redelivery(spark, pair):
