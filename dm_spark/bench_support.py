@@ -47,7 +47,6 @@ def apply_throughput(
     n_convs: int = 50_000,
     decode: bool = False,
     text_chars: int = 600,
-    lww_strategy: str = "sort",
 ) -> dict:
     spark = get_spark(
         f"bench_apply_{master}", master=master, shuffle_partitions=shuffle_partitions
@@ -55,7 +54,7 @@ def apply_throughput(
     cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")])
     pipe = ApplyPipeline(cfg)
     workdir = tempfile.mkdtemp(prefix="dm_bench_")
-    lake = LakeTable.create(spark, f"{workdir}/lake", SCHEMA, KEY, n_buckets=n_buckets, lww_strategy=lww_strategy)
+    lake = LakeTable.create(spark, f"{workdir}/lake", SCHEMA, KEY, n_buckets=n_buckets)
     # warm the JVM/codegen/python-workers with a tiny run of the SAME
     # plan shape (excluded from timing)
     warm_feed = synthetic_feed(spark, 10_000, n_convs=1000, text_chars=text_chars)
@@ -72,14 +71,10 @@ def apply_throughput(
     assert not wstats.skipped and wstats.rows_written > 0
 
     per = n_events // n_batches
-    # map-side granularity knob (A/B-able under co-tenant noise)
-    import os as _os
-
-    map_parts = int(_os.environ.get("DM_BENCH_MAP_MULT", "1")) * shuffle_partitions
     t0 = time.time()
     for i in range(n_batches):
         feed = synthetic_feed(
-            spark, per, n_convs=n_convs, partitions=map_parts,
+            spark, per, n_convs=n_convs, partitions=shuffle_partitions,
             text_chars=text_chars,
         ).withColumn("file_seq", F.col("file_seq") + F.lit(i * 10_000))
         if decode:
@@ -242,14 +237,12 @@ if __name__ == "__main__":
     kind = sys.argv[1]
     if kind in ("apply", "apply_decode"):
         n_batches = int(sys.argv[5]) if len(sys.argv) > 5 else 4
-        strat = sys.argv[6] if len(sys.argv) > 6 else "sort"
         res = apply_throughput(
             sys.argv[2],
             int(sys.argv[3]),
             int(sys.argv[4]),
             n_batches=n_batches,
             decode=(kind == "apply_decode"),
-            lww_strategy=strat,
         )
         print(json.dumps(res))
     elif kind == "trickle":

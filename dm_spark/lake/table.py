@@ -165,7 +165,6 @@ class _Meta:
     # bucketing/LWW run on that computed identity, so PK-less or
     # null-key rows merge correctly on their UK.
     unique_keys: list = field(default_factory=list)
-    lww_strategy: str = "sort"  # "sort" (window; codegen, fastest) | "hash" (max_by agg)
     write_mode: str = "cow"  # "cow" (read+rewrite touched buckets) | "mor" (append deltas)
     # merge-on-read delta files [ {path, schema_version, delta} ]: any
     # bucket's rows in any file (Iceberg's unpartitioned delete files)
@@ -268,7 +267,7 @@ _CHANGE_TYPES = {"op": "string", "_cdc_ts": "timestamp", "_cdc_file_seq": "bigin
 
 class _Shape:
     """Every Column a table's writes and reads are built from, compiled
-    once per table shape (schema fields, key, unique_keys, lww_strategy)
+    once per table shape (schema fields, key, unique_keys)
     — as the reference resolves a table's schema once through its
     tracker and reuses it for every event (syncer/syncer.go:2021,
     getTableInfo :673-716). A Column costs several py4j round trips:
@@ -277,7 +276,6 @@ class _Shape:
 
     def __init__(self, meta: "_Meta"):
         self._fields = meta.fields()
-        self._strategy = meta.lww_strategy
         self.key_exprs = _merge_key_exprs(meta)
         nkeys = [f"__k{i}" for i in range(len(self.key_exprs))]
         self.payload_cols = [F.col(f["name"]) for f in self._fields]
@@ -288,12 +286,8 @@ class _Shape:
         self._keyed = sel + [c.alias(n) for n, c in zip(nkeys, self.key_exprs)]
         self._slots = [F.col(n) for n in nkeys]
         desc = [F.col(c).desc() for c in LINEAGE_COLS]
-        if self._strategy == "sort":
-            self._rn = F.row_number().over(Window.partitionBy(*self._slots).orderBy(*desc))
-            self._first = F.col("__rn") == 1
-        else:
-            self._winner = F.max_by(F.struct(*sel), F.struct(*self.lineage_cols)).alias("__w")
-            self._unwrap = F.col("__w.*")
+        self._rn = F.row_number().over(Window.partitionBy(*self._slots).orderBy(*desc))
+        self._first = F.col("__rn") == 1
         self._not_delete = F.col("op") != "D"
         self._out = self.payload_cols + self.lineage_cols
         # merge-on-read reads resolve base+delta on the key expressions
@@ -337,14 +331,11 @@ class _Shape:
         return cols
 
     def bucket(self, n_buckets: int):
-        """Bucket id == Spark's own shuffle slot MOD n_buckets for
-        `repartition(k*B, keys)`: pmod(murmur3(keys), B) ==
-        pmod(murmur3(keys), k*B) % B for any k >= 1. This identity lets
-        the merge write FLAT parquet (no dynamic-partition writer, ~2x
-        faster commit) — the output task index mod B IS the bucket id,
-        recovered from part-NNNNN file names for the manifest — while
-        the shuffle fans out over k*B slots so a merge into few buckets
-        still uses every core (see `LakeTable._merge_slots`). Only the
+        """Bucket id == Spark's own shuffle slot for `repartition(B,
+        keys)`: both are pmod(murmur3(keys), B). This identity lets the
+        merge write FLAT parquet (no dynamic-partition writer, ~2x
+        faster commit) — the output task index IS the bucket id,
+        recovered from part-NNNNN file names for the manifest. Only the
         copy-on-write prune pass evaluates it."""
         b = self._buckets.get(n_buckets)
         if b is None:
@@ -353,18 +344,14 @@ class _Shape:
             ).cast("int")
         return b
 
-    def lww(self, df: DataFrame, n_slots: int) -> DataFrame:
+    def lww(self, df: DataFrame, n_buckets: int) -> DataFrame:
         """The one LWW write plan of merge, compaction and rescale: key
         the payload + op + lineage rows, repartition them on the keys
         (slot == bucket, see `bucket`), keep each key's newest row by
         (ts, file_seq, pos) and drop tombstone winners. One shuffle:
-        the window (or the max_by aggregate, lww_strategy="hash")
-        reuses the repartition."""
-        rep = df.select(*self._keyed).repartition(n_slots, *self._slots)
-        if self._strategy == "sort":
-            res = rep.withColumn("__rn", self._rn).where(self._first)
-        else:
-            res = rep.groupBy(*self._slots).agg(self._winner).select(self._unwrap)
+        the row_number window reuses the repartition."""
+        rep = df.select(*self._keyed).repartition(n_buckets, *self._slots)
+        res = rep.withColumn("__rn", self._rn).where(self._first)
         return res.where(self._not_delete).select(*self._out)
 
     def resolve_read(self, df: DataFrame) -> DataFrame:
@@ -412,7 +399,7 @@ class LakeTable:
     def _shape(self, meta: _Meta) -> _Shape:
         """The compiled expressions of `meta`'s shape (keeps the last few)."""
         k = json.dumps(
-            [meta.fields(), meta.key, meta.unique_keys, meta.lww_strategy], sort_keys=True
+            [meta.fields(), meta.key, meta.unique_keys], sort_keys=True
         )
         shape = self._shapes.get(k)
         if shape is None:
@@ -425,25 +412,6 @@ class LakeTable:
     def _head_version(self) -> int:
         with open(os.path.join(self.meta_dir, "HEAD")) as f:
             return int(f.read().strip())
-
-    def _merge_slots(self, meta: _Meta) -> int:
-        """Shuffle-slot count for merge/compact/overwrite writes: a
-        multiple k of n_buckets. pmod(h, k*B) % B == pmod(h, B), so
-        slot % n_buckets recovers the bucket id and the flat-write
-        manifest identity is preserved — a deployment whose bucket
-        count sits below its core count can fan the merge sort/write
-        over k*B tasks (DM_SPARK_MERGE_SLOT_MULT=k).
-
-        Default k=1: MEASURED on this box (r6, 8M-event apply kernel,
-        local[32], n_buckets=16), k=2 consistently LOST ~15% (403/504k
-        ev/s vs 502/580k at k=1): 16 merge tasks already cover the 16
-        physical cores (the other 16 hw threads are SMT), and doubling
-        the per-commit file count added fixed cost per batch. The knob
-        stays for clusters with genuinely more cores than buckets."""
-        import os as _os
-
-        k = max(1, int(_os.environ.get("DM_SPARK_MERGE_SLOT_MULT", "1")))
-        return meta.n_buckets * k
 
     # bucket lists are sharded over this many chunk files; a commit only
     # rewrites chunks whose buckets changed — commit cost is O(touched
@@ -624,17 +592,11 @@ class LakeTable:
         schema: list[tuple[str, str]],
         key: list[str],
         n_buckets: int = 32,
-        lww_strategy: str = "sort",
         write_mode: str = "cow",
         unique_keys: list[list[str]] | None = None,
         change_feed: bool = False,
     ) -> "LakeTable":
         """schema: [(name, spark simpleString type), ...]; key ⊆ schema.
-        lww_strategy: "sort" = window row_number (whole-stage codegen
-        sort — measured fastest: 148k vs 91k events/s at local[16] on
-        the decode+apply kernel; max_by's ObjectHashAggregate copies the
-        wide text struct per update), "hash" = max_by aggregation.
-        Both are one shuffle.
 
         `unique_keys`: ordered fallback unique keys for tables whose PK
         components may be null (shard merges with heterogeneous
@@ -672,7 +634,6 @@ class LakeTable:
             schema_history={"0": fields},
             buckets={str(b): [] for b in range(n_buckets)},
             totals={"rows_upserted": 0, "rows_deleted": 0, "batches": 0},
-            lww_strategy=lww_strategy,
             write_mode=write_mode,
             unique_keys=[list(uk) for uk in unique_keys or []],
             change_feed=change_feed,
@@ -1033,7 +994,7 @@ class LakeTable:
             return [{**e, "delta": True} for _fn, e in entries]
         new_lists: dict[str, list[dict]] = {}
         for fn, e in entries:
-            new_lists.setdefault(str(int(fn.split("-")[1]) % meta.n_buckets), []).append(e)
+            new_lists.setdefault(str(int(fn.split("-")[1])), []).append(e)
         stray = [b for b in new_lists if int(b) not in allowed]
         if stray:
             raise RuntimeError(f"bucket/slot identity violated: {stray}")
@@ -1097,7 +1058,7 @@ class LakeTable:
         if base is None:
             return {}
         with _merge_aqe_off(base.sparkSession):
-            out = self._shape(meta).lww(base, self._merge_slots(meta))
+            out = self._shape(meta).lww(base, meta.n_buckets)
             return self._commit_files(out, meta, targets)
 
     def rescale(self, n_buckets: int) -> int:
@@ -1251,10 +1212,10 @@ class LakeTable:
         base = self._read_files(meta, base_entries, with_lineage=True, with_op=True)
         merged = inc if base is None else inc.unionByName(base)
         obs = Observation()
-        out = shape.lww(merged, self._merge_slots(meta)).observe(obs, shape.rows_agg)
-        # manifest: part-NNNNN index % n_buckets == bucket id (empty
-        # slots write no file; see _merge_slots). Touched buckets now
-        # point at the new commit's files.
+        out = shape.lww(merged, meta.n_buckets).observe(obs, shape.rows_agg)
+        # manifest: part-NNNNN index == bucket id (empty slots write no
+        # file; see _Shape.bucket). Touched buckets now point at the new
+        # commit's files.
         new_lists = self._commit_files(out, meta, touched)
         stats.rows_written = obs.get["rows"]
         if meta.change_feed:
@@ -1300,7 +1261,7 @@ class LakeTable:
             F.lit(-1).cast("long").alias("_cdc_file_seq"),
             F.lit(-1).cast("long").alias("_cdc_pos"),
         )
-        out = out.repartition(self._merge_slots(meta), *self._shape(meta).key_exprs)
+        out = out.repartition(meta.n_buckets, *self._shape(meta).key_exprs)
         everyone = list(range(meta.n_buckets))
         new_lists = self._commit_files(out, meta, everyone)
         meta.buckets = {str(b): new_lists.get(str(b), []) for b in everyone}

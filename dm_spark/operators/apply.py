@@ -4,7 +4,8 @@ Mirrors the reference's rows-event path (syncer/syncer.go:1953-2109,
 ordered per SURVEY §3.2): route -> filters -> column mapping ->
 generated-column pruning -> DML generation. DML generation here is
 `flatten_changes`: the row image plus op plus lineage columns, which
-`LakeTable.merge_into` resolves LWW and commits atomically — replacing
+`ApplyPipeline.merge` hands to each target's `LakeTable.merge_into` to
+resolve LWW and commit atomically — replacing
 causality (syncer/causality.go), hash distribution
 (syncer/dml_worker.go:132-137) and the 100-stmt txn batches
 (syncer/dml_worker.go:144-238).
@@ -166,6 +167,7 @@ class ApplyPipeline:
         # compiled transforms by (config, floor, envelope `after` fields)
         self._compiled: dict[tuple, list] = {}
         self._no_queries = None
+        self._target_preds: dict[str, object] = {}
 
     def transform(self, feed: DataFrame) -> DataFrame:
         """Envelope -> flat change batch. The stages compile once per
@@ -240,23 +242,68 @@ class ApplyPipeline:
         selects = flatten_selects(payload, ["target_table"], c.key, c.unique_keys or None)
         return steps + [lambda df, cols=cols: df.select(*cols) for cols in selects]
 
-    def apply_batch(self, lakes: dict[str, "LakeTable"], batch: DataFrame, batch_id: int | None = None) -> dict:
-        """Route-partitioned MERGE: one atomic commit per target table.
-        `batch` is the output of `transform`. `salt_hot_keys` in the
-        task config turns on the salted pre-reduction (Compactor + skew
-        salting) inside each merge."""
+    # at this many targets the per-target merges fan out over a driver
+    # thread pool (Spark jobs are thread-safe per session); below it
+    # the pool overhead isn't worth it
+    MERGE_POOL_MIN_TARGETS = 4
+    MERGE_POOL_WORKERS = 8
+
+    def merge(
+        self,
+        flat: DataFrame,
+        lakes: dict[str, "LakeTable"],
+        part=None,
+        points: dict | None = None,
+        **merge_kw,
+    ) -> dict[str, "MergeStats"]:
+        """Merge a routed flat batch (the output of `transform`) into
+        its target lakes: one atomic LWW commit per target, the DML
+        workers of the reference (syncer/dml_worker.go:132-238). Each
+        target merges the rows `part(flat, target)` selects, by default
+        the rows routed to it; `points` maps a target to the per-table
+        checkpoints its commit records. `salt_hot_keys` in the task
+        config turns on the salted pre-reduction inside each merge.
+
+        With many targets (reference `tests/many_tables` runs 500+), a
+        serial loop is O(targets) in driver-side job launches, so the
+        merges fan out over a bounded thread pool: each lake's commit is
+        still its own snapshot and no two threads touch one lake. Errors
+        propagate after every merge has finished."""
+        if part is None:
+            part = self._target_rows
         pre = 16 if self.config.salt_hot_keys else None
-        stats = {}
         many = len(lakes) > 1
         if many:
             # each target's merge scans the batch: persist so a multi-
-            # target apply doesn't recompute the upstream per lake
-            batch = batch.persist()
+            # target merge doesn't recompute the upstream per lake
+            flat = flat.persist()
+
+        def one(target: str):
+            return lakes[target].merge_into(
+                part(flat, target), pre_reduce=pre,
+                table_points=(points or {}).get(target), **merge_kw,
+            )
+
         try:
-            for target, lake in lakes.items():
-                part = batch.where(F.col("target_table") == target).drop("target_table")
-                stats[target] = lake.merge_into(part, batch_id=batch_id, pre_reduce=pre)
+            if len(lakes) < self.MERGE_POOL_MIN_TARGETS:
+                return {t: one(t) for t in lakes}
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(
+                max_workers=min(self.MERGE_POOL_WORKERS, len(lakes)),
+                thread_name_prefix="dm-merge",
+            ) as pool:
+                futs = {t: pool.submit(one, t) for t in lakes}
+            # every merge has finished here; result() raises the first error
+            return {t: f.result() for t, f in futs.items()}
         finally:
             if many:
-                batch.unpersist()
-        return stats
+                flat.unpersist()
+
+    def _target_rows(self, flat: DataFrame, target: str) -> DataFrame:
+        """`flat`'s rows routed to `target`, without the route column
+        (the predicate Column is built once per target)."""
+        pred = self._target_preds.get(target)
+        if pred is None:
+            pred = self._target_preds[target] = F.col("target_table") == target
+        return flat.where(pred).drop("target_table")

@@ -56,7 +56,6 @@ class CdcStreamDriver:
         # stream identity ties the lake's batch-id gate to this checkpoint
         self.stream_id = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
         self.batch_stats: list[dict] = []
-        self._target_preds: dict = {}  # target -> Column, built once
         # DDL mode: batches route through a ReplayRunner so schema
         # actions interleave with DMLs at their exact location
         # (flush-before-DDL inside the batch); exactly-once then rests
@@ -67,9 +66,9 @@ class CdcStreamDriver:
         # barrier/tracker/online-DDL state saved after the last batch —
         # spilled rows are already on disk, this remembers WHY they wait
         self._runner_state_path = os.path.join(checkpoint_dir, "runner_state.json")
-        if self.runner is not None and os.path.exists(self._runner_state_path):
-            with open(self._runner_state_path) as f:
-                self.runner.restore_state(json.load(f))
+        state = self._read_json(self._runner_state_path) if runner is not None else None
+        if state is not None:
+            self.runner.restore_state(state)
         # operate-schema ops are applied at most once per issued op: the
         # last applied op is persisted beside the checkpoint so a driver
         # restart does not re-apply the op still present in control.json
@@ -77,28 +76,19 @@ class CdcStreamDriver:
         self._applied_schema_op_path = os.path.join(
             checkpoint_dir, "applied_schema_op.json"
         )
-        self._applied_schema_op = None
-        if os.path.exists(self._applied_schema_op_path):
-            with open(self._applied_schema_op_path) as f:
-                self._applied_schema_op = json.load(f)
+        self._applied_schema_op = self._read_json(self._applied_schema_op_path)
         # handle-error ops (binlog skip/replace/revert) share the same
         # at-most-once-per-issued-op contract: each ctl issue carries a
         # fresh id, the last applied op persists beside the checkpoint
         self._applied_binlog_op_path = os.path.join(
             checkpoint_dir, "applied_binlog_op.json"
         )
-        self._applied_binlog_op = None
-        if os.path.exists(self._applied_binlog_op_path):
-            with open(self._applied_binlog_op_path) as f:
-                self._applied_binlog_op = json.load(f)
+        self._applied_binlog_op = self._read_json(self._applied_binlog_op_path)
         # unlock-ddl-lock ops: same at-most-once contract
         self._applied_unlock_op_path = os.path.join(
             checkpoint_dir, "applied_unlock_op.json"
         )
-        self._applied_unlock_op = None
-        if os.path.exists(self._applied_unlock_op_path):
-            with open(self._applied_unlock_op_path) as f:
-                self._applied_unlock_op = json.load(f)
+        self._applied_unlock_op = self._read_json(self._applied_unlock_op_path)
         # GTID-set analog (opt-in, dm_spark/lineage.py): the applied
         # txn_id interval set, folded per micro-batch and persisted
         # beside the checkpoint — a semilattice, so crash-replayed
@@ -106,10 +96,8 @@ class CdcStreamDriver:
         # gap (a transaction below the high water that never applied)
         self.track_txn_intervals = track_txn_intervals
         self._txn_intervals_path = os.path.join(checkpoint_dir, "txn_intervals.json")
-        self.txn_intervals: list[list[int]] = []
-        if track_txn_intervals and os.path.exists(self._txn_intervals_path):
-            with open(self._txn_intervals_path) as f:
-                self.txn_intervals = json.load(f)["intervals"]
+        saved = self._read_json(self._txn_intervals_path) if track_txn_intervals else None
+        self.txn_intervals: list[list[int]] = saved["intervals"] if saved else []
         # MoR maintenance: fold delta files back into base every N
         # batches (the rewrite_data_files scheduling a table service
         # would own on a real lakehouse)
@@ -201,14 +189,13 @@ class CdcStreamDriver:
         t_start = time.time()
         self._apply_staged_patch()  # batch boundary: swap filters here
         # persist ONLY when the batch is read more than once (runner
-        # mode scans it per DDL range; multi-target scans it per lake;
-        # a pruning CoW merge makes a bucket-discovery pass). The
+        # mode scans it per DDL range; a multi-target merge pins the
+        # flat batch itself, a pruning CoW merge its own input). The
         # common tail shape — single target, MoR append — is a single
         # pass, and caching ~100s of MB per micro-batch was pure
         # overhead (profiled: ~25% of live-tail batch time).
         multi_pass = (
             self.runner is not None
-            or len(self.lakes) > 1
             # the txn-interval fold re-scans the raw batch after the merge
             or self.track_txn_intervals
         )
@@ -225,59 +212,51 @@ class CdcStreamDriver:
                     if mx is not None and e.loc()[:2] <= (mx["file_seq"], mx["pos"])
                 ]
                 due = sorted([*side, *inline], key=lambda e: e.loc())
-                self.runner.replay(self.pipeline.without_queries(batch_df), due)
+                merged = self.runner.replay(self.pipeline.without_queries(batch_df), due)
                 # side-channel DDLs leave the queue only once applied: an
                 # interrupted batch (stop mid-merge) replays from the
                 # checkpoint and must find them still due (the lake's
                 # applied-DDL location gate makes the re-apply a no-op)
                 self.ddl_events = self.ddl_events[len(side):]
                 self._save_runner_state()
-                self._fold_txn_intervals(batch_df)
-                # the same timing fields as plain mode; lag is the
-                # furthest-behind target's
-                lags = [self._lag_sec(lk) for lk in self.runner.lakes.values()]
-                lags = [x for x in lags if x is not None]
-                self.batch_stats.append(
-                    {
-                        "batch_id": batch_id,
-                        "ddls": len(due),
-                        "lag_sec": max(lags) if lags else None,
-                        "sec": round(time.time() - t_start, 3),
-                    }
+                lakes = self.runner.lakes
+            else:
+                # plain pipeline has no DDL surface: query events drop here
+                flat = self.pipeline.transform(self.pipeline.without_queries(batch_df))
+                stats = self.pipeline.merge(
+                    flat, self.lakes, batch_id=batch_id, stream_id=self.stream_id,
+                    epoch=self.epoch,
                 )
-                return
-            # plain pipeline has no DDL surface: query events drop here
-            flat = self.pipeline.transform(self.pipeline.without_queries(batch_df))
-            if multi_pass:
-                flat.persist()
-            pre = 16 if self.pipeline.config.salt_hot_keys else None
-            for target, lake in self.lakes.items():
-                if target not in self._target_preds:
-                    self._target_preds[target] = F.col("target_table") == target
-                part = flat.where(self._target_preds[target]).drop("target_table")
-                stats = lake.merge_into(
-                    part, batch_id=batch_id, stream_id=self.stream_id,
-                    pre_reduce=pre, epoch=self.epoch,
-                )
-                if (
-                    self.compact_every
-                    and not stats.skipped
-                    and (batch_id + 1) % self.compact_every == 0
-                ):
+                lakes = {t: self.lakes[t] for t, st in stats.items() if not st.skipped}
+            if self.compact_every and (batch_id + 1) % self.compact_every == 0:
+                for lake in lakes.values():
                     lake.compact()
-                self.batch_stats.append(
-                    {
+            # `sec` covers merge and compaction, in both modes
+            sec = round(time.time() - t_start, 3)
+            if self.runner is not None:
+                # the same fields as plain mode, summed over the batch's
+                # merges; lag is the furthest-behind target's
+                lags = [lk.replication_lag_sec() for lk in lakes.values()]
+                lags = [x for x in lags if x is not None]
+                self.batch_stats.append({
+                    "batch_id": batch_id,
+                    "ddls": len(due),
+                    "n_incoming": sum(st.n_incoming for st in merged),
+                    "rows_written": sum(st.rows_written for st in merged),
+                    "lag_sec": max(lags) if lags else None,
+                    "sec": sec,
+                })
+            else:
+                for target, st in stats.items():
+                    self.batch_stats.append({
                         "batch_id": batch_id,
                         "target": target,
-                        "skipped": stats.skipped,
-                        "n_incoming": stats.n_incoming,
-                        "rows_written": stats.rows_written,
-                        "lag_sec": self._lag_sec(lake),
-                        "sec": round(time.time() - t_start, 3),
-                    }
-                )
-            if multi_pass:
-                flat.unpersist()
+                        "skipped": st.skipped,
+                        "n_incoming": st.n_incoming,
+                        "rows_written": st.rows_written,
+                        "lag_sec": self.lakes[target].replication_lag_sec(),
+                        "sec": sec,
+                    })
             self._fold_txn_intervals(batch_df)
         finally:
             if multi_pass:
@@ -480,10 +459,7 @@ class CdcStreamDriver:
         # in-stream ALTER legitimately diverges the tracker from the op's
         # snapshot), so a restart must not re-apply the op still sitting
         # in control.json — the sidecar survives the process
-        tmp = f"{self._applied_schema_op_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(op, f)
-        os.replace(tmp, self._applied_schema_op_path)
+        self._write_json(self._applied_schema_op_path, op)
 
     def _stage_binlog_op(self, ctl: dict) -> None:
         """Poll-thread side of `ctl binlog skip|replace|revert`: validate
@@ -573,10 +549,7 @@ class CdcStreamDriver:
             self.runner.error_ops.revert(fs, pos)
         self._save_runner_state()
         self._applied_binlog_op = op
-        tmp = f"{self._applied_binlog_op_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(op, f)
-        os.replace(tmp, self._applied_binlog_op_path)
+        self._write_json(self._applied_binlog_op_path, op)
 
     def _stage_unlock_op(self, ctl: dict) -> None:
         op = ctl.get("unlock_op")
@@ -646,10 +619,7 @@ class CdcStreamDriver:
             self.batch_stats.append({"unlock_op": op.get("id"), "result": why})
         self._save_runner_state()
         self._applied_unlock_op = op
-        tmp = f"{self._applied_unlock_op_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(op, f)
-        os.replace(tmp, self._applied_unlock_op_path)
+        self._write_json(self._applied_unlock_op_path, op)
 
     def _apply_config_patch(self, ctl: dict, paused: bool = False) -> None:
         import copy
@@ -712,11 +682,7 @@ class CdcStreamDriver:
         on disk is always the state as of SOME completed batch; a crash
         mid-batch replays that batch from the stream checkpoint against
         the matching coordination state (merges are LWW-idempotent)."""
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = f"{self._runner_state_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(self.runner.state_json(), f)
-        os.replace(tmp, self._runner_state_path)
+        self._write_json(self._runner_state_path, self.runner.state_json())
 
     def _fold_txn_intervals(self, batch_df: DataFrame) -> None:
         """Opt-in GTID-set analog: fold this batch's applied txn_id
@@ -735,15 +701,26 @@ class CdcStreamDriver:
         self.txn_intervals = merge_intervals(
             self.txn_intervals, batch_txn_intervals(batch_df)
         )
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        tmp = f"{self._txn_intervals_path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"intervals": self.txn_intervals}, f)
-        os.replace(tmp, self._txn_intervals_path)
+        self._write_json(self._txn_intervals_path, {"intervals": self.txn_intervals})
 
     @staticmethod
-    def _lag_sec(lake: LakeTable) -> float | None:
-        return lake.replication_lag_sec()
+    def _read_json(path: str):
+        """The JSON document saved at `path`, or None if there is none."""
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            return json.load(f)
+
+    @staticmethod
+    def _write_json(path: str, doc) -> None:
+        """Save `doc` at `path` atomically: a uniquely named tmp file
+        beside it, then os.replace, so a reader sees the old document
+        or the new one, never a partial write."""
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            json.dump(doc, f)
+        os.replace(tmp, path)
 
     def run_available_now(self, timeout_sec: int = 600) -> list[dict]:
         """Drain everything currently in the relay dir, then stop
@@ -1087,7 +1064,4 @@ class CdcStreamDriver:
             except FileNotFoundError:
                 pass
             return
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"blocked": True, "error": error, "at": time.time()}, f)
-        os.replace(tmp, path)
+        self._write_json(path, {"blocked": True, "error": error, "at": time.time()})

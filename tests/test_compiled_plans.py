@@ -191,10 +191,33 @@ def test_mor_run_tail_compacts(spark, sf_dir, tmp_path):
     assert_tables_equal(spark_final(lake), duck_replay(sf_dir))
 
 
+def test_runner_mode_mor_tail_compacts(spark, sf_dir, tmp_path):
+    """A runner-mode (DDL-capable) driver honours `compact_every` as
+    plain mode does: every N batches the deltas of its lakes fold back
+    into base, and the state still matches the oracle."""
+    lake = LakeTable.create(
+        spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8, write_mode="mor"
+    )
+    pipe = ApplyPipeline(CFG)
+    drv = CdcStreamDriver(
+        spark, str(tmp_path / "feed"), str(tmp_path / "cp"), pipe, {"transcripts": lake},
+        max_files_per_trigger=1, runner=ReplayRunner(pipeline=pipe, lake=lake),
+        compact_every=2,
+    )
+    staged = _stage_chunks(spark, sf_dir, str(tmp_path / "stage"))
+    _feeder(staged, drv.feed_dir, delay=0)
+    stats = drv.run_available_now()
+    assert len(stats) == len(staged) >= 4
+    meta = lake._load_meta()
+    assert sum(1 for r in lake.lineage_log() if "compacted_buckets" in r) == len(staged) // 2
+    assert len(meta.deltas) == len(staged) % 2
+    assert_tables_equal(spark_final(lake), duck_replay(sf_dir))
+
+
 def test_batch_stats_share_timing_fields_across_modes(spark, sf_dir, tmp_path):
-    """Plain and runner (DDL) mode record the same per-batch timing
-    fields, so one monitor reads either."""
-    shared = {"batch_id", "sec", "lag_sec"}
+    """Plain and runner (DDL) mode record the same per-batch timing and
+    row-count fields, so one monitor reads either."""
+    shared = {"batch_id", "sec", "lag_sec", "n_incoming", "rows_written"}
     feed = feedmod.change_feed(spark, sf_dir)
     records = {}
     for name in ("plain", "runner"):
@@ -212,3 +235,6 @@ def test_batch_stats_share_timing_fields_across_modes(spark, sf_dir, tmp_path):
         for s in stats:
             assert shared <= set(s), (name, s)
             assert s["sec"] >= 0 and s["lag_sec"] is not None, (name, s)
+    # both modes merged the same change rows
+    n_in = {name: sum(s["n_incoming"] for s in stats) for name, stats in records.items()}
+    assert n_in["plain"] == n_in["runner"] > 0, n_in
