@@ -12,11 +12,12 @@ parquet. The design mirrors Iceberg's:
   leaves orphan files, never a corrupt table (Iceberg's
   metadata-pointer-swap model).
 - **Hash-bucket partitioning + partition-level copy-on-write**: rows are
-  bucketed by `pmod(xxhash64(key), n_buckets)` (Iceberg `bucket(N, key)`
-  transform). A MERGE only reads and rewrites the buckets that contain
-  incoming keys — cost is proportional to touched buckets, not table
-  size, which is what makes continuous upserts viable at 10^10 rows
-  (size n_buckets so bucket ≈ a few GB at target scale).
+  bucketed by `pmod(murmur3(key), n_buckets)` (Iceberg `bucket(N, key)`
+  transform). A MERGE only commits rewrites of the buckets that contain
+  incoming keys, and when a pre-pass can narrow it, reads only those —
+  cost is proportional to touched buckets, not table size, which is
+  what makes continuous upserts viable at 10^10 rows (size n_buckets so
+  bucket ≈ a few GB at target scale).
 - **Field-ID schema evolution**: columns carry stable integer field ids;
   add/rename/widen/drop never rewrite data files. Each data file records
   the schema version it was written under, and the read path projects it
@@ -133,6 +134,19 @@ def _parquet_files_with_rows(commit_dir: str) -> list[tuple[str, int]]:
         if fn.startswith("part-") and fn.endswith(".parquet"):
             out.append((fn, pq.ParquetFile(os.path.join(commit_dir, fn)).metadata.num_rows))
     return out
+
+
+def _drop_part_file(path: str) -> int:
+    """Delete an uncommitted part file (and its local checksum file);
+    returns its row count."""
+    import pyarrow.parquet as pq
+
+    n = pq.ParquetFile(path).metadata.num_rows
+    d, fn = os.path.split(path)
+    for p in (path, os.path.join(d, f".{fn}.crc")):
+        if os.path.exists(p):
+            os.remove(p)
+    return n
 
 
 @dataclass
@@ -304,7 +318,7 @@ class _Shape:
         ]
         self.rows_agg = F.count(F.lit(1)).alias("rows")
         self._ins: dict[tuple, list] = {}
-        self._buckets: dict[int, object] = {}
+        self._cow_aggs: dict[int, list] = {}
         self._projections: dict[tuple, tuple] = {}
 
     def ins(self, in_cols: tuple[str, ...]) -> list:
@@ -330,19 +344,19 @@ class _Shape:
             self._ins[in_cols] = cols
         return cols
 
-    def bucket(self, n_buckets: int):
-        """Bucket id == Spark's own shuffle slot for `repartition(B,
-        keys)`: both are pmod(murmur3(keys), B). This identity lets the
-        merge write FLAT parquet (no dynamic-partition writer, ~2x
-        faster commit) — the output task index IS the bucket id,
-        recovered from part-NNNNN file names for the manifest. Only the
-        copy-on-write prune pass evaluates it."""
-        b = self._buckets.get(n_buckets)
-        if b is None:
-            b = self._buckets[n_buckets] = F.pmod(
-                F.hash(*self.key_exprs), F.lit(n_buckets)
-            ).cast("int")
-        return b
+    def cow_aggs(self, n_buckets: int) -> list:
+        """`in_aggs` plus the set of bucket ids the batch touches
+        (`bks`), the stats of a copy-on-write merge. Bucket id ==
+        Spark's own shuffle slot for `repartition(B, keys)`: both are
+        pmod(murmur3(keys), B). This identity lets the merge write FLAT
+        parquet (no dynamic-partition writer, ~2x faster commit) — the
+        output task index IS the bucket id, recovered from part-NNNNN
+        file names for the manifest."""
+        aggs = self._cow_aggs.get(n_buckets)
+        if aggs is None:
+            b = F.pmod(F.hash(*self.key_exprs), F.lit(n_buckets)).cast("int")
+            aggs = self._cow_aggs[n_buckets] = [F.collect_set(b).alias("bks"), *self.in_aggs]
+        return aggs
 
     def lww(self, df: DataFrame, n_buckets: int) -> DataFrame:
         """The one LWW write plan of merge, compaction and rescale: key
@@ -888,13 +902,24 @@ class LakeTable:
         Single shuffle: repartition on the normalized key so the shuffle
         slot equals the bucket id; the LWW window reuses that shuffle.
 
-        `prune=True` (CDC trickle): an extra pass finds the touched
-        buckets so only those are read+rewritten — cost proportional to
-        touched data, the partition-level CoW that keeps continuous
-        upserts viable on a 10^10-row table.
-        `prune=False` (bulk replay / backfill): every bucket is assumed
-        touched; stats are collected as observed metrics on the single
-        merge-write job — one Spark job per batch, no extra pass.
+        Copy-on-write merges rewrite only the buckets the batch touches.
+        `prune=True` (CDC trickle): when it can narrow the merge, a
+        pre-pass job finds the touched buckets so only their base files
+        are read and rewritten — cost proportional to touched data, the
+        partition-level CoW that keeps continuous upserts viable on a
+        10^10-row table. It cannot narrow a merge into a table with no
+        base files, and is skipped after a merge that touched every
+        bucket (the next one most likely does too); those merges run
+        as with `prune=False`.
+        `prune=False` (bulk replay / backfill): no pre-pass. The batch
+        and every base file go through the one merge-write job, whose
+        observed metrics carry the batch stats and touched buckets;
+        untouched buckets keep their old files (their rewrites, equal
+        to their base under LWW, are dropped before the commit). Both
+        paths commit the same manifest; a skipped pre-pass that would
+        have pruned costs one rewrite of the untouched buckets, never
+        correctness, and the observed touch count lets the next merge
+        prune again.
 
         Tombstone semantics, disclosed: the CoW write drops delete
         winners at commit (no stored tombstone), so a redelivered
@@ -959,22 +984,34 @@ class LakeTable:
                 if prev is None or tuple(prev) < tuple(cand):
                     meta.table_points[t] = cand
 
-        # merge makes two passes over the incoming batch (bucket/stats
-        # agg, then the LWW merge) — persist so an expensive upstream
-        # (pandas-UDF wire decode) runs once. MEMORY_AND_DISK: a micro-
-        # batch must never OOM the executor at scale.
         with _merge_aqe_off(changes.sparkSession):
             if meta.write_mode == "mor":
                 return self._merge_mor(changes, meta, batch_id)
-            if not prune:
-                # bulk path is single-pass (stats ride the write job as
-                # observed metrics) — no second pass, so no cache needed
-                return self._merge_persisted(changes, meta, batch_id, prune)
+            prune = prune and self._prune_pays(meta)
+            if not (prune or meta.change_feed):
+                # one pass over the batch: nothing to cache
+                return self._merge_cow(changes, meta, batch_id, prune)
+            # the pre-pass and the change-feed write each read the batch
+            # again — persist so an expensive upstream (pandas-UDF wire
+            # decode) runs once. MEMORY_AND_DISK: a micro-batch must
+            # never OOM the executor at scale.
             changes = changes.persist(StorageLevel.MEMORY_AND_DISK)
             try:
-                return self._merge_persisted(changes, meta, batch_id, prune)
+                return self._merge_cow(changes, meta, batch_id, prune)
             finally:
                 changes.unpersist()
+
+    @staticmethod
+    def _prune_pays(meta: _Meta) -> bool:
+        """Whether a touched-bucket pre-pass can narrow a CoW merge: not
+        into a table with no base files, nor after a CoW merge that
+        touched every bucket. A pre-pass that cannot prune costs a job,
+        a cache fill and a driver gap; a wrong guess costs one rewrite
+        that the next merge's observed touch count corrects."""
+        if not any(meta.buckets.values()):
+            return False
+        last = next((r for r in reversed(meta.lineage) if r.get("mode") == "cow"), None)
+        return last is None or last["buckets_touched"] < meta.n_buckets
 
     def _commit_files(self, out: DataFrame, meta: _Meta, allowed: list[int] | None):
         """Write `out` flat into a new commit dir. Base files: return
@@ -1170,43 +1207,24 @@ class LakeTable:
         meta.lineage = meta.lineage[-200:]
         self._commit(meta, dirty=dirty)
 
-    def _merge_persisted(self, changes, meta, batch_id, prune) -> MergeStats:
+    def _merge_cow(self, changes, meta, batch_id, prune) -> MergeStats:
+        """Copy-on-write write path: LWW-rewrite the touched buckets
+        (see `merge_into` for `prune`)."""
         shape = self._shape(meta)
         changes = changes.select(*shape.ins(tuple(changes.columns)))
-        obs_in = None
-        loc = None
+        aggs = shape.cow_aggs(meta.n_buckets)
         if prune:
-            # extra pass over incoming: touched buckets + checkpoint + counts
-            agg = changes.agg(
-                F.collect_set(shape.bucket(meta.n_buckets)).alias("bks"), *shape.in_aggs
-            ).collect()[0]
-            touched = sorted(agg["bks"] or [])
-            loc = agg["loc"]
-            max_ts = agg["mts"]
-            stats = MergeStats(
-                version=meta.version + 1,
-                batch_id=batch_id,
-                n_incoming=agg["n"],
-                n_deletes_in=agg["nd"] or 0,
-                n_buckets_touched=len(touched),
-            )
+            # pre-pass job: touched buckets + checkpoint + counts
+            m = changes.agg(*aggs).collect()[0]
+            touched = sorted(m["bks"] or [])
             if not touched:
-                meta.version += 1
-                if batch_id is not None:
-                    meta.last_batch_id = batch_id
-                meta.totals["batches"] += 1
-                self._commit(meta, dirty=set())
-                return stats
+                return self._commit_empty(meta, batch_id, m["n"], m["nd"])
             inc = changes
         else:
-            # bulk path: all buckets in play; stats ride the write job
+            # one job: every bucket in play; stats ride the write job
             touched = list(range(meta.n_buckets))
-            stats = MergeStats(
-                version=meta.version + 1, batch_id=batch_id, n_buckets_touched=len(touched)
-            )
             obs_in = Observation()
-            max_ts = None
-            inc = changes.observe(obs_in, *shape.in_aggs)
+            inc = changes.observe(obs_in, *aggs)
 
         base_entries = [e for b in touched for e in meta.buckets[str(b)]]
         base = self._read_files(meta, base_entries, with_lineage=True, with_op=True)
@@ -1214,16 +1232,34 @@ class LakeTable:
         obs = Observation()
         out = shape.lww(merged, meta.n_buckets).observe(obs, shape.rows_agg)
         # manifest: part-NNNNN index == bucket id (empty slots write no
-        # file; see _Shape.bucket). Touched buckets now point at the new
-        # commit's files.
+        # file; see _Shape.cow_aggs). Touched buckets now point at the
+        # new commit's files.
         new_lists = self._commit_files(out, meta, touched)
-        stats.rows_written = obs.get["rows"]
+        rows_written = obs.get["rows"]
+        if not prune:
+            m = obs_in.get
+            touched = sorted(m["bks"] or [])
+            # an untouched bucket came out as its own base: it keeps its
+            # old files and its rewrite is deleted uncommitted
+            for b in set(new_lists) - {str(t) for t in touched}:
+                for e in new_lists.pop(b):
+                    rows_written -= _drop_part_file(e["path"])
+            if not touched:
+                return self._commit_empty(meta, batch_id, m["n"], m["nd"])
+        stats = MergeStats(
+            version=meta.version + 1,
+            batch_id=batch_id,
+            n_incoming=m["n"],
+            n_deletes_in=m["nd"] or 0,
+            n_buckets_touched=len(touched),
+            rows_written=rows_written,
+        )
         if meta.change_feed:
             # CoW change feed: one extra flat write of the incoming
-            # batch (op + payload + lineage). In the trickle path the
-            # upstream is persisted by merge_into so this is a cheap
-            # second read; rows that lose LWW to base state still emit
-            # (harmless to LWW consumers — they lose downstream too).
+            # batch (op + payload + lineage). merge_into persists the
+            # upstream for it, so this is a cheap second read; rows that
+            # lose LWW to base state still emit (harmless to LWW
+            # consumers — they lose downstream too).
             chdir = os.path.join(
                 self.path, "_changes", f"v{meta.version + 1}-{uuid.uuid4().hex[:8]}"
             )
@@ -1234,18 +1270,24 @@ class LakeTable:
                 for fn, nrows in _parquet_files_with_rows(chdir)
                 if nrows > 0
             ]
-        if obs_in is not None:
-            m = obs_in.get
-            stats.n_incoming = m["n"]
-            stats.n_deletes_in = m["nd"] or 0
-            loc = m["loc"]
-            max_ts = m["mts"]
         for b in touched:
             meta.buckets[str(b)] = new_lists.get(str(b), [])
         self._finish_commit(
-            meta, batch_id, stats, loc, max_ts, mode="cow", dirty=set(touched)
+            meta, batch_id, stats, m["loc"], m["mts"], mode="cow", dirty=set(touched)
         )
         return stats
+
+    def _commit_empty(self, meta, batch_id, n, nd) -> MergeStats:
+        """Commit a CoW batch that touched no bucket: only the batch
+        gate and batch count advance."""
+        meta.version += 1
+        if batch_id is not None:
+            meta.last_batch_id = batch_id
+        meta.totals["batches"] += 1
+        self._commit(meta, dirty=set())
+        return MergeStats(
+            version=meta.version, batch_id=batch_id, n_incoming=n, n_deletes_in=nd or 0
+        )
 
     # --------------------------------------------------------- overwrite
     def overwrite(self, df: DataFrame) -> int:

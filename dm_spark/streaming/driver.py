@@ -243,6 +243,7 @@ class CdcStreamDriver:
                     "ddls": len(due),
                     "n_incoming": sum(st.n_incoming for st in merged),
                     "rows_written": sum(st.rows_written for st in merged),
+                    "buckets_touched": sum(st.n_buckets_touched for st in merged),
                     "lag_sec": max(lags) if lags else None,
                     "sec": sec,
                 })
@@ -254,6 +255,7 @@ class CdcStreamDriver:
                         "skipped": st.skipped,
                         "n_incoming": st.n_incoming,
                         "rows_written": st.rows_written,
+                        "buckets_touched": st.n_buckets_touched,
                         "lag_sec": self.lakes[target].replication_lag_sec(),
                         "sec": sec,
                     })

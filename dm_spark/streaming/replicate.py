@@ -109,6 +109,7 @@ def replicate_lake(
                 "skipped": st.skipped,
                 "n_incoming": st.n_incoming,
                 "rows_written": st.rows_written,
+                "buckets_touched": st.n_buckets_touched,
             }
         )
 
@@ -208,6 +209,7 @@ def replicate_lake_poll(
                 "skipped": st.skipped,
                 "n_incoming": st.n_incoming,
                 "rows_written": st.rows_written,
+                "buckets_touched": st.n_buckets_touched,
             }
         )
 

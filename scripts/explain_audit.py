@@ -6,7 +6,8 @@ Checks (prints PASS/FAIL lines + the formatted plans):
 2. filter pushdown — a source_table predicate appears as PushedFilters
    when reading a materialized feed.
 3. merge plan has exactly ONE shuffle (Exchange) between the incoming
-   batch and the written files (repartition reused by the LWW window).
+   batch and the written files (repartition reused by the LWW window),
+   on the plan a second copy-on-write merge really writes.
 4. transform pipeline stays in WholeStageCodegen (no Python in the
    non-decode path).
 5. candidate generation in the corpus dedup/ANN operators is
@@ -99,30 +100,25 @@ def main() -> int:
     )
     batch = ApplyPipeline(cfg).transform(feedmod.change_feed(spark, sf)).drop("target_table")
     lake.merge_into(batch, batch_id=0)  # base now non-empty
-    # rebuild the merge plan the way merge_into does, and count exchanges
-    from dm_spark.lake.table import LINEAGE_COLS, _norm_key_cols
-    from pyspark.sql import Window
+    # the plan the second merge really writes (batch + base -> files),
+    # explained while the merge holds its session conf
+    written = []
+    orig_commit = LakeTable._commit_files
 
-    meta = lake._load_meta()
-    payload = [f["name"] for f in meta.fields()]
-    sel = payload + ["op"] + LINEAGE_COLS
-    base = lake._read_files(meta, [e for lst in meta.buckets.values() for e in lst], True)
-    merged = batch.select(*sel).unionByName(base.withColumn("op", F.lit("I")).select(*sel))
-    nkeys = ["__k0", "__k1"]
-    for n, c in zip(nkeys, _norm_key_cols(meta.key, meta.fields())):
-        merged = merged.withColumn(n, c)
-    w = Window.partitionBy(*nkeys).orderBy(*[F.col(c).desc() for c in LINEAGE_COLS])
-    out = (
-        merged.repartition(meta.n_buckets, *[F.col(n) for n in nkeys])
-        .withColumn("__rn", F.row_number().over(w))
-        .where((F.col("__rn") == 1) & (F.col("op") != "D"))
-        .select(*payload, *LINEAGE_COLS)
-    )
-    p3 = plan_of(out)
+    def commit_spy(self, out, *a, **k):
+        written.append(plan_of(out))
+        return orig_commit(self, out, *a, **k)
+
+    LakeTable._commit_files = commit_spy
+    try:
+        lake.merge_into(batch, batch_id=1)
+    finally:
+        LakeTable._commit_files = orig_commit
+    p3 = "\n".join(written)
     # count Exchange NODES (detail headers "(n) Exchange"), not mentions
     n_ex = len(re.findall(r"\(\d+\) Exchange", p3))
-    ok3 = n_ex == 1
-    print(f"{'PASS' if ok3 else 'FAIL'} single-shuffle merge: exchanges={n_ex}")
+    ok3 = len(written) == 1 and n_ex == 1
+    print(f"{'PASS' if ok3 else 'FAIL'} single-shuffle merge: writes={len(written)} exchanges={n_ex}")
     if not ok3:
         failures.append("single-shuffle")
         print(p3)

@@ -131,11 +131,9 @@ def test_config_patch_route_swap_recompiles(spark, sf_dir, tmp_path, monkeypatch
     assert_tables_equal(spark_final(qlake), duck_replay(sf_dir, routed_away))
 
 
-def test_streaming_mor_merge_is_one_non_adaptive_job(spark, sf_dir, tmp_path, monkeypatch):
-    """A `foreachBatch` DataFrame runs on the stream's cloned session,
-    where AQE is on: the merge must turn AQE off on THAT session, so
-    its write plan is not adaptive and the merge runs as one job (an
-    adaptive plan runs its shuffle stage as a job of its own)."""
+def _streaming_merge_jobs(spark, sf_dir, tmp_path, monkeypatch, mode):
+    """Catch a feed up into a `mode` lake through `foreachBatch`; the
+    Spark jobs of each merge and the top node of each write plan."""
     monkeypatch.delenv("DM_SPARK_MERGE_AQE", raising=False)
     jobs, plans = [], []
     orig_merge, orig_commit = LakeTable.merge_into, LakeTable._commit_files
@@ -155,18 +153,38 @@ def test_streaming_mor_merge_is_one_non_adaptive_job(spark, sf_dir, tmp_path, mo
     monkeypatch.setattr(LakeTable, "merge_into", merge_spy)
     monkeypatch.setattr(LakeTable, "_commit_files", commit_spy)
     lake = LakeTable.create(
-        spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8, write_mode="mor"
+        spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8, write_mode=mode
     )
     drv = CdcStreamDriver(
         spark, str(tmp_path / "feed"), str(tmp_path / "cp"), ApplyPipeline(CFG),
         {"transcripts": lake}, max_files_per_trigger=1,
     )
     write_feed_chunks(feedmod.change_feed(spark, sf_dir), drv.feed_dir, n_chunks=3)
-    drv.run_available_now()
-    assert jobs and all(len(j) == 1 for j in jobs), jobs
-    assert plans and "AdaptiveSparkPlan" not in plans, plans
+    stats = drv.run_available_now()
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"  # restored
     assert_tables_equal(spark_final(lake), duck_replay(sf_dir))
+    return jobs, plans, stats
+
+
+def test_streaming_mor_merge_is_one_non_adaptive_job(spark, sf_dir, tmp_path, monkeypatch):
+    """A `foreachBatch` DataFrame runs on the stream's cloned session,
+    where AQE is on: the merge must turn AQE off on THAT session, so
+    its write plan is not adaptive and the merge runs as one job (an
+    adaptive plan runs its shuffle stage as a job of its own)."""
+    jobs, plans, _ = _streaming_merge_jobs(spark, sf_dir, tmp_path, monkeypatch, "mor")
+    assert jobs and all(len(j) == 1 for j in jobs), jobs
+    assert plans and "AdaptiveSparkPlan" not in plans, plans
+
+
+def test_streaming_cow_merge_is_one_non_adaptive_job(spark, sf_dir, tmp_path, monkeypatch):
+    """A copy-on-write catch-up merge runs as one non-adaptive job too:
+    the first batch lands in a table with no base files and each later
+    one follows a merge that touched every bucket, so no touched-bucket
+    pre-pass runs; `batch_stats` still report the true touch count."""
+    jobs, plans, stats = _streaming_merge_jobs(spark, sf_dir, tmp_path, monkeypatch, "cow")
+    assert len(jobs) >= 3 and all(len(j) == 1 for j in jobs), jobs
+    assert plans and "AdaptiveSparkPlan" not in plans, plans
+    assert [s["buckets_touched"] for s in stats] == [8] * len(stats), stats
 
 
 def test_mor_run_tail_compacts(spark, sf_dir, tmp_path):
@@ -217,7 +235,7 @@ def test_runner_mode_mor_tail_compacts(spark, sf_dir, tmp_path):
 def test_batch_stats_share_timing_fields_across_modes(spark, sf_dir, tmp_path):
     """Plain and runner (DDL) mode record the same per-batch timing and
     row-count fields, so one monitor reads either."""
-    shared = {"batch_id", "sec", "lag_sec", "n_incoming", "rows_written"}
+    shared = {"batch_id", "sec", "lag_sec", "n_incoming", "rows_written", "buckets_touched"}
     feed = feedmod.change_feed(spark, sf_dir)
     records = {}
     for name in ("plain", "runner"):
@@ -238,3 +256,5 @@ def test_batch_stats_share_timing_fields_across_modes(spark, sf_dir, tmp_path):
     # both modes merged the same change rows
     n_in = {name: sum(s["n_incoming"] for s in stats) for name, stats in records.items()}
     assert n_in["plain"] == n_in["runner"] > 0, n_in
+    touched = {name: [s["buckets_touched"] for s in stats] for name, stats in records.items()}
+    assert touched["plain"] == touched["runner"] and all(touched["plain"]), touched

@@ -9,7 +9,9 @@ table-state assertions.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -266,6 +268,77 @@ def test_manifest_chunking_commit_is_o_touched(spark, tmp_path):
     lake.vacuum()
     got = sorted((r.conv_id, r.text) for r in lake.read().where("conv_id = 'c0'").collect())
     assert got == [("c0", "v2")]
+
+
+def _merge_jobs(spark, lake, batch, **kw):
+    """(MergeStats, number of Spark jobs the merge ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        s = lake.merge_into(batch, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return s, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cow_prune_pass_runs_only_when_it_can_prune(spark, tmp_path):
+    """The touched-bucket pre-pass is skipped into a table with no base
+    files and after a merge that touched every bucket; the one-job
+    merge observes its true touch count, so the next merge prunes
+    again. Untouched buckets keep their files either way."""
+    lake = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, KEY, n_buckets=8)
+    want = {}
+
+    def merge(batch_rows, batch_id):
+        for r in batch_rows:
+            if r[6] == "D":
+                want.pop((r[0], r[1]), None)
+            else:
+                want[(r[0], r[1])] = r[3]
+        before = lake._load_meta()
+        s, jobs = _merge_jobs(
+            spark, lake, spark.createDataFrame(batch_rows, CHANGE_DDL), batch_id=batch_id
+        )
+        after = lake._load_meta()
+        assert rows(lake.read()) == sorted((k[0], k[1], v) for k, v in want.items())
+        changed = [b for b in after.buckets if after.buckets[b] != before.buckets[b]]
+        assert len(changed) == s.n_buckets_touched, (changed, s)
+        assert lake.lineage_log()[-1]["buckets_touched"] == s.n_buckets_touched
+        chunks = [c for c in after.bucket_chunks if after.bucket_chunks[c] != before.bucket_chunks.get(c)]
+        return s, jobs, changed, chunks
+
+    # 1. into an empty table: nothing to prune, one job
+    s, jobs, _, _ = merge([ch(f"a{i}", 1, "I", "v1", 0, i, i) for i in range(3)], 0)
+    assert jobs == 1 and 1 <= s.n_buckets_touched <= 3
+    # 2. the last merge touched few buckets: prune; this one touches all
+    s, jobs, _, _ = merge([ch(f"c{i}", 1, "I", "v1", 1, i, 10) for i in range(200)], 1)
+    assert jobs == 2 and s.n_buckets_touched == 8
+    # 3. after a merge that touched every bucket: one job, one bucket
+    # (and so one chunk file) rewritten, rows counted in that bucket only
+    s, jobs, changed, chunks = merge([ch("c0", 1, "U", "v2", 2, 0, 20)], 2)
+    assert jobs == 1 and s.n_buckets_touched == 1 and len(chunks) == 1
+    files = lake._load_meta().buckets[changed[0]]
+    assert s.rows_written == sum(pq.ParquetFile(e["path"]).metadata.num_rows for e in files)
+    # the dropped rewrites of the untouched buckets left no part file
+    commit_dir = os.path.dirname(files[0]["path"])
+    assert [f for f in os.listdir(commit_dir) if f.endswith(".parquet")] == [
+        os.path.basename(e["path"]) for e in files
+    ]
+    # 4. the observed count turned pruning back on
+    s, jobs, _, chunks = merge([ch("c1", 1, "D", None, 3, 0, 30)], 3)
+    assert jobs == 2 and s.n_buckets_touched == 1 and len(chunks) == 1
+    # prune=False never runs the pre-pass, yet reports the observed count
+    s, jobs = _merge_jobs(
+        spark, lake, spark.createDataFrame([ch("c2", 1, "U", "v3", 4, 0, 40)], CHANGE_DDL),
+        batch_id=4, prune=False,
+    )
+    want[("c2", 1)] = "v3"
+    assert jobs == 1 and s.n_buckets_touched == 1
+    assert lake.lineage_log()[-1]["buckets_touched"] == 1
+    assert rows(lake.read()) == sorted((k[0], k[1], v) for k, v in want.items())
 
 
 def test_rescale_buckets(spark, tmp_path):
