@@ -124,7 +124,7 @@ def profile_replay(reps: int = 2) -> None:
         ranges = qc._feed_ranges(batch, SF_DIR)  # noqa: SLF001
         mark("pin_and_cuts")
         for i, part in enumerate(ranges):
-            lake.merge_into(part, batch_id=i, prune=False)
+            lake.merge_into(part, batch_id=i)
             mark(f"merge_{i}")
         n = qc._final_us(lake).count()  # noqa: SLF001
         mark(f"final_read_n={n}")

@@ -67,7 +67,7 @@ def apply_throughput(
     # -100_000 was skipped by the monotone gate, so the "warmup" never
     # ran and the first timed batch absorbed ~8s of codegen/python-
     # worker startup
-    wstats = lake.merge_into(warm, batch_id=None, prune=False)
+    wstats = lake.merge_into(warm, batch_id=None)
     assert not wstats.skipped and wstats.rows_written > 0
 
     per = n_events // n_batches
@@ -82,7 +82,7 @@ def apply_throughput(
 
             feed = decode_wire(to_wire(feed))
         batch = pipe.transform(feed).drop("target_table")
-        lake.merge_into(batch, batch_id=i, prune=False)
+        lake.merge_into(batch, batch_id=i)
     sec = time.time() - t0
     out = {
         "events": n_events,
@@ -125,7 +125,7 @@ def trickle_throughput(
             partitions=4, text_chars=300, seed=1000 + i,
         ).withColumn("file_seq", F.col("file_seq") + F.lit((i + 1) * 10_000))
         batch = pipe.transform(feed).drop("target_table")
-        lake.merge_into(batch, batch_id=i, prune=True)
+        lake.merge_into(batch, batch_id=i)
     sec = time.time() - t0
     spark.stop()
     shutil.rmtree(workdir, ignore_errors=True)

@@ -890,7 +890,6 @@ class LakeTable:
         changes: DataFrame,
         batch_id: int | None = None,
         stream_id: str | None = None,
-        prune: bool = True,
         pre_reduce: int | None = None,
         table_points: dict | None = None,
         epoch: int = 0,
@@ -903,23 +902,21 @@ class LakeTable:
         slot equals the bucket id; the LWW window reuses that shuffle.
 
         Copy-on-write merges rewrite only the buckets the batch touches.
-        `prune=True` (CDC trickle): when it can narrow the merge, a
-        pre-pass job finds the touched buckets so only their base files
-        are read and rewritten — cost proportional to touched data, the
+        When it can narrow the merge (see `_prune_pays`), a pre-pass job
+        finds the touched buckets so only their base files are read and
+        rewritten — cost proportional to touched data, the
         partition-level CoW that keeps continuous upserts viable on a
         10^10-row table. It cannot narrow a merge into a table with no
         base files, and is skipped after a merge that touched every
-        bucket (the next one most likely does too); those merges run
-        as with `prune=False`.
-        `prune=False` (bulk replay / backfill): no pre-pass. The batch
+        bucket (the next one most likely does too). Without it the batch
         and every base file go through the one merge-write job, whose
         observed metrics carry the batch stats and touched buckets;
         untouched buckets keep their old files (their rewrites, equal
         to their base under LWW, are dropped before the commit). Both
         paths commit the same manifest; a skipped pre-pass that would
         have pruned costs one rewrite of the untouched buckets, never
-        correctness, and the observed touch count lets the next merge
-        prune again.
+        correctness, and the observed touch count (recorded even for a
+        batch that touched nothing) lets the next merge prune again.
 
         Tombstone semantics, disclosed: the CoW write drops delete
         winners at commit (no stored tombstone), so a redelivered
@@ -987,7 +984,7 @@ class LakeTable:
         with _merge_aqe_off(changes.sparkSession):
             if meta.write_mode == "mor":
                 return self._merge_mor(changes, meta, batch_id)
-            prune = prune and self._prune_pays(meta)
+            prune = self._prune_pays(meta)
             if not (prune or meta.change_feed):
                 # one pass over the batch: nothing to cache
                 return self._merge_cow(changes, meta, batch_id, prune)
@@ -1208,8 +1205,8 @@ class LakeTable:
         self._commit(meta, dirty=dirty)
 
     def _merge_cow(self, changes, meta, batch_id, prune) -> MergeStats:
-        """Copy-on-write write path: LWW-rewrite the touched buckets
-        (see `merge_into` for `prune`)."""
+        """Copy-on-write write path: LWW-rewrite the touched buckets,
+        found by a pre-pass job when `prune` (see `merge_into`)."""
         shape = self._shape(meta)
         changes = changes.select(*shape.ins(tuple(changes.columns)))
         aggs = shape.cow_aggs(meta.n_buckets)
@@ -1278,16 +1275,15 @@ class LakeTable:
         return stats
 
     def _commit_empty(self, meta, batch_id, n, nd) -> MergeStats:
-        """Commit a CoW batch that touched no bucket: only the batch
-        gate and batch count advance."""
-        meta.version += 1
-        if batch_id is not None:
-            meta.last_batch_id = batch_id
-        meta.totals["batches"] += 1
-        self._commit(meta, dirty=set())
-        return MergeStats(
-            version=meta.version, batch_id=batch_id, n_incoming=n, n_deletes_in=nd or 0
+        """Commit a CoW batch that touched no bucket: the batch gate and
+        batch count advance, and its lineage record's zero touch count
+        turns the pre-pass back on for the next merge (an idle target of
+        a routed batch would otherwise rewrite every bucket per batch)."""
+        stats = MergeStats(
+            version=meta.version + 1, batch_id=batch_id, n_incoming=n, n_deletes_in=nd or 0
         )
+        self._finish_commit(meta, batch_id, stats, None, None, mode="cow", dirty=set())
+        return stats
 
     # --------------------------------------------------------- overwrite
     def overwrite(self, df: DataFrame) -> int:

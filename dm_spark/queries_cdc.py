@@ -444,8 +444,9 @@ def _replay_through_lake(
         unique_keys=unique_keys, change_feed=change_feed,
     )
     for i, part in enumerate(_feed_ranges(batch, sf_dir)):
-        # bulk replay touches all buckets: single-job path
-        lake.merge_into(part, batch_id=i, prune=False, pre_reduce=pre_reduce)
+        # bulk replay touches all buckets: each merge skips the
+        # touched-bucket pre-pass and runs as one job
+        lake.merge_into(part, batch_id=i, pre_reduce=pre_reduce)
     if compact_after:
         lake.compact()
     return lake
@@ -692,7 +693,7 @@ def q_change_feed_chain(spark, sf_dir):
         spark, tempfile.mkdtemp(prefix="dm_q_"), SCHEMA, KEY,
         n_buckets=_fixture_buckets(sf_dir)
     )
-    lake2.merge_into(lake1.changes().drop("_change_version"), prune=False)
+    lake2.merge_into(lake1.changes().drop("_change_version"))
     return _final_us(lake2)
 
 

@@ -7,7 +7,8 @@ Checks (prints PASS/FAIL lines + the formatted plans):
    when reading a materialized feed.
 3. merge plan has exactly ONE shuffle (Exchange) between the incoming
    batch and the written files (repartition reused by the LWW window),
-   on the plan a second copy-on-write merge really writes.
+   on the plans copy-on-write merges really write, once on the one-job
+   path and once on the touched-bucket pre-pass path.
 4. transform pipeline stays in WholeStageCodegen (no Python in the
    non-decode path).
 5. candidate generation in the corpus dedup/ANN operators is
@@ -89,7 +90,7 @@ def main() -> int:
         failures.append("pushdown")
         print(p2)
 
-    # 3. single exchange in the merge write plan
+    # 3. single exchange in the merge write plan, on both CoW paths
     lake = LakeTable.create(
         spark,
         tempfile.mkdtemp() + "/lake",
@@ -99,29 +100,46 @@ def main() -> int:
         n_buckets=8,
     )
     batch = ApplyPipeline(cfg).transform(feedmod.change_feed(spark, sf)).drop("target_table")
-    lake.merge_into(batch, batch_id=0)  # base now non-empty
-    # the plan the second merge really writes (batch + base -> files),
-    # explained while the merge holds its session conf
-    written = []
-    orig_commit = LakeTable._commit_files
+    key = batch.select("conv_id", "turn_idx").first()
+    one_key = batch.where(
+        (F.col("conv_id") == key.conv_id) & (F.col("turn_idx") == key.turn_idx)
+    )
 
-    def commit_spy(self, out, *a, **k):
-        written.append(plan_of(out))
-        return orig_commit(self, out, *a, **k)
+    def merge_plans(b, batch_id):
+        """(whether the merge runs the touched-bucket pre-pass, the
+        plans it really writes — batch + base -> files — explained
+        while the merge holds its session conf)"""
+        pre = LakeTable._prune_pays(lake._load_meta())
+        written = []
+        orig_commit = LakeTable._commit_files
 
-    LakeTable._commit_files = commit_spy
-    try:
-        lake.merge_into(batch, batch_id=1)
-    finally:
-        LakeTable._commit_files = orig_commit
-    p3 = "\n".join(written)
-    # count Exchange NODES (detail headers "(n) Exchange"), not mentions
-    n_ex = len(re.findall(r"\(\d+\) Exchange", p3))
-    ok3 = len(written) == 1 and n_ex == 1
-    print(f"{'PASS' if ok3 else 'FAIL'} single-shuffle merge: writes={len(written)} exchanges={n_ex}")
-    if not ok3:
-        failures.append("single-shuffle")
-        print(p3)
+        def commit_spy(self, out, *a, **k):
+            written.append(plan_of(out))
+            return orig_commit(self, out, *a, **k)
+
+        LakeTable._commit_files = commit_spy
+        try:
+            lake.merge_into(b, batch_id=batch_id)
+        finally:
+            LakeTable._commit_files = orig_commit
+        return pre, written
+
+    lake.merge_into(batch, batch_id=0)  # base now non-empty, every bucket touched
+    runs = {"one-job": merge_plans(batch, 1)}
+    lake.merge_into(one_key, batch_id=2)  # touches one bucket: the pre-pass pays again
+    runs["pre-pass"] = merge_plans(one_key, 3)
+    for path, (pre, written) in runs.items():
+        p3 = "\n".join(written)
+        # count Exchange NODES (detail headers "(n) Exchange"), not mentions
+        n_ex = len(re.findall(r"\(\d+\) Exchange", p3))
+        ok3 = pre == (path == "pre-pass") and len(written) == 1 and n_ex == 1
+        print(
+            f"{'PASS' if ok3 else 'FAIL'} single-shuffle merge ({path}): "
+            f"pre_pass={pre} writes={len(written)} exchanges={n_ex}"
+        )
+        if not ok3:
+            failures.append(f"single-shuffle {path}")
+            print(p3)
 
     # 4. no Python eval in the non-decode pipeline (simple mode shows
     # whole-stage-codegen as "*(n)" operator prefixes)

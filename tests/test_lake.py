@@ -255,7 +255,7 @@ def test_manifest_chunking_commit_is_o_touched(spark, tmp_path):
     before = dict(lake._load_meta().bucket_chunks)
     # one-key trickle batch: exactly one bucket touched
     b2 = spark.createDataFrame([ch("c0", 1, "U", "v2", 1, 1, 99)], CHANGE_DDL)
-    s = lake.merge_into(b2, batch_id=1, prune=True)
+    s = lake.merge_into(b2, batch_id=1)
     assert s.n_buckets_touched == 1
     after = dict(lake._load_meta().bucket_chunks)
     changed = [c for c in after if after[c] != before.get(c)]
@@ -330,15 +330,45 @@ def test_cow_prune_pass_runs_only_when_it_can_prune(spark, tmp_path):
     # 4. the observed count turned pruning back on
     s, jobs, _, chunks = merge([ch("c1", 1, "D", None, 3, 0, 30)], 3)
     assert jobs == 2 and s.n_buckets_touched == 1 and len(chunks) == 1
-    # prune=False never runs the pre-pass, yet reports the observed count
-    s, jobs = _merge_jobs(
-        spark, lake, spark.createDataFrame([ch("c2", 1, "U", "v3", 4, 0, 40)], CHANGE_DDL),
-        batch_id=4, prune=False,
-    )
-    want[("c2", 1)] = "v3"
-    assert jobs == 1 and s.n_buckets_touched == 1
-    assert lake.lineage_log()[-1]["buckets_touched"] == 1
-    assert rows(lake.read()) == sorted((k[0], k[1], v) for k, v in want.items())
+
+
+def test_idle_cow_target_rewrites_at_most_once(spark, tmp_path):
+    """A routed batch merges into every target lake, also one it routes
+    no rows to. After a merge that touched every bucket, an idle CoW
+    target's first empty merge may rewrite its buckets once (dropped
+    uncommitted); its zero touch count turns the pre-pass back on, so
+    later empty merges read and write no base file."""
+    from dm_spark.config import TaskConfig
+    from dm_spark.operators import ApplyPipeline
+
+    pipe = ApplyPipeline(TaskConfig())
+    lakes = {
+        t: LakeTable.create(spark, str(tmp_path / t), SCHEMA, KEY, n_buckets=4)
+        for t in ("busy", "idle")
+    }
+    flat_ddl = CHANGE_DDL + ", target_table string"
+    wide = [ch(f"{t}{i}", 1, "I", "v1", 0, i, 1) + (t,) for t in lakes for i in range(100)]
+    pipe.merge(spark.createDataFrame(wide, flat_ddl), lakes, batch_id=0)
+    idle = lakes["idle"]
+    assert idle.lineage_log()[-1]["buckets_touched"] == 4
+    want = rows(idle.read())
+    buckets = idle._load_meta().buckets
+
+    def commit_dirs():
+        return {d for d in os.listdir(idle.data_dir) if d.startswith("commit-")}
+
+    for b in range(1, 5):
+        dirs = commit_dirs()
+        narrow = [ch("busy0", 1, "U", f"v{b}", b, 0, 10 + b) + ("busy",)]
+        s = pipe.merge(spark.createDataFrame(narrow, flat_ddl), lakes, batch_id=b)["idle"]
+        meta = idle._load_meta()
+        assert not s.skipped and s.n_buckets_touched == 0 and s.rows_written == 0
+        assert meta.last_batch_id == b and meta.buckets == buckets
+        assert idle.lineage_log()[-1]["buckets_touched"] == 0
+        assert LakeTable._prune_pays(meta)
+        assert rows(idle.read()) == want
+        if b > 1:
+            assert commit_dirs() == dirs, f"empty merge {b} rewrote the idle table"
 
 
 def test_rescale_buckets(spark, tmp_path):
@@ -356,7 +386,7 @@ def test_rescale_buckets(spark, tmp_path):
     b2 = spark.createDataFrame(
         [ch("c0", 1, "U", "v2", 1, 1, 99), ch("c5", 1, "D", None, 1, 2, 99)], CHANGE_DDL
     )
-    s = lake.merge_into(b2, batch_id=1, prune=True)
+    s = lake.merge_into(b2, batch_id=1)
     assert not s.skipped
     got = dict(((r[0], r[1]), r[2]) for r in rows(lake.read()))
     assert got[("c0", 1)] == "v2" and ("c5", 1) not in got

@@ -68,7 +68,7 @@ def test_two_sources_interleaved_match_single_task(spark):
     ref = LakeTable.create(
         spark, tempfile.mkdtemp(prefix="dm_ms_ref_"), SCHEMA, KEY, n_buckets=8
     )
-    ref.merge_into(batch_a.unionByName(batch_b), prune=False)
+    ref.merge_into(batch_a.unionByName(batch_b))
 
     # two tasks: SEPARATE LakeTable handles on one path (each reloads
     # HEAD per merge, as two processes would), interleaved by halves
