@@ -1,12 +1,13 @@
 """Extra benchmarks for the optimization rounds (bench.py is frozen for
-measurement — this file holds the per-query timings, plan captures and
-the replay phase profile whose numbers OPTIMIZATION_r06.md cites;
-guide §1.4/§1.5).
+measurement — this file holds the per-query timings and plan captures
+OPTIMIZATION_r06.md cites; guide §1.4/§1.5). The replay loop's
+per-phase costs come from the traced catchup run of perfbench
+(`python3 perfbench/run.py --workload catchup --seed N --trace 1`,
+the `replay.*` metrics of its `wire_replay` phase).
 
 Usage:
     python bench_extra.py headline [reps] [query ...]   # time + plans
     python bench_extra.py explain <out_suffix> [query ...]  # plans only
-    python bench_extra.py profile_replay [reps]  # per-phase replay wall
 
 `headline` mimics bench.run_headline exactly (same session, same
 `.count()` action, min-of-reps) but optionally restricts to a query
@@ -91,48 +92,6 @@ def run_explain(suffix: str, names: list[str]) -> None:
     spark.stop()
 
 
-def profile_replay(reps: int = 2) -> None:
-    """Phase-level wall breakdown of the replay-through-lake shape at
-    SF_DIR (guide §1.5: the merges are ACTIONS — a plan capture of the
-    returned DataFrame only shows the final read, so the per-phase wall
-    is the evidence for the merge-path numbers in OPTIMIZATION_r06.md)."""
-    import tempfile
-
-    import __spark_entry__ as entrymod
-    from dm_spark import queries_cdc as qc
-    from dm_spark.lake import LakeTable
-
-    spark = _spark()
-    entrymod._pin_session(spark)
-    for rep in range(reps):
-        marks: list[tuple[str, float]] = []
-        t = time.time()
-
-        def mark(label: str) -> None:
-            nonlocal t
-            now = time.time()
-            marks.append((label, round(now - t, 3)))
-            t = now
-
-        spark.sparkContext.setJobDescription(f"profile_replay:rep{rep}")
-        batch = qc._routed_batch(spark, SF_DIR)  # noqa: SLF001
-        mark("build_batch_df")
-        lake = LakeTable.create(
-            spark, tempfile.mkdtemp(prefix="dm_prof_"), qc.SCHEMA, qc.KEY, n_buckets=16
-        )
-        mark("lake_create")
-        ranges = qc._feed_ranges(batch, SF_DIR)  # noqa: SLF001
-        mark("pin_and_cuts")
-        for i, part in enumerate(ranges):
-            lake.merge_into(part, batch_id=i)
-            mark(f"merge_{i}")
-        n = qc._final_us(lake).count()  # noqa: SLF001
-        mark(f"final_read_n={n}")
-        print(json.dumps({"rep": rep, "phases": marks,
-                          "total": round(sum(s for _, s in marks), 3)}))
-    spark.stop()
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "headline"
     if cmd == "headline":
@@ -143,7 +102,5 @@ if __name__ == "__main__":
         suffix = sys.argv[2]
         names = sys.argv[3:] or HEADLINE
         run_explain(suffix, names)
-    elif cmd == "profile_replay":
-        profile_replay(int(sys.argv[2]) if len(sys.argv) > 2 else 2)
     else:
         raise SystemExit(f"unknown command {cmd}")

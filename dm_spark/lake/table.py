@@ -711,8 +711,8 @@ class LakeTable:
     @staticmethod
     def _changes_ddl(meta: _Meta, with_tag: bool = False) -> str:
         """The change-row schema string: payload + op + lineage
-        (+ _change_version) — single source for the three surfaces that
-        must agree (snapshot_changes, changes, changes_stream)."""
+        (+ _change_version) — what snapshot_changes and changes return
+        when there is nothing to read, in the shape of a full result."""
         cols = [(f["name"], f["type"]) for f in meta.fields()] + list(_CHANGE_TYPES.items())
         ddl = ", ".join(f"{n} {t}" for n, t in cols)
         if with_tag:
@@ -799,69 +799,15 @@ class LakeTable:
             out = out.unionByName(p)
         return out
 
-    def changes_stream(self) -> DataFrame:
-        """The change feed as a Structured Streaming source: a file
-        stream over the `_changes/` dirs, so a downstream lake tails
-        this one continuously (lake-to-lake replication — see
-        :func:`dm_spark.streaming.replicate_lake`). CoW change-feed
-        tables only (MoR change entries live inside data commit dirs,
-        which a file glob cannot scope; MoR consumers poll the batch
-        :meth:`changes` API instead). Schema is fixed at stream start —
-        after a DDL, restart the stream to pick up the new shape (the
-        standard file-source contract).
-
-        Admission model, disclosed: this path admits files by DIRECTORY
-        LISTING, and change files are written immediately before the
-        manifest commit — so a writer that crashes in that gap (and is
-        never retried) can expose rows the table never committed. The
-        streaming driver's retry makes the same batch commit later and
-        LWW converges; for strict commit-gated admission (the Delta CDF
-        log model) use :func:`dm_spark.streaming.replicate_lake_poll`,
-        which reads the change log out of the committed manifest.
-
-        Two more consequences of listing-based admission, disclosed:
-        (a) retention — prune_changes deletes files a lagging stream
-        has not listed yet, with NO error (the poll path raises
-        "pruned below"); keep retention longer than your slowest
-        stream consumer, or use the poll path. (b) renames/drops — a
-        file source reads every file with ONE name-based schema, so
-        retained change files written before a column rename would
-        read back null; this method REFUSES to start in that state
-        (the batch API projects by field id and handles it)."""
-        meta = self._load_meta()
-        if not meta.change_feed:
-            raise ValueError("change feed not enabled on this table (create(change_feed=True))")
-        if meta.write_mode != "cow":
-            raise ValueError("changes_stream needs write_mode='cow'; poll changes() for MoR")
-        cur_names = {f["id"]: f["name"] for f in meta.fields()}
-        retained_svs = {e["schema_version"] for lst in meta.change_log.values() for e in lst}
-        for sv in retained_svs:
-            for f in meta.schema_history[str(sv)]:
-                if f["id"] in cur_names and cur_names[f["id"]] != f["name"]:
-                    raise ValueError(
-                        f"retained change files (schema v{sv}) predate a column "
-                        f"rename ({f['name']} -> {cur_names[f['id']]}): a file-stream "
-                        "read would null-fill them. Use changes()/replicate_lake_poll "
-                        "(field-id projection), or prune_changes past the rename first"
-                    )
-        ch_root = os.path.join(self.path, "_changes")
-        os.makedirs(ch_root, exist_ok=True)
-        return (
-            self.spark.readStream.schema(self._changes_ddl(meta))
-            .option("recursiveFileLookup", "true")
-            .parquet(ch_root)
-        )
-
     def prune_changes(self, before_version: int) -> int:
         """Drop change-log entries for versions < before_version (the
-        CDF retention window); CoW change dirs are deleted, MoR delta
-        files are freed by the next vacuum() once unreferenced.
+        CDF retention window); CoW change files are deleted now and
+        their dirs by the next vacuum(), MoR delta files are freed by
+        the next vacuum() once unreferenced.
 
-        Consumer contract: poll consumers behind the new floor fail
-        loudly on their next read ("pruned below") and re-bootstrap;
-        a changes_stream consumer is admission-by-listing and gets NO
-        such signal — prune only behind your slowest stream consumer
-        (the same operational rule as Delta CDF retention vs streams)."""
+        Consumer contract: a consumer behind the new floor fails loudly
+        on its next changes() read ("pruned below") and re-bootstraps
+        from a snapshot (dm_spark.streaming.bootstrap_replica)."""
         meta = self._load_meta()
         doomed: list[str] = []
         for v in [v for v in meta.change_log if int(v) < before_version]:
@@ -1432,7 +1378,7 @@ class LakeTable:
     # ------------------------------------------------------------ maint
     def vacuum(self) -> int:
         """Delete data files and bucket-chunk manifests not referenced
-        by the HEAD manifest."""
+        by the HEAD manifest, and commit dirs left with no live file."""
         meta = self._load_meta()
         live = {e["path"] for e in self._data_entries(meta)}
         # change-feed files stay live until prune_changes drops them
@@ -1460,32 +1406,37 @@ class LakeTable:
                 if p not in live_chunks:
                     os.remove(p)
                     removed += 1
-        if not os.path.isdir(self.data_dir):
-            return removed
-        for commit in os.listdir(self.data_dir):
-            cdir = os.path.join(self.data_dir, commit)
-            for root, _dirs, files in os.walk(cdir, topdown=False):
-                for fn in files:
-                    p = os.path.join(root, fn)
-                    if p not in live and fn.endswith(".parquet"):
-                        os.remove(p)
-                        removed += 1
-            # prune empty commit dirs
-            if not any(files for _r, _d, files in os.walk(cdir)):
+        # commit dirs under data/, plus _changes/ dirs orphaned by a crash
+        # between the change write and the manifest commit or dropped by
+        # prune_changes
+        for root in (self.data_dir, os.path.join(self.path, "_changes")):
+            removed += self._vacuum_commit_dirs(root, live)
+        return removed
+
+    @staticmethod
+    def _vacuum_commit_dirs(root: str, live: set[str]) -> int:
+        """Delete the parquet files under `root`'s commit dirs that are
+        not in `live`; a dir left with no live parquet file goes whole,
+        with the `_SUCCESS` and `.crc` files every Spark write leaves
+        beside its parts. Returns the number of parquet files deleted."""
+        if not os.path.isdir(root):
+            return 0
+        removed = 0
+        for commit in os.listdir(root):
+            cdir = os.path.join(root, commit)
+            parts = [
+                os.path.join(r, fn)
+                for r, _dirs, files in os.walk(cdir)
+                for fn in files
+                if fn.endswith(".parquet")
+            ]
+            dead = [p for p in parts if p not in live]
+            if len(dead) == len(parts):
                 shutil.rmtree(cdir, ignore_errors=True)
-        ch_root = os.path.join(self.path, "_changes")
-        if os.path.isdir(ch_root):
-            # orphaned change dirs (crash between change write and the
-            # manifest commit) and pruned retention windows
-            for cdir in [os.path.join(ch_root, d) for d in os.listdir(ch_root)]:
-                for root, _dirs, files in os.walk(cdir, topdown=False):
-                    for fn in files:
-                        p = os.path.join(root, fn)
-                        if p not in live and fn.endswith(".parquet"):
-                            os.remove(p)
-                            removed += 1
-                if not any(files for _r, _d, files in os.walk(cdir)):
-                    shutil.rmtree(cdir, ignore_errors=True)
+            else:
+                for p in dead:
+                    os.remove(p)
+            removed += len(dead)
         return removed
 
     def lineage_log(self) -> list[dict]:
@@ -1503,9 +1454,10 @@ class LakeTable:
         """The last batch_id merged under `stream_id`, or -1 — the
         batch gate read back as a consumer cursor. Because the gate
         commits atomically WITH each merge, a poller that uses a
-        monotone upstream position as its batch_id (see
-        replicate_lake_poll) gets a crash-safe resume point for free:
-        no side-channel cursor file can disagree with applied state."""
+        monotone upstream position as its batch_id gets a crash-safe
+        resume point for free: no side-channel cursor file can disagree
+        with applied state. dm_spark.streaming.replicate_lake_poll is
+        that poller; bootstrap_replica plants its cursor."""
         meta = self._load_meta()
         return meta.last_batch_id if meta.stream_id == stream_id else -1
 

@@ -397,8 +397,8 @@ def _final_us(lake: LakeTable) -> DataFrame:
 
 def _feed_ranges(batch: DataFrame, sf_dir: str) -> Iterator[DataFrame]:
     """Pin a flattened fixture batch and cut it into 4 contiguous
-    location ranges (over _cdc_file_seq/_cdc_pos) for the replay, fold
-    and profile loops.
+    location ranges (over _cdc_file_seq/_cdc_pos) for the replay and
+    fold loops.
 
     Pin: localCheckpoint, not persist(): .persist() keeps the full
     lineage, so every per-range ACTION still re-optimizes the

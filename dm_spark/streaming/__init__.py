@@ -1,17 +1,13 @@
 from dm_spark.streaming.driver import CdcStreamDriver
 from dm_spark.streaming.replicate import (
     bootstrap_replica,
-    replicate_lake,
     replicate_lake_poll,
     sync_replica_schema,
 )
-from dm_spark.streaming.windows import windowed_op_counts
 
 __all__ = [
     "CdcStreamDriver",
     "bootstrap_replica",
-    "replicate_lake",
     "replicate_lake_poll",
     "sync_replica_schema",
-    "windowed_op_counts",
 ]

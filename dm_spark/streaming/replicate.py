@@ -1,11 +1,11 @@
 """Lake-to-lake replication: tail one LakeTable's change feed into
-another, continuously.
+another.
 
 This is the downstream half of the CDC-out closure (`LakeTable.
-changes_stream`): the upstream lake's `_changes/` dirs are a file
-stream, each micro-batch LWW-merges into the destination with the same
-exactly-once machinery as the primary ingest path (file-source offsets
-+ `merge_into(batch_id, stream_id)` gating + LWW convergence on
+changes`): each poll reads the change log out of the upstream's
+committed manifest and LWW-merges the window into the destination
+with the same exactly-once machinery as the primary ingest path
+(`merge_into(batch_id, stream_id)` gating + LWW convergence on
 redelivery). Chains compose — A -> B -> C each hop runs one of these —
 so a 100-TB pipeline materializes derived tables off table deltas
 instead of rescanning upstream state at every step.
@@ -69,72 +69,11 @@ def sync_replica_schema(src: LakeTable, dst: LakeTable) -> list[dict]:
     return applied
 
 
-def replicate_lake(
-    spark: SparkSession,
-    src: LakeTable,
-    dst: LakeTable,
-    checkpoint_dir: str,
-    timeout_sec: int = 600,
-    trigger_sec: float | None = None,
-    stop_when=None,
-    poll_sec: float = 0.25,
-    sync_schema: bool = True,
-) -> list[dict]:
-    """Replicate `src`'s change feed into `dst`.
-
-    `trigger_sec=None` drains the current feed and stops
-    (Trigger.AvailableNow — catch-up mode); a float tails continuously
-    until `timeout_sec` or `stop_when(stats) -> bool`. Resume is free:
-    the same checkpoint_dir picks up at the first unread change file,
-    and a replayed batch is skipped by the destination's batch-id gate.
-    Returns per-batch merge stats.
-
-    `sync_schema=True` first applies upstream add/widen schema changes
-    to the replica (see :func:`sync_replica_schema`) so columns added
-    at the source land here instead of being silently dropped by the
-    merge's schema tolerance; the stream's read schema is fixed after
-    that point, so a mid-run upstream DDL needs a restart of this call
-    (the standard file-source contract — catch-up mode re-syncs on
-    every invocation)."""
-    stream_id = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
-    stats: list[dict] = []
-    if sync_schema:
-        sync_replica_schema(src, dst)
-
-    def _apply(batch_df, batch_id: int) -> None:
-        st = dst.merge_into(batch_df, batch_id=batch_id, stream_id=stream_id)
-        stats.append(
-            {
-                "batch_id": batch_id,
-                "skipped": st.skipped,
-                "n_incoming": st.n_incoming,
-                "rows_written": st.rows_written,
-                "buckets_touched": st.n_buckets_touched,
-            }
-        )
-
-    w = (
-        src.changes_stream()
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_sec is None:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-        return stats
-    q = w.trigger(processingTime=f"{max(trigger_sec, 0.1)} seconds").start()
-    t0 = time.time()
-    try:
-        while q.isActive and time.time() - t0 < timeout_sec:
-            if stop_when is not None and stop_when(stats):
-                break
-            time.sleep(poll_sec)
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    return stats
+def _poll_stream_id(stream_name: str) -> str:
+    """The batch-gate stream id a named poll replica merges under —
+    shared by bootstrap and poll so a bootstrap plants the cursor the
+    poll resumes from."""
+    return hashlib.sha256(f"poll:{stream_name}".encode()).hexdigest()[:16]
 
 
 def bootstrap_replica(
@@ -156,7 +95,7 @@ def bootstrap_replica(
     Subsequent replicate_lake_poll calls resume past the snapshot."""
     if sync_schema:
         sync_replica_schema(src, dst)
-    stream_id = hashlib.sha256(f"poll:{stream_name}".encode()).hexdigest()[:16]
+    stream_id = _poll_stream_id(stream_name)
     head = src._head_version()  # noqa: SLF001 — snapshot HEAD read
     return dst.merge_into(src.snapshot_changes(), batch_id=head, stream_id=stream_id)
 
@@ -171,11 +110,13 @@ def replicate_lake_poll(
     stop_when=None,
     sync_schema: bool = True,
 ) -> list[dict]:
-    """Version-cursor replication over the BATCH changes() API — works
-    for MoR sources too (whose change entries live inside data commit
-    dirs, out of reach of the file-stream path), and for object stores
-    with no file-notification semantics: discovery is the change log in
-    the manifest, not a directory listing.
+    """Version-cursor replication over the BATCH changes() API, for
+    CoW and MoR sources alike and for object stores with no
+    file-notification semantics: discovery is the change log in the
+    committed manifest, not a directory listing, so a change row is
+    admitted only once its merge committed, a pruned window raises
+    "pruned below" (as does a source truncate), and files written
+    before a rename read back by field id.
 
     Exactly-once with ZERO side-channel state: each poll merges the
     window (cursor, head] with `batch_id = head` (the source's snapshot
@@ -187,7 +128,7 @@ def replicate_lake_poll(
 
     `poll_sec=None` runs one catch-up pass and returns; a float polls
     until `timeout_sec` or `stop_when(stats)`."""
-    stream_id = hashlib.sha256(f"poll:{stream_name}".encode()).hexdigest()[:16]
+    stream_id = _poll_stream_id(stream_name)
     stats: list[dict] = []
 
     def _pass() -> None:

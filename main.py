@@ -5,8 +5,11 @@
 
 Task file (YAML or JSON): see `examples/task.yaml`. Modes:
 - full:        batch snapshot load (dump+load units)
-- incremental: tail the relay feed via Structured Streaming
+- incremental: drain the relay feed via Structured Streaming, then stop
 - all:         snapshot, then stream from the snapshot watermark
+- tail:        tail the relay feed live (until `timeout_sec`, 0 = forever)
+- replicate:   copy another lake's change feed (`paths.src_lake`) into
+               this lake (`examples/task_replicate.yaml`)
 
 Runtime control of a RUNNING task (dmctl analog, no restart):
     python main.py ctl <checkpoint_dir> pause|resume|stop
@@ -467,25 +470,18 @@ def main(argv: list[str]) -> int:
         stats = task.run_all(snapshot, tuple(spec["snapshot_location"]))
         print(json.dumps({"mode": mode, "batches": stats}))
     elif mode == "replicate":
-        # lake-to-lake: tail another LakeTable's change feed (CDC-out).
-        # CoW sources stream their _changes dirs; MoR sources (change
-        # set = delta files inside data commits) use the version-cursor
-        # poll path, which admits by the committed manifest.
-        from dm_spark.streaming import replicate_lake, replicate_lake_poll
+        # lake-to-lake: tail another LakeTable's change feed (CDC-out)
+        # by the version cursor, which reads the change log out of the
+        # committed manifest (CoW and MoR sources alike). `name` keys
+        # the cursor in the replica's batch gate.
+        from dm_spark.streaming import replicate_lake_poll
 
         src = LakeTable(spark, spec["paths"]["src_lake"])
-        if src.write_mode == "mor":
-            stats = replicate_lake_poll(
-                spark, src, lake, spec.get("name", "replica"),
-                timeout_sec=spec.get("timeout_sec", 600),
-                poll_sec=spec.get("trigger_sec"),  # None = catch-up + stop
-            )
-        else:
-            stats = replicate_lake(
-                spark, src, lake, paths["checkpoint"],
-                timeout_sec=spec.get("timeout_sec", 600),
-                trigger_sec=spec.get("trigger_sec"),  # None = catch-up + stop
-            )
+        stats = replicate_lake_poll(
+            spark, src, lake, spec.get("name", "replica"),
+            timeout_sec=spec.get("timeout_sec", 600),
+            poll_sec=spec.get("trigger_sec"),  # None = catch-up + stop
+        )
         print(json.dumps({"mode": mode, "batches": stats}))
     elif mode == "tail":
         # live production shape: tail forever (or until timeout_sec)

@@ -10,6 +10,8 @@ this is the lake-side closure that lets dm_spark pipelines chain."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,6 +103,12 @@ def test_changes_project_to_current_schema(spark, tmp_path):
     assert "rating" in got.columns
     row = got.collect()[0]
     assert row.k == "a" and row.rating is None
+    # a rename too: files written under the old name carry the value
+    assert src.apply_ddl(
+        {"action": "rename_column", "column": "txt", "new_name": "body",
+         "file_seq": 0, "pos": 6, "suffix": 0}
+    )
+    assert {r.body for r in src.changes().collect()} == {"a1"}
 
 
 def test_prune_changes_and_vacuum(spark, tmp_path):
@@ -119,30 +127,37 @@ def test_prune_changes_and_vacuum(spark, tmp_path):
     with pytest.raises(ValueError, match="pruned below"):
         src.changes()
     assert {r.k for r in src.changes(v1 + 1).collect()} == {"b"}
-    assert all(int(v) > v1 for v in src._load_meta().change_log)
+    change_log = src._load_meta().change_log
+    assert all(int(v) > v1 for v in change_log)
+    # the pruned window's dir is gone; only live change dirs remain
+    ch_root = os.path.join(src.path, "_changes")
+    live = {
+        os.path.relpath(e["path"], ch_root).split(os.sep)[0]
+        for lst in change_log.values() for e in lst
+    }
+    assert set(os.listdir(ch_root)) == live and len(live) == 1
 
 
 def test_replicate_lake_stream_chain(spark, tmp_path):
-    """Streaming lake-to-lake replication: dst tails src's change feed
-    via changes_stream + replicate_lake (AvailableNow), converging to
-    src's state; a second catch-up run with the SAME checkpoint picks
-    up only the new changes (no double-apply — batch-id gate + LWW)."""
-    from dm_spark.streaming import replicate_lake
+    """Lake-to-lake replication: dst tails src's change feed via
+    replicate_lake_poll (one catch-up pass), converging to src's state;
+    a second pass under the SAME name picks up only the new changes
+    (no double-apply — the batch-id gate is the cursor)."""
+    from dm_spark.streaming import replicate_lake_poll
 
     src = _mk(spark, tmp_path, "src_stream", change_feed=True)
     dst = _mk(spark, tmp_path, "dst_stream")
-    cp = str(tmp_path / "cp_repl")
 
     src.merge_into(_ev(spark, [
         ("I", "a", 1, "a1", 0, 1), ("I", "b", 1, "b1", 0, 2),
     ]), batch_id=0)
-    stats1 = replicate_lake(spark, src, dst, cp, timeout_sec=120)
+    stats1 = replicate_lake_poll(spark, src, dst, "repl")
     assert _state(dst) == _state(src)
 
     src.merge_into(_ev(spark, [
         ("U", "a", 2, "a2", 1, 1), ("D", "b", None, None, 1, 2),
     ]), batch_id=1)
-    stats2 = replicate_lake(spark, src, dst, cp, timeout_sec=120)
+    stats2 = replicate_lake_poll(spark, src, dst, "repl")
     assert _state(dst) == _state(src)
     assert ("b", 1, "b1") not in _state(dst)
     # the second run consumed only the delta, not the whole feed
@@ -154,7 +169,7 @@ def test_replicate_two_hop_chain(spark, tmp_path):
     """Chains compose: A -> B -> C where B itself has change_feed on —
     B's replication merges emit B's own change feed, and C tailing B
     converges to A's state (the multi-stage derived-table pipeline)."""
-    from dm_spark.streaming import replicate_lake
+    from dm_spark.streaming import replicate_lake_poll
 
     a = _mk(spark, tmp_path, "hop_a", change_feed=True)
     b = _mk(spark, tmp_path, "hop_b", change_feed=True)
@@ -163,8 +178,8 @@ def test_replicate_two_hop_chain(spark, tmp_path):
         ("I", "a", 1, "a1", 0, 1), ("I", "b", 1, "b1", 0, 2),
         ("D", "a", None, None, 0, 3),
     ]), batch_id=0)
-    replicate_lake(spark, a, b, str(tmp_path / "cp_ab"), timeout_sec=120)
-    replicate_lake(spark, b, c, str(tmp_path / "cp_bc"), timeout_sec=120)
+    replicate_lake_poll(spark, a, b, "ab")
+    replicate_lake_poll(spark, b, c, "bc")
     assert _state(c) == _state(b) == _state(a) == {("b", 1, "b1")}
 
 
@@ -174,7 +189,7 @@ def test_replicate_syncs_upstream_schema(spark, tmp_path):
     the destination's schema tolerance. Pre-DDL change rows read back
     null-filled; a re-run applies nothing (gated at the DDL high
     water)."""
-    from dm_spark.streaming import replicate_lake, sync_replica_schema
+    from dm_spark.streaming import replicate_lake_poll, sync_replica_schema
 
     src = _mk(spark, tmp_path, "src_sync", change_feed=True)
     dst = _mk(spark, tmp_path, "dst_sync")
@@ -189,7 +204,7 @@ def test_replicate_syncs_upstream_schema(spark, tmp_path):
     ).withColumn("_cdc_ts", F.timestamp_seconds(F.lit(1700000100)))
     src.merge_into(b2, batch_id=1)
 
-    replicate_lake(spark, src, dst, str(tmp_path / "cp_sync"), timeout_sec=120)
+    replicate_lake_poll(spark, src, dst, "sync")
     got = {(r.k, r.rating) for r in dst.read().select("k", "rating").collect()}
     assert got == {("a", None), ("b", 9)}
     assert sync_replica_schema(src, dst) == []  # re-run: gated, no-op
@@ -199,7 +214,7 @@ def test_replica_validates_against_source(spark, tmp_path):
     """The ops loop a production replica runs: after catch-up, the
     sync_diff-style validator must report zero diff between source and
     replica (bucketed checksums, then row-level on mismatch)."""
-    from dm_spark.streaming import replicate_lake
+    from dm_spark.streaming import replicate_lake_poll
     from dm_spark.validator import table_checksum, table_diff
 
     src = _mk(spark, tmp_path, "src_val", change_feed=True)
@@ -208,15 +223,15 @@ def test_replica_validates_against_source(spark, tmp_path):
         ("I", "a", 1, "a1", 0, 1), ("I", "b", 2, "b2", 0, 2),
         ("U", "a", 3, "a3", 0, 3), ("D", "b", None, None, 0, 4),
     ]), batch_id=0)
-    replicate_lake(spark, src, dst, str(tmp_path / "cp_val"), timeout_sec=120)
+    replicate_lake_poll(spark, src, dst, "val")
     assert table_checksum(src.read()) == table_checksum(dst.read())
     d = table_diff(src.read(), dst.read(), key=["k"])
     assert (d["mismatched"], d["missing_left"], d["missing_right"]) == (0, 0, 0), d
 
 
 def test_replicate_poll_mor_source(spark, tmp_path):
-    """Version-cursor replication works where the file stream can't: a
-    MoR source (change entries inside data commit dirs). The cursor is
+    """Version-cursor replication of a MoR source (change entries live
+    inside data commit dirs, read through the manifest). The cursor is
     the destination's batch gate — no checkpoint dir, no cursor file —
     and a repeated poll with no new source versions applies nothing."""
     from dm_spark.streaming import replicate_lake_poll
@@ -296,12 +311,6 @@ def test_bootstrap_replica_after_retention_loss(spark, tmp_path):
     s = replicate_lake_poll(spark, src, dst, "boot")
     assert s and s[0]["n_incoming"] == 1
     assert _state(dst) == _state(src)
-
-
-def test_changes_stream_rejects_mor(spark, tmp_path):
-    src = _mk(spark, tmp_path, "src_mor_stream", write_mode="mor", change_feed=True)
-    with pytest.raises(ValueError, match="cow"):
-        src.changes_stream()
 
 
 def test_capstone_ingest_then_replicate_matches_oracle(spark, sf_dir, tmp_path):
@@ -447,26 +456,6 @@ def test_sync_schema_diverged_types_join_to_widest(spark, tmp_path):
         dict((f["name"], f["type"]) for f in dst.schema_fields())["v"]
         == "decimal(22,2)"
     )
-
-
-def test_changes_stream_refuses_pre_rename_files(spark, tmp_path):
-    """A file stream reads every retained change file with ONE
-    name-based schema; files written before a column rename would read
-    back null-filled — the stream must refuse to start in that state
-    (the batch API projects by field id and stays correct)."""
-    src = _mk(spark, tmp_path, "src_ren", change_feed=True)
-    src.merge_into(_ev(spark, [("I", "a", 1, "a1", 0, 1)]), batch_id=0)
-    assert src.apply_ddl(
-        {"action": "rename_column", "column": "txt", "new_name": "body",
-         "file_seq": 0, "pos": 5, "suffix": 0}
-    )
-    with pytest.raises(ValueError, match="rename"):
-        src.changes_stream()
-    # the batch path projects by field id: old files carry the value
-    assert {r.body for r in src.changes().collect()} == {"a1"}
-    # pruning past the rename clears the stream
-    src.prune_changes(src._head_version() + 1)
-    src.changes_stream()  # no raise
 
 
 def test_truncate_invalidates_change_consumers(spark, tmp_path):

@@ -130,6 +130,31 @@ def test_time_travel_and_vacuum(spark, lake):
     assert rows(lake.read()) == [("a", 1, "v2")]
 
 
+def test_vacuum_removes_dead_commit_dirs(spark, tmp_path):
+    """vacuum() reclaims a commit dir whole once no live parquet file is
+    left in it — Spark's `_SUCCESS` and `.crc` files do not keep a dead
+    dir alive — and keeps every dir that still holds a live file."""
+    lake = LakeTable.create(spark, str(tmp_path / "vdirs"), SCHEMA, KEY, n_buckets=4)
+    lake.merge_into(
+        spark.createDataFrame([ch(f"c{i}", 1, "I", "v0", 0, i, i) for i in range(16)], CHANGE_DDL),
+        batch_id=0,
+    )
+    for b in range(1, 6):  # each rewrites the one bucket holding c0
+        lake.merge_into(
+            spark.createDataFrame([ch("c0", 1, "U", f"v{b}", b, 0, 100 + b)], CHANGE_DDL),
+            batch_id=b,
+        )
+    before = rows(lake.read())
+    assert len(os.listdir(lake.data_dir)) == 6
+    assert lake.vacuum() >= 4
+    live = {
+        os.path.relpath(e["path"], lake.data_dir).split(os.sep)[0]
+        for e in lake._data_entries(lake._load_meta())
+    }
+    assert set(os.listdir(lake.data_dir)) == live and len(live) < 6
+    assert rows(lake.read()) == before
+
+
 def test_schema_evolution_add_rename_widen(spark, lake):
     lake.merge_into(spark.createDataFrame([ch("a", 1, "I", "v1", 0, 1, 1)], CHANGE_DDL), batch_id=0)
     assert lake.apply_ddl({"action": "add_column", "column": "rating", "new_type": "int", "file_seq": 1, "pos": 0})

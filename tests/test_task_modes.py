@@ -1,8 +1,10 @@
-"""Task mode `all`: snapshot load then catch-up streaming from the
-snapshot watermark (full_mode + incremental_mode + all-mode suites)."""
+"""Task modes: `all` (snapshot load then catch-up streaming from the
+snapshot watermark — full_mode + incremental_mode + all-mode suites),
+the `main.py` `replicate` mode, and `main.py ctl`."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dm_spark import feed as feedmod
@@ -73,3 +75,62 @@ def test_ctl_commands_compose(tmp_path):
     assert "stop" not in json.load(open(f"{cp}/control.json"))
     # malformed patch invocations get usage / a clear error, not a traceback
     assert mainmod.ctl([cp, "patch"]) == 2
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_cli_replicate_mode_resumes_from_cursor(spark, tmp_path, capsys, mode):
+    """`main.py` mode `replicate` copies a change-feed source of either
+    write mode into the task's lake; a second run after a source merge
+    reads only the new rows (the cursor is the replica's batch gate)."""
+    import json
+    import sys
+
+    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
+    import main as mainmod
+
+    from tests.test_change_feed import SCHEMA as CF_SCHEMA
+    from tests.test_change_feed import _ev, _state
+
+    src = LakeTable.create(
+        spark, str(tmp_path / "src"), CF_SCHEMA, ["k"], n_buckets=4,
+        write_mode=mode, change_feed=True,
+    )
+    spec = {
+        "name": f"cli_repl_{mode}",
+        "mode": "replicate",
+        "paths": {
+            "src_lake": src.path,
+            "lake": str(tmp_path / "dst"),
+            "feed": str(tmp_path / "feed"),
+            "checkpoint": str(tmp_path / "cp"),
+        },
+        "schema": [{"name": n, "type": t} for n, t in CF_SCHEMA],
+        "task": {
+            "key": ["k"],
+            "n_buckets": 4,
+            # the CLI shares this test session; keep its shuffle width
+            "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        },
+    }
+    spec_path = tmp_path / "task_replicate.json"
+    spec_path.write_text(json.dumps(spec))
+
+    def run() -> list[dict]:
+        capsys.readouterr()
+        assert mainmod.main(["main.py", str(spec_path)]) == 0
+        lines = [json.loads(ln) for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+        return next(ln["batches"] for ln in lines if ln.get("mode") == "replicate")
+
+    src.merge_into(_ev(spark, [
+        ("I", "a", 1, "a1", 0, 1), ("I", "b", 1, "b1", 0, 2), ("I", "c", 1, "c1", 0, 3),
+    ]), batch_id=0)
+    first = run()
+    dst = LakeTable(spark, spec["paths"]["lake"])
+    assert _state(dst) == _state(src) and first[0]["n_incoming"] == 3
+
+    src.merge_into(_ev(spark, [
+        ("U", "a", 2, "a2", 1, 1), ("D", "b", None, None, 1, 2),
+    ]), batch_id=1)
+    second = run()
+    assert _state(dst) == _state(src) == {("a", 2, "a2"), ("c", 1, "c1")}
+    assert [s["n_incoming"] for s in second] == [2]
