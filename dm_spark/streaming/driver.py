@@ -17,6 +17,7 @@ Streaming query:
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import json
 import os
@@ -29,6 +30,179 @@ from pyspark.sql import functions as F
 from dm_spark.lake import LakeTable
 from dm_spark.operators import ApplyPipeline
 from dm_spark.sources.relay import read_feed_stream
+
+
+def read_json(path: str):
+    """The JSON document saved at `path`, or None if there is none."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def write_json(path: str, doc) -> None:
+    """Save `doc` at `path` atomically: a uniquely named tmp file
+    beside it, then os.replace, so a reader sees the old document or
+    the new one, never a partial write — and two concurrent writers
+    never tear each other's tmp file."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        json.dump(doc, f)
+    os.replace(tmp, path)
+
+
+def stream_batches(checkpoint_dir: str) -> tuple[int, int]:
+    """The newest planned (offset log) and committed (commit log)
+    micro-batch ids of a Spark stream checkpoint; -1 where none."""
+
+    def latest(sub: str) -> int:
+        try:
+            names = os.listdir(os.path.join(checkpoint_dir, sub))
+        except FileNotFoundError:
+            return -1
+        return max((int(f) for f in names if f.isdigit()), default=-1)
+
+    return latest("offsets"), latest("commits")
+
+
+# ---------------------------------------------- control-op shape checks
+# One validator per control-file op kind. `main.py ctl` composes every
+# op through these, so a bad op is refused before it reaches
+# control.json (where it would kill the poll loop on every restart
+# until removed by hand); the driver runs the same check plus its mode
+# checks (CdcStreamDriver._check) when it stages or applies the op.
+
+# the runtime-swappable subset: the filter family (the reference's
+# update-task + handle-error surface). Route changes are swappable
+# only while PAUSED (pause -> patch -> resume, the reference's
+# pause-task/update-task/resume-task flow, tests/dmctl_basic);
+# key/bucket changes alter merge semantics and always need a
+# restart — rejected loudly (rescale() exists for rebucketing).
+_PATCHABLE = ("allow_tables", "deny_tables", "event_filters",
+              "expr_filters", "ddl_filters")
+_PAUSED_PATCHABLE = ("routes",)
+
+
+def check_config_patch(patch: dict, paused: bool) -> None:
+    if not isinstance(patch, dict):
+        raise ValueError(f"config_patch must be a JSON object, got {patch!r}")
+    allowed = _PATCHABLE + (_PAUSED_PATCHABLE if paused else ())
+    bad = set(patch) - set(allowed)
+    if bad:
+        hint = (
+            "routes are swappable only while PAUSED (pause -> patch "
+            "-> resume); " if "routes" in bad and not paused else ""
+        )
+        raise ValueError(
+            f"config_patch keys {sorted(bad)} are not runtime-swappable "
+            f"(allowed here: {list(allowed)}); {hint}key/bucket changes "
+            "need a task restart (rescale() for rebucketing)"
+        )
+
+
+def _parse_ddl(what: str, sql: str, file_seq: int, pos: int) -> list:
+    from dm_spark.schema.ddl_parser import UnsupportedDdl, parse_ddl
+
+    try:
+        return parse_ddl(sql, file_seq, pos)
+    except UnsupportedDdl as e:
+        raise ValueError(
+            f"{what}: statement rejected by the DDL grammar ({e}): {sql!r}"
+        ) from e
+
+
+def _check_location(kind: str, op: dict) -> None:
+    fs, pos = op.get("file_seq"), op.get("pos")
+    if not (isinstance(fs, int) and isinstance(pos, int) and fs >= 0 and pos >= 0):
+        raise ValueError(
+            f"{kind} needs integer file_seq/pos >= 0, got ({fs!r}, {pos!r})"
+        )
+
+
+def check_schema_op(op: dict):
+    """operate-schema `set|remove`, parsing the CREATE TABLE of a set;
+    returns its DdlEvent, or None for remove."""
+    kind = op.get("op")
+    if kind not in ("set", "remove"):
+        raise ValueError(f"schema_op.op must be set|remove, got {kind!r}")
+    if not op.get("table"):
+        raise ValueError("schema_op needs a table ('db.table')")
+    if kind != "set":
+        return None
+    if not op.get("create"):
+        raise ValueError(
+            "schema_op set needs 'create': a CREATE TABLE statement "
+            "(the reference's operate-schema set takes a schema file "
+            "holding one, dm/ctl/master/operate_schema.go:30-40)"
+        )
+    evs = _parse_ddl("schema_op set", op["create"], 0, 0)
+    if len(evs) != 1 or evs[0].action != "create_table":
+        raise ValueError(
+            "schema_op set: 'create' must be a single CREATE TABLE "
+            f"statement, parsed to {[e.action for e in evs]}"
+        )
+    ev = evs[0]
+    # a statement naming a DIFFERENT table (copy-paste of another
+    # shard's DDL) would silently install that table's shape under
+    # this op's key — refuse instead of trusting the op key
+    if ev.source_table and ev.source_table != op["table"]:
+        raise ValueError(
+            f"schema_op set: the CREATE TABLE statement names "
+            f"{ev.source_table!r} but the op targets {op['table']!r} — "
+            "refusing to install one table's schema under another's key"
+        )
+    return ev
+
+
+def check_binlog_op(op: dict):
+    """handle-error `skip|replace|revert` at a location, parsing every
+    replacement statement of a replace; returns the replacement action
+    dicts, or None for skip/revert. A replace must yield at least one
+    action over all its statements (a statement that parses to none,
+    such as CREATE INDEX, may ride along with one that does)."""
+    kind = op.get("op")
+    if kind not in ("skip", "replace", "revert"):
+        raise ValueError(f"binlog_op.op must be skip|replace|revert, got {kind!r}")
+    _check_location("binlog_op", op)
+    if kind != "replace":
+        return None
+    sqls = op.get("sqls")
+    if not sqls or not isinstance(sqls, list):
+        raise ValueError(
+            "binlog_op replace needs 'sqls': a non-empty list of DDL "
+            "statements to inject at the location (the reference's "
+            "handle-error replace, syncer/handle_error.go:32-73)"
+        )
+    actions = []
+    for sql in sqls:
+        for ev in _parse_ddl("binlog_op replace", sql, op["file_seq"], op["pos"]):
+            act = {"action": ev.action, "source_table": ev.source_table}
+            for k in ("column", "new_name", "new_type", "target_table",
+                      "columns", "key", "unique_keys", "generated"):
+                v = getattr(ev, k)
+                if v is not None:
+                    act[k] = v
+            actions.append(act)
+    if not actions:
+        raise ValueError("binlog_op replace: sqls parsed to zero actions")
+    return actions
+
+
+def check_unlock_op(op: dict) -> None:
+    """unlock-ddl-lock: the locked DDL's target and identity, and the
+    location the forced DDL is stamped at. The LOCK's existence is
+    checked at apply time (it may resolve naturally between stage and
+    apply — a stale unlock is recorded, not fatal)."""
+    if not op.get("target"):
+        raise ValueError("unlock_op needs a target table")
+    ident = op.get("ident")
+    if not isinstance(ident, dict) or not ident.get("action"):
+        raise ValueError(
+            "unlock_op needs 'ident': the locked DDL's identity dict "
+            "(the `ddl` field of a ctl ddl-locks entry)"
+        )
+    _check_location("unlock_op", op)
 
 
 class CdcStreamDriver:
@@ -66,29 +240,18 @@ class CdcStreamDriver:
         # barrier/tracker/online-DDL state saved after the last batch —
         # spilled rows are already on disk, this remembers WHY they wait
         self._runner_state_path = os.path.join(checkpoint_dir, "runner_state.json")
-        state = self._read_json(self._runner_state_path) if runner is not None else None
+        state = read_json(self._runner_state_path) if runner is not None else None
         if state is not None:
             self.runner.restore_state(state)
-        # operate-schema ops are applied at most once per issued op: the
-        # last applied op is persisted beside the checkpoint so a driver
-        # restart does not re-apply the op still present in control.json
-        # (which would revert any schema evolution applied since)
-        self._applied_schema_op_path = os.path.join(
-            checkpoint_dir, "applied_schema_op.json"
-        )
-        self._applied_schema_op = self._read_json(self._applied_schema_op_path)
-        # handle-error ops (binlog skip/replace/revert) share the same
-        # at-most-once-per-issued-op contract: each ctl issue carries a
-        # fresh id, the last applied op persists beside the checkpoint
-        self._applied_binlog_op_path = os.path.join(
-            checkpoint_dir, "applied_binlog_op.json"
-        )
-        self._applied_binlog_op = self._read_json(self._applied_binlog_op_path)
-        # unlock-ddl-lock ops: same at-most-once contract
-        self._applied_unlock_op_path = os.path.join(
-            checkpoint_dir, "applied_unlock_op.json"
-        )
-        self._applied_unlock_op = self._read_json(self._applied_unlock_op_path)
+        # control-file ops (OPS) apply at most once each: the
+        # last applied op of each kind persists beside the checkpoint;
+        # `_staged` holds ops the poll thread validated, waiting for the
+        # next batch boundary
+        self._applied = {
+            k: read_json(os.path.join(checkpoint_dir, f"applied_{k}.json"))
+            for k in self.OPS
+        }
+        self._staged: dict = {}
         # GTID-set analog (opt-in, dm_spark/lineage.py): the applied
         # txn_id interval set, folded per micro-batch and persisted
         # beside the checkpoint — a semilattice, so crash-replayed
@@ -96,7 +259,7 @@ class CdcStreamDriver:
         # gap (a transaction below the high water that never applied)
         self.track_txn_intervals = track_txn_intervals
         self._txn_intervals_path = os.path.join(checkpoint_dir, "txn_intervals.json")
-        saved = self._read_json(self._txn_intervals_path) if track_txn_intervals else None
+        saved = read_json(self._txn_intervals_path) if track_txn_intervals else None
         self.txn_intervals: list[list[int]] = saved["intervals"] if saved else []
         # MoR maintenance: fold delta files back into base every N
         # batches (the rewrite_data_files scheduling a table service
@@ -187,7 +350,7 @@ class CdcStreamDriver:
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         t_start = time.time()
-        self._apply_staged_patch()  # batch boundary: swap filters here
+        self._apply_staged()  # batch boundary: control ops land here
         # persist ONLY when the batch is read more than once (runner
         # mode scans it per DDL range; a multi-target merge pins the
         # flat batch itself, a pruning CoW merge its own input). The
@@ -277,6 +440,8 @@ class CdcStreamDriver:
     #                                config at a batch boundary; route
     #                                rules additionally swap while PAUSED
     #                                (pause -> patch -> resume)
+    #   {"schema_op": {...}}         operate-schema: overwrite or drop the
+    #                                schema tracker's view of a table
     #   {"binlog_op": {...}}         handle-error: register a skip/
     #                                replace/revert error operator at a
     #                                binlog location on the running task
@@ -284,360 +449,82 @@ class CdcStreamDriver:
     #   {"unlock_op": {...}}         force-resolve a stuck pessimistic
     #                                shard-DDL lock (dmctl
     #                                unlock-ddl-lock) and drain its spill
+    # The four op kinds share one ledger (OPS): staged by the poll
+    # thread, applied at a batch boundary, recorded once applied.
     def control_path(self) -> str:
         return os.path.join(self.checkpoint_dir, "control.json")
 
     def _read_control(self) -> dict:
         try:
-            with open(self.control_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+            return read_json(self.control_path()) or {}
         except json.JSONDecodeError as e:
             # a malformed control file must not be treated as "no
             # control" — the operator thinks the stream is paused.
-            # Writers must write ATOMICALLY (tmp + os.replace, as
-            # `main.py ctl` does): this poller runs sub-second and WILL
-            # observe a partial plain-write
+            # Writers must write ATOMICALLY (write_json, as `main.py
+            # ctl` does): this poller runs sub-second and WILL observe
+            # a partial plain-write
             raise RuntimeError(f"malformed control file {self.control_path()}: {e}") from e
 
-    # the runtime-swappable subset: the filter family (the reference's
-    # update-task + handle-error surface). Route changes are swappable
-    # only while PAUSED (pause -> patch -> resume, the reference's
-    # pause-task/update-task/resume-task flow, tests/dmctl_basic);
-    # key/bucket changes alter merge semantics and always need a
-    # restart — rejected loudly (rescale() exists for rebucketing).
-    _PATCHABLE = ("allow_tables", "deny_tables", "event_filters",
-                  "expr_filters", "ddl_filters")
-    _PAUSED_PATCHABLE = ("routes",)
+    def _pending(self, ctl: dict) -> dict:
+        """The ops in `ctl` this driver has not applied, in ledger
+        order — also the blocked-task wake condition."""
+        return {k: ctl[k] for k in self.OPS if ctl.get(k) and ctl[k] != self._applied[k]}
 
-    def _validate_patch_keys(self, patch: dict, paused: bool) -> None:
-        allowed = self._PATCHABLE + (self._PAUSED_PATCHABLE if paused else ())
-        bad = set(patch) - set(allowed)
-        if bad:
-            hint = (
-                "routes are swappable only while PAUSED (pause -> patch "
-                "-> resume); " if "routes" in bad and not paused else ""
-            )
-            raise ValueError(
-                f"config_patch keys {sorted(bad)} are not runtime-swappable "
-                f"(allowed here: {list(allowed)}); {hint}key/bucket changes "
-                "need a task restart (rescale() for rebucketing)"
-            )
+    def _check(self, kind: str, op: dict, paused: bool = False):
+        """The driver's mode checks for an op of `kind`, then the
+        kind's shape check; returns what the shape check parsed."""
+        check, needs, _body = self.OPS[kind]
+        if kind == "config_patch":
+            return check(op, paused)
+        if self.runner is None or (kind == "unlock_op" and self.runner.barrier is None):
+            raise ValueError(f"{kind} needs {needs}")
+        return check(op)
 
-    def _stage_config_patch(self, ctl: dict) -> None:
-        """Poll-thread side: VALIDATE and stage the patch; the actual
-        pipeline swap happens at the top of the next `_apply` call (a
-        true batch boundary). Swapping from the poll thread would let a
-        patch land mid-batch — runner mode consults the pipeline config
-        repeatedly inside one replay, so half a micro-batch would
-        filter under old rules and half under new."""
-        patch = ctl.get("config_patch")
-        if not patch or patch == getattr(self, "_applied_patch", None):
+    def _stage(self, ctl: dict) -> None:
+        """Poll-thread side: validate each unapplied op in `ctl` and
+        stage it. The ops apply at the top of the next `_apply` (a true
+        batch boundary): runner mode consults the pipeline config, the
+        schema registry and the error operators repeatedly inside one
+        replay, so an op landing mid-batch would run half a micro-batch
+        under old rules and half under new. A bad op is refused here,
+        never first discovered inside foreachBatch."""
+        for kind, op in self._pending(ctl).items():
+            self._check(kind, op)
+            self._staged[kind] = op
+
+    def _apply_staged(self) -> None:
+        """Batch boundary: apply the staged ops in ledger order."""
+        for kind in self.OPS:
+            if kind in self._staged:
+                self._apply_op(kind, self._staged.pop(kind))
+
+    def _apply_op(self, kind: str, op: dict | None, paused: bool = False) -> None:
+        """Apply `op` of `kind` at most once: an op equal to the last
+        applied one of its kind is skipped; otherwise it is checked,
+        applied, and recorded beside the checkpoint, so a restart does
+        not re-apply the op still sitting in control.json (a schema op
+        would revert any schema evolution applied since; a stale binlog
+        op would undo a later revert; a recorded config patch is
+        re-applied at start instead, see `_start`). `ctl` gives each
+        schema/binlog/unlock op it writes a fresh id, so two intentional
+        writes of identical content stay distinct."""
+        if not op or op == self._applied[kind]:
             return
-        self._validate_patch_keys(patch, paused=False)
-        self._staged_patch = patch
+        _check, _needs, body = self.OPS[kind]
+        body(self, op, self._check(kind, op, paused))
+        self._applied[kind] = op
+        write_json(os.path.join(self.checkpoint_dir, f"applied_{kind}.json"), op)
 
-    def _apply_staged_patch(self) -> None:
-        patch = getattr(self, "_staged_patch", None)
-        if patch is not None:
-            self._staged_patch = None
-            self._apply_config_patch({"config_patch": patch})
-        sop = getattr(self, "_staged_schema_op", None)
-        if sop is not None:
-            self._staged_schema_op = None
-            self._apply_schema_op({"schema_op": sop})
-        bop = getattr(self, "_staged_binlog_op", None)
-        if bop is not None:
-            self._staged_binlog_op = None
-            self._apply_binlog_op({"binlog_op": bop})
-        uop = getattr(self, "_staged_unlock_op", None)
-        if uop is not None:
-            self._staged_unlock_op = None
-            self._apply_unlock_op({"unlock_op": uop})
-
-    def _stage_schema_op(self, ctl: dict) -> None:
-        """Poll-thread side of operate-schema: validate shape and stage;
-        the registry mutation happens at the next batch boundary (same
-        mid-batch hazard as config patches — runner mode consults the
-        registry repeatedly inside one replay)."""
-        op = ctl.get("schema_op")
-        if not op or op == getattr(self, "_applied_schema_op", None):
-            return
-        self._validate_schema_op(op)
-        self._staged_schema_op = op
-
-    def _validate_schema_op(self, op: dict):
-        """Full validation — including parsing the CREATE — so a bad
-        statement is refused at stage time in the poll thread (or at
-        compose time in `main.py ctl`, which calls this grammar too),
-        never first discovered inside foreachBatch where it would kill
-        the live query and poison every restart. Returns the parsed
-        DdlEvent for `set`, None for `remove`."""
-        if self.runner is None:
-            raise ValueError(
-                "schema_op needs runner mode — the schema tracker lives in "
-                "ReplayRunner (plain-pipeline tasks carry no per-table schemas)"
-            )
-        kind = op.get("op")
-        if kind not in ("set", "remove"):
-            raise ValueError(f"schema_op.op must be set|remove, got {kind!r}")
-        if not op.get("table"):
-            raise ValueError("schema_op needs a table ('db.table')")
-        if kind != "set":
-            return None
-        if not op.get("create"):
-            raise ValueError(
-                "schema_op set needs 'create': a CREATE TABLE statement "
-                "(the reference's operate-schema set takes a schema file "
-                "holding one, dm/ctl/master/operate_schema.go:30-40)"
-            )
-        from dm_spark.schema.ddl_parser import parse_ddl
-
-        evs = parse_ddl(op["create"], 0, 0)
-        if len(evs) != 1 or evs[0].action != "create_table":
-            raise ValueError(
-                "schema_op set: 'create' must be a single CREATE TABLE "
-                f"statement, parsed to {[e.action for e in evs]}"
-            )
-        ev = evs[0]
-        # a statement naming a DIFFERENT table (copy-paste of another
-        # shard's DDL) would silently install that table's shape under
-        # this op's key — refuse instead of trusting the op key
-        if ev.source_table and ev.source_table != op["table"]:
-            raise ValueError(
-                f"schema_op set: the CREATE TABLE statement names "
-                f"{ev.source_table!r} but the op targets {op['table']!r} — "
-                "refusing to install one table's schema under another's key"
-            )
-        return ev
-
-    def _apply_schema_op(self, ctl: dict) -> None:
-        """dmctl operate-schema set/remove (dm/ctl/master/
-        operate_schema.go; exercised by tests/tracker_ignored_ddl):
-        overwrite or drop the schema TRACKER's view of an upstream
-        table when it has diverged from reality — e.g. a DDL the task's
-        filters ignored upstream but whose shape the images now carry.
-        `set` takes a CREATE TABLE statement (parsed by the engine's
-        own DDL grammar — declared generated columns register for
-        pruning, exactly as an in-stream CREATE would); `remove` drops
-        the entry so the next CREATE TABLE / image re-seeds it. `get`
-        needs no driver round-trip: the runner state file next to the
-        checkpoint always holds the current schemas (main.py reads it).
-        Applied at a batch boundary and persisted immediately (the
-        reference's --flush)."""
-        op = ctl.get("schema_op")
-        if not op or op == getattr(self, "_applied_schema_op", None):
-            return
-        ev = self._validate_schema_op(op)
-        table = op["table"]
-        if op["op"] == "set":
-            cols = [tuple(c) for c in ev.columns or []]
-            # direct assignment, NOT registry.seed: seed is setdefault
-            # (first-seen wins), but operate-schema set exists precisely
-            # to OVERWRITE a diverged tracker view
-            self.runner.registry.schemas[table] = cols
-            # mirror the in-stream create_table path (plans/replay.py
-            # _handle_table_ddl) exactly: columns the new CREATE declares
-            # as DATA columns must stop being generated-pruned, and a
-            # previously dropped table becomes live again — otherwise the
-            # set reports success while merges keep pruning the column /
-            # the dropped_tables gate keeps eating every DML
-            target = self.runner.pipeline.config.route_of(table)
-            cur = self.runner.dynamic_generated.get(target)
-            if cur:
-                data_cols = {c for c, _t in cols}
-                cur[:] = [g for g in cur if g not in data_cols]
-                if not cur:
-                    self.runner.dynamic_generated.pop(target, None)
-            if ev.generated:
-                self.runner._register_generated(list(ev.generated), table)
-            self.runner.dropped_tables.discard(table)
-        else:  # remove
-            self.runner.registry.schemas.pop(table, None)
-        self._save_runner_state()
-        self._applied_schema_op = op
-        # persisted guard: schema ops are NOT idempotent (a later
-        # in-stream ALTER legitimately diverges the tracker from the op's
-        # snapshot), so a restart must not re-apply the op still sitting
-        # in control.json — the sidecar survives the process
-        self._write_json(self._applied_schema_op_path, op)
-
-    def _stage_binlog_op(self, ctl: dict) -> None:
-        """Poll-thread side of `ctl binlog skip|replace|revert`: validate
-        and stage; the error-operator registration happens at the next
-        batch boundary (runner mode consults error_ops repeatedly inside
-        one replay — same mid-batch hazard as config patches)."""
-        op = ctl.get("binlog_op")
-        if not op or op == self._applied_binlog_op:
-            return
-        self._validate_binlog_op(op)
-        self._staged_binlog_op = op
-
-    def _validate_binlog_op(self, op: dict):
-        """Full validation — including parsing every replacement SQL —
-        so a bad op is refused at stage time (or at compose time in
-        `main.py ctl`, which runs the same grammar), never first
-        discovered inside foreachBatch. Returns the parsed replacement
-        action dicts for `replace`, None otherwise."""
-        if self.runner is None:
-            raise ValueError(
-                "binlog_op needs runner mode — error operators live in "
-                "ReplayRunner (plain-pipeline tasks have no DDL/skip surface)"
-            )
-        kind = op.get("op")
-        if kind not in ("skip", "replace", "revert"):
-            raise ValueError(f"binlog_op.op must be skip|replace|revert, got {kind!r}")
-        fs, pos = op.get("file_seq"), op.get("pos")
-        if not (isinstance(fs, int) and isinstance(pos, int) and fs >= 0 and pos >= 0):
-            raise ValueError(
-                f"binlog_op needs integer file_seq/pos >= 0, got ({fs!r}, {pos!r})"
-            )
-        if kind != "replace":
-            return None
-        sqls = op.get("sqls")
-        if not sqls or not isinstance(sqls, list):
-            raise ValueError(
-                "binlog_op replace needs 'sqls': a non-empty list of DDL "
-                "statements to inject at the location (the reference's "
-                "handle-error replace, syncer/handle_error.go:32-73)"
-            )
-        from dm_spark.schema.ddl_parser import UnsupportedDdl, parse_ddl
-
-        actions = []
-        for sql in sqls:
-            try:
-                evs = parse_ddl(sql, fs, pos)
-            except UnsupportedDdl as e:
-                raise ValueError(
-                    f"binlog_op replace: statement rejected by the DDL "
-                    f"grammar ({e}): {sql!r}"
-                ) from e
-            for ev in evs:
-                act = {"action": ev.action, "source_table": ev.source_table}
-                for k in ("column", "new_name", "new_type", "target_table",
-                          "columns", "key", "unique_keys", "generated"):
-                    v = getattr(ev, k)
-                    if v is not None:
-                        act[k] = v
-                actions.append(act)
-        if not actions:
-            raise ValueError("binlog_op replace: sqls parsed to zero actions")
-        return actions
-
-    def _apply_binlog_op(self, ctl: dict) -> None:
-        """dmctl `binlog skip|replace|revert` (handle-error,
-        syncer/handle_error.go:32-73; match/apply
-        syncer/err-operator/operator.go:60-173): register a user
-        override at a binlog location on the RUNNING task, so a task
-        blocked on an unsupported DDL or a poison DML is unblocked
-        without a restart — the replayed micro-batch consults the
-        operator at the failing location (skip drops the event, replace
-        injects the supplied statements with suffix ordinals). Applied
-        at a batch boundary, persisted in the runner state (error_ops
-        survive restarts) plus an at-most-once sidecar keyed by the op
-        id (a later in-stream revert must not be undone by the stale op
-        still sitting in control.json after a driver restart)."""
-        op = ctl.get("binlog_op")
-        if not op or op == self._applied_binlog_op:
-            return
-        actions = self._validate_binlog_op(op)
-        fs, pos = op["file_seq"], op["pos"]
-        if op["op"] == "skip":
-            self.runner.error_ops.set_skip(fs, pos)
-        elif op["op"] == "replace":
-            self.runner.error_ops.set_replace(fs, pos, actions)
-        else:  # revert
-            self.runner.error_ops.revert(fs, pos)
-        self._save_runner_state()
-        self._applied_binlog_op = op
-        self._write_json(self._applied_binlog_op_path, op)
-
-    def _stage_unlock_op(self, ctl: dict) -> None:
-        op = ctl.get("unlock_op")
-        if not op or op == self._applied_unlock_op:
-            return
-        self._validate_unlock_op(op)
-        self._staged_unlock_op = op
-
-    def _validate_unlock_op(self, op: dict) -> None:
-        """Shape-only validation: the LOCK's existence is checked at
-        apply time (it may resolve naturally between stage and apply —
-        a stale unlock is recorded, not fatal)."""
-        if self.runner is None or self.runner.barrier is None:
-            raise ValueError(
-                "unlock_op needs a runner with a pessimistic shard-DDL "
-                "barrier (no locks exist on this task)"
-            )
-        if not op.get("target"):
-            raise ValueError("unlock_op needs a target table")
-        ident = op.get("ident")
-        if not isinstance(ident, dict) or not ident.get("action"):
-            raise ValueError(
-                "unlock_op needs 'ident': the locked DDL's identity dict "
-                "(the `ddl` field of a ctl ddl-locks entry)"
-            )
-        fs, pos = op.get("file_seq"), op.get("pos")
-        if not (isinstance(fs, int) and isinstance(pos, int) and fs >= 0 and pos >= 0):
-            raise ValueError(
-                f"unlock_op needs integer file_seq/pos >= 0 (where the "
-                f"forced DDL is stamped), got ({fs!r}, {pos!r})"
-            )
-
-    def _apply_unlock_op(self, ctl: dict) -> None:
-        """dmctl unlock-ddl-lock (dm/ctl/master/unlock_ddl_lock.go):
-        force-resolve a stuck pessimistic shard-DDL lock at a batch
-        boundary — exec (default) applies the DDL now and releases;
-        skip releases without applying. A lock that resolved naturally
-        between issue and apply is recorded in batch_stats instead of
-        failing the task (the op is then spent)."""
-        op = ctl.get("unlock_op")
-        if not op or op == self._applied_unlock_op:
-            return
-        self._validate_unlock_op(op)
-        try:
-            res = self.runner.force_unlock(
-                op["target"], op["ident"], op["file_seq"], op["pos"],
-                exec_ddl=op.get("exec", True),
-            )
-            # drain NOW: on an idle tail no micro-batch may fire for a
-            # while, and the whole point of the unlock is releasing the
-            # spilled DMLs the lock was holding back
-            res["drained"] = self.runner.drain_pending()
-            self.batch_stats.append({"unlock_op": op.get("id"), **res})
-        except ValueError as e:
-            # EVERY designed refusal spends the op: a lock that resolved
-            # naturally, OR an apply-time refusal (key-column rename,
-            # expr-filter collision). Letting the refusal escape
-            # foreachBatch would kill the query with the op still in
-            # control.json — every restart would re-crash until it was
-            # hand-removed (review r5). Recorded loudly instead; the
-            # operator re-issues a corrected op (fresh id).
-            why = (
-                "lock_already_resolved"
-                if "no pending shard-DDL lock" in str(e)
-                else f"refused: {e}"
-            )
-            self.batch_stats.append({"unlock_op": op.get("id"), "result": why})
-        self._save_runner_state()
-        self._applied_unlock_op = op
-        self._write_json(self._applied_unlock_op_path, op)
-
-    def _apply_config_patch(self, ctl: dict, paused: bool = False) -> None:
-        import copy
-
+    def _apply_config_patch(self, patch: dict, _parsed=None) -> None:
+        """dmctl update-task: swap the patched keys of the task config
+        into a new pipeline, which the next micro-batch reads."""
         from dm_spark.config import (
             DdlFilterRule,
             EventFilterRule,
             ExprFilterRule,
             RouteRule,
         )
-        from dm_spark.operators import ApplyPipeline
 
-        patch = ctl.get("config_patch")
-        if not patch or patch == getattr(self, "_applied_patch", None):
-            return
-        self._validate_patch_keys(patch, paused=paused)
         cfg = copy.deepcopy(self.pipeline.config)
         if "routes" in patch:
             cfg.routes = [RouteRule(**r) for r in patch["routes"]]
@@ -671,20 +558,137 @@ class CdcStreamDriver:
             cfg.expr_filters = [ExprFilterRule(**r) for r in patch["expr_filters"]]
         if "ddl_filters" in patch:
             cfg.ddl_filters = [DdlFilterRule(**r) for r in patch["ddl_filters"]]
+        if cfg == self.pipeline.config:
+            return  # already in force: keep the compiled pipeline
         # swapping the reference is atomic; the next micro-batch reads
         # the new pipeline. The location floor (snapshot-watermark gate)
         # carries over — it is task state, not filter config
         self.pipeline = ApplyPipeline(cfg, location_floor=self.pipeline.location_floor)
         if self.runner is not None:
             self.runner.pipeline = self.pipeline
-        self._applied_patch = patch
+
+    def _apply_schema_op(self, op: dict, ev) -> None:
+        """dmctl operate-schema set/remove (dm/ctl/master/
+        operate_schema.go; exercised by tests/tracker_ignored_ddl):
+        overwrite or drop the schema TRACKER's view of an upstream
+        table when it has diverged from reality — e.g. a DDL the task's
+        filters ignored upstream but whose shape the images now carry.
+        `set` takes a CREATE TABLE statement (parsed by the engine's
+        own DDL grammar — declared generated columns register for
+        pruning, exactly as an in-stream CREATE would); `remove` drops
+        the entry so the next CREATE TABLE / image re-seeds it. `get`
+        needs no driver round-trip: the runner state file next to the
+        checkpoint always holds the current schemas (main.py reads it).
+        Persisted immediately (the reference's --flush)."""
+        table = op["table"]
+        if op["op"] == "set":
+            cols = [tuple(c) for c in ev.columns or []]
+            # direct assignment, NOT registry.seed: seed is setdefault
+            # (first-seen wins), but operate-schema set exists precisely
+            # to OVERWRITE a diverged tracker view
+            self.runner.registry.schemas[table] = cols
+            # mirror the in-stream create_table path (plans/replay.py
+            # _handle_table_ddl) exactly: columns the new CREATE declares
+            # as DATA columns must stop being generated-pruned, and a
+            # previously dropped table becomes live again — otherwise the
+            # set reports success while merges keep pruning the column /
+            # the dropped_tables gate keeps eating every DML
+            target = self.runner.pipeline.config.route_of(table)
+            cur = self.runner.dynamic_generated.get(target)
+            if cur:
+                data_cols = {c for c, _t in cols}
+                cur[:] = [g for g in cur if g not in data_cols]
+                if not cur:
+                    self.runner.dynamic_generated.pop(target, None)
+            if ev.generated:
+                self.runner._register_generated(list(ev.generated), table)
+            self.runner.dropped_tables.discard(table)
+        else:  # remove
+            self.runner.registry.schemas.pop(table, None)
+        self._save_runner_state()
+
+    def _apply_binlog_op(self, op: dict, actions) -> None:
+        """dmctl `binlog skip|replace|revert` (handle-error,
+        syncer/handle_error.go:32-73; match/apply
+        syncer/err-operator/operator.go:60-173): register a user
+        override at a binlog location on the RUNNING task, so a task
+        blocked on an unsupported DDL or a poison DML is unblocked
+        without a restart — the replayed micro-batch consults the
+        operator at the failing location (skip drops the event, replace
+        injects the supplied statements with suffix ordinals). The
+        error operators persist in the runner state."""
+        fs, pos = op["file_seq"], op["pos"]
+        if op["op"] == "skip":
+            self.runner.error_ops.set_skip(fs, pos)
+        elif op["op"] == "replace":
+            self.runner.error_ops.set_replace(fs, pos, actions)
+        else:  # revert
+            self.runner.error_ops.revert(fs, pos)
+        self._save_runner_state()
+
+    def _apply_unlock_op(self, op: dict, _parsed=None) -> None:
+        """dmctl unlock-ddl-lock (dm/ctl/master/unlock_ddl_lock.go):
+        force-resolve a stuck pessimistic shard-DDL lock at a batch
+        boundary — exec (default) applies the DDL now and releases;
+        skip releases without applying. A lock that resolved naturally
+        between issue and apply is recorded in batch_stats instead of
+        failing the task (the op is then spent)."""
+        try:
+            res = self.runner.force_unlock(
+                op["target"], op["ident"], op["file_seq"], op["pos"],
+                exec_ddl=op.get("exec", True),
+            )
+            # drain NOW: on an idle tail no micro-batch may fire for a
+            # while, and the whole point of the unlock is releasing the
+            # spilled DMLs the lock was holding back
+            res["drained"] = self.runner.drain_pending()
+            self.batch_stats.append({"unlock_op": op.get("id"), **res})
+        except ValueError as e:
+            # EVERY designed refusal spends the op: a lock that resolved
+            # naturally, OR an apply-time refusal (key-column rename,
+            # expr-filter collision). Letting the refusal escape
+            # foreachBatch would kill the query with the op still in
+            # control.json — every restart would re-crash until it was
+            # hand-removed (review r5). Recorded loudly instead; the
+            # operator re-issues a corrected op (fresh id).
+            why = (
+                "lock_already_resolved"
+                if "no pending shard-DDL lock" in str(e)
+                else f"refused: {e}"
+            )
+            self.batch_stats.append({"unlock_op": op.get("id"), "result": why})
+        self._save_runner_state()
+
+    # the op ledger, in apply order: kind -> (shape check, the driver
+    # mode a runner-side kind needs, apply body)
+    OPS = {
+        "config_patch": (check_config_patch, None, _apply_config_patch),
+        "schema_op": (
+            check_schema_op,
+            "runner mode — the schema tracker lives in ReplayRunner "
+            "(plain-pipeline tasks carry no per-table schemas)",
+            _apply_schema_op,
+        ),
+        "binlog_op": (
+            check_binlog_op,
+            "runner mode — error operators live in ReplayRunner "
+            "(plain-pipeline tasks have no DDL/skip surface)",
+            _apply_binlog_op,
+        ),
+        "unlock_op": (
+            check_unlock_op,
+            "a runner with a pessimistic shard-DDL barrier (no locks "
+            "exist on this task)",
+            _apply_unlock_op,
+        ),
+    }
 
     def _save_runner_state(self) -> None:
         """Atomic write-then-rename after each runner batch: the state
         on disk is always the state as of SOME completed batch; a crash
         mid-batch replays that batch from the stream checkpoint against
         the matching coordination state (merges are LWW-idempotent)."""
-        self._write_json(self._runner_state_path, self.runner.state_json())
+        write_json(self._runner_state_path, self.runner.state_json())
 
     def _fold_txn_intervals(self, batch_df: DataFrame) -> None:
         """Opt-in GTID-set analog: fold this batch's applied txn_id
@@ -703,39 +707,34 @@ class CdcStreamDriver:
         self.txn_intervals = merge_intervals(
             self.txn_intervals, batch_txn_intervals(batch_df)
         )
-        self._write_json(self._txn_intervals_path, {"intervals": self.txn_intervals})
+        write_json(self._txn_intervals_path, {"intervals": self.txn_intervals})
 
-    @staticmethod
-    def _read_json(path: str):
-        """The JSON document saved at `path`, or None if there is none."""
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
-
-    @staticmethod
-    def _write_json(path: str, doc) -> None:
-        """Save `doc` at `path` atomically: a uniquely named tmp file
-        beside it, then os.replace, so a reader sees the old document
-        or the new one, never a partial write."""
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, path)
+    def _start(self) -> dict:
+        """The first step of both run modes; returns the control file.
+        Clears a blocked sidecar left by a killed run, and re-applies
+        the recorded config patch while control.json still holds it:
+        the pipeline is rebuilt from the task config on every start,
+        and the patch already passed the paused check when it was first
+        applied (so a paused route patch survives the restart). Any
+        other op pending there is staged by the caller, so the first —
+        possibly replayed — batch sees it: a task that crashed on a
+        poison location, got a `ctl binlog skip`, and was relaunched
+        must not crash again on the replay."""
+        self._write_blocked_sidecar(None)
+        ctl = self._read_control()
+        patch = ctl.get("config_patch")
+        if patch and patch == self._applied["config_patch"]:
+            self._apply_config_patch(patch)
+        return ctl
 
     def run_available_now(self, timeout_sec: int = 600) -> list[dict]:
         """Drain everything currently in the relay dir, then stop
         (Trigger.AvailableNow — the incremental-catchup mode). Ops
-        already pending in control.json (schema_op / binlog_op issued
-        against a stopped task) stage before the first batch, so a
-        crashed task relaunched in drain mode replays its failed batch
-        under the new operators."""
-        self._write_blocked_sidecar(None)  # stale from a killed blocked run
-        ctl = self._read_control()
-        self._stage_schema_op(ctl)
-        self._stage_binlog_op(ctl)
-        self._stage_unlock_op(ctl)
+        already pending in control.json (written against a stopped task)
+        go through the same start path as run_continuous, so a crashed
+        task relaunched in drain mode replays its failed batch under
+        the new operators and filters."""
+        self._stage(self._start())
         stream = read_feed_stream(self.spark, self.feed_dir, self.max_files_per_trigger)
         q = (
             stream.writeStream.foreachBatch(self._apply)
@@ -764,20 +763,8 @@ class CdcStreamDriver:
         """True iff Spark's commit log has caught up with its offset
         log — no planned-but-uncommitted micro-batch will replay on the
         next start."""
-        import os
-
-        def latest(sub: str) -> int:
-            d = os.path.join(self.checkpoint_dir, sub)
-            try:
-                ids = [int(f) for f in os.listdir(d) if f.isdigit()]
-            except FileNotFoundError:
-                return -1
-            return max(ids, default=-1)
-
-        return latest("offsets") == latest("commits")
-
-    _STAGED_ATTRS = ("_staged_patch", "_staged_schema_op",
-                     "_staged_binlog_op", "_staged_unlock_op")
+        planned, committed = stream_batches(self.checkpoint_dir)
+        return planned == committed
 
     def _settle_inflight(self) -> None:
         """Replay the interrupted (planned-but-uncommitted) micro-batch
@@ -788,16 +775,14 @@ class CdcStreamDriver:
         in-flight batch mid-replay.
 
         Ops STAGED by the poll loop before the pause are suspended for
-        the duration: the settle batch's own `_apply_staged_patch`
+        the duration: the settle batch's own `_apply_staged`
         would otherwise consume them FIRST, replaying the batch under
         the new schema/filters/operators — the exact hazard settling
         exists to prevent (review r5; an op genuinely needed to get the
         settle batch through — a binlog skip on a poison event — was
         already applied directly from control.json by the paused
         branch)."""
-        staged = [getattr(self, a, None) for a in self._STAGED_ATTRS]
-        for a in self._STAGED_ATTRS:
-            setattr(self, a, None)
+        staged, self._staged = self._staged, {}
         try:
             stream = read_feed_stream(
                 self.spark, self.feed_dir, self.max_files_per_trigger
@@ -810,8 +795,7 @@ class CdcStreamDriver:
             )
             q.awaitTermination(120)
         finally:
-            for a, v in zip(self._STAGED_ATTRS, staged):
-                setattr(self, a, v)
+            self._staged = staged
 
     def run_continuous(
         self,
@@ -855,8 +839,8 @@ class CdcStreamDriver:
         self.last_error = None
         # a SIGKILL while blocked skips the finally that clears the
         # sidecar — a restarted task must not report blocked-on-error
-        # from a previous life
-        self._write_blocked_sidecar(None)
+        # from a previous life (_start clears it)
+        self._start()
         done = False
         while not done and time.time() - t0 < timeout_sec:
             ctl = self._read_control()
@@ -879,27 +863,19 @@ class CdcStreamDriver:
                 # batch may be the poison one the op exists to fix —
                 # settling it first would just crash again (error ops
                 # are location-surgical; applying early never harms)
-                self._apply_binlog_op(ctl)
-                patch = ctl.get("config_patch")
-                sop = ctl.get("schema_op")
-                uop = ctl.get("unlock_op")
+                self._apply_op("binlog_op", ctl.get("binlog_op"))
+                pending = self._pending(ctl)
                 needs_settle = (
-                    patch
-                    and "routes" in patch
-                    and patch != getattr(self, "_applied_patch", None)
-                ) or (
+                    "routes" in pending.get("config_patch", {})
                     # schema ops mutate the registry the replayed batch
                     # reads — same hazard as a route change (review r5)
-                    sop
-                    and sop != self._applied_schema_op
-                ) or (
+                    or "schema_op" in pending
                     # unlock ops must run AFTER the interrupted batch
                     # settles: replaying it afterwards would re-announce
                     # the just-unlocked DDL and resurrect the lock, with
                     # the spent at-most-once op unable to re-fire
                     # (review r5)
-                    uop
-                    and uop != self._applied_unlock_op
+                    or "unlock_op" in pending
                 )
                 ctl_key = json.dumps(ctl, sort_keys=True)
                 if (
@@ -931,13 +907,13 @@ class CdcStreamDriver:
                         # paused with the error surfaced instead of
                         # crashing the whole tail (review r5-2).
                         self._settle_blocked = True
-                        if sop and sop != self._applied_schema_op:
+                        if "schema_op" in pending:
                             self._write_blocked_sidecar(
                                 f"settle failed ({err}); applying pending "
                                 "schema op — batch replays under the fixed "
                                 "registry on resume"
                             )
-                            self._apply_schema_op(ctl)
+                            self._apply_op("schema_op", pending["schema_op"])
                             # the op changed the registry: the retry on
                             # the next tick is the designed replay-under-
                             # fixed-registry, so no idle gate here
@@ -951,9 +927,8 @@ class CdcStreamDriver:
                             self._settle_failed_ctl = ctl_key
                         time.sleep(poll_sec)
                         continue
-                self._apply_config_patch(ctl, paused=True)
-                self._apply_schema_op(ctl)
-                self._apply_unlock_op(ctl)
+                for kind in self.OPS:
+                    self._apply_op(kind, ctl.get(kind), paused=True)
                 time.sleep(poll_sec)
                 continue
             self.paused = False
@@ -963,16 +938,10 @@ class CdcStreamDriver:
                 # cannot-settle sidecar must not outlive the pause
                 self._settle_blocked = False
                 self._write_blocked_sidecar(None)
-            self._apply_config_patch(ctl)
             # ops already sitting in control.json are staged BEFORE the
             # stream starts, so the FIRST (possibly replayed) micro-batch
-            # sees them — the restart half of the handle-error flow: a
-            # task that crashed on a poison location, got a `ctl binlog
-            # skip` issued, and was relaunched must not crash again on
-            # the replay racing the poll thread's first stage
-            self._stage_schema_op(ctl)
-            self._stage_binlog_op(ctl)
-            self._stage_unlock_op(ctl)
+            # sees them (see _start)
+            self._stage(ctl)
             stream = read_feed_stream(
                 self.spark, self.feed_dir, self.max_files_per_trigger
             )
@@ -995,10 +964,7 @@ class CdcStreamDriver:
                         break
                     if ctl.get("pause"):
                         break  # stop the query; outer loop idles until cleared
-                    self._stage_config_patch(ctl)
-                    self._stage_schema_op(ctl)
-                    self._stage_binlog_op(ctl)
-                    self._stage_unlock_op(ctl)
+                    self._stage(ctl)
                     time.sleep(poll_sec)
                 else:
                     done = True  # query died or overall timeout
@@ -1032,7 +998,7 @@ class CdcStreamDriver:
                         if (
                             ctl.get("stop")
                             or ctl != snap
-                            or self._pending_intervention(ctl)
+                            or self._pending(ctl)
                         ):
                             break
                         time.sleep(poll_sec)
@@ -1040,19 +1006,6 @@ class CdcStreamDriver:
                     self.blocked = False
                     self._write_blocked_sidecar(None)
         return self.batch_stats
-
-    def _pending_intervention(self, ctl: dict) -> bool:
-        """An op present in control.json that this driver has not yet
-        applied — the blocked-task wake condition."""
-        return bool(
-            (ctl.get("binlog_op") and ctl["binlog_op"] != self._applied_binlog_op)
-            or (ctl.get("unlock_op") and ctl["unlock_op"] != self._applied_unlock_op)
-            or (ctl.get("schema_op") and ctl["schema_op"] != self._applied_schema_op)
-            or (
-                ctl.get("config_patch")
-                and ctl["config_patch"] != getattr(self, "_applied_patch", None)
-            )
-        )
 
     def _write_blocked_sidecar(self, error: str | None) -> None:
         """Persist the blocked-on-error state beside the checkpoint so
@@ -1066,4 +1019,4 @@ class CdcStreamDriver:
             except FileNotFoundError:
                 pass
             return
-        self._write_json(path, {"blocked": True, "error": error, "at": time.time()})
+        write_json(path, {"blocked": True, "error": error, "at": time.time()})

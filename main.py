@@ -14,17 +14,30 @@ Task file (YAML or JSON): see `examples/task.yaml`. Modes:
 Runtime control of a RUNNING task (dmctl analog, no restart):
     python main.py ctl <checkpoint_dir> pause|resume|stop
     python main.py ctl <checkpoint_dir> patch '{"deny_tables": [...]}'
-(applied patches persist across resume; see CdcStreamDriver docs)
+(an applied patch is recorded beside the checkpoint and re-applied on
+every restart while control.json holds it; see CdcStreamDriver docs)
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
+import uuid
 
 from dm_spark.config import TaskConfig
 from dm_spark.lake import LakeTable
 from dm_spark.session import get_spark
+from dm_spark.streaming.driver import (
+    CdcStreamDriver,
+    check_binlog_op,
+    check_config_patch,
+    check_schema_op,
+    check_unlock_op,
+    read_json,
+    stream_batches,
+    write_json,
+)
 from dm_spark.task import Task, replication_lag_sec
 
 # tail mode folds a merge-on-read lake's delta files into base every
@@ -43,14 +56,21 @@ def load_task_file(path: str) -> dict:
     return yaml.safe_load(text)
 
 
-def _runner_state(cp_dir: str) -> dict:
-    import os
-
+def _location(text: str) -> tuple[int, int]:
+    """A binlog location written `<file_seq>:<pos>`."""
     try:
-        with open(os.path.join(cp_dir, "runner_state.json")) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
+        fs, pos = (int(x) for x in text.split(":", 1))
+        if fs >= 0 and pos >= 0:
+            return fs, pos
+    except ValueError:
+        pass
+    raise ValueError(
+        f"location must be <file_seq>:<pos> (non-negative integers), got {text!r}"
+    )
+
+
+def _runner_state(cp_dir: str) -> dict:
+    return read_json(os.path.join(cp_dir, "runner_state.json")) or {}
 
 
 def _pending_locks(cp_dir: str) -> list[dict]:
@@ -79,22 +99,8 @@ def _task_status(cp_dir: str, control: dict, lake_dirs: list[str]) -> dict:
     coordination summary, and each lake manifest's totals / checkpoint
     / replication lag (the secondsBehindMaster analog: now - max
     applied event ts)."""
-    import os
-
-    def latest(sub: str) -> int:
-        d = os.path.join(cp_dir, sub)
-        try:
-            return max((int(f) for f in os.listdir(d) if f.isdigit()), default=-1)
-        except FileNotFoundError:
-            return -1
-
-    offsets, commits = latest("offsets"), latest("commits")
-    blocked = None
-    try:
-        with open(os.path.join(cp_dir, "blocked.json")) as f:
-            blocked = json.load(f)
-    except FileNotFoundError:
-        pass
+    offsets, commits = stream_batches(cp_dir)
+    blocked = read_json(os.path.join(cp_dir, "blocked.json"))
     stage = (
         "blocked-on-error" if blocked
         else "paused" if control.get("pause")
@@ -103,16 +109,15 @@ def _task_status(cp_dir: str, control: dict, lake_dirs: list[str]) -> dict:
     )
     state = _runner_state(cp_dir)
     applied_ops = {}
-    for name in ("applied_schema_op", "applied_binlog_op", "applied_unlock_op"):
-        try:
-            with open(os.path.join(cp_dir, f"{name}.json")) as f:
-                applied_ops[name] = json.load(f).get("id")
-        except FileNotFoundError:
-            pass
+    for kind in CdcStreamDriver.OPS:
+        op = read_json(os.path.join(cp_dir, f"applied_{kind}.json"))
+        if op is not None:
+            # an op written by ctl reports its id; a config patch has none
+            # (no swappable key is named "id") and reports itself
+            applied_ops[f"applied_{kind}"] = op.get("id", op)
     txn = None
-    try:
-        with open(os.path.join(cp_dir, "txn_intervals.json")) as f:
-            iv = json.load(f)["intervals"]
+    iv = (read_json(os.path.join(cp_dir, "txn_intervals.json")) or {}).get("intervals")
+    if iv is not None:
         from dm_spark.lineage import covered_count, interval_gaps
 
         txn = {
@@ -126,8 +131,6 @@ def _task_status(cp_dir: str, control: dict, lake_dirs: list[str]) -> dict:
             # here (GTID semantics: DM injects an empty txn for skips)
             "gaps": interval_gaps(iv),
         }
-    except FileNotFoundError:
-        pass
     status = {
         "stage": stage,
         "applied_txns": txn,
@@ -179,6 +182,11 @@ def _task_status(cp_dir: str, control: dict, lake_dirs: list[str]) -> dict:
     return status
 
 
+# argv length (checkpoint dir and command included) below which a ctl
+# command prints its usage
+_CTL_MIN_ARGS = {"patch": 3, "schema": 4, "binlog": 4, "unlock": 4}
+
+
 def ctl(argv: list[str]) -> int:
     """dmctl analog for a RUNNING tail/incremental task (no Spark, no
     restart — the driver polls control.json between micro-batches):
@@ -197,6 +205,15 @@ def ctl(argv: list[str]) -> int:
         python main.py ctl <checkpoint_dir> ddl-locks
         python main.py ctl <checkpoint_dir> unlock '<lock_id>' <file_seq>:<pos> [skip]
 
+    Every op is composed through the driver's own shape check for its
+    kind (`check_*` in dm_spark/streaming/driver.py), so an op the
+    driver would refuse never reaches control.json (the driver's mode
+    checks — runner mode, a shard-DDL barrier — stay driver-side).
+    `patch` swaps the filter family; a route patch is accepted only
+    while the task is paused. A patch the driver applied is recorded
+    beside the checkpoint and re-applied on every restart while
+    control.json still holds it.
+
     `schema` is the operate-schema analog (dm/ctl/master/
     operate_schema.go, tests/tracker_ignored_ddl): get reads the
     runner state file directly; set/remove stage through control.json
@@ -208,8 +225,9 @@ def ctl(argv: list[str]) -> int:
     blocked on an unsupported DDL or poison DML (run with
     block_on_error) replays its failed batch under the new operator
     instead of needing a restart. `replace` statements are parsed by
-    the engine's DDL grammar at compose time; injected actions get
-    suffix ordinals at the location (Location.Suffix analog).
+    the engine's DDL grammar at compose time and must yield at least
+    one schema action between them; injected actions get suffix
+    ordinals at the location (Location.Suffix analog).
 
     `status` is the query-status analog (dm/ctl/master/query_status.go)
     — read-only, no Spark, no driver round-trip: control flags, stream
@@ -226,8 +244,6 @@ def ctl(argv: list[str]) -> int:
     release, drain the spilled DMLs), `skip` releases without
     applying.
     """
-    import os
-
     if len(argv) < 2:
         print(ctl.__doc__)
         return 2
@@ -235,194 +251,115 @@ def ctl(argv: list[str]) -> int:
     path = os.path.join(cp_dir, "control.json")
     # read-modify-write so commands compose: patch-while-paused then
     # resume keeps the patch for the driver to apply on restart
+    body = read_json(path) or {}
+    if len(argv) < _CTL_MIN_ARGS.get(cmd, 2):
+        print(ctl.__doc__)
+        return 2
     try:
-        with open(path) as f:
-            body = json.load(f)
-    except FileNotFoundError:
-        body = {}
-    if cmd == "pause":
-        body["pause"] = True
-    elif cmd == "resume":
-        # resume clears BOTH pause and a previous stop: a stale
-        # stop:true would otherwise make every task relaunch exit
-        # immediately with zero batches (sticky stop)
-        body.pop("pause", None)
-        body.pop("stop", None)
-    elif cmd == "stop":
-        body["stop"] = True
-    elif cmd == "patch":
-        if len(argv) < 3:
-            print(ctl.__doc__)
-            return 2
-        try:
-            body["config_patch"] = json.loads(argv[2])
-        except json.JSONDecodeError as e:
-            raise SystemExit(f"ctl patch: invalid JSON ({e}): {argv[2]!r}") from e
-    elif cmd == "schema":
-        if len(argv) < 4:
-            print(ctl.__doc__)
-            return 2
-        sub, table = argv[2], argv[3]
-        if sub == "get":
-            # no driver round-trip: the runner persists its state
-            # (schemas included) next to the checkpoint every batch
-            state_path = os.path.join(cp_dir, "runner_state.json")
-            try:
-                with open(state_path) as f:
-                    schemas = json.load(f).get("schemas", {})
-            except FileNotFoundError:
-                raise SystemExit(
-                    f"schema get: no runner state at {state_path} — the task "
-                    "has not committed a batch yet, or is not in runner mode"
-                ) from None
-            if table not in schemas:
-                raise SystemExit(f"schema get: no tracked schema for {table!r} "
-                                 f"(tracked: {sorted(schemas)})")
-            print(json.dumps({"table": table, "schema": schemas[table]}))
+        if cmd == "pause":
+            body["pause"] = True
+        elif cmd == "resume":
+            # resume clears BOTH pause and a previous stop: a stale
+            # stop:true would otherwise make every task relaunch exit
+            # immediately with zero batches (sticky stop)
+            body.pop("pause", None)
+            body.pop("stop", None)
+        elif cmd == "stop":
+            body["stop"] = True
+        elif cmd == "patch":
+            patch = json.loads(argv[2])
+            # routes swap only while paused: the same law the driver
+            # applies when it picks the patch up
+            check_config_patch(patch, paused=bool(body.get("pause")))
+            body["config_patch"] = patch
+        elif cmd == "schema":
+            sub, table = argv[2], argv[3]
+            if sub == "get":
+                return _schema_get(cp_dir, table)
+            if sub == "set" and len(argv) < 5:
+                print(ctl.__doc__)
+                return 2
+            # each op written here carries a fresh id: the driver
+            # applies an op at most once (persisted guard beside the
+            # checkpoint), so two intentional writes of byte-identical
+            # content must still be distinguishable
+            op = {"op": sub, "table": table, "id": uuid.uuid4().hex}
+            if sub == "set":
+                op["create"] = argv[4]
+            check_schema_op(op)
+            body["schema_op"] = op
+        elif cmd == "binlog":
+            fs, pos = _location(argv[3])
+            op = {"op": argv[2], "file_seq": fs, "pos": pos, "id": uuid.uuid4().hex}
+            if argv[2] == "replace":
+                op["sqls"] = argv[4:]
+            check_binlog_op(op)
+            body["binlog_op"] = op
+        elif cmd == "status":
+            print(json.dumps(_task_status(cp_dir, body, argv[2:])))
             return 0
-        # each issued op carries a fresh id: the driver applies an op at
-        # most once (persisted guard beside the checkpoint), so two
-        # intentional issues of byte-identical content must still be
-        # distinguishable
-        import uuid
-
-        if sub == "set":
-            if len(argv) < 5:
-                print(ctl.__doc__)
-                return 2
-            # refuse malformed statements HERE, before they reach
-            # control.json — the driver validates again at stage time,
-            # but a bad op written to the control file would loudly kill
-            # the poll loop on every restart until hand-removed
-            from dm_spark.schema.ddl_parser import UnsupportedDdl, parse_ddl
-
-            try:
-                evs = parse_ddl(argv[4], 0, 0)
-            except UnsupportedDdl as e:
-                raise SystemExit(f"schema set: statement rejected: {e}") from e
-            if len(evs) != 1 or evs[0].action != "create_table":
-                raise SystemExit(
-                    "schema set: need a single CREATE TABLE statement, "
-                    f"parsed to {[e.action for e in evs]}"
-                )
-            if evs[0].source_table and evs[0].source_table != table:
-                raise SystemExit(
-                    f"schema set: statement names {evs[0].source_table!r} "
-                    f"but the op targets {table!r}"
-                )
-            body["schema_op"] = {
-                "op": "set", "table": table, "create": argv[4],
-                "id": uuid.uuid4().hex,
-            }
-        elif sub == "remove":
-            body["schema_op"] = {
-                "op": "remove", "table": table, "id": uuid.uuid4().hex,
-            }
+        elif cmd == "ddl-locks":
+            print(json.dumps({"locks": _pending_locks(cp_dir)}))
+            return 0
+        elif cmd == "unlock":
+            body["unlock_op"] = _unlock_op(cp_dir, argv[2], argv[3], argv[4:])
         else:
-            raise SystemExit(f"unknown schema subcommand {sub}")
-    elif cmd == "binlog":
-        if len(argv) < 4:
-            print(ctl.__doc__)
-            return 2
-        sub, loc = argv[2], argv[3]
-        if sub not in ("skip", "replace", "revert"):
-            raise SystemExit(f"unknown binlog subcommand {sub} (skip|replace|revert)")
-        try:
-            fs_s, pos_s = loc.split(":", 1)
-            fs, pos = int(fs_s), int(pos_s)
-            if fs < 0 or pos < 0:
-                raise ValueError
-        except ValueError:
-            raise SystemExit(
-                f"binlog {sub}: location must be <file_seq>:<pos> "
-                f"(non-negative integers), got {loc!r}"
-            ) from None
-        import uuid
-
-        op = {"op": sub, "file_seq": fs, "pos": pos, "id": uuid.uuid4().hex}
-        if sub == "replace":
-            sqls = argv[4:]
-            if not sqls:
-                print(ctl.__doc__)
-                return 2
-            # refuse statements the engine's grammar rejects HERE,
-            # before they reach control.json (the driver validates
-            # again at stage time, but a bad op in the control file
-            # would loudly kill the poll loop until hand-removed)
-            from dm_spark.schema.ddl_parser import UnsupportedDdl, parse_ddl
-
-            for s in sqls:
-                try:
-                    if not parse_ddl(s, fs, pos):
-                        raise SystemExit(
-                            f"binlog replace: statement parses to no schema "
-                            f"action (nothing to inject): {s!r}"
-                        )
-                except UnsupportedDdl as e:
-                    raise SystemExit(f"binlog replace: statement rejected: {e}") from e
-            op["sqls"] = list(sqls)
-        body["binlog_op"] = op
-    elif cmd == "status":
-        print(json.dumps(_task_status(cp_dir, body, argv[2:])))
-        return 0
-    elif cmd == "ddl-locks":
-        print(json.dumps({"locks": _pending_locks(cp_dir)}))
-        return 0
-    elif cmd == "unlock":
-        if len(argv) < 4:
-            print(ctl.__doc__)
-            return 2
-        lock_id, loc = argv[2], argv[3]
-        # split at the JSON boundary, not the first '#': backtick
-        # identifiers make '#' legal inside a target table name
-        # (`t#1`), while the ddl-json always starts with '{'
-        sep = lock_id.find("#{")
-        if sep < 0:
-            raise SystemExit(
-                f"unlock: lock id must be '<target>#<ddl-json>' exactly as "
-                f"printed by ctl ddl-locks, got {lock_id!r}"
-            )
-        target, key = lock_id[:sep], lock_id[sep + 1:]
-        try:
-            ident = json.loads(key)
-        except json.JSONDecodeError as e:
-            raise SystemExit(f"unlock: lock id carries invalid DDL JSON ({e})") from e
-        try:
-            fs_s, pos_s = loc.split(":", 1)
-            fs, pos = int(fs_s), int(pos_s)
-            if fs < 0 or pos < 0:
-                raise ValueError
-        except ValueError:
-            raise SystemExit(
-                f"unlock: location must be <file_seq>:<pos> (non-negative "
-                f"integers, where the forced DDL is stamped), got {loc!r}"
-            ) from None
-        # catch operator typos at compose time: the lock must exist in
-        # the last persisted runner state (the driver re-checks live
-        # state at apply time; a lock that resolved in between is
-        # recorded as spent, not fatal)
-        known = [lk["lock_id"] for lk in _pending_locks(cp_dir)]
-        if lock_id not in known:
-            raise SystemExit(
-                f"unlock: no pending lock {lock_id!r} in the runner state "
-                f"(pending: {known or 'none'})"
-            )
-        import uuid
-
-        body["unlock_op"] = {
-            "target": target, "ident": ident, "file_seq": fs, "pos": pos,
-            "exec": not (len(argv) > 4 and argv[4] == "skip"),
-            "id": uuid.uuid4().hex,
-        }
-    else:
-        raise SystemExit(f"unknown ctl command {cmd}")
-    os.makedirs(cp_dir, exist_ok=True)
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(body, f)
-    os.replace(tmp, path)
+            raise SystemExit(f"unknown ctl command {cmd}")
+    except ValueError as e:  # JSON, location and shape-check refusals
+        raise SystemExit(f"ctl {cmd}: {e}") from e
+    write_json(path, body)
     print(json.dumps({"control": body, "path": path}))
     return 0
+
+
+def _schema_get(cp_dir: str, table: str) -> int:
+    """`ctl schema get`: no driver round-trip — the runner persists its
+    state (schemas included) next to the checkpoint every batch."""
+    state_path = os.path.join(cp_dir, "runner_state.json")
+    state = read_json(state_path)
+    if state is None:
+        raise SystemExit(
+            f"schema get: no runner state at {state_path} — the task "
+            "has not committed a batch yet, or is not in runner mode"
+        )
+    schemas = state.get("schemas", {})
+    if table not in schemas:
+        raise SystemExit(f"schema get: no tracked schema for {table!r} "
+                         f"(tracked: {sorted(schemas)})")
+    print(json.dumps({"table": table, "schema": schemas[table]}))
+    return 0
+
+
+def _unlock_op(cp_dir: str, lock_id: str, loc: str, rest: list[str]) -> dict:
+    """`ctl unlock`: the unlock op for a lock id as printed by `ctl
+    ddl-locks`, forced at `loc`."""
+    # split at the JSON boundary, not the first '#': backtick
+    # identifiers make '#' legal inside a target table name
+    # (`t#1`), while the ddl-json always starts with '{'
+    sep = lock_id.find("#{")
+    if sep < 0:
+        raise SystemExit(
+            f"unlock: lock id must be '<target>#<ddl-json>' exactly as "
+            f"printed by ctl ddl-locks, got {lock_id!r}"
+        )
+    fs, pos = _location(loc)
+    op = {
+        "target": lock_id[:sep], "ident": json.loads(lock_id[sep + 1:]),
+        "file_seq": fs, "pos": pos,
+        "exec": not (rest and rest[0] == "skip"), "id": uuid.uuid4().hex,
+    }
+    check_unlock_op(op)
+    # catch operator typos at compose time: the lock must exist in
+    # the last persisted runner state (the driver re-checks live
+    # state at apply time; a lock that resolved in between is
+    # recorded as spent, not fatal)
+    known = [lk["lock_id"] for lk in _pending_locks(cp_dir)]
+    if lock_id not in known:
+        raise SystemExit(
+            f"unlock: no pending lock {lock_id!r} in the runner state "
+            f"(pending: {known or 'none'})"
+        )
+    return op
 
 
 def main(argv: list[str]) -> int:

@@ -120,10 +120,10 @@ def test_config_patch_route_swap_recompiles(spark, sf_dir, tmp_path, monkeypatch
     _feeder(half, feed_dir, delay=0)
     drv.run_available_now()
     assert len(compiles) == 1
-    drv._apply_config_patch({"config_patch": {"routes": [
+    drv._apply_op("config_patch", {"routes": [
         {"pattern": "shard_3.transcripts_*", "target": "quarantine"},
         {"pattern": "shard_*.transcripts_*", "target": "transcripts"},
-    ]}}, paused=True)
+    ]}, paused=True)
     _feeder(rest, feed_dir, delay=0)
     drv.run_available_now()
     assert len(compiles) == 2

@@ -140,10 +140,10 @@ def test_refused_unlock_is_recorded_not_fatal(spark, runner, tmp_path):
     )
     op = {"target": "transcripts", "ident": lk["ddl"], "file_seq": 0,
           "pos": 9, "exec": True, "id": "refused-op"}
-    drv._apply_unlock_op({"unlock_op": op})
+    drv._apply_op("unlock_op", op)
     rec = [s for s in drv.batch_stats if s.get("unlock_op") == "refused-op"]
     assert rec and "key column" in rec[0]["result"]
-    assert drv._applied_unlock_op == op  # spent: restarts will not re-fire
+    assert drv._applied["unlock_op"] == op  # spent: restarts will not re-fire
     # the lock survives the refusal — the operator re-issues a corrected
     # op (e.g. skip action) with a fresh id
     assert runner.pending_locks() == [lk]
@@ -194,16 +194,16 @@ def test_unlock_and_status_via_ctl(spark, runner, tmp_path):
     # the real unlock: compose -> stage -> apply at the batch boundary
     assert mainmod.ctl([cp, "unlock", lock_id, "0:9"]) == 0
     ctl = drv._read_control()
-    drv._stage_unlock_op(ctl)
-    drv._apply_staged_patch()
+    drv._stage(ctl)
+    drv._apply_staged()
     assert "rating" in runner.lake.read().columns
     assert runner.pending_locks() == []
     stat = [s for s in drv.batch_stats if "unlock_op" in s]
     assert stat and stat[-1]["applied"] and stat[-1]["drained"] > 0
     assert ("a", 2, "post-ddl-0") in rows(runner.lake)
     # at-most-once: the same control content stages nothing
-    drv._stage_unlock_op(ctl)
-    assert getattr(drv, "_staged_unlock_op", None) is None
+    drv._stage(ctl)
+    assert "unlock_op" not in drv._staged
 
     # after resolution the compose path refuses (state shows no lock)...
     drv._save_runner_state()
@@ -213,24 +213,24 @@ def test_unlock_and_status_via_ctl(spark, runner, tmp_path):
     # gone at apply time) is recorded as spent, not fatal
     stale = {"target": "transcripts", "ident": offline[0]["ddl"],
              "file_seq": 0, "pos": 9, "exec": True, "id": "stale-op"}
-    drv._apply_unlock_op({"unlock_op": stale})
+    drv._apply_op("unlock_op", stale)
     spent = [s for s in drv.batch_stats if s.get("unlock_op") == "stale-op"]
     assert spent == [{"unlock_op": "stale-op", "result": "lock_already_resolved"}]
 
     # validate-time refusals name the field
     with pytest.raises(ValueError, match="target"):
-        drv._validate_unlock_op({"ident": {"action": "x"}, "file_seq": 0, "pos": 0})
+        drv._check("unlock_op", {"ident": {"action": "x"}, "file_seq": 0, "pos": 0})
     with pytest.raises(ValueError, match="ident"):
-        drv._validate_unlock_op({"target": "t", "file_seq": 0, "pos": 0})
+        drv._check("unlock_op", {"target": "t", "file_seq": 0, "pos": 0})
     with pytest.raises(ValueError, match="file_seq/pos"):
-        drv._validate_unlock_op(
-            {"target": "t", "ident": {"action": "x"}, "file_seq": -1, "pos": 0}
+        drv._check(
+            "unlock_op", {"target": "t", "ident": {"action": "x"}, "file_seq": -1, "pos": 0}
         )
     plain = CdcStreamDriver(
         spark, drv.feed_dir, str(tmp_path / "cp_plain"),
         runner.pipeline, {"transcripts": runner.lake},
     )
     with pytest.raises(ValueError, match="barrier"):
-        plain._validate_unlock_op(
-            {"target": "t", "ident": {"action": "x"}, "file_seq": 0, "pos": 0}
+        plain._check(
+            "unlock_op", {"target": "t", "ident": {"action": "x"}, "file_seq": 0, "pos": 0}
         )

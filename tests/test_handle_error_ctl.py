@@ -58,8 +58,8 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
     # skip: ctl composes, driver stages and applies
     assert mainmod.ctl([cp, "binlog", "skip", "3:77"]) == 0
     ctl = drv._read_control()
-    drv._stage_binlog_op(ctl)
-    drv._apply_staged_patch()
+    drv._stage(ctl)
+    drv._apply_staged()
     assert runner.error_ops.ops[(3, 77)] == {"kind": "skip"}
     # persisted immediately: runner state carries error_ops...
     import json
@@ -68,15 +68,15 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
         assert [[3, 77], {"kind": "skip"}] in json.load(f)["error_ops"]
     # ...and the sidecar guards at-most-once across restarts
     assert os.path.exists(os.path.join(cp, "applied_binlog_op.json"))
-    drv._stage_binlog_op(ctl)  # same content stages nothing
-    assert getattr(drv, "_staged_binlog_op", None) is None
+    drv._stage(ctl)  # same content stages nothing
+    assert "binlog_op" not in drv._staged
     # a fresh driver over the same checkpoint loads the sidecar
     drv3 = CdcStreamDriver(
         spark, drv.feed_dir, cp, runner.pipeline,
         {"transcripts": runner.lake}, runner=runner,
     )
-    drv3._stage_binlog_op(drv3._read_control())
-    assert getattr(drv3, "_staged_binlog_op", None) is None
+    drv3._stage(drv3._read_control())
+    assert "binlog_op" not in drv3._staged
 
     # replace: statements parsed at compose time; actions interop with
     # the inline-DDL escape hatch (rep["source_table"] construction)
@@ -85,8 +85,8 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
         "ALTER TABLE shard_0.t ADD COLUMN r2 TEXT",
     ]) == 0
     ctl = drv._read_control()
-    drv._stage_binlog_op(ctl)
-    drv._apply_staged_patch()
+    drv._stage(ctl)
+    drv._apply_staged()
     ov = runner.error_ops.ops[(4, 9)]
     assert ov["kind"] == "replace"
     assert ov["actions"] == [{
@@ -99,8 +99,8 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
 
     # revert removes the operator
     assert mainmod.ctl([cp, "binlog", "revert", "4:9"]) == 0
-    drv._stage_binlog_op(drv._read_control())
-    drv._apply_staged_patch()
+    drv._stage(drv._read_control())
+    drv._apply_staged()
     assert (4, 9) not in runner.error_ops.ops
 
     # compose-time refusals never reach control.json
@@ -115,21 +115,48 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
 
     # validate-time refusals name the field
     with pytest.raises(ValueError, match="skip\\|replace\\|revert"):
-        drv._validate_binlog_op({"op": "frob", "file_seq": 0, "pos": 0})
+        drv._check("binlog_op", {"op": "frob", "file_seq": 0, "pos": 0})
     with pytest.raises(ValueError, match="file_seq/pos"):
-        drv._validate_binlog_op({"op": "skip", "file_seq": -1, "pos": 0})
+        drv._check("binlog_op", {"op": "skip", "file_seq": -1, "pos": 0})
     with pytest.raises(ValueError, match="sqls"):
-        drv._validate_binlog_op({"op": "replace", "file_seq": 0, "pos": 0})
+        drv._check("binlog_op", {"op": "replace", "file_seq": 0, "pos": 0})
     with pytest.raises(ValueError, match="rejected by the DDL grammar"):
-        drv._validate_binlog_op(
-            {"op": "replace", "file_seq": 0, "pos": 0, "sqls": [POISON_SQL]}
+        drv._check(
+            "binlog_op", {"op": "replace", "file_seq": 0, "pos": 0, "sqls": [POISON_SQL]}
         )
     plain = CdcStreamDriver(
         spark, drv.feed_dir, str(tmp_path / "cp_plain"),
         runner.pipeline, {"transcripts": runner.lake},
     )
     with pytest.raises(ValueError, match="runner mode"):
-        plain._validate_binlog_op({"op": "skip", "file_seq": 0, "pos": 0})
+        plain._check("binlog_op", {"op": "skip", "file_seq": 0, "pos": 0})
+
+
+@pytest.mark.parametrize("sqls, ok", [
+    (["ALTER TABLE db.t ADD COLUMN c INT"], True),
+    # a statement with no schema action rides along with one that has
+    (["ALTER TABLE db.t ADD COLUMN c INT", "CREATE INDEX i ON db.t (a)"], True),
+    (["CREATE INDEX i ON db.t (a)"], False),
+    ([POISON_SQL], False),
+    (["ALTER TABLE db.t ADD COLUMN c INT", POISON_SQL], False),
+])
+def test_binlog_replace_one_law_for_ctl_and_driver(spark, tmp_path, sqls, ok):
+    """`main.py ctl binlog replace` and the driver's stage accept and
+    refuse the same replace ops: one validator, one law."""
+    drv, _runner, cp = _driver(spark, tmp_path)
+    try:
+        mainmod.ctl([cp, "binlog", "replace", "1:2", *sqls])
+        ctl_ok = True
+    except SystemExit:
+        ctl_ok = False
+    try:
+        drv._stage({"binlog_op": {
+            "op": "replace", "file_seq": 1, "pos": 2, "sqls": sqls, "id": "x",
+        }})
+        drv_ok = True
+    except ValueError:
+        drv_ok = False
+    assert ctl_ok == drv_ok == ok
 
 
 def test_ctl_replace_actions_apply_through_resolve(spark, tmp_path):
@@ -145,8 +172,8 @@ def test_ctl_replace_actions_apply_through_resolve(spark, tmp_path):
         cp, "binlog", "replace", "0:3",
         "ALTER TABLE shard_0.t ADD COLUMN fixed INT",
     ])
-    drv._stage_binlog_op(drv._read_control())
-    drv._apply_staged_patch()
+    drv._stage(drv._read_control())
+    drv._apply_staged()
     runner.handle_ddl(DdlEvent("add_column", "shard_0.t", 0, 3,
                                column="bad", new_type="string"))
     cols = runner.lake.read().columns
@@ -220,10 +247,10 @@ def test_blocked_task_unblocked_by_ctl_binlog_skip(spark, sf_dir, tmp_path):
         assert "DROP PRIMARY KEY" in st["blocked"]["error"]
         # an op already sitting in control.json unapplied wakes the
         # blocked loop even without a further file change
-        assert not drv._pending_intervention(drv._read_control())
+        assert not drv._pending(drv._read_control())
         # the dmctl intervention — no restart, no direct driver access
         assert mainmod.ctl([cp, "binlog", "skip", "0:500"]) == 0
-        assert drv._pending_intervention(drv._read_control())
+        assert drv._pending(drv._read_control())
         t.join(240)
         assert not t.is_alive(), "driver did not finish after the skip"
     finally:
@@ -330,7 +357,7 @@ def test_pause_route_patch_on_unsettleable_batch_refused_not_crashed(
         assert "cannot settle" in msg, msg
         assert t.is_alive(), f"driver crashed instead of refusing: {err}"
         # patch NOT applied while unsettleable
-        assert getattr(drv, "_applied_patch", None) != route_patch
+        assert drv._applied["config_patch"] != route_patch
         # no settle spin: control.json unchanged => no further replays
         # of the poison batch (poll_sec=0.1, so a spin would add ~15)
         n_before = len(settle_calls)

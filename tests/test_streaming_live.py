@@ -254,16 +254,16 @@ def test_config_patch_validation(spark, tmp_path):
         spark, str(tmp_path / "feed"), str(tmp_path / "cp"), ApplyPipeline(cfg),
         {"transcripts": lake},
     )
-    drv._apply_config_patch(
-        {"config_patch": {"expr_filters": [
+    drv._apply_op(
+        "config_patch", {"expr_filters": [
             {"pattern": "shard_*.t", "insert_expr": "after.role = 'tool'"}
-        ]}}
+        ]}
     )
     assert drv.pipeline.config.expr_filters[0].insert_expr == "after.role = 'tool'"
     with pytest.raises(ValueError, match="not runtime-swappable"):
-        drv._apply_config_patch({"config_patch": {"routes": []}})
+        drv._apply_op("config_patch", {"routes": []})
     with pytest.raises(ValueError, match="not runtime-swappable"):
-        drv._apply_config_patch({"config_patch": {"key": ["conv_id"]}})
+        drv._apply_op("config_patch", {"key": ["conv_id"]})
 
 
 def test_config_patch_preserves_location_floor(spark, tmp_path):
@@ -281,8 +281,8 @@ def test_config_patch_preserves_location_floor(spark, tmp_path):
         spark, str(tmp_path / "feed"), str(tmp_path / "cp"),
         ApplyPipeline(cfg, location_floor=(3, 7)), {"transcripts": lake},
     )
-    drv._stage_config_patch({"config_patch": {"deny_tables": ["x.*"]}})
-    drv._apply_staged_patch()
+    drv._stage({"config_patch": {"deny_tables": ["x.*"]}})
+    drv._apply_staged()
     assert drv.pipeline.config.deny_tables == ["x.*"]
     assert drv.pipeline.location_floor == (3, 7)
 
@@ -325,16 +325,16 @@ def test_settle_inflight_replays_interrupted_batch_idempotently(spark, sf_dir, t
         os.remove(crc)
     assert not drv._checkpoint_settled()
     # ops STAGED by the poll loop before the pause must NOT be consumed
-    # by the settle batch's own _apply_staged_patch — that would replay
+    # by the settle batch's own _apply_staged — that would replay
     # the interrupted batch under the new schema/filters, the exact
     # hazard settling exists to prevent (review r5). Sentinel patch: a
     # deny filter that would visibly change the replayed row set.
-    drv._staged_patch = {"deny_tables": ["shard_*.transcripts_*"]}
+    drv._staged["config_patch"] = {"deny_tables": ["shard_*.transcripts_*"]}
     drv._settle_inflight()
     assert drv._checkpoint_settled()
     # the staged op survived untouched (applies at the NEXT real batch)
-    assert drv._staged_patch == {"deny_tables": ["shard_*.transcripts_*"]}
-    assert getattr(drv, "_applied_patch", None) is None
+    assert drv._staged["config_patch"] == {"deny_tables": ["shard_*.transcripts_*"]}
+    assert drv._applied["config_patch"] is None
     # the replayed batch was gated: nothing double-applied
     assert lake.totals() == totals
 
@@ -458,16 +458,128 @@ def test_route_patch_validation_paused_only(spark, tmp_path):
         spark, str(tmp_path / "feed"), str(tmp_path / "cp"), ApplyPipeline(cfg),
         {"transcripts": lake},
     )
-    routes = {"config_patch": {"routes": [{"pattern": "a.*", "target": "transcripts"}]}}
+    routes = {"routes": [{"pattern": "a.*", "target": "transcripts"}]}
     with pytest.raises(ValueError, match="PAUSED"):
-        drv._apply_config_patch(routes)
-    drv._apply_config_patch(routes, paused=True)
+        drv._apply_op("config_patch", routes)
+    drv._apply_op("config_patch", routes, paused=True)
     assert drv.pipeline.config.routes[0].pattern == "a.*"
     with pytest.raises(ValueError, match="no lake"):
-        drv._apply_config_patch(
-            {"config_patch": {"routes": [{"pattern": "b.*", "target": "nowhere"}]}},
+        drv._apply_op(
+            "config_patch", {"routes": [{"pattern": "b.*", "target": "nowhere"}]},
             paused=True,
         )
+
+
+def test_tail_restarts_after_paused_route_patch(spark, sf_dir, tmp_path):
+    """pause -> route patch -> resume leaves the patch in control.json.
+    A fresh driver on the same checkpoint must start (the recorded
+    patch passed the paused check when first applied, so it is
+    re-applied rather than refused as a live route change) and keep
+    routing: shard_3 rows fed after the restart land in quarantine."""
+    import json
+
+    import main as mainmod
+
+    cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")])
+    lake = LakeTable.create(spark, str(tmp_path / "lake_rr"), SCHEMA, KEY, n_buckets=8)
+    qlake = LakeTable.create(spark, str(tmp_path / "lake_rq"), SCHEMA, KEY, n_buckets=8)
+    feed_dir = str(tmp_path / "feed")
+    cp_dir = str(tmp_path / "cp")
+    staged = _stage_chunks(spark, sf_dir, str(tmp_path / "stage"))
+    half, rest = staged[:4], staged[4:]
+    feed_all = feedmod.change_feed(spark, sf_dir)
+
+    def max_loc(df):
+        r = df.selectExpr("max(struct(file_seq, pos)) AS m").collect()[0][0]
+        return (r["file_seq"], r["pos"])
+
+    t_final = max_loc(feed_all.where("source_table NOT LIKE 'shard_3.%'"))
+    q_final = max_loc(feed_all.where("source_table LIKE 'shard_3.%'"))
+    half_final = max_loc(spark.read.parquet(*half))
+
+    def reached(lk, loc):
+        cp = lk.global_checkpoint()
+        return bool(cp) and (cp.get("file_seq", -1), cp.get("pos", -1)) >= loc
+
+    def driver():
+        return CdcStreamDriver(
+            spark, feed_dir, cp_dir, ApplyPipeline(cfg),
+            {"transcripts": lake, "quarantine": qlake}, max_files_per_trigger=2,
+        )
+
+    # first life: born paused, route patch, resume, drain half, stop
+    assert mainmod.ctl([cp_dir, "pause"]) == 0
+    _feeder(half, feed_dir, delay=0)
+    drv = driver()
+    th = threading.Thread(
+        target=lambda: drv.run_continuous(trigger_sec=0.2, timeout_sec=300, poll_sec=0.1)
+    )
+    th.start()
+    try:
+        deadline = time.time() + 60
+        while not getattr(drv, "paused", False) and time.time() < deadline:
+            time.sleep(0.1)
+        assert drv.paused
+        patch = {"routes": [
+            {"pattern": "shard_3.transcripts_*", "target": "quarantine"},
+            {"pattern": "shard_*.transcripts_*", "target": "transcripts"},
+        ]}
+        assert mainmod.ctl([cp_dir, "patch", json.dumps(patch)]) == 0
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            if any(r.target == "quarantine" for r in drv.pipeline.config.routes):
+                break
+            time.sleep(0.1)
+        assert mainmod.ctl([cp_dir, "resume"]) == 0
+        deadline = time.time() + 240
+        while time.time() < deadline:
+            if reached(lake, half_final) or reached(qlake, half_final):
+                break
+            time.sleep(0.25)
+        assert reached(lake, half_final) or reached(qlake, half_final)
+    finally:
+        mainmod.ctl([cp_dir, "stop"])
+        th.join(90)
+        assert not th.is_alive()
+
+    # second life: the patch is still in control.json; the new driver
+    # is built from the unpatched task config
+    assert mainmod.ctl([cp_dir, "resume"]) == 0
+    assert json.load(open(drv.control_path()))["config_patch"] == patch
+    _feeder(rest, feed_dir, delay=0)
+    drv2 = driver()
+    drv2.run_continuous(
+        trigger_sec=0.2, timeout_sec=300, poll_sec=0.1,
+        stop_when=lambda d: reached(lake, t_final) and reached(qlake, q_final),
+    )
+    assert reached(lake, t_final) and reached(qlake, q_final)
+    assert_tables_equal(
+        spark_final(lake), duck_replay(sf_dir, "source_table NOT LIKE 'shard_3.%'")
+    )
+    assert_tables_equal(
+        spark_final(qlake), duck_replay(sf_dir, "source_table LIKE 'shard_3.%'")
+    )
+
+
+def test_drain_applies_pending_filter_patch(spark, sf_dir, tmp_path):
+    """A drain-mode relaunch (`Task.run_incremental`, main.py mode
+    incremental) goes through the same start path as a live tail: a
+    deny patch pending in control.json filters the drained feed."""
+    import main as mainmod
+    from dm_spark.task import Task
+
+    cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")])
+    lake = LakeTable.create(spark, str(tmp_path / "lake_dp"), SCHEMA, KEY, n_buckets=8)
+    task = Task(
+        spark, cfg, lake,
+        feed_dir=str(tmp_path / "feed"), checkpoint_dir=str(tmp_path / "cp"),
+    )
+    write_feed_chunks(feedmod.change_feed(spark, sf_dir), task.feed_dir, n_chunks=4)
+    assert mainmod.ctl([task.checkpoint_dir, "patch", '{"deny_tables": ["shard_3.*"]}']) == 0
+    task.run_incremental()
+    assert_tables_equal(
+        spark_final(lake), duck_replay(sf_dir, "source_table NOT LIKE 'shard_3.%'")
+    )
 
 
 def test_operate_schema_ctl_get_set_remove(spark, tmp_path):
@@ -509,8 +621,8 @@ def test_operate_schema_ctl_get_set_remove(spark, tmp_path):
         "g INT AS (id+1))",
     ])
     ctl = drv._read_control()
-    drv._stage_schema_op(ctl)
-    drv._apply_staged_patch()
+    drv._stage(ctl)
+    drv._apply_staged()
     assert runner.registry.get("db.t") == [
         ("id", "bigint"), ("v", "string"), ("extra", "int")
     ]
@@ -521,14 +633,14 @@ def test_operate_schema_ctl_get_set_remove(spark, tmp_path):
     with open(os.path.join(cp, "runner_state.json")) as f:
         assert f.read().find('"extra"') > 0
     # idempotence: the same control content stages nothing
-    drv._stage_schema_op(ctl)
-    assert getattr(drv, "_staged_schema_op", None) is None
+    drv._stage(ctl)
+    assert "schema_op" not in drv._staged
 
     # remove
     mainmod.ctl([cp, "schema", "remove", "db.t"])
     ctl = drv._read_control()
-    drv._stage_schema_op(ctl)
-    drv._apply_staged_patch()
+    drv._stage(ctl)
+    drv._apply_staged()
     assert "db.t" not in runner.registry.schemas
 
     # plain-pipeline tasks refuse loudly: no tracker to operate on
@@ -537,12 +649,12 @@ def test_operate_schema_ctl_get_set_remove(spark, tmp_path):
         ApplyPipeline(cfg), {"transcripts": lake},
     )
     with pytest.raises(ValueError, match="runner mode"):
-        plain._validate_schema_op({"op": "set", "table": "db.t", "create": "x"})
+        plain._check("schema_op", {"op": "set", "table": "db.t", "create": "x"})
     # malformed ops refuse with the field named
     with pytest.raises(ValueError, match="set|remove"):
-        drv._validate_schema_op({"op": "frobnicate", "table": "db.t"})
+        drv._check("schema_op", {"op": "frobnicate", "table": "db.t"})
     with pytest.raises(ValueError, match="CREATE TABLE"):
-        drv._validate_schema_op({"op": "set", "table": "db.t"})
+        drv._check("schema_op", {"op": "set", "table": "db.t"})
 
 
 def test_operate_schema_set_mirrors_in_stream_create(spark, tmp_path):
@@ -580,8 +692,8 @@ def test_operate_schema_set_mirrors_in_stream_create(spark, tmp_path):
         cp, "schema", "set", "db.t",
         "CREATE TABLE db.t (id BIGINT PRIMARY KEY, v TEXT, g INT)",
     ])
-    drv._stage_schema_op(drv._read_control())
-    drv._apply_staged_patch()
+    drv._stage(drv._read_control())
+    drv._apply_staged()
     assert runner.registry.get("db.t") == [
         ("id", "bigint"), ("v", "string"), ("g", "int")
     ]
@@ -595,7 +707,7 @@ def test_operate_schema_set_mirrors_in_stream_create(spark, tmp_path):
             "CREATE TABLE db.u (id BIGINT PRIMARY KEY, v TEXT)",
         ])
     with pytest.raises(ValueError, match="names 'db.u'"):
-        drv._validate_schema_op({
+        drv._check("schema_op", {
             "op": "set", "table": "db.t",
             "create": "CREATE TABLE db.u (id BIGINT PRIMARY KEY)",
         })
@@ -619,8 +731,8 @@ def test_operate_schema_set_mirrors_in_stream_create(spark, tmp_path):
         spark, str(tmp_path / "feed"), cp, ApplyPipeline(cfg),
         {"transcripts": lake}, runner=runner,
     )
-    drv2._stage_schema_op(drv2._read_control())
-    drv2._apply_staged_patch()
+    drv2._stage(drv2._read_control())
+    drv2._apply_staged()
     assert ("late", "int") in runner.registry.get("db.t")
     # a FRESH issue of byte-identical content carries a new id and
     # applies again (that is the operator's intent)
@@ -628,6 +740,6 @@ def test_operate_schema_set_mirrors_in_stream_create(spark, tmp_path):
         cp, "schema", "set", "db.t",
         "CREATE TABLE db.t (id BIGINT PRIMARY KEY, v TEXT, g INT)",
     ])
-    drv2._stage_schema_op(drv2._read_control())
-    drv2._apply_staged_patch()
+    drv2._stage(drv2._read_control())
+    drv2._apply_staged()
     assert ("late", "int") not in runner.registry.get("db.t")
