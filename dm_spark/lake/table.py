@@ -1004,20 +1004,17 @@ class LakeTable:
         self._finish_commit(meta, batch_id, stats, m["loc"], m["mts"], mode="mor", dirty=set())
         return stats
 
-    def compact(self, buckets: list[int] | None = None, min_files: int = 2) -> int:
-        """Rewrite buckets holding >= min_files files into resolved base
-        files; drops tombstones. The Iceberg rewrite_data_files
-        maintenance action. Pending delta files hold rows of every
-        bucket, so while any exist every bucket is rewritten and the
-        delta list cleared; `buckets` narrows a delta-free table only."""
+    def compact(self) -> int:
+        """Rewrite the buckets holding two or more files into resolved
+        base files, dropping tombstones; returns the number rewritten.
+        The Iceberg rewrite_data_files maintenance action. Pending delta
+        files hold rows of every bucket, so while any exist every bucket
+        is rewritten and the delta list cleared."""
         meta = self._load_meta()
-        if meta.deltas:
-            targets = list(range(meta.n_buckets))
-        else:
-            targets = [
-                b for b in (buckets if buckets is not None else range(meta.n_buckets))
-                if len(meta.buckets[str(b)]) >= min_files
-            ]
+        targets = [
+            b for b in range(meta.n_buckets)
+            if meta.deltas or len(meta.buckets[str(b)]) >= 2
+        ]
         if not targets:
             return 0
         entries = [e for b in targets for e in meta.buckets[str(b)]] + meta.deltas

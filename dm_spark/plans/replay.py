@@ -209,14 +209,9 @@ class ReplayRunner:
             # suppress the dropped_schemas DML gate — otherwise the
             # ignore rule would silently stop replication for every
             # table under the schema prefix (ADVICE r03 #4)
-            action = ev.to_action()
-            if self._ddl_filtered(ev.source_table, action):
-                return []
-            resolved = self.error_ops.resolve(action)
-            if not resolved:
-                return []  # user skip operator: replication continues
-            if not (len(resolved) == 1 and resolved[0] is action):
-                return self._dispatch_replacements(ev, resolved)
+            overridden = self._overridden(ev)
+            if overridden is not None:
+                return overridden
             # expand to drop_table over every known table of that schema
             # (dropSchemaInSharding, syncer/syncer.go:2301-2306): group
             # members, tracked schemas, and routed lakes are the three
@@ -239,18 +234,9 @@ class ReplayRunner:
             self.dropped_schemas.add(ev.source_table)
             return applied
         if ev.action in ("create_table", "drop_table", "truncate_table"):
-            action = ev.to_action()
-            if self._ddl_filtered(ev.source_table, action):
-                return []
-            resolved = self.error_ops.resolve(action)
-            if not resolved:
-                return []  # user skip operator at this location
-            if not (len(resolved) == 1 and resolved[0] is action):
-                # a replace operator at a table-lifecycle location is
-                # HONORED: its replacement actions apply instead of the
-                # original statement (previously resolve()'s list was
-                # silently discarded, ADVICE r03 #4)
-                return self._dispatch_replacements(ev, resolved)
+            overridden = self._overridden(ev)
+            if overridden is not None:
+                return overridden
             return self._handle_table_ddl(ev)
         if ev.action == "rename_table":
             replay = self.online_ddl.on_rename(ev.source_table, ev.target_table)
@@ -292,10 +278,9 @@ class ReplayRunner:
             # strings are hashed into bucket ids at write time, so
             # extending the ladder mid-stream would re-identify (and
             # re-bucket) existing rows and split their update chains
-            if self._ddl_filtered(ev.source_table, ev.to_action()):
-                return []
-            if not self.error_ops.resolve(ev.to_action()):
-                return []
+            overridden = self._overridden(ev)
+            if overridden is not None:
+                return overridden
             lake = self._lake_for(ev.source_table)
             if lake is not None and lake.exists and lake._load_meta().unique_keys:  # noqa: SLF001
                 raise ValueError(
@@ -498,9 +483,23 @@ class ReplayRunner:
                     f"expression(s): {hit}"
                 )
 
+    def _overridden(self, ev: DdlEvent) -> list[dict] | None:
+        """Filter rules and error operators for a statement that applies
+        whole (DROP DATABASE, table lifecycle, ADD UNIQUE): the actions
+        applied in its place — none when a rule or a skip operator drops
+        it, a replace operator's replacements (honored, never silently
+        discarded: ADVICE r03 #4) — or None when it applies as is."""
+        action = ev.to_action()
+        if self._ddl_filtered(ev.source_table, action):
+            return []
+        resolved = self.error_ops.resolve(action)
+        if len(resolved) == 1 and resolved[0] is action:
+            return None
+        return self._dispatch_replacements(ev, resolved)
+
     def _dispatch_replacements(self, ev: DdlEvent, resolved: list[dict]) -> list[dict]:
         """Apply a replace operator's injected actions in place of a
-        table-lifecycle statement. Column-level replacements apply
+        statement that applies whole. Column-level replacements apply
         directly (already resolved — routing them through
         `_apply_resolved` would re-resolve the same location and
         re-expand the list); lifecycle replacements re-dispatch as

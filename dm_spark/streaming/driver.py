@@ -24,6 +24,7 @@ import os
 import time
 import uuid
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,6 +65,9 @@ def stream_batches(checkpoint_dir: str) -> tuple[int, int]:
         return max((int(f) for f in names if f.isdigit()), default=-1)
 
     return latest("offsets"), latest("commits")
+
+
+MAX_INLINE_DDL_PER_BATCH = 1000  # op='Q' collect cap, see _extract_inline_ddl
 
 
 # ---------------------------------------------- control-op shape checks
@@ -217,7 +221,6 @@ class CdcStreamDriver:
         runner: "ReplayRunner | None" = None,
         ddl_events: list | None = None,
         compact_every: int | None = None,
-        max_inline_ddl_per_batch: int = 1000,
         epoch: int = 0,
         track_txn_intervals: bool = False,
     ):
@@ -265,7 +268,6 @@ class CdcStreamDriver:
         # batches (the rewrite_data_files scheduling a table service
         # would own on a real lakehouse)
         self.compact_every = compact_every
-        self.max_inline_ddl_per_batch = max_inline_ddl_per_batch
         # upstream binlog epoch (bumped by the operator after a source
         # re-master restarts file_seq) — rides every merge so the
         # reported checkpoint advances as (epoch, file_seq, pos)
@@ -290,12 +292,12 @@ class CdcStreamDriver:
         `after.text`. They are parsed into DdlEvents here, at their
         binlog location, so a user never has to side-channel schema
         changes — ALTERs written into the feed just work. The collect is
-        HARD-BOUNDED at `max_inline_ddl_per_batch` (+1 sentinel row):
+        HARD-BOUNDED at `MAX_INLINE_DDL_PER_BATCH` (+1 sentinel row):
         DDLs are rare by nature, but a gh-ost backfill or a migration
         replay can emit thousands of query events in one micro-batch,
         and an uncapped collect would be a driver-OOM vector — past the
-        cap the driver fails loudly with the remedy (smaller
-        maxFilesPerTrigger, or raise the cap) instead of silently
+        cap the driver fails loudly with the remedy (a smaller
+        max_files_per_trigger) instead of silently
         ballooning (VERDICT r03 #2; the reference processes one query
         event at a time, syncer/syncer.go:2154, and cannot OOM here).
         An UnsupportedDdl statement raises unless an error operator
@@ -303,7 +305,7 @@ class CdcStreamDriver:
         syncer/handle_error.go)."""
         from dm_spark.schema import UnsupportedDdl, parse_ddl
 
-        cap = self.max_inline_ddl_per_batch
+        cap = MAX_INLINE_DDL_PER_BATCH
         qrows = (
             batch_df.where(F.col("op") == "Q")
             .select(F.col("after.text").alias("sql"), "file_seq", "pos")
@@ -314,9 +316,7 @@ class CdcStreamDriver:
             raise RuntimeError(
                 f"micro-batch carries more than {cap} op='Q' query events "
                 "(DDL storm — gh-ost backfill or migration replay?); "
-                "lower max_files_per_trigger so the batch shrinks, or "
-                "raise max_inline_ddl_per_batch if the driver has memory "
-                "headroom"
+                "lower max_files_per_trigger so the batch shrinks"
             )
         out = []
         for r in sorted(qrows, key=lambda r: (r["file_seq"], r["pos"])):
@@ -367,13 +367,13 @@ class CdcStreamDriver:
         try:
             if self.runner is not None:
                 inline = self._extract_inline_ddl(batch_df)
-                mx = batch_df.agg(
-                    F.max(F.struct(F.col("file_seq"), F.col("pos")))
-                ).collect()[0][0]
-                side = [
-                    e for e in self.ddl_events
-                    if mx is not None and e.loc()[:2] <= (mx["file_seq"], mx["pos"])
-                ]
+                side = []
+                if self.ddl_events:  # no queue, no max-location job
+                    mx = batch_df.agg(F.max(F.struct("file_seq", "pos"))).collect()[0][0]
+                    side = [
+                        e for e in self.ddl_events
+                        if mx is not None and e.loc()[:2] <= (mx["file_seq"], mx["pos"])
+                    ]
                 due = sorted([*side, *inline], key=lambda e: e.loc())
                 merged = self.runner.replay(self.pipeline.without_queries(batch_df), due)
                 # side-channel DDLs leave the queue only once applied: an
@@ -431,8 +431,8 @@ class CdcStreamDriver:
     # dmctl's runtime task surface (pause-task / resume-task /
     # stop-task, dm/ctl/master/*.go; update-task's filter subset;
     # exercised by tests/dmctl_basic) re-expressed without a control
-    # plane: a JSON file next to the checkpoint, polled by
-    # run_continuous between micro-batches.
+    # plane: a JSON file next to the checkpoint, polled between
+    # micro-batches by the run loop (`_run`) of tail and drain alike.
     #   {"pause": true}              pause consumption (query stopped;
     #                                resumes from checkpoint on clear)
     #   {"stop": true}               graceful stop (drain current batch)
@@ -710,7 +710,7 @@ class CdcStreamDriver:
         write_json(self._txn_intervals_path, {"intervals": self.txn_intervals})
 
     def _start(self) -> dict:
-        """The first step of both run modes; returns the control file.
+        """The first step of the run loop; returns the control file.
         Clears a blocked sidecar left by a killed run, and re-applies
         the recorded config patch while control.json still holds it:
         the pipeline is rebuilt from the task config on every start,
@@ -727,30 +727,30 @@ class CdcStreamDriver:
             self._apply_config_patch(patch)
         return ctl
 
-    def run_available_now(self, timeout_sec: int = 600) -> list[dict]:
-        """Drain everything currently in the relay dir, then stop
-        (Trigger.AvailableNow — the incremental-catchup mode). Ops
-        already pending in control.json (written against a stopped task)
-        go through the same start path as run_continuous, so a crashed
-        task relaunched in drain mode replays its failed batch under
-        the new operators and filters."""
-        self._stage(self._start())
-        stream = read_feed_stream(self.spark, self.feed_dir, self.max_files_per_trigger)
-        q = (
-            stream.writeStream.foreachBatch(self._apply)
+    def _start_query(self, **trigger):
+        """The one streaming query every run mode starts: the relay dir
+        through `_apply`, offsets in the checkpoint, under `trigger` —
+        processingTime (tail), availableNow (drain) or once (settle)."""
+        return (
+            read_feed_stream(self.spark, self.feed_dir, self.max_files_per_trigger)
+            .writeStream.foreachBatch(self._apply)
             .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
+            .trigger(**trigger)
             .start()
         )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-        if self.runner is not None and self.ddl_events:
-            # side-channel DDLs located past the feed's last event: the
-            # per-batch due-filter (loc <= batch max) never reaches
-            # them, and silently discarding a scheduled ALTER at drain
-            # would leave the schema wrong with no signal — the drained
-            # stream IS their flush point
+
+    def run_available_now(self, timeout_sec: int = 600) -> list[dict]:
+        """Drain mode, the incremental catch-up: the run loop (`_run`)
+        under Trigger.AvailableNow — it applies what the relay dir holds
+        when its query starts, under the tail's control rules, then
+        returns. Side-channel DDLs located past the feed's last event
+        never come due in a batch (loc <= batch max): a full drain is
+        their flush point, so they apply here. A drain cut short
+        (timeout, stop) keeps them queued — applying them ahead of the
+        DMLs still unapplied before their location would break
+        flush-before-DDL."""
+        drained = self._run({"availableNow": True}, timeout_sec)
+        if drained and self.runner is not None and self.ddl_events:
             trailing, self.ddl_events = self.ddl_events, []
             for ev in trailing:
                 self.runner.handle_ddl(ev)
@@ -784,16 +784,7 @@ class CdcStreamDriver:
         branch)."""
         staged, self._staged = self._staged, {}
         try:
-            stream = read_feed_stream(
-                self.spark, self.feed_dir, self.max_files_per_trigger
-            )
-            q = (
-                stream.writeStream.foreachBatch(self._apply)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .trigger(once=True)
-                .start()
-            )
-            q.awaitTermination(120)
+            self._start_query(once=True).awaitTermination(120)
         finally:
             self._staged = staged
 
@@ -805,43 +796,52 @@ class CdcStreamDriver:
         poll_sec: float = 0.25,
         block_on_error: bool = False,
     ) -> list[dict]:
-        """Live-tail mode: the forever-tailing syncer loop
-        (syncer/syncer.go:1280 `Run`) as a processing-time-triggered
-        stream over the relay dir — new relay files are picked up as
-        they appear, each micro-batch commits checkpoint + lineage
-        atomically. Idle periods need no extra flush: the checkpoint is
-        bound to data batches, so there is nothing unflushed when no
-        events arrive (the reference needs a heartbeat-driven flush,
-        syncer/syncer.go:1849-1857, only because its checkpoint lags its
-        appliers). `stop_when(driver) -> bool` is polled driver-side for
-        tests/ops; production omits it and tails until killed, resuming
-        from checkpoint.
-
-        The control file (see :meth:`control_path`) is polled at the
-        same cadence: `pause` stops the streaming query (checkpoint
-        intact) and idles until cleared, then restarts from the same
-        checkpoint — dmctl pause-task/resume-task without killing the
-        process; `stop` exits gracefully; `config_patch` swaps the
-        filter family of the task config at a batch boundary.
+        """Live-tail mode: the run loop (`_run`) under a processing-time
+        trigger, picking up relay files as they appear. Idle periods
+        need no extra flush: the checkpoint is bound to data batches
+        (the reference needs a heartbeat flush, syncer/syncer.go:
+        1849-1857, only because its checkpoint lags its appliers).
+        `stop_when(driver) -> bool` is polled driver-side for tests/ops;
+        production omits it and tails until killed, resuming from
+        checkpoint.
 
         `block_on_error=True` is the reference's paused-on-error task
-        state (a failed subtask stays resumable, dm/worker/subtask.go):
-        when a micro-batch fails (unsupported DDL, poison DML), the
-        driver records the error on `self.last_error`, sets
-        `self.blocked`, and idles polling control.json instead of
-        propagating — the operator unblocks it with `main.py ctl <cp>
-        binlog skip|replace <loc>` (the handle-error flow) or any other
-        control change, and the failed batch replays from checkpoint
-        under the new operators. Default False keeps failures loud."""
+        state (dm/worker/subtask.go): a failed micro-batch (unsupported
+        DDL, poison DML) sets `self.blocked` and `self.last_error`, and
+        the driver idles polling control.json instead of raising; an
+        operator's control change (`main.py ctl <cp> binlog
+        skip|replace <loc>`, the handle-error flow) wakes it and the
+        batch replays from checkpoint under the new operators. Default
+        False keeps failures loud."""
+        self._run({"processingTime": f"{max(trigger_sec, 0.1)} seconds"},
+                  timeout_sec, stop_when, poll_sec, block_on_error)
+        return self.batch_stats
+
+    def _run(self, trigger: dict, timeout_sec: float, stop_when=None,
+             poll_sec: float = 0.25, block_on_error: bool = False) -> bool:
+        """The one run loop of both modes, as the syncer's `Run`
+        (syncer/syncer.go:1280) serves catch-up and live tail alike:
+        start the query under `trigger`, then every `poll_sec` check
+        `stop_when` and the control file (see :meth:`control_path`),
+        waiting on the query in between so a finished drain returns at
+        once. `pause` stops the query (checkpoint intact) and idles
+        until cleared, then restarts it from the checkpoint; `stop`
+        exits gracefully; ops stage and apply at a batch boundary.
+        Returns True iff the last query ended on its own (a finished
+        drain), not by timeout, stop, pause or error."""
         t0 = time.time()
         self.paused = False
         self.blocked = False
         self.last_error = None
+        # paused-branch settle state: the control state a settle last
+        # failed under, and whether a failed settle owns the sidecar
+        self._settle_failed_ctl = None
+        self._settle_blocked = False
         # a SIGKILL while blocked skips the finally that clears the
         # sidecar — a restarted task must not report blocked-on-error
         # from a previous life (_start clears it)
         self._start()
-        done = False
+        done = drained = False
         while not done and time.time() - t0 < timeout_sec:
             ctl = self._read_control()
             if ctl.get("stop"):
@@ -878,10 +878,7 @@ class CdcStreamDriver:
                     or "unlock_op" in pending
                 )
                 ctl_key = json.dumps(ctl, sort_keys=True)
-                if (
-                    needs_settle
-                    and ctl_key == getattr(self, "_settle_failed_ctl", None)
-                ):
+                if needs_settle and ctl_key == self._settle_failed_ctl:
                     # the settle already failed under THIS exact control
                     # state: idle until the operator changes something
                     # instead of replaying the poison batch every poll
@@ -892,7 +889,7 @@ class CdcStreamDriver:
                     try:
                         self._settle_inflight()
                         self._settle_failed_ctl = None
-                        if getattr(self, "_settle_blocked", False):
+                        if self._settle_blocked:
                             self._settle_blocked = False
                             self._write_blocked_sidecar(None)
                     except Exception as err:  # noqa: BLE001
@@ -933,7 +930,7 @@ class CdcStreamDriver:
                 continue
             self.paused = False
             self._settle_failed_ctl = None
-            if getattr(self, "_settle_blocked", False):
+            if self._settle_blocked:
                 # operator resumed past a failed settle: the stale
                 # cannot-settle sidecar must not outlive the pause
                 self._settle_blocked = False
@@ -942,15 +939,7 @@ class CdcStreamDriver:
             # stream starts, so the FIRST (possibly replayed) micro-batch
             # sees them (see _start)
             self._stage(ctl)
-            stream = read_feed_stream(
-                self.spark, self.feed_dir, self.max_files_per_trigger
-            )
-            q = (
-                stream.writeStream.foreachBatch(self._apply)
-                .option("checkpointLocation", self.checkpoint_dir)
-                .trigger(processingTime=f"{max(trigger_sec, 0.1)} seconds")
-                .start()
-            )
+            q = self._start_query(**trigger)
             err = None
             stop_req = False
             try:
@@ -965,9 +954,13 @@ class CdcStreamDriver:
                     if ctl.get("pause"):
                         break  # stop the query; outer loop idles until cleared
                     self._stage(ctl)
-                    time.sleep(poll_sec)
+                    try:
+                        q.awaitTermination(poll_sec)
+                    except StreamingQueryException:
+                        pass  # a failed query raises once, below
                 else:
-                    done = True  # query died or overall timeout
+                    done = True  # query ended or overall timeout
+                    drained = not q.isActive
             finally:
                 q.stop()
                 try:
@@ -985,7 +978,7 @@ class CdcStreamDriver:
                 # there unapplied — one issued while the batch was
                 # failing (before the snapshot below) must not be missed
                 # until timeout (review r5)
-                done = False
+                done = drained = False
                 self.last_error = str(err)
                 self.blocked = True
                 self._write_blocked_sidecar(str(err))
@@ -1005,7 +998,7 @@ class CdcStreamDriver:
                 finally:
                     self.blocked = False
                     self._write_blocked_sidecar(None)
-        return self.batch_stats
+        return drained
 
     def _write_blocked_sidecar(self, error: str | None) -> None:
         """Persist the blocked-on-error state beside the checkpoint so

@@ -188,8 +188,10 @@ _CTL_MIN_ARGS = {"patch": 3, "schema": 4, "binlog": 4, "unlock": 4}
 
 
 def ctl(argv: list[str]) -> int:
-    """dmctl analog for a RUNNING tail/incremental task (no Spark, no
-    restart — the driver polls control.json between micro-batches):
+    """dmctl analog for a RUNNING task (no Spark, no restart): tail and
+    drain (`incremental`/`all`) modes run one loop that polls
+    control.json between micro-batches, so pause, resume, stop and every
+    op act on a running drain as on a tail:
 
         python main.py ctl <checkpoint_dir> pause
         python main.py ctl <checkpoint_dir> resume

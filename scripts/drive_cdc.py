@@ -1,7 +1,7 @@
 """Drive dm_spark end-to-end like a user: task config -> relay feed ->
 streaming driver -> lake table; print final-state diff vs DuckDB oracle."""
 import sys, os, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from dm_spark.session import get_spark
 from dm_spark import feed as feedmod
@@ -15,7 +15,8 @@ SF = "/root/testdata/sf0.01"   # 10k events — bigger than the pytest tier
 WORK = sys.argv[1]
 PHASE = sys.argv[2]  # "all" | "half" | "resume" | "drain"
 
-spark = get_spark("drive_cdc", master="local[8]", shuffle_partitions=16)
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+spark = get_spark("drive_cdc", master=f"local[{CPUS}]", shuffle_partitions=16)
 cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")])
 SCHEMA = [("conv_id","string"),("turn_idx","int"),("role","string"),
           ("text","string"),("tool","string"),("ts","timestamp")]

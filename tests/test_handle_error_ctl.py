@@ -36,9 +36,11 @@ from tests.test_pipeline_e2e import (
 POISON_SQL = "ALTER TABLE shard_0.transcripts_0 DROP PRIMARY KEY"
 
 
-def _driver(spark, tmp_path, name="lake"):
+def _driver(spark, tmp_path, name="lake", unique_keys=None):
     cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.t", target="transcripts")])
-    lake = LakeTable.create(spark, str(tmp_path / name), SCHEMA, KEY, n_buckets=4)
+    lake = LakeTable.create(
+        spark, str(tmp_path / name), SCHEMA, KEY, n_buckets=4, unique_keys=unique_keys,
+    )
     runner = ReplayRunner(pipeline=ApplyPipeline(cfg), lake=lake)
     cp = str(tmp_path / f"cp_{name}")
     os.makedirs(cp, exist_ok=True)
@@ -178,6 +180,27 @@ def test_ctl_replace_actions_apply_through_resolve(spark, tmp_path):
                                column="bad", new_type="string"))
     cols = runner.lake.read().columns
     assert "fixed" in cols and "bad" not in cols
+
+
+@pytest.mark.parametrize("unique_keys", [None, [["conv_id", "ts"]]],
+                         ids=["plain_pk", "identity_ladder"])
+def test_ctl_replace_at_add_unique_key_applies_replacements(spark, tmp_path, unique_keys):
+    """A replace operator at an ADD UNIQUE location applies its
+    statements instead of the ADD UNIQUE, whatever the table kind: on
+    a plain-PK table (where ADD UNIQUE alone is an advisory no-op) and
+    on a declared-ladder table (where ADD UNIQUE alone is refused)."""
+    from dm_spark.plans import DdlEvent
+
+    drv, runner, cp = _driver(spark, tmp_path, unique_keys=unique_keys)
+    assert mainmod.ctl([
+        cp, "binlog", "replace", "0:3", "ALTER TABLE shard_0.t ADD COLUMN c INT",
+    ]) == 0
+    drv._stage(drv._read_control())
+    drv._apply_staged()
+    applied = runner.handle_ddl(DdlEvent("add_unique_key", "shard_0.t", 0, 3,
+                                         unique_keys=[["role", "text"]]))
+    assert [(a["action"], a["column"]) for a in applied] == [("add_column", "c")]
+    assert "c" in runner.lake.read().columns
 
 
 def test_blocked_task_unblocked_by_ctl_binlog_skip(spark, sf_dir, tmp_path):
