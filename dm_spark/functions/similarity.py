@@ -105,6 +105,18 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("_v", v).withColumn("_norm", F.sqrt(_dot(F.col("_v"), F.col("_v"))))
 
 
+def _topk(pairs: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The one top-k of every search here: per `id`, the k `nbr` rows of
+    highest `cos` (ties to the smaller neighbor id), as (vec_id, rank,
+    neighbor_id, *extra)."""
+    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("nbr").asc())
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(F.col("id").alias("vec_id"), "rank", F.col("nbr").alias("neighbor_id"), *extra)
+    )
+
+
 def cosine_topk_bruteforce(
     df: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -121,12 +133,7 @@ def cosine_topk_bruteforce(
             (_dot(F.col("a._v"), F.col("b._v")) / (F.col("a._norm") * F.col("b._norm"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("nbr").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("id").alias("vec_id"), "rank", F.col("nbr").alias("neighbor_id"))
-    )
+    return _topk(pairs, k)
 
 
 def lsh_signatures(
@@ -306,12 +313,7 @@ def cosine_topk_lsh(
             (_dot_fixed(F.col("_va"), F.col("_vb"), dim) / (F.col("_na") * F.col("_nb"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("nbr").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("id").alias("vec_id"), "rank", F.col("nbr").alias("neighbor_id"), "cos")
-    )
+    return _topk(pairs, k, "cos")
 
 
 def embedding_near_dup_pairs_lsh(
@@ -598,9 +600,4 @@ def cosine_topk_ivf(
             (_dot_fixed(F.col("_va"), F.col("_vb"), dim) / (F.col("_na") * F.col("_nb"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("nbr").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("id").alias("vec_id"), "rank", F.col("nbr").alias("neighbor_id"), "cos")
-    )
+    return _topk(pairs, k, "cos")

@@ -709,15 +709,12 @@ class LakeTable:
         return self._load_meta().fields()
 
     @staticmethod
-    def _changes_ddl(meta: _Meta, with_tag: bool = False) -> str:
-        """The change-row schema string: payload + op + lineage
-        (+ _change_version) — what snapshot_changes and changes return
-        when there is nothing to read, in the shape of a full result."""
+    def _changes_ddl(meta: _Meta) -> str:
+        """The change-row schema string: payload + op + lineage — what
+        snapshot_changes and changes return when there is nothing to
+        read, in the shape of a full result."""
         cols = [(f["name"], f["type"]) for f in meta.fields()] + list(_CHANGE_TYPES.items())
-        ddl = ", ".join(f"{n} {t}" for n, t in cols)
-        if with_tag:
-            ddl += ", _change_version int"
-        return ddl
+        return ", ".join(f"{n} {t}" for n, t in cols)
 
     def snapshot_changes(self) -> DataFrame:
         """The CURRENT table state re-expressed as an insert-only change
@@ -737,34 +734,25 @@ class LakeTable:
             df = self._shape(meta).resolve_read(df)
         return df.select(*payload, F.lit("I").alias("op"), *LINEAGE_COLS)
 
-    def changes(
-        self,
-        from_version: int = 1,
-        to_version: int | None = None,
-        tag_versions: bool = True,
-    ) -> DataFrame:
+    def changes(self, from_version: int = 1, to_version: int | None = None) -> DataFrame:
         """Incremental change rows merged between versions (inclusive
         bounds) — the lake re-emitting CDC, the Delta CDF analog. Rows:
         current payload + `op` ('I'|'U'|'D') + lineage
-        (`_cdc_ts`, `_cdc_file_seq`, `_cdc_pos`) + `_change_version` —
-        exactly :meth:`merge_into`'s input shape, so a downstream lake
-        chains with `lake2.merge_into(lake1.changes(k).drop(
-        "_change_version"))` and converges to the same state (LWW on
-        the same lineage ordering; pinned in tests/test_change_feed).
+        (`_cdc_ts`, `_cdc_file_seq`, `_cdc_pos`) — exactly
+        :meth:`merge_into`'s input shape, so a downstream lake chains
+        with `lake2.merge_into(lake1.changes(k))` and converges to the
+        same state (LWW on the same lineage ordering; pinned in
+        tests/test_change_feed).
         Both write modes emit each merge's whole batch: in-batch
         superseded rows and rows that lose LWW to stored state emit
         too, and lose LWW downstream the same way.
 
-        Scale shape: with `tag_versions=True` the plan has one parquet
-        scan per consumed version — fine for bounded windows, wrong for
-        a replica catching up over thousands of versions. Pass
-        `tag_versions=False` (what replicate_lake_poll does) to drop
-        the `_change_version` column and coalesce ALL files in the
-        window into one scan per schema group — the plan stays O(1) in
-        window size. Files are projected to the current schema by field
-        id either way — changes written before a DDL read back in
-        today's shape. Versions without DML (DDL/compact/rescale
-        commits) simply have no rows."""
+        Scale shape: ALL files in the window coalesce into one scan per
+        schema group, so the plan stays O(1) in window size — a replica
+        catching up over thousands of versions reads them in one plan.
+        Files are projected to the current schema by field id — changes
+        written before a DDL read back in today's shape. Versions
+        without DML (DDL/compact/rescale commits) simply have no rows."""
         meta = self._load_meta()
         if not meta.change_feed:
             raise ValueError("change feed not enabled on this table (create(change_feed=True))")
@@ -775,29 +763,12 @@ class LakeTable:
                 "window; re-bootstrap it from a table snapshot"
             )
         to_v = meta.version if to_version is None else to_version
-        versions = [
-            v for v in range(max(1, from_version), to_v + 1)
-            if meta.change_log.get(str(v))
+        ents = [
+            e for v in range(max(1, from_version), to_v + 1)
+            for e in meta.change_log.get(str(v), [])
         ]
-
-        def _empty(with_tag: bool) -> DataFrame:
-            return self.spark.createDataFrame([], self._changes_ddl(meta, with_tag))
-
-        if not tag_versions:
-            ents = [e for v in versions for e in meta.change_log[str(v)]]
-            df = self._read_files(meta, ents, with_lineage=True, with_op=True)
-            return df if df is not None else _empty(False)
-        parts = []
-        for v in versions:
-            df = self._read_files(meta, meta.change_log[str(v)], with_lineage=True, with_op=True)
-            if df is not None:
-                parts.append(df.withColumn("_change_version", F.lit(v)))
-        if not parts:
-            return _empty(True)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        df = self._read_files(meta, ents, with_lineage=True, with_op=True)
+        return df if df is not None else self.spark.createDataFrame([], self._changes_ddl(meta))
 
     def prune_changes(self, before_version: int) -> int:
         """Drop change-log entries for versions < before_version (the

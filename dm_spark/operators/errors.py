@@ -5,7 +5,9 @@ SQL at a binlog position (`handle-error`, syncer/handle_error.go:32-73;
 match/apply syncer/err-operator/operator.go:60-173; injected events get
 an artificial location Suffix so ordering stays total,
 pkg/binlog/position.go Suffix). Here: an override table keyed by
-(file_seq, pos) consulted before a schema action is applied."""
+(file_seq, pos), resolved once per statement location by
+`ReplayRunner.handle_ddl`, the only caller — nothing else expands an
+operator."""
 
 from __future__ import annotations
 
@@ -26,25 +28,20 @@ class ErrorOperators:
     def revert(self, file_seq: int, pos: int) -> bool:
         return self.ops.pop((file_seq, pos), None) is not None
 
-    def resolve(self, action: dict) -> list[dict]:
-        """Map one incoming schema action to the list to actually apply:
-        [] (skipped), [action] (untouched), or the replacements, each
-        stamped with the original (file_seq, pos) plus a `suffix`
-        ordinal — the reference's Location.Suffix
-        (pkg/binlog/position.go:229-235, :298-317). pos itself is never
-        mutated, so genuine later events in the same file keep their
-        place in the total order."""
-        loc = (action.get("file_seq", 0), action.get("pos", 0))
-        ov = self.ops.get(loc)
+    def resolve(self, file_seq: int, pos: int) -> list[dict] | None:
+        """The operator at one statement location: None when none is
+        set (the statement applies as parsed), [] for a skip, or a
+        replace's replacement events (DdlEvent field dicts), each
+        stamped with the location plus a `suffix` ordinal — the
+        reference's Location.Suffix (pkg/binlog/position.go:229-235,
+        :298-317). pos itself is never mutated, so genuine later events
+        in the same file keep their place in the total order."""
+        ov = self.ops.get((file_seq, pos))
         if ov is None:
-            return [action]
+            return None
         if ov["kind"] == "skip":
             return []
-        out = []
-        for i, rep in enumerate(ov["actions"]):
-            r = dict(rep)
-            r.setdefault("file_seq", loc[0])
-            r.setdefault("pos", loc[1])
-            r.setdefault("suffix", i + 1)
-            out.append(r)
-        return out
+        return [
+            {**rep, "file_seq": file_seq, "pos": pos, "suffix": i + 1}
+            for i, rep in enumerate(ov["actions"])
+        ]

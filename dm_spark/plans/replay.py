@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from itertools import groupby
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,14 +35,23 @@ from dm_spark.operators import ApplyPipeline
 from dm_spark.operators.errors import ErrorOperators
 from dm_spark.schema.online_ddl import OnlineDdlBuffer, classify
 from dm_spark.schema.registry import SchemaRegistry, reconcile_actions
-from dm_spark.streaming.ddl_coordinator import PendingSpill, ShardDdlBarrier, split_blocked
+from dm_spark.streaming.ddl_coordinator import (
+    PendingSpill,
+    ShardDdlBarrier,
+    pending_locks,
+    split_blocked,
+)
 
 
 @dataclass
 class DdlEvent:
     """One schema action at a binlog location (FIXTURES.md §4 shape).
-    action: add_column | rename_column | widen_type | drop_column |
-    rename_table (online-DDL swap).
+    action: add_column | add_generated_column | rename_column |
+    widen_type | drop_column | add_unique_key | create_table |
+    drop_table | truncate_table | drop_database | rename_table
+    (online-DDL swap) | unsupported (a statement the DDL grammar
+    refused: it stands at its location only so the error operator set
+    there resolves, and applies only through that operator).
 
     `suffix` is the third location component, used for user-injected
     replacement events sharing a position (error-operator replace,
@@ -72,6 +82,16 @@ class DdlEvent:
 
     def loc(self) -> tuple[int, int, int]:
         return (self.file_seq, self.pos, self.suffix)
+
+    def to_dict(self) -> dict:
+        """The event's set fields — its one serialized form (stored
+        error-operator replacements, buffered ghost DDLs);
+        :meth:`from_dict` reads it back."""
+        return {k: v for k, v in vars(self).items() if v is not None}
+
+    @classmethod
+    def from_dict(cls, d: dict, **override) -> "DdlEvent":
+        return cls(**{**d, **override})
 
     def to_action(self) -> dict:
         return {
@@ -179,10 +199,11 @@ class ReplayRunner:
                 cur.append(c)
 
     # -------------------------------------------------------------- DDL
-    def _ddl_filtered(self, source_table: str, action: dict) -> bool:
+    def _ddl_filtered(self, ev: DdlEvent) -> bool:
         """Binlog DDL-filter rules (syncer/filter.go:30-120
         skipQueryEvent/skipSQLByPattern): drop schema actions by kind or
         by regex over the rendered action text, per table pattern."""
+        action = ev.to_action()
         rendered = " ".join(
             str(action.get(k)) for k in ("action", "column", "new_name", "new_type")
             if action.get(k)
@@ -190,28 +211,46 @@ class ReplayRunner:
         for r in self.pipeline.config.ddl_filters:
             if not re.match(
                 pattern_to_regex(r.pattern, self.pipeline.config.case_sensitive),
-                source_table,
+                ev.source_table,
             ):
                 continue
-            if action["action"] in r.ignore_kinds:
+            if ev.action in r.ignore_kinds:
                 return True
             if r.action_regex and re.search(r.action_regex, rendered):
                 return True
         return False
 
-    def handle_ddl(self, ev: DdlEvent) -> list[dict]:
-        """Operator chain for one DDL; returns the actions actually
-        applied to the lake (possibly empty)."""
+    def handle_ddl(self, *events: DdlEvent) -> list[dict]:
+        """The one place a schema event meets its error operator.
+        Events are taken one statement location (file_seq, pos) at a
+        time: the DDL filter rules drop events by kind or text, then the
+        operator at the location resolves ONCE (the syncer checks its
+        handle-error operators once per binlog event,
+        syncer/syncer.go:1730-1759) — a skip drops the statement, a
+        replace stands its replacement events in for it — and each event
+        left, original or injected, goes through `_dispatch`, which
+        never resolves again. Returns the actions actually applied to
+        the lake (possibly empty)."""
+        applied = []
+        for stmt in _statements(events):
+            evs = [e for e in stmt if not self._ddl_filtered(e)]
+            reps = self.error_ops.resolve(*stmt[0].loc()[:2]) if evs else None
+            if reps is not None:
+                # a replacement composed from SQL names its own table; a
+                # hand-written one applies to the statement's table
+                evs = [DdlEvent.from_dict({"source_table": evs[0].source_table, **r}) for r in reps]
+            for ev in evs:
+                applied += self._dispatch(ev)
+        return applied
+
+    def _dispatch(self, ev: DdlEvent) -> list[dict]:
+        """Apply one resolved event by its kind: table lifecycle, DROP
+        DATABASE expansion, RENAME (online-DDL swap), ghost/trash
+        buffer, generated column, ADD UNIQUE, optimistic sync, plain
+        column DDL. Events it derives (expanded drops, swap-replayed
+        ghost DDLs) pass the filter rules but never the operators —
+        `handle_ddl` resolved their statement's location already."""
         if ev.action == "drop_database":
-            # the STATEMENT itself goes through filter rules / error ops
-            # first (skipQueryEvent filters whole statements): a user
-            # rule or skip operator suppressing the drop must also
-            # suppress the dropped_schemas DML gate — otherwise the
-            # ignore rule would silently stop replication for every
-            # table under the schema prefix (ADVICE r03 #4)
-            overridden = self._overridden(ev)
-            if overridden is not None:
-                return overridden
             # expand to drop_table over every known table of that schema
             # (dropSchemaInSharding, syncer/syncer.go:2301-2306): group
             # members, tracked schemas, and routed lakes are the three
@@ -222,42 +261,39 @@ class ReplayRunner:
                 for members in self.barrier.groups.values():
                     known |= set(members)
             applied = []
-            for t in sorted(known):
-                if t.startswith(prefix):
-                    applied += self.handle_ddl(
-                        DdlEvent("drop_table", t, ev.file_seq, ev.pos, suffix=ev.suffix)
-                    )
+            for t in sorted(t for t in known if t.startswith(prefix)):
+                drop = DdlEvent("drop_table", t, ev.file_seq, ev.pos, suffix=ev.suffix)
+                if not self._ddl_filtered(drop):
+                    applied += self._handle_table_ddl(drop)
             # tables of the schema known ONLY through a route pattern
             # (never tracked/grouped) still need gating: a redelivered
             # pre-drop DML for them must not resurrect rows, same as an
-            # explicit DROP TABLE would guarantee
+            # explicit DROP TABLE would guarantee. A filtered or skipped
+            # DROP DATABASE never gets here, so it gates nothing
+            # (ADVICE r03 #4)
             self.dropped_schemas.add(ev.source_table)
             return applied
         if ev.action in ("create_table", "drop_table", "truncate_table"):
-            overridden = self._overridden(ev)
-            if overridden is not None:
-                return overridden
             return self._handle_table_ddl(ev)
         if ev.action == "rename_table":
-            replay = self.online_ddl.on_rename(ev.source_table, ev.target_table)
             applied = []
-            for i, act in enumerate(replay):
+            for i, act in enumerate(self.online_ddl.on_rename(ev.source_table, ev.target_table)):
                 # buffered ghost DDLs replay AT the swap location with a
                 # suffix ordinal (Location.Suffix analog) — never by
                 # inflating pos, which would obsolete later genuine DDLs
                 # offset by the rename event's own suffix: a multi-pair
                 # RENAME statement yields pair events at suffix 0..k and
                 # their replayed actions must order after their pair
-                act = {**act, "file_seq": ev.file_seq, "pos": ev.pos,
-                       "suffix": ev.suffix + i + 1}
+                swap = DdlEvent.from_dict(
+                    act, source_table=ev.target_table, file_seq=ev.file_seq,
+                    pos=ev.pos, suffix=ev.suffix + i + 1,
+                )
                 # DDL filter rules apply to swap-replayed actions too: a
                 # rule ignoring e.g. drop_column on the real table must
                 # also suppress it arriving via gh-ost/pt-osc (ADVICE r02)
-                if self._ddl_filtered(ev.target_table, act):
-                    continue
-                applied += self._apply_resolved(ev.target_table, act)
+                if not self._ddl_filtered(swap):
+                    applied += self._dispatch(swap)
             return applied
-
         if ev.action == "add_generated_column":
             # generated columns are tracked upstream but their values
             # are never replicated (syncer/dml.go:358-395): the ADD
@@ -265,22 +301,16 @@ class ReplayRunner:
             # declaring table's TARGET (dropped at _to_target_shape)
             # so later DMLs keep applying end-to-end (VERDICT r04 #3).
             # No lake schema change — no value ever lands downstream.
-            action = ev.to_action()
-            if self._ddl_filtered(ev.source_table, action):
-                return []
-            # _apply_resolved owns the generated-vs-column routing (a
-            # replace can swap either kind in for either kind)
-            return self._apply_resolved(ev.source_table, action)
-
+            self._register_generated([ev.column], ev.source_table)
+            act = ev.to_action()
+            self.applied_ddl.append(act)
+            return [act]
         if ev.action == "add_unique_key":
             # advisory on plain-PK tables (no physical index on a lake
             # table); REFUSED on declared-ladder tables — identity
             # strings are hashed into bucket ids at write time, so
             # extending the ladder mid-stream would re-identify (and
             # re-bucket) existing rows and split their update chains
-            overridden = self._overridden(ev)
-            if overridden is not None:
-                return overridden
             lake = self._lake_for(ev.source_table)
             if lake is not None and lake.exists and lake._load_meta().unique_keys:  # noqa: SLF001
                 raise ValueError(
@@ -290,46 +320,17 @@ class ReplayRunner:
                     "DDL with an error operator if the index is advisory"
                 )
             return []
-
         kind, _real = classify(ev.source_table)
-        action = ev.to_action()
-        if self._ddl_filtered(ev.source_table, action):
-            return []  # location still advances via the applied-DDL gate being untouched
         if kind in ("ghost", "trash"):
-            self.online_ddl.on_ddl(ev.source_table, action)
+            self.online_ddl.on_ddl(ev.source_table, ev.to_dict())
             return []
         if (
             self.optimistic_group
             and ev.source_table in self.optimistic_group
             and ev.action in ("add_column", "widen_type", "drop_column")
         ):
-            applied = []
-            for act in self.error_ops.resolve(action):
-                tbl = act.get("source_table") or ev.source_table
-                if act["action"] == "add_generated_column":
-                    # same replacement hatch as _apply_resolved: a
-                    # `ctl binlog replace` can swap a generated-column
-                    # ADD in for a plain column DDL on an optimistic
-                    # table too — registry.apply would raise 'unknown
-                    # ddl action' with the at-most-once op spent
-                    self._register_generated([act["column"]], tbl)
-                    self.applied_ddl.append(act)
-                    applied.append(act)
-                elif (
-                    act["action"] in ("add_column", "widen_type", "drop_column")
-                    and tbl in self.optimistic_group
-                ):
-                    # honor the table the replacement names (same as
-                    # _apply_resolved): only group members join the
-                    # optimistic schema sync
-                    applied += self._optimistic_sync(tbl, act)
-                else:
-                    # a replacement outside the optimistic-joinable set
-                    # (e.g. rename), or one naming a non-group table,
-                    # applies exactly as on a non-optimistic table
-                    applied += self._apply_one(tbl, act)
-            return applied
-        return self._apply_resolved(ev.source_table, action)
+            return self._optimistic_sync(ev.source_table, ev.to_action())
+        return self._apply_one(ev.source_table, ev.to_action())
 
     def _handle_table_ddl(self, ev: DdlEvent) -> list[dict]:
         """CREATE / DROP / TRUNCATE TABLE with the reference's
@@ -482,81 +483,6 @@ class ReplayRunner:
                     "skip the rename with an error operator. Offending "
                     f"expression(s): {hit}"
                 )
-
-    def _overridden(self, ev: DdlEvent) -> list[dict] | None:
-        """Filter rules and error operators for a statement that applies
-        whole (DROP DATABASE, table lifecycle, ADD UNIQUE): the actions
-        applied in its place — none when a rule or a skip operator drops
-        it, a replace operator's replacements (honored, never silently
-        discarded: ADVICE r03 #4) — or None when it applies as is."""
-        action = ev.to_action()
-        if self._ddl_filtered(ev.source_table, action):
-            return []
-        resolved = self.error_ops.resolve(action)
-        if len(resolved) == 1 and resolved[0] is action:
-            return None
-        return self._dispatch_replacements(ev, resolved)
-
-    def _dispatch_replacements(self, ev: DdlEvent, resolved: list[dict]) -> list[dict]:
-        """Apply a replace operator's injected actions in place of a
-        statement that applies whole. Column-level replacements apply
-        directly (already resolved — routing them through
-        `_apply_resolved` would re-resolve the same location and
-        re-expand the list); lifecycle replacements re-dispatch as
-        DdlEvents. A nested drop_database replacement is rejected
-        explicitly — expanding it would re-consult the same operator."""
-        applied = []
-        for act in resolved:
-            kind = act["action"]
-            if kind == "drop_database":
-                raise ValueError(
-                    "replace operator cannot inject drop_database "
-                    f"(at {act.get('file_seq')},{act.get('pos')})"
-                )
-            if kind in ("create_table", "drop_table", "truncate_table"):
-                applied += self._handle_table_ddl(
-                    DdlEvent(
-                        kind,
-                        # replacement actions composed from SQL (`ctl
-                        # binlog replace`) carry the table the statement
-                        # NAMES as `source_table`; hand-written action
-                        # dicts may use `table`; else the original
-                        # event's table
-                        act.get("table")
-                        or act.get("source_table")
-                        or ev.source_table,
-                        act.get("file_seq", ev.file_seq),
-                        act.get("pos", ev.pos),
-                        suffix=act.get("suffix", 0),
-                        columns=act.get("columns"),
-                        key=act.get("key"),
-                        unique_keys=act.get("unique_keys"),
-                        generated=act.get("generated"),
-                    )
-                )
-            else:
-                applied += self._apply_one(
-                    act.get("source_table") or ev.source_table, act
-                )
-        return applied
-
-    def _apply_resolved(self, source_table: str, action: dict) -> list[dict]:
-        applied = []
-        for act in self.error_ops.resolve(action):
-            tbl = act.get("source_table") or source_table
-            if act["action"] == "add_generated_column":
-                # an error-operator REPLACEMENT can be a generated-column
-                # ADD even when the original event was a plain column DDL
-                # — route it to the registration path, not lake.apply_ddl
-                # (which would raise 'unknown ddl action' and kill the
-                # batch with the at-most-once op already spent; review r5)
-                self._register_generated([act["column"]], tbl)
-                self.applied_ddl.append(act)
-                applied.append(act)
-                continue
-            # a replacement composed from SQL names its own table
-            applied += self._apply_one(tbl, act)
-        return applied
 
     def _apply_one(self, source_table: str, act: dict, force: bool = False) -> list[dict]:
         """Apply ONE already-resolved column-level action (barrier
@@ -766,27 +692,12 @@ class ReplayRunner:
         return n, merged
 
     def pending_locks(self) -> list[dict]:
-        """show-ddl-locks analog (dm/ctl/master/show_ddl_locks.go): the
-        pessimistic barrier's unresolved shard-DDL locks, one entry per
-        (target, ddl) with synced/unsynced member lists. Also derivable
-        offline from runner_state.json (main.py ctl ddl-locks reads
-        that); this is the live view."""
-        import json as _json
-
+        """The live view of the barrier's unresolved shard-DDL locks
+        (`ddl_coordinator.pending_locks`; `main.py ctl ddl-locks` lists
+        the same from runner_state.json)."""
         if self.barrier is None:
             return []
-        out = []
-        for tgt, per in sorted(self.barrier.announced.items()):
-            members = set(self.barrier.groups.get(tgt, []))
-            for k, seen in sorted(per.items()):
-                out.append({
-                    "lock_id": f"{tgt}#{k}",
-                    "target": tgt,
-                    "ddl": _json.loads(k),
-                    "synced": sorted(seen),
-                    "unsynced": sorted(members - seen),
-                })
-        return out
+        return pending_locks(self.barrier.announced, self.barrier.groups)
 
     def force_unlock(
         self,
@@ -917,19 +828,28 @@ class ReplayRunner:
     # ------------------------------------------------------------ replay
     def replay(self, envelope: DataFrame, ddl_events: list[DdlEvent]) -> list[MergeStats]:
         """Batch replay of a bounded feed with interleaved DDL:
-        split the feed at each DDL location (flush-before-DDL), merge
-        each range, apply the DDL, continue. Post-DDL ranges are
+        split the feed at each DDL statement location
+        (flush-before-DDL), merge each range, apply the statement,
+        continue. Post-DDL ranges are
         projected to the evolved schema by the pipeline's flatten (the
         envelope's `after` may lack new columns — they fill as null).
         Returns the stats of every merge it ran, spill drains included."""
-        evs = sorted(ddl_events, key=lambda e: e.loc())
+        stmts = _statements(ddl_events)
         merged: list[MergeStats] = []
-        for i, part in enumerate(location_ranges(envelope, [e.loc() for e in evs])):
+        for i, part in enumerate(location_ranges(envelope, [g[0].loc() for g in stmts])):
             if i:
-                self.handle_ddl(evs[i - 1])
+                self.handle_ddl(*stmts[i - 1])
                 merged += self._drain()[1]
             merged += self.apply_dml_batch(part).values()
         return merged + self._drain()[1]
+
+
+def _statements(events) -> list[list[DdlEvent]]:
+    """DDL events grouped by statement location (file_seq, pos), in
+    location order."""
+    return [
+        list(g) for _, g in groupby(sorted(events, key=DdlEvent.loc), key=lambda e: e.loc()[:2])
+    ]
 
 
 def location_ranges(

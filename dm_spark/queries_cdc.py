@@ -693,7 +693,7 @@ def q_change_feed_chain(spark, sf_dir):
         spark, tempfile.mkdtemp(prefix="dm_q_"), SCHEMA, KEY,
         n_buckets=_fixture_buckets(sf_dir)
     )
-    lake2.merge_into(lake1.changes().drop("_change_version"))
+    lake2.merge_into(lake1.changes())
     return _final_us(lake2)
 
 

@@ -109,6 +109,26 @@ class ShardDdlBarrier:
         return b
 
 
+def pending_locks(announced: dict, groups: dict) -> list[dict]:
+    """show-ddl-locks (dm/ctl/master/show_ddl_locks.go): the unresolved
+    pessimistic shard-DDL locks, one entry per (target, ddl) with its
+    synced and unsynced members. `announced` is target -> ddl key ->
+    announcing members, as a live barrier holds it or as the runner
+    state persists it (`ShardDdlBarrier.to_json`)."""
+    out = []
+    for tgt, per in sorted(announced.items()):
+        members = set(groups.get(tgt, []))
+        for k, seen in sorted(per.items()):
+            out.append({
+                "lock_id": f"{tgt}#{k}",
+                "target": tgt,
+                "ddl": json.loads(k),
+                "synced": sorted(seen),
+                "unsynced": sorted(members - set(seen)),
+            })
+    return out
+
+
 class PendingSpill:
     """Deferred-DML store: spilled as parquet under `dir`, merged back
     after barrier release (the re-sync streamer analog)."""

@@ -138,10 +138,10 @@ def replicate_lake_poll(
         head = src._head_version()  # noqa: SLF001 — snapshot HEAD read
         if head <= cursor:
             return
-        # tag_versions=False: the whole catch-up window coalesces into
-        # one scan per schema group — the plan stays O(1) even when the
-        # replica is thousands of source versions behind
-        window = src.changes(cursor + 1, head, tag_versions=False)
+        # the whole catch-up window reads in one scan per schema group —
+        # the plan stays O(1) even when the replica is thousands of
+        # source versions behind
+        window = src.changes(cursor + 1, head)
         st = dst.merge_into(window, batch_id=head, stream_id=stream_id)
         stats.append(
             {

@@ -9,7 +9,7 @@ Mode `all`: snapshot, then stream from the snapshot watermark —
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +27,10 @@ class Task:
     lake: LakeTable
     feed_dir: str
     checkpoint_dir: str
+    # whether the last run_incremental/run_all drained the feed it found
+    # to the end (False: a stop, a pause outlasting the timeout, or the
+    # timeout itself cut it short); None before any drain
+    drained: bool | None = field(default=None, init=False)
 
     def run_full(self, snapshot: DataFrame) -> int:
         """Full snapshot load (loader/loader.go:566 analog)."""
@@ -48,7 +52,9 @@ class Task:
             # swap (runtime config_patch) would silently drop a patched
             # method and re-apply pre-snapshot events
             pipeline.location_floor = from_location
-        return drv.run_available_now()
+        stats = drv.run_available_now()
+        self.drained = drv.drained
+        return stats
 
     def run_all(self, snapshot: DataFrame, snapshot_location: tuple[int, int]) -> list[dict]:
         """Snapshot then catch-up stream (mode `all`)."""

@@ -58,6 +58,8 @@ def dedup_pass():
     head = raw._head_version()
     if head <= cursor:
         return 0
+    # the window since the cursor, read in one scan however many
+    # versions it spans
     win = raw.changes(cursor + 1, head).where(F.col("op") != "D")
     fp = F.xxhash64(F.lower(F.regexp_replace("text", r"\s+", " ")))
     batch = win.select(

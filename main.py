@@ -7,6 +7,8 @@ Task file (YAML or JSON): see `examples/task.yaml`. Modes:
 - full:        batch snapshot load (dump+load units)
 - incremental: drain the relay feed via Structured Streaming, then stop
 - all:         snapshot, then stream from the snapshot watermark
+               (both drains exit 1 when a stop, a pause or the timeout
+               cut them short; their JSON line says `"drained": false`)
 - tail:        tail the relay feed live (until `timeout_sec`, 0 = forever)
 - replicate:   copy another lake's change feed (`paths.src_lake`) into
                this lake (`examples/task_replicate.yaml`)
@@ -28,6 +30,7 @@ import uuid
 from dm_spark.config import TaskConfig
 from dm_spark.lake import LakeTable
 from dm_spark.session import get_spark
+from dm_spark.streaming.ddl_coordinator import pending_locks
 from dm_spark.streaming.driver import (
     CdcStreamDriver,
     check_binlog_op,
@@ -75,22 +78,10 @@ def _runner_state(cp_dir: str) -> dict:
 
 def _pending_locks(cp_dir: str) -> list[dict]:
     """show-ddl-locks from the persisted runner state (written
-    atomically after every batch) — same shape as
-    ReplayRunner.pending_locks, no driver round-trip."""
+    atomically after every batch), by the law ReplayRunner.pending_locks
+    applies to the live barrier — no driver round-trip."""
     state = _runner_state(cp_dir)
-    groups = state.get("barrier_groups") or {}
-    out = []
-    for tgt, per in sorted((state.get("barrier") or {}).items()):
-        members = set(groups.get(tgt, []))
-        for k, seen in sorted(per.items()):
-            out.append({
-                "lock_id": f"{tgt}#{k}",
-                "target": tgt,
-                "ddl": json.loads(k),
-                "synced": sorted(seen),
-                "unsynced": sorted(members - set(seen)),
-            })
-    return out
+    return pending_locks(state.get("barrier") or {}, state.get("barrier_groups") or {})
 
 
 def _task_status(cp_dir: str, control: dict, lake_dirs: list[str]) -> dict:
@@ -403,11 +394,11 @@ def main(argv: list[str]) -> int:
             from_location=tuple(spec["from_location"]) if "from_location" in spec else None,
             max_files_per_trigger=spec.get("max_files_per_trigger", 4),
         )
-        print(json.dumps({"mode": mode, "batches": stats}))
+        print(json.dumps({"mode": mode, "batches": stats, "drained": task.drained}))
     elif mode == "all":
         snapshot = spark.read.parquet(spec["snapshot_path"])
         stats = task.run_all(snapshot, tuple(spec["snapshot_location"]))
-        print(json.dumps({"mode": mode, "batches": stats}))
+        print(json.dumps({"mode": mode, "batches": stats, "drained": task.drained}))
     elif mode == "replicate":
         # lake-to-lake: tail another LakeTable's change feed (CDC-out)
         # by the version cursor, which reads the change log out of the
@@ -443,7 +434,9 @@ def main(argv: list[str]) -> int:
             }
         )
     )
-    return 0
+    # a drain cut short (stop, a pause outlasting the timeout, the
+    # timeout itself) left feed unapplied: never report it as success
+    return 1 if task.drained is False else 0
 
 
 if __name__ == "__main__":

@@ -53,7 +53,7 @@ def test_change_feed_chain_reproduces_state(spark, tmp_path, mode):
     src.merge_into(_ev(spark, [("I", "d", 4, "d4", 2, 1)]), batch_id=2)
 
     dst = _mk(spark, tmp_path, f"dst_{mode}", write_mode=mode)
-    dst.merge_into(src.changes().drop("_change_version"))
+    dst.merge_into(src.changes())
     assert _state(dst) == _state(src)
     assert ("b", 1, "b1") not in _state(dst)  # the delete propagated
 
@@ -68,9 +68,9 @@ def test_change_feed_incremental_consumption(spark, tmp_path):
     src.merge_into(_ev(spark, [("U", "a", 2, "a2", 1, 1), ("D", "b", None, None, 1, 2)]), batch_id=1)
 
     dst = _mk(spark, tmp_path, "dst_inc")
-    dst.merge_into(src.changes(1, v_mid).drop("_change_version"), batch_id=0)
+    dst.merge_into(src.changes(1, v_mid), batch_id=0)
     assert ("b", 1, "b1") in _state(dst)  # mid-stream state includes b
-    dst.merge_into(src.changes(v_mid + 1).drop("_change_version"), batch_id=1)
+    dst.merge_into(src.changes(v_mid + 1), batch_id=1)
     assert _state(dst) == _state(src)
 
 
@@ -390,23 +390,20 @@ def test_chain_through_mid_stream_ddl(spark, tmp_path):
 
 
 def test_untagged_changes_single_scan(spark, tmp_path):
-    """The catch-up plan shape: tag_versions=False must coalesce the
-    whole window into ONE parquet scan (per schema group) instead of
-    one per version — the difference between O(1) and O(versions) plans
-    when a replica is far behind — while returning the same rows."""
+    """The catch-up plan shape: changes() coalesces the whole window
+    into ONE parquet scan (per schema group) instead of one per version
+    — the difference between O(1) and O(versions) plans when a replica
+    is far behind — and returns every version's rows."""
     src = _mk(spark, tmp_path, "src_scan", change_feed=True)
     for i in range(4):
         src.merge_into(_ev(spark, [("I", f"k{i}", i, f"t{i}", 0, i + 1)]), batch_id=i)
 
-    tagged = src.changes()
-    untagged = src.changes(tag_versions=False)
-    want = {(r.k, r.v) for r in tagged.select("k", "v").collect()}
-    assert {(r.k, r.v) for r in untagged.select("k", "v").collect()} == want
-    assert len(want) == 4
-    n_scans = untagged._jdf.queryExecution().executedPlan().toString().count("FileScan")
+    win = src.changes()
+    assert {(r.k, r.v) for r in win.select("k", "v").collect()} == {
+        (f"k{i}", i) for i in range(4)
+    }
+    n_scans = win._jdf.queryExecution().executedPlan().toString().count("FileScan")
     assert n_scans == 1, n_scans
-    n_scans_tagged = tagged._jdf.queryExecution().executedPlan().toString().count("FileScan")
-    assert n_scans_tagged == 4, n_scans_tagged
 
 
 def test_changes_requires_flag(spark, tmp_path):

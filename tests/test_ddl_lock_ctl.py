@@ -234,3 +234,24 @@ def test_unlock_and_status_via_ctl(spark, runner, tmp_path):
         plain._check(
             "unlock_op", {"target": "t", "ident": {"action": "x"}, "file_seq": 0, "pos": 0}
         )
+
+
+def test_ctl_ddl_locks_prints_the_live_listing(spark, runner, tmp_path, capsys):
+    """`ctl ddl-locks` lists, from the persisted runner state, exactly
+    what the live runner's `pending_locks()` reports — one listing law
+    (`ddl_coordinator.pending_locks`) for both views."""
+    _stick_lock(spark, runner)
+    # a second lock on the same target, announced by the other member
+    runner.handle_ddl(DdlEvent("drop_column", "shard_1.t", 0, 7, column="tool"))
+    cp = str(tmp_path / "cp")
+    CdcStreamDriver(
+        spark, str(tmp_path / "feed"), cp, runner.pipeline,
+        {"transcripts": runner.lake}, runner=runner,
+    )._save_runner_state()
+    capsys.readouterr()
+    assert mainmod.ctl([cp, "ddl-locks"]) == 0
+    printed = json.loads(capsys.readouterr().out)
+    assert printed == {"locks": runner.pending_locks()}
+    assert [(lk["synced"], lk["unsynced"]) for lk in printed["locks"]] == [
+        (["shard_0.t"], ["shard_1.t"]), (["shard_1.t"], ["shard_0.t"]),
+    ]

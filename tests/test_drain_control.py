@@ -152,3 +152,40 @@ def test_drain_launched_with_stop_runs_no_batch(spark, sf_dir, tmp_path):
     assert drv.run_available_now() == []
     assert stream_batches(drv.checkpoint_dir) == (-1, -1)
     assert not lake.global_checkpoint()
+
+
+def test_cli_drain_reports_whether_it_finished(spark, sf_dir, tmp_path, capsys):
+    """`main.py` mode incremental says whether its drain finished: after
+    `ctl stop` the drain ends with the feed unapplied, its JSON line
+    says `"drained": false` and it exits 1; after `ctl resume` the full
+    drain says true and exits 0."""
+    import json
+
+    paths = {k: str(tmp_path / k) for k in ("lake", "feed", "checkpoint")}
+    spec = {
+        "mode": "incremental",
+        "paths": paths,
+        "schema": [{"name": n, "type": t} for n, t in SCHEMA],
+        "task": {
+            "key": KEY,
+            "n_buckets": 4,
+            "routes": [{"pattern": "shard_*.transcripts_*", "target": "transcripts"}],
+            # the CLI shares this test session; keep its shuffle width
+            "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        },
+    }
+    spec_path = tmp_path / "task.json"
+    spec_path.write_text(json.dumps(spec))
+    write_feed_chunks(feedmod.change_feed(spark, sf_dir), paths["feed"], n_chunks=2)
+
+    def run() -> tuple[int, bool]:
+        capsys.readouterr()
+        rc = mainmod.main(["main.py", str(spec_path)])
+        lines = [json.loads(ln) for ln in capsys.readouterr().out.splitlines() if ln.startswith("{")]
+        return rc, next(ln["drained"] for ln in lines if ln.get("mode") == "incremental")
+
+    assert mainmod.ctl([paths["checkpoint"], "stop"]) == 0
+    assert run() == (1, False)
+    assert mainmod.ctl([paths["checkpoint"], "resume"]) == 0
+    assert run() == (0, True)
+    assert_tables_equal(spark_final(LakeTable(spark, paths["lake"])), duck_replay(sf_dir))

@@ -19,9 +19,11 @@ from dm_spark import feed as feedmod
 from dm_spark.config import RouteRule, TaskConfig
 from dm_spark.lake import LakeTable
 from dm_spark.operators import ApplyPipeline
-from dm_spark.plans import ReplayRunner
+from dm_spark.plans import DdlEvent, ReplayRunner
+from dm_spark.schema import parse_ddl
 from dm_spark.sources.relay import write_feed_chunks
 from dm_spark.streaming import CdcStreamDriver
+from dm_spark.streaming.driver import check_binlog_op
 
 from tests.test_pipeline_e2e import (
     KEY,
@@ -30,6 +32,7 @@ from tests.test_pipeline_e2e import (
     duck_replay,
     spark_final,
 )
+from tests.test_replay_runner import ev
 
 # refused by the DDL grammar: identity changes move data (ddl_parser
 # _REJECT_ALTER_RE) — the canonical statement a task blocks on
@@ -80,8 +83,9 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
     drv3._stage(drv3._read_control())
     assert "binlog_op" not in drv3._staged
 
-    # replace: statements parsed at compose time; actions interop with
-    # the inline-DDL escape hatch (rep["source_table"] construction)
+    # replace: statements parsed at compose time and stored as DdlEvent
+    # fields; the inline-DDL escape hatch only marks the refused
+    # statement's location, and the runner resolves the operator there
     assert mainmod.ctl([
         cp, "binlog", "replace", "4:9",
         "ALTER TABLE shard_0.t ADD COLUMN r2 TEXT",
@@ -92,12 +96,14 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
     ov = runner.error_ops.ops[(4, 9)]
     assert ov["kind"] == "replace"
     assert ov["actions"] == [{
-        "action": "add_column", "source_table": "shard_0.t",
-        "column": "r2", "new_type": "string",
+        "action": "add_column", "source_table": "shard_0.t", "file_seq": 4,
+        "pos": 9, "column": "r2", "new_type": "string", "suffix": 0,
     }]
     inline = feedmod.query_events(spark, [(POISON_SQL, "shard_0.t", 4, 9)])
     evs = drv._extract_inline_ddl(inline)
-    assert [(e.action, e.column, e.suffix) for e in evs] == [("add_column", "r2", 1)]
+    assert [(e.action, e.loc()) for e in evs] == [("unsupported", (4, 9, 0))]
+    applied = runner.handle_ddl(*evs)
+    assert [(a["action"], a["column"], a["suffix"]) for a in applied] == [("add_column", "r2", 1)]
 
     # revert removes the operator
     assert mainmod.ctl([cp, "binlog", "revert", "4:9"]) == 0
@@ -163,7 +169,7 @@ def test_binlog_replace_one_law_for_ctl_and_driver(spark, tmp_path, sqls, ok):
 
 def test_ctl_replace_actions_apply_through_resolve(spark, tmp_path):
     """A ctl-composed replace operator's actions must flow through
-    ErrorOperators.resolve -> _apply_resolved with the table the
+    ErrorOperators.resolve -> ReplayRunner._dispatch with the table the
     statement NAMES (serialized as source_table), replacing a parseable
     but wrong DDL at that location."""
     from dm_spark.plans import DdlEvent
@@ -409,3 +415,126 @@ def test_pause_route_patch_on_unsettleable_batch_refused_not_crashed(
         spark_final(lake),
         duck_replay(sf_dir, where="NOT (file_seq = 0 AND pos = 500)"),
     )
+
+
+# ------------------------------------------------ one resolve, one dispatch
+# An error operator resolves once per statement location, in
+# ReplayRunner.handle_ddl; every event it yields, whatever its kind,
+# goes through the runner's one per-kind dispatch.
+
+CREATE_SQL = (
+    "CREATE TABLE shard_0.t (conv_id VARCHAR(64), turn_idx INT, role TEXT, "
+    "text TEXT, tool TEXT, ts DATETIME, PRIMARY KEY (conv_id, turn_idx))"
+)
+
+
+def _runner(spark, tmp_path, **kw):
+    cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.t", target="transcripts")])
+    lake = LakeTable.create(spark, str(tmp_path / "lake_d"), SCHEMA, KEY, n_buckets=4)
+    return ReplayRunner(pipeline=ApplyPipeline(cfg), lake=lake, **kw)
+
+
+def _replace(runner, fs, pos, *sqls):
+    """Register a replace operator exactly as `ctl binlog replace`
+    composes it."""
+    runner.error_ops.set_replace(fs, pos, check_binlog_op(
+        {"op": "replace", "file_seq": fs, "pos": pos, "sqls": list(sqls)}
+    ))
+
+
+def _alter(column="bad"):
+    return DdlEvent("add_column", "shard_0.t", 0, 3, column=column, new_type="string")
+
+
+def _truncate():
+    return DdlEvent("truncate_table", "shard_0.t", 0, 3)
+
+
+@pytest.mark.parametrize("original, sql, optimistic, want", [
+    (_alter(), "TRUNCATE TABLE shard_0.t", False,
+     lambda r: r.lake.read().count() == 0),
+    (_alter(), CREATE_SQL, False,
+     lambda r: r.registry.schemas["shard_0.t"][0] == ("conv_id", "string")),
+    (_alter(), "DROP DATABASE shard_0", False,
+     lambda r: r.dropped_schemas == {"shard_0"}),
+    (_truncate(), "ALTER TABLE shard_0.t ADD COLUMN g INT AS (turn_idx + 1)", False,
+     lambda r: r.dynamic_generated == {"transcripts": ["g"]} and r.lake.read().count() == 1),
+    (_truncate(), "ALTER TABLE shard_0.t ADD UNIQUE KEY u (text)", False,
+     lambda r: r.lake.read().count() == 1),
+    # TRUNCATE of a shard-group member is filtered (syncer.go:2318-2333)
+    (_alter(), "TRUNCATE TABLE shard_0.t", True,
+     lambda r: r.lake.read().count() == 1),
+], ids=["truncate_at_alter", "create_at_alter", "drop_database_at_alter",
+        "generated_at_truncate", "add_unique_at_truncate", "truncate_at_optimistic_alter"])
+def test_cross_kind_replacement_dispatches_by_kind(spark, tmp_path, original, sql, optimistic, want):
+    """A replacement of any kind applies at a location of any kind: it
+    goes through the same per-kind dispatch as a parsed statement,
+    never into the column-DDL path of the statement it replaces."""
+    runner = _runner(
+        spark, tmp_path,
+        optimistic_group=["shard_0.t", "shard_1.t"] if optimistic else None,
+    )
+    runner.replay(ev(spark, [("I", "a", 1, "v1", "shard_0.t", 0, 1)]), [])
+    _replace(runner, 0, 3, sql)
+    runner.handle_ddl(original)
+    assert want(runner)
+    assert "bad" not in runner.lake.read().columns
+
+
+@pytest.mark.parametrize("where", ["multi_clause_alter", "unparseable"])
+def test_replace_applies_once_per_location(spark, tmp_path, where):
+    """A replace at a location holding several events (a multi-clause
+    ALTER) or none the grammar accepts (a refused statement) applies
+    each replacement exactly once."""
+    drv, runner, _cp = _driver(spark, tmp_path)
+    _replace(
+        runner, 0, 3,
+        "ALTER TABLE shard_0.t ADD COLUMN g INT AS (turn_idx + 1)",
+        "ALTER TABLE shard_0.t ADD COLUMN fixed INT",
+    )
+    if where == "multi_clause_alter":
+        evs = parse_ddl("ALTER TABLE shard_0.t ADD COLUMN a1 INT, ADD COLUMN a2 INT", 0, 3)
+        assert len(evs) == 2
+    else:
+        evs = drv._extract_inline_ddl(feedmod.query_events(spark, [(POISON_SQL, "shard_0.t", 0, 3)]))
+    runner.replay(ev(spark, [("I", "a", 1, "v1", "shard_0.t", 0, 1)]), evs)
+    assert [(a["action"], a["column"], a["suffix"]) for a in runner.applied_ddl] == [
+        ("add_generated_column", "g", 1), ("add_column", "fixed", 2),
+    ]
+    cols = runner.lake.read().columns
+    assert "fixed" in cols and not {"a1", "a2", "g"} & set(cols)
+
+
+def test_replace_keeps_the_default(spark, tmp_path):
+    """`binlog replace 'ADD COLUMN ... DEFAULT 7'` backfills existing
+    rows with 7, like the same statement arriving in the feed."""
+    runner = _runner(spark, tmp_path)
+    _replace(runner, 0, 3, "ALTER TABLE shard_0.t ADD COLUMN rating INT DEFAULT 7")
+    runner.replay(ev(spark, [("I", "a", 1, "v1", "shard_0.t", 0, 1)]), [_alter()])
+    assert [r.rating for r in runner.lake.read().collect()] == [7]
+
+
+def test_skip_at_ghost_alter_and_at_rename_is_honoured(spark, tmp_path):
+    """A skip at a ghost-table ALTER drops the ALTER: nothing is
+    buffered, so the swap applies nothing. A skip at the RENAME holds
+    the swap back: the ghost's buffered DDLs stay buffered and apply at
+    the cut-over that does happen."""
+    runner = _runner(spark, tmp_path)
+    feed = ev(spark, [("I", "a", 1, "v1", "shard_0.t", 0, 1)])
+    ghost = [
+        DdlEvent("add_column", "shard_0._t_gho", 0, 3, column="skipped", new_type="int"),
+        DdlEvent("add_column", "shard_0._t_gho", 0, 4, column="rating", new_type="int"),
+    ]
+    runner.error_ops.set_skip(0, 3)
+    runner.error_ops.set_skip(0, 5)
+    runner.replay(feed, [
+        *ghost, DdlEvent("rename_table", "shard_0._t_gho", 0, 5, target_table="shard_0.t"),
+    ])
+    assert runner.applied_ddl == []
+    assert [a["column"] for a in runner.online_ddl.buffered["shard_0.t"]] == ["rating"]
+    applied = runner.handle_ddl(
+        DdlEvent("rename_table", "shard_0._t_gho", 0, 6, target_table="shard_0.t")
+    )
+    assert [(a["column"], a["pos"], a["suffix"]) for a in applied] == [("rating", 6, 1)]
+    cols = runner.lake.read().columns
+    assert "rating" in cols and "skipped" not in cols

@@ -1033,7 +1033,7 @@ def test_replace_with_generated_column_add_registers_not_crashes(spark, runner):
 def test_optimistic_replace_naming_other_table_routes_there(spark, tmp_path):
     """A `ctl binlog replace` at an optimistic-group location whose
     replacement SQL names a DIFFERENT (non-group) table must apply to
-    THAT table's lake — same contract as _apply_resolved ('a
+    THAT table's lake — same contract as every other replacement ('a
     replacement composed from SQL names its own table'). The pre-fix
     branch passed ev.source_table to the optimistic sync, joining the
     named table's column into the group's lake instead (review r5)."""
@@ -1072,7 +1072,7 @@ def test_optimistic_replace_with_generated_column_add(spark, tmp_path):
     binlog replace` swapping a generated-column ADD in for a plain
     column DDL must route to the generated registration, not to
     registry.apply's unknown-action error — the optimistic branch
-    previously bypassed _apply_resolved's routing (review r5)."""
+    previously bypassed the generated-column routing (review r5)."""
     cfg = TaskConfig(routes=[RouteRule(pattern="shard_*.t", target="transcripts")])
     lake = LakeTable.create(spark, str(tmp_path / "lake_og"), SCHEMA, KEY, n_buckets=4)
     runner = ReplayRunner(

@@ -84,13 +84,12 @@ def test_online_ddl_dml_filter(spark):
 
 def test_error_operators_skip_replace_revert():
     ops = ErrorOperators()
-    bad = {"action": "widen_type", "column": "x", "new_type": "json", "file_seq": 7, "pos": 3}
-    assert ops.resolve(bad) == [bad]
+    assert ops.resolve(7, 3) is None  # no operator: applies as parsed
     ops.set_skip(7, 3)
-    assert ops.resolve(bad) == []
+    assert ops.resolve(7, 3) == []
     ops.set_replace(7, 3, [{"action": "add_column", "column": "x2", "new_type": "string"}])
-    out = ops.resolve(bad)
+    out = ops.resolve(7, 3)
     # replacements keep the original pos and get a suffix ordinal
     assert out[0]["column"] == "x2" and out[0]["file_seq"] == 7
     assert out[0]["pos"] == 3 and out[0]["suffix"] == 1
-    assert ops.revert(7, 3) and ops.resolve(bad) == [bad]
+    assert ops.revert(7, 3) and ops.resolve(7, 3) is None
