@@ -138,6 +138,15 @@ class TaskConfig:
         c.ddl_filters = [DdlFilterRule(**r) for r in d.get("ddl_filters", [])]
         return c
 
+    def admits(self, source_table: str) -> bool:
+        """Driver-side twin of `ba_list_predicate` (allow list, if any,
+        then deny) — the block/allow rule for schema events."""
+
+        def hit(patterns: list[str]) -> bool:
+            return any(re.match(pattern_to_regex(p, self.case_sensitive), source_table) for p in patterns)
+
+        return (not self.allow_tables or hit(self.allow_tables)) and not hit(self.deny_tables)
+
     def route_of(self, source_table: str) -> str:
         """Driver-side twin of `route_tables` (first matching rule wins,
         unrouted keeps the source name) — used to route DDL events to

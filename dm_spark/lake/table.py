@@ -1443,8 +1443,8 @@ class LakeTable:
         minus the max applied event timestamp recorded in the committed
         checkpoint (a local manifest read). Delegates to the module
         helper :func:`checkpoint_lag_sec` — THE single implementation;
-        task.replication_lag_sec, CdcStreamDriver's per-batch lag_sec
-        gauge, and `main.py ctl status` (which reads manifests without
+        CdcStreamDriver's per-batch lag_sec gauge, `main.py`'s final
+        line and `main.py ctl status` (which reads manifests without
         a SparkSession) all use the same law, so the surfaces can never
         drift (UTC-naive arithmetic, clamped at 0, 3 decimals)."""
         return checkpoint_lag_sec(self.global_checkpoint(), now)

@@ -167,7 +167,6 @@ class ApplyPipeline:
         # compiled transforms by (config, floor, envelope `after` fields)
         self._compiled: dict[tuple, list] = {}
         self._no_queries = None
-        self._target_preds: dict[str, object] = {}
 
     def transform(self, feed: DataFrame) -> DataFrame:
         """Envelope -> flat change batch. The stages compile once per
@@ -252,15 +251,15 @@ class ApplyPipeline:
         self,
         flat: DataFrame,
         lakes: dict[str, "LakeTable"],
-        part=None,
+        part,
         points: dict | None = None,
         **merge_kw,
     ) -> dict[str, "MergeStats"]:
         """Merge a routed flat batch (the output of `transform`) into
         its target lakes: one atomic LWW commit per target, the DML
         workers of the reference (syncer/dml_worker.go:132-238). Each
-        target merges the rows `part(flat, target)` selects, by default
-        the rows routed to it; `points` maps a target to the per-table
+        target merges the rows `part(flat, target)` selects (the
+        runner's `_to_target_shape`); `points` maps a target to the per-table
         checkpoints its commit records. `salt_hot_keys` in the task
         config turns on the salted pre-reduction inside each merge.
 
@@ -269,8 +268,6 @@ class ApplyPipeline:
         merges fan out over a bounded thread pool: each lake's commit is
         still its own snapshot and no two threads touch one lake. Errors
         propagate after every merge has finished."""
-        if part is None:
-            part = self._target_rows
         pre = 16 if self.config.salt_hot_keys else None
         many = len(lakes) > 1
         if many:
@@ -299,11 +296,3 @@ class ApplyPipeline:
         finally:
             if many:
                 flat.unpersist()
-
-    def _target_rows(self, flat: DataFrame, target: str) -> DataFrame:
-        """`flat`'s rows routed to `target`, without the route column
-        (the predicate Column is built once per target)."""
-        pred = self._target_preds.get(target)
-        if pred is None:
-            pred = self._target_preds[target] = F.col("target_table") == target
-        return flat.where(pred).drop("target_table")

@@ -137,6 +137,9 @@ class ReplayRunner:
     # correct; this is the cheap path). Costs one small agg per batch.
     track_table_points: bool = False
     _points_cache: dict | None = None
+    # route predicate per target, built once (every Column costs py4j
+    # round trips, paid per micro-batch otherwise)
+    _route_preds: dict = field(default_factory=dict, repr=False, compare=False)
     # sources dropped mid-stream (DROP TABLE): their later DMLs are
     # filtered — the reference deletes the table's checkpoint and the
     # shard member leaves its group (syncer/syncer.go:2306-2317)
@@ -167,10 +170,6 @@ class ReplayRunner:
             if self.lake is None:
                 raise ValueError("ReplayRunner needs lake or lakes")
             self.lakes = {self.pipeline.config.target_table: self.lake}
-        elif self.lake is None:
-            self.lake = self.lakes.get(
-                self.pipeline.config.target_table, next(iter(self.lakes.values()))
-            )
         if self.barrier is not None and self.spill is None:
             # a barrier with nowhere to defer would silently MERGE the
             # blocked tables' rows (apply_dml_batch only splits when
@@ -178,8 +177,9 @@ class ReplayRunner:
             # lose those values irrecoverably
             raise ValueError("a ShardDdlBarrier needs a PendingSpill to defer blocked DMLs")
 
-    def _lake_for(self, source_table: str) -> LakeTable:
-        return self.lakes.get(self.pipeline.config.route_of(source_table), self.lake)
+    def _lake_for(self, source_table: str) -> LakeTable | None:
+        # None: the routed target has no lake here (its DMLs drop too)
+        return self.lakes.get(self.pipeline.config.route_of(source_table))
 
     def _register_generated(self, cols: list, source_table: str) -> None:
         """Register columns as generated-and-pruned for the TARGET the
@@ -200,9 +200,16 @@ class ReplayRunner:
 
     # -------------------------------------------------------------- DDL
     def _ddl_filtered(self, ev: DdlEvent) -> bool:
-        """Binlog DDL-filter rules (syncer/filter.go:30-120
-        skipQueryEvent/skipSQLByPattern): drop schema actions by kind or
+        """The admission rules of a schema event (syncer/filter.go:30-128
+        skipQueryEvent/skipByTable/skipSQLByPattern): the block/allow
+        lists its table's DMLs pass (a ghost or trash table answers for
+        its real table; a DROP DATABASE for the tables it expands to),
+        then the binlog DDL-filter rules, which drop actions by kind or
         by regex over the rendered action text, per table pattern."""
+        if ev.action != "drop_database" and not self.pipeline.config.admits(
+            classify(ev.source_table)[1] or ev.source_table
+        ):
+            return True
         action = ev.to_action()
         rendered = " ".join(
             str(action.get(k)) for k in ("action", "column", "new_name", "new_type")
@@ -366,7 +373,7 @@ class ReplayRunner:
                 import os
 
                 self.lakes[target] = LakeTable.create(
-                    self.lake.spark,
+                    next(iter(self.lakes.values())).spark,
                     os.path.join(self.lake_root, target),
                     [tuple(c) for c in ev.columns],
                     list(ev.key or []),
@@ -384,8 +391,8 @@ class ReplayRunner:
                     # LeaveGroup + re-evaluation: a pending shard DDL
                     # waiting only on the departing member applies now
                     tgt, done = self.barrier.shrink(ev.source_table)
-                    lake = self.lakes.get(tgt, self.lake)
-                    for i, act in enumerate(done):
+                    lake = self.lakes.get(tgt)
+                    for i, act in enumerate(done if lake is not None else ()):
                         act = {
                             **act,
                             "file_seq": ev.file_seq,
@@ -423,6 +430,8 @@ class ReplayRunner:
         derives nothing — lock-free convergence; its old-shape DMLs
         null-fill through the merge's schema tolerance."""
         lake = self._lake_for(source_table)
+        if lake is None:
+            return []
         cur = [(f["name"], f["type"]) for f in lake.schema_fields()]
         for t in self.optimistic_group:
             self.registry.seed(t, cur)
@@ -491,6 +500,8 @@ class ReplayRunner:
         operator has decided the group will never sync)."""
         applied = []
         lake = self._lake_for(source_table)
+        if lake is None:
+            return applied  # an unreplicated table: no lake to change
         if act["action"] in ("rename_column", "drop_column"):
             # BEFORE any state mutates: a refused rename/drop must leave
             # the lake catalog, registry and rename_map all untouched so
@@ -569,7 +580,7 @@ class ReplayRunner:
 
     # -------------------------------------------------------------- DML
     def apply_dml_batch(
-        self, envelope: DataFrame, batch_id: int | None = None
+        self, envelope: DataFrame, batch_id: int | None = None, stream_id: str | None = None
     ) -> dict[str, MergeStats]:
         """Transform + merge one envelope batch, honoring the barrier:
         blocked tables' rows spill; spilled rows re-merge once no
@@ -578,7 +589,6 @@ class ReplayRunner:
         stats."""
         blocked = self.barrier.blocked_sources() if self.barrier else set()
         env = self._gate_env(envelope)
-        pts_by_target: dict[str, dict] | None = None
         if blocked and self.spill is not None:
             # spill the *envelope* rows (pre-flatten keeps full fidelity)
             env, defer_env = split_blocked(env, blocked)
@@ -586,7 +596,9 @@ class ReplayRunner:
         # points advance only for rows actually merged (spilled tables'
         # points hold until their rows drain)
         new_pts, pts_by_target = self._candidate_points(env)
-        stats = self._merge_targets(self.pipeline.transform(env), batch_id, pts_by_target)
+        stats = self._merge_targets(
+            self.pipeline.transform(env), pts_by_target, batch_id=batch_id, stream_id=stream_id
+        )
         self._record_points(new_pts)
         return stats
 
@@ -632,19 +644,22 @@ class ReplayRunner:
             self._points_cache = pts
         return self._points_cache
 
-    def _merge_targets(
-        self, flat: DataFrame, batch_id: int | None = None, pts_by_target: dict | None = None
-    ) -> dict[str, MergeStats]:
+    def _merge_targets(self, flat: DataFrame, pts_by_target: dict | None, **gate) -> dict[str, MergeStats]:
         """One LWW merge per routed target lake, each over its rows in
-        the target's current shape."""
+        the target's current shape; `gate` (batch_id, stream_id) arms
+        each lake's exactly-once gate."""
         return self.pipeline.merge(
             flat, self.lakes, part=self._to_target_shape, points=pts_by_target,
-            batch_id=batch_id, epoch=self.epoch,
+            epoch=self.epoch, **gate,
         )
 
-    def _to_target_shape(self, flat: DataFrame, target: str | None = None) -> DataFrame:
-        target = target or self.pipeline.config.target_table
-        flat = flat.where(F.col("target_table") == target).drop("target_table")
+    def _to_target_shape(self, flat: DataFrame, target: str) -> DataFrame:
+        """`flat`'s rows routed to `target`, in the target's current
+        shape."""
+        pred = self._route_preds.get(target)
+        if pred is None:
+            pred = self._route_preds[target] = F.col("target_table") == target
+        flat = flat.where(pred).drop("target_table")
         # DDL-registered generated columns prune HERE, per target (by
         # upstream name, so before renames): the value never lands in
         # this lake, while a same-named data column on another target
@@ -662,8 +677,9 @@ class ReplayRunner:
         returns the number of envelope rows drained."""
         return self._drain()[0]
 
-    def _drain(self) -> tuple[int, list[MergeStats]]:
-        """:meth:`drain_pending`, also returning the drain's merge stats."""
+    def _drain(self) -> tuple[int, list[tuple[str, MergeStats]]]:
+        """:meth:`drain_pending`, also returning the drain's (target,
+        merge stats) pairs; never batch-id gated."""
         if self.spill is None:
             return 0, []
         drained = self.spill.drain()
@@ -677,12 +693,10 @@ class ReplayRunner:
         # gate the drain exactly like the live path
         ok_env = self._gate_env(ok_env)
         n = ok_env.count()
-        merged: list[MergeStats] = []
+        merged: list[tuple[str, MergeStats]] = []
         if n:
             new_pts, pts_by_target = self._candidate_points(ok_env)
-            merged = list(self._merge_targets(
-                self.pipeline.transform(ok_env), pts_by_target=pts_by_target
-            ).values())
+            merged = list(self._merge_targets(self.pipeline.transform(ok_env), pts_by_target).items())
             self._record_points(new_pts)
         # re-spill still-blocked rows into a NEW dir while the old files
         # are intact (lazy plans read them), then drop the old dirs
@@ -826,21 +840,33 @@ class ReplayRunner:
         self.applied_ddl = list(d.get("applied_ddl", []))
 
     # ------------------------------------------------------------ replay
-    def replay(self, envelope: DataFrame, ddl_events: list[DdlEvent]) -> list[MergeStats]:
+    def replay(
+        self,
+        envelope: DataFrame,
+        ddl_events: list[DdlEvent],
+        batch_id: int | None = None,
+        stream_id: str | None = None,
+    ) -> list[tuple[str, MergeStats]]:
         """Batch replay of a bounded feed with interleaved DDL:
         split the feed at each DDL statement location
         (flush-before-DDL), merge each range, apply the statement,
         continue. Post-DDL ranges are
         projected to the evolved schema by the pipeline's flatten (the
         envelope's `after` may lack new columns — they fill as null).
-        Returns the stats of every merge it ran, spill drains included."""
+
+        `batch_id`/`stream_id` arm the lakes' exactly-once gate on the
+        FIRST range only: a DDL-cut batch never gates itself out, and
+        its replay skips that range but re-merges the rest, a suffix
+        that LWW and the applied-DDL gate make idempotent. Returns the
+        (target, stats) pair of every merge, spill drains included."""
         stmts = _statements(ddl_events)
-        merged: list[MergeStats] = []
+        merged: list[tuple[str, MergeStats]] = []
+        gate = {"batch_id": batch_id, "stream_id": stream_id}
         for i, part in enumerate(location_ranges(envelope, [g[0].loc() for g in stmts])):
             if i:
                 self.handle_ddl(*stmts[i - 1])
                 merged += self._drain()[1]
-            merged += self.apply_dml_batch(part).values()
+            merged += self.apply_dml_batch(part, **(gate if i == 0 else {})).items()
         return merged + self._drain()[1]
 
 
@@ -867,6 +893,9 @@ def location_ranges(
     them — yielded, not skipped, so range i always follows cut i-1.
     Ranges are lazy filters; the input is never pinned (a caller that
     reuses an expensive upstream pins it first)."""
+    if not cuts:  # one range, the input itself (no py4j round trips)
+        yield df
+        return
     key = F.struct(*[F.col(c) for c in loc])
     lo = None
     for hi in [*cuts, None]:

@@ -7,10 +7,13 @@ Streaming query:
   :1055-1115): every batch ends with checkpoint rows and an atomic lake
   snapshot commit, so Spark's epoch IS the flush.
 - exactly-once: Spark file-source offsets (which files were read) +
-  `merge_into(batch_id, stream_id)` gating on the lake side. A replayed
-  batch after crash-restart is skipped by the gate; a redelivered event
-  from a fresh checkpoint loses last-write-wins. Both paths keep the
-  final table state identical (safe-mode analog, syncer/mode.go:26-68).
+  `merge_into(batch_id, stream_id)` gating on the lake side, carried by
+  each batch's first location range. A replayed batch after
+  crash-restart is skipped by the gate (a DDL-cut one re-merges only
+  the ranges after its first, a contiguous suffix that LWW and the
+  applied-DDL location gate make idempotent); a redelivered event from
+  a fresh checkpoint loses last-write-wins. Both paths keep the final
+  table state identical (safe-mode analog, syncer/mode.go:26-68).
 - lag metric: `now - max(applied event ts)` (secondsBehindMaster analog,
   syncer/syncer.go:802-845) recorded per batch in the lineage log.
 """
@@ -23,7 +26,10 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,8 +80,8 @@ MAX_INLINE_DDL_PER_BATCH = 1000  # op='Q' collect cap, see _extract_inline_ddl
 # One validator per control-file op kind. `main.py ctl` composes every
 # op through these, so a bad op is refused before it reaches
 # control.json (where it would kill the poll loop on every restart
-# until removed by hand); the driver runs the same check plus its mode
-# checks (CdcStreamDriver._check) when it stages or applies the op.
+# until removed by hand); the driver runs the same check
+# (CdcStreamDriver._check) when it stages or applies the op.
 
 # the runtime-swappable subset: the filter family (the reference's
 # update-task + handle-error surface). Route changes are swappable
@@ -206,6 +212,11 @@ def check_unlock_op(op: dict) -> None:
 
 
 class CdcStreamDriver:
+    """Every micro-batch replays through one `ReplayRunner`, its DDL
+    (in-band op='Q' rows, queued `ddl_events`) applied at its location.
+    Without `runner=` the driver builds one over `pipeline` and `lakes`;
+    a given runner brings its own."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -220,26 +231,27 @@ class CdcStreamDriver:
         epoch: int = 0,
         track_txn_intervals: bool = False,
     ):
+        from dm_spark.plans import ReplayRunner
+
         self.spark = spark
         self.feed_dir = feed_dir
         self.checkpoint_dir = checkpoint_dir
-        self.pipeline = pipeline
-        self.lakes = lakes
         self.max_files_per_trigger = max_files_per_trigger
         # stream identity ties the lake's batch-id gate to this checkpoint
         self.stream_id = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
         self.batch_stats: list[dict] = []
-        # DDL mode: batches route through a ReplayRunner so schema
-        # actions interleave with DMLs at their exact location
-        # (flush-before-DDL inside the batch); exactly-once then rests
-        # on LWW + the applied-DDL location gate rather than batch ids.
-        self.runner = runner
+        self.runner = runner or ReplayRunner(pipeline=pipeline, lakes=lakes)
+        # upstream binlog epoch (bumped after a source re-master restarts
+        # file_seq), threaded by the runner into every merge; the
+        # default 0 never overrides an epoch set on a given runner
+        if epoch:
+            self.runner.epoch = epoch
         self.ddl_events = sorted(ddl_events or [], key=lambda e: e.loc())
-        # runner-mode crash durability (sharding-meta analog): restore
-        # barrier/tracker/online-DDL state saved after the last batch —
-        # spilled rows are already on disk, this remembers WHY they wait
+        # crash durability (sharding-meta analog): restore barrier/
+        # tracker/online-DDL state saved after the last batch — spilled
+        # rows are already on disk, this remembers WHY they wait
         self._runner_state_path = os.path.join(checkpoint_dir, "runner_state.json")
-        state = read_json(self._runner_state_path) if runner is not None else None
+        state = read_json(self._runner_state_path)
         if state is not None:
             self.runner.restore_state(state)
         # control-file ops (OPS) apply at most once each: the
@@ -264,22 +276,29 @@ class CdcStreamDriver:
         # batches (the rewrite_data_files scheduling a table service
         # would own on a real lakehouse)
         self.compact_every = compact_every
-        # upstream binlog epoch (bumped by the operator after a source
-        # re-master restarts file_seq) — rides every merge so the
-        # reported checkpoint advances as (epoch, file_seq, pos)
-        self.epoch = epoch
-        if self.runner is not None:
-            # runner (DDL-capable) mode merges through the runner: it
-            # must carry the same epoch, or a re-mastered source's
-            # reported checkpoint silently freezes at the old high
-            # water in exactly the mode that needs it (ADVICE r04 #3).
-            # Only thread a NON-default epoch: an operator may have set
-            # runner.epoch directly (a public field), and the ctor's
-            # default 0 must not silently zero it (review r5).
-            if epoch:
-                self.runner.epoch = epoch
-            else:
-                self.epoch = self.runner.epoch
+
+    @property
+    def pipeline(self) -> ApplyPipeline:
+        return self.runner.pipeline
+
+    def _may_hold_queries(self, batch_id: int) -> bool:
+        """Whether micro-batch `batch_id` may carry op='Q' rows, read off
+        its relay files' `op` columns with pyarrow (a Spark job here
+        would cost every DDL-free batch a second job). The file source
+        logs each batch's files in `sources/0/<batch_id>` of the
+        checkpoint, or in `<batch_id>.compact` on every 10th batch.
+        True whenever the file list cannot be read."""
+        log = os.path.join(self.checkpoint_dir, "sources", "0", str(batch_id))
+        try:
+            with open(log if os.path.exists(log) else f"{log}.compact") as f:
+                entries = [json.loads(ln) for ln in f.read().splitlines()[1:]]
+            urls = [urlparse(e["path"]) for e in entries if e["batchId"] == batch_id]
+            if not urls or any(u.scheme != "file" for u in urls):
+                return True
+            ops = pq.read_table([unquote(u.path) for u in urls], columns=["op"])["op"]
+            return bool(pc.any(pc.equal(ops, "Q")).as_py())
+        except (OSError, KeyError, ValueError):
+            return True
 
     def _extract_inline_ddl(self, batch_df: DataFrame) -> list:
         """In-band DDL: relay rows with op='Q' are query events whose
@@ -287,17 +306,19 @@ class CdcStreamDriver:
         QueryEvent.Query, syncer/syncer.go:2253 handleQueryEvent) rides
         `after.text`. They are parsed into DdlEvents here, at their
         binlog location, so a user never has to side-channel schema
-        changes — ALTERs written into the feed just work. The collect is
-        HARD-BOUNDED at `MAX_INLINE_DDL_PER_BATCH` (+1 sentinel row):
-        DDLs are rare by nature, but a gh-ost backfill or a migration
-        replay can emit thousands of query events in one micro-batch,
-        and an uncapped collect would be a driver-OOM vector — past the
-        cap the driver fails loudly with the remedy (a smaller
-        max_files_per_trigger) instead of silently
-        ballooning (VERDICT r03 #2; the reference processes one query
-        event at a time, syncer/syncer.go:2154, and cannot OOM here).
-        An UnsupportedDdl statement raises unless an error operator
-        covers that location (the handle-error escape hatch,
+        changes — ALTERs written into the feed just work. Rows at or
+        below the pipeline's location floor are obsolete (mode `all`
+        redelivers the pre-snapshot feed, whose DDL the snapshot already
+        carries), as its DMLs are. The collect is HARD-BOUNDED at
+        `MAX_INLINE_DDL_PER_BATCH` (+1 sentinel row): DDLs are rare by
+        nature, but a gh-ost backfill or a migration replay can emit
+        thousands of query events in one micro-batch, and an uncapped
+        collect would be a driver-OOM vector — past the cap the driver
+        fails loudly with the remedy (a smaller max_files_per_trigger)
+        instead of silently ballooning (the reference processes one
+        query event at a time, syncer/syncer.go:2154, and cannot OOM
+        here). An UnsupportedDdl statement raises unless an error
+        operator covers that location (the handle-error escape hatch,
         syncer/handle_error.go); a covered one stands at its location
         as an `unsupported` event, and the runner resolves the operator
         there (ReplayRunner.handle_ddl) — the driver never expands it."""
@@ -318,7 +339,10 @@ class CdcStreamDriver:
                 "lower max_files_per_trigger so the batch shrinks"
             )
         out = []
+        floor = self.pipeline.location_floor or (-1, -1)
         for r in sorted(qrows, key=lambda r: (r["file_seq"], r["pos"])):
+            if (r["file_seq"], r["pos"]) <= floor:
+                continue
             try:
                 out.extend(parse_ddl(r["sql"], r["file_seq"], r["pos"]))
             except UnsupportedDdl as e:
@@ -339,77 +363,56 @@ class CdcStreamDriver:
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         t_start = time.time()
         self._apply_staged()  # batch boundary: control ops land here
-        # persist ONLY when the batch is read more than once (runner
-        # mode scans it per DDL range; a multi-target merge pins the
-        # flat batch itself, a pruning CoW merge its own input). The
-        # common tail shape — single target, MoR append — is a single
-        # pass, and caching ~100s of MB per micro-batch was pure
-        # overhead (profiled: ~25% of live-tail batch time).
-        multi_pass = (
-            self.runner is not None
-            # the txn-interval fold re-scans the raw batch after the merge
-            or self.track_txn_intervals
-        )
+        # a DDL-free batch costs its merge's job(s) alone: the Q-row
+        # collect runs only when the batch's files may hold one
+        inline = self._extract_inline_ddl(batch_df) if self._may_hold_queries(batch_id) else []
+        side = []
+        if self.ddl_events:  # no queue, no max-location job
+            mx = batch_df.agg(F.max(F.struct("file_seq", "pos"))).collect()[0][0]
+            side = [
+                e for e in self.ddl_events
+                if mx is not None and e.loc()[:2] <= (mx["file_seq"], mx["pos"])
+            ]
+        due = sorted([*side, *inline], key=lambda e: e.loc())
+        # persist ONLY when the batch is read more than once: per range
+        # of a DDL cut, and by the txn-interval fold (a multi-target
+        # merge pins the flat batch itself, a pruning CoW merge its own
+        # input); caching every live-tail batch cost ~25% of its time
+        multi_pass = bool(due) or self.track_txn_intervals
         if multi_pass:
             batch_df.persist()
         try:
-            if self.runner is not None:
-                inline = self._extract_inline_ddl(batch_df)
-                side = []
-                if self.ddl_events:  # no queue, no max-location job
-                    mx = batch_df.agg(F.max(F.struct("file_seq", "pos"))).collect()[0][0]
-                    side = [
-                        e for e in self.ddl_events
-                        if mx is not None and e.loc()[:2] <= (mx["file_seq"], mx["pos"])
-                    ]
-                due = sorted([*side, *inline], key=lambda e: e.loc())
-                merged = self.runner.replay(self.pipeline.without_queries(batch_df), due)
-                # side-channel DDLs leave the queue only once applied: an
-                # interrupted batch (stop mid-merge) replays from the
-                # checkpoint and must find them still due (the lake's
-                # applied-DDL location gate makes the re-apply a no-op)
-                self.ddl_events = self.ddl_events[len(side):]
-                self._save_runner_state()
-                lakes = self.runner.lakes
-            else:
-                # plain pipeline has no DDL surface: query events drop here
-                flat = self.pipeline.transform(self.pipeline.without_queries(batch_df))
-                stats = self.pipeline.merge(
-                    flat, self.lakes, batch_id=batch_id, stream_id=self.stream_id,
-                    epoch=self.epoch,
-                )
-                lakes = {t: self.lakes[t] for t, st in stats.items() if not st.skipped}
+            merged = self.runner.replay(
+                self.pipeline.without_queries(batch_df), due,
+                batch_id=batch_id, stream_id=self.stream_id,
+            )
+            # side-channel DDLs leave the queue only once applied: an
+            # interrupted batch (stop mid-merge) replays from the
+            # checkpoint and must find them still due (the lake's
+            # applied-DDL location gate makes the re-apply a no-op)
+            self.ddl_events = self.ddl_events[len(side):]
+            self._save_runner_state()
+            # lakes whose batch-id gate refused a replayed batch merged
+            # nothing and need no compaction
+            fresh = {t for t, st in merged if not st.skipped}
             if self.compact_every and (batch_id + 1) % self.compact_every == 0:
-                for lake in lakes.values():
-                    lake.compact()
-            # `sec` covers merge and compaction, in both modes
-            sec = round(time.time() - t_start, 3)
-            if self.runner is not None:
-                # the same fields as plain mode, summed over the batch's
-                # merges; lag is the furthest-behind target's
-                lags = [lk.replication_lag_sec() for lk in lakes.values()]
-                lags = [x for x in lags if x is not None]
-                self.batch_stats.append({
-                    "batch_id": batch_id,
-                    "ddls": len(due),
-                    "n_incoming": sum(st.n_incoming for st in merged),
-                    "rows_written": sum(st.rows_written for st in merged),
-                    "buckets_touched": sum(st.n_buckets_touched for st in merged),
-                    "lag_sec": max(lags) if lags else None,
-                    "sec": sec,
-                })
-            else:
-                for target, st in stats.items():
-                    self.batch_stats.append({
-                        "batch_id": batch_id,
-                        "target": target,
-                        "skipped": st.skipped,
-                        "n_incoming": st.n_incoming,
-                        "rows_written": st.rows_written,
-                        "buckets_touched": st.n_buckets_touched,
-                        "lag_sec": self.lakes[target].replication_lag_sec(),
-                        "sec": sec,
-                    })
+                for t in fresh:
+                    self.runner.lakes[t].compact()
+            lags = [lk.replication_lag_sec() for lk in self.runner.lakes.values()]
+            lags = [x for x in lags if x is not None]
+            stats = [st for _t, st in merged]
+            self.batch_stats.append({
+                "batch_id": batch_id,
+                "skipped": bool(merged) and not fresh,
+                "ddls": len(due),
+                "n_incoming": sum(st.n_incoming for st in stats),
+                "rows_written": sum(st.rows_written for st in stats),
+                "buckets_touched": sum(st.n_buckets_touched for st in stats),
+                # the furthest-behind target's lag
+                "lag_sec": max(lags) if lags else None,
+                # merge and compaction
+                "sec": round(time.time() - t_start, 3),
+            })
             self._fold_txn_intervals(batch_df)
         finally:
             if multi_pass:
@@ -459,19 +462,21 @@ class CdcStreamDriver:
         return {k: ctl[k] for k in self.OPS if ctl.get(k) and ctl[k] != self._applied[k]}
 
     def _check(self, kind: str, op: dict, paused: bool = False):
-        """The driver's mode checks for an op of `kind`, then the
-        kind's shape check; returns what the shape check parsed."""
-        check, needs, _body = self.OPS[kind]
+        """The kind's shape check (and, for an unlock, that a shard-DDL
+        barrier exists to hold locks); returns what the check parsed."""
         if kind == "config_patch":
-            return check(op, paused)
-        if self.runner is None or (kind == "unlock_op" and self.runner.barrier is None):
-            raise ValueError(f"{kind} needs {needs}")
-        return check(op)
+            return check_config_patch(op, paused)
+        if kind == "unlock_op" and self.runner.barrier is None:
+            raise ValueError(
+                "unlock_op needs a runner with a pessimistic shard-DDL "
+                "barrier (no locks exist on this task)"
+            )
+        return self.OPS[kind][0](op)
 
     def _stage(self, ctl: dict) -> None:
         """Poll-thread side: validate each unapplied op in `ctl` and
         stage it. The ops apply at the top of the next `_apply` (a true
-        batch boundary): runner mode consults the pipeline config, the
+        batch boundary): the runner consults the pipeline config, the
         schema registry and the error operators repeatedly inside one
         replay, so an op landing mid-batch would run half a micro-batch
         under old rules and half under new. A bad op is refused here,
@@ -498,8 +503,7 @@ class CdcStreamDriver:
         writes of identical content stay distinct."""
         if not op or op == self._applied[kind]:
             return
-        _check, _needs, body = self.OPS[kind]
-        body(self, op, self._check(kind, op, paused))
+        self.OPS[kind][1](self, op, self._check(kind, op, paused))
         self._applied[kind] = op
         write_json(os.path.join(self.checkpoint_dir, f"applied_{kind}.json"), op)
 
@@ -518,22 +522,19 @@ class CdcStreamDriver:
             cfg.routes = [RouteRule(**r) for r in patch["routes"]]
             # a route to a target with no lake would silently DROP every
             # routed row (the merge loop only writes known targets).
-            # STRICT even in runner+lake_root mode (review r5): runner
-            # auto-create only fires on a CREATE TABLE event, which
-            # never arrives for an already-existing table — so a patch
-            # re-routing live tables to a lake-less target would drop
-            # their rows forever while looking accepted. Routes to
-            # not-yet-created tables belong in the task-start config.
-            known = set(self.lakes)
-            if self.runner is not None:
-                known |= set(self.runner.lakes)
-            unknown = {r.target for r in cfg.routes} - known
+            # STRICT even with a `lake_root`: runner auto-create only
+            # fires on a CREATE TABLE event, which never arrives for an
+            # already-existing table — so a patch re-routing live tables
+            # to a lake-less target would drop their rows forever while
+            # looking accepted. Routes to not-yet-created tables belong
+            # in the task-start config.
+            unknown = {r.target for r in cfg.routes} - set(self.runner.lakes)
             if unknown:
                 raise ValueError(
                     f"route patch targets {sorted(unknown)} have no lake in "
                     "this task — pre-create the lake and register it, or "
-                    "restart the task with the new route (runner mode "
-                    "auto-creates lakes only when the target's CREATE TABLE "
+                    "restart the task with the new route (a lake is "
+                    "auto-created only when the target's CREATE TABLE "
                     "arrives in-stream)"
                 )
         if "allow_tables" in patch:
@@ -551,9 +552,7 @@ class CdcStreamDriver:
         # swapping the reference is atomic; the next micro-batch reads
         # the new pipeline. The location floor (snapshot-watermark gate)
         # carries over — it is task state, not filter config
-        self.pipeline = ApplyPipeline(cfg, location_floor=self.pipeline.location_floor)
-        if self.runner is not None:
-            self.runner.pipeline = self.pipeline
+        self.runner.pipeline = ApplyPipeline(cfg, location_floor=self.pipeline.location_floor)
 
     def _apply_schema_op(self, op: dict, ev) -> None:
         """dmctl operate-schema set/remove (dm/ctl/master/
@@ -647,28 +646,12 @@ class CdcStreamDriver:
             self.batch_stats.append({"unlock_op": op.get("id"), "result": why})
         self._save_runner_state()
 
-    # the op ledger, in apply order: kind -> (shape check, the driver
-    # mode a runner-side kind needs, apply body)
+    # the op ledger, in apply order: kind -> (shape check, apply body)
     OPS = {
-        "config_patch": (check_config_patch, None, _apply_config_patch),
-        "schema_op": (
-            check_schema_op,
-            "runner mode — the schema tracker lives in ReplayRunner "
-            "(plain-pipeline tasks carry no per-table schemas)",
-            _apply_schema_op,
-        ),
-        "binlog_op": (
-            check_binlog_op,
-            "runner mode — error operators live in ReplayRunner "
-            "(plain-pipeline tasks have no DDL/skip surface)",
-            _apply_binlog_op,
-        ),
-        "unlock_op": (
-            check_unlock_op,
-            "a runner with a pessimistic shard-DDL barrier (no locks "
-            "exist on this task)",
-            _apply_unlock_op,
-        ),
+        "config_patch": (check_config_patch, _apply_config_patch),
+        "schema_op": (check_schema_op, _apply_schema_op),
+        "binlog_op": (check_binlog_op, _apply_binlog_op),
+        "unlock_op": (check_unlock_op, _apply_unlock_op),
     }
 
     def _save_runner_state(self) -> None:
@@ -739,7 +722,7 @@ class CdcStreamDriver:
         flush-before-DDL. `self.drained` tells the two apart: True only
         when the drain ran to the end of what it found."""
         self.drained = self._run({"availableNow": True}, timeout_sec)
-        if self.drained and self.runner is not None and self.ddl_events:
+        if self.drained and self.ddl_events:
             trailing, self.ddl_events = self.ddl_events, []
             self.runner.handle_ddl(*trailing)
             self.runner.drain_pending()

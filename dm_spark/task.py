@@ -12,7 +12,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dm_spark.config import TaskConfig
 from dm_spark.lake import LakeTable
@@ -36,22 +35,22 @@ class Task:
         """Full snapshot load (loader/loader.go:566 analog)."""
         return self.lake.overwrite(snapshot)
 
+    def _driver(self, location_floor: tuple[int, int] | None = None, **kw) -> CdcStreamDriver:
+        """The task's streaming driver over its lake; `location_floor`
+        filters obsolete events (table-checkpoint gating,
+        syncer/syncer.go:1983-1989) — needed when the snapshot already
+        covers a prefix of the feed."""
+        return CdcStreamDriver(
+            self.spark, self.feed_dir, self.checkpoint_dir,
+            ApplyPipeline(self.config, location_floor=location_floor),
+            {self.config.target_table: self.lake}, **kw,
+        )
+
     def run_incremental(self, from_location: tuple[int, int] | None = None,
                         max_files_per_trigger: int | None = 4) -> list[dict]:
-        """Tail the relay feed; `from_location` filters obsolete events
-        (table-checkpoint gating, syncer/syncer.go:1983-1989) — needed
-        when the snapshot already covers a prefix of the feed."""
-        pipeline = ApplyPipeline(self.config)
-        drv = CdcStreamDriver(
-            self.spark, self.feed_dir, self.checkpoint_dir, pipeline,
-            {self.config.target_table: self.lake},
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        if from_location is not None:
-            # stable field, not a transform monkeypatch: a pipeline
-            # swap (runtime config_patch) would silently drop a patched
-            # method and re-apply pre-snapshot events
-            pipeline.location_floor = from_location
+        """Drain the relay feed, in-band DDL included; events at or
+        before `from_location` are obsolete."""
+        drv = self._driver(from_location, max_files_per_trigger=max_files_per_trigger)
         stats = drv.run_available_now()
         self.drained = drv.drained
         return stats
@@ -77,21 +76,9 @@ class Task:
         merge-on-read lake's delta files back into base every N
         batches; without it a MoR tail's delta files pile up without
         bound."""
-        drv = CdcStreamDriver(
-            self.spark, self.feed_dir, self.checkpoint_dir,
-            ApplyPipeline(self.config),
-            {self.config.target_table: self.lake},
-            max_files_per_trigger=max_files_per_trigger,
-            compact_every=compact_every,
-        )
+        drv = self._driver(max_files_per_trigger=max_files_per_trigger, compact_every=compact_every)
         return drv.run_continuous(
             trigger_sec=trigger_sec,
             timeout_sec=timeout_sec if timeout_sec > 0 else 2**31,
             stop_when=stop_when,
         )
-
-
-def replication_lag_sec(lake: LakeTable, now=None) -> float | None:
-    """secondsBehindMaster analog — delegates to the single
-    implementation on LakeTable (kept for API compatibility)."""
-    return lake.replication_lag_sec(now=now)

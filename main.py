@@ -41,7 +41,7 @@ from dm_spark.streaming.driver import (
     stream_batches,
     write_json,
 )
-from dm_spark.task import Task, replication_lag_sec
+from dm_spark.task import Task
 
 # tail mode folds a merge-on-read lake's delta files into base every
 # this many batches (the tail kernel's cadence); without it a MoR
@@ -200,8 +200,8 @@ def ctl(argv: list[str]) -> int:
 
     Every op is composed through the driver's own shape check for its
     kind (`check_*` in dm_spark/streaming/driver.py), so an op the
-    driver would refuse never reaches control.json (the driver's mode
-    checks — runner mode, a shard-DDL barrier — stay driver-side).
+    driver would refuse never reaches control.json (whether an unlock's
+    task has a shard-DDL barrier is checked driver-side).
     `patch` swaps the filter family; a route patch is accepted only
     while the task is paused. A patch the driver applied is recorded
     beside the checkpoint and re-applied on every restart while
@@ -210,7 +210,7 @@ def ctl(argv: list[str]) -> int:
     `schema` is the operate-schema analog (dm/ctl/master/
     operate_schema.go, tests/tracker_ignored_ddl): get reads the
     runner state file directly; set/remove stage through control.json
-    and apply at the next batch boundary (runner-mode tasks only).
+    and apply at the next batch boundary.
 
     `binlog` is the handle-error analog (dmctl binlog skip/replace/
     revert, syncer/handle_error.go:32-73; tests/handle_error): register
@@ -313,7 +313,7 @@ def _schema_get(cp_dir: str, table: str) -> int:
     if state is None:
         raise SystemExit(
             f"schema get: no runner state at {state_path} — the task "
-            "has not committed a batch yet, or is not in runner mode"
+            "has not committed a batch yet"
         )
     schemas = state.get("schemas", {})
     if table not in schemas:
@@ -430,7 +430,7 @@ def main(argv: list[str]) -> int:
             {
                 "totals": lake.totals(),
                 "checkpoint": lake.global_checkpoint(),
-                "lag_sec": replication_lag_sec(lake),
+                "lag_sec": lake.replication_lag_sec(),
             }
         )
     )

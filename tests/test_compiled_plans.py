@@ -10,6 +10,8 @@ as one Spark job."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -210,9 +212,9 @@ def test_mor_run_tail_compacts(spark, sf_dir, tmp_path):
 
 
 def test_runner_mode_mor_tail_compacts(spark, sf_dir, tmp_path):
-    """A runner-mode (DDL-capable) driver honours `compact_every` as
-    plain mode does: every N batches the deltas of its lakes fold back
-    into base, and the state still matches the oracle."""
+    """A driver given its own runner honours `compact_every` as a
+    default-constructed one does: every N batches the deltas of its
+    lakes fold back into base, and the state still matches the oracle."""
     lake = LakeTable.create(
         spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8, write_mode="mor"
     )
@@ -233,8 +235,9 @@ def test_runner_mode_mor_tail_compacts(spark, sf_dir, tmp_path):
 
 
 def test_batch_stats_share_timing_fields_across_modes(spark, sf_dir, tmp_path):
-    """Plain and runner (DDL) mode record the same per-batch timing and
-    row-count fields, so one monitor reads either."""
+    """A default-constructed driver ("plain") and one given a runner
+    record the same per-batch timing and row-count fields, so one
+    monitor reads either."""
     shared = {"batch_id", "sec", "lag_sec", "n_incoming", "rows_written", "buckets_touched"}
     feed = feedmod.change_feed(spark, sf_dir)
     records = {}
@@ -258,3 +261,64 @@ def test_batch_stats_share_timing_fields_across_modes(spark, sf_dir, tmp_path):
     assert n_in["plain"] == n_in["runner"] > 0, n_in
     touched = {name: [s["buckets_touched"] for s in stats] for name, stats in records.items()}
     assert touched["plain"] == touched["runner"] and all(touched["plain"]), touched
+
+
+def test_ddl_free_batch_costs_its_merge_jobs_only(spark, sf_dir, tmp_path, monkeypatch):
+    """A default-constructed driver runs every batch through the
+    `ReplayRunner`, yet a batch without query events costs what its
+    merge costs: the batch's Spark jobs are exactly those of its
+    `merge_into` (plus `compact` when due), and nothing is persisted.
+    A batch that holds a Q row still cuts at the DDL: two ranges
+    merge around it and the column lands at its location."""
+    from pyspark.sql import DataFrame
+
+    persists = _count_calls(monkeypatch, DataFrame, "persist")
+    jobs: dict[str, list] = {"batch": [], "merge": [], "compact": []}
+
+    def spy(owner, attr, sink):
+        orig = getattr(owner, attr)
+
+        def wrapper(*a, **k):
+            sc = spark.sparkContext
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            before = set(sc.statusTracker().getJobIdsForGroup(group))
+            try:
+                return orig(*a, **k)
+            finally:
+                jobs[sink].append(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+
+        monkeypatch.setattr(owner, attr, wrapper)
+
+    spy(CdcStreamDriver, "_apply", "batch")
+    spy(LakeTable, "merge_into", "merge")
+    spy(LakeTable, "compact", "compact")
+    lake = LakeTable.create(
+        spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=8, write_mode="mor"
+    )
+    drv = CdcStreamDriver(
+        spark, str(tmp_path / "feed"), str(tmp_path / "cp"), ApplyPipeline(CFG),
+        {"transcripts": lake}, max_files_per_trigger=1, compact_every=2,
+    )
+    feed = feedmod.change_feed(spark, sf_dir)
+    write_feed_chunks(feed, drv.feed_dir, n_chunks=4)
+    stats = drv.run_available_now()
+    assert len(stats) == len(jobs["batch"]) == len(jobs["merge"]) == 4
+    assert len(jobs["compact"]) == 2 and not persists
+    inner = set().union(*jobs["merge"], *jobs["compact"])
+    assert all(jobs["merge"]) and set().union(*jobs["batch"]) == inner, jobs
+    assert_tables_equal(spark_final(lake), duck_replay(sf_dir))
+
+    # one more relay file, holding an ALTER amid its DMLs
+    more = feed.withColumn("file_seq", F.col("file_seq") + 1)
+    q = feedmod.query_events(spark, [
+        ("ALTER TABLE shard_0.transcripts_0 ADD COLUMN rating INT", "shard_0.transcripts_0", 1, 500),
+    ])
+    write_feed_chunks(more.unionByName(q), str(tmp_path / "more"), n_chunks=1)
+    for f in sorted(os.listdir(tmp_path / "more")):
+        if f.endswith(".parquet"):
+            os.replace(tmp_path / "more" / f, tmp_path / "feed" / f"more-{f}")
+    n_merges = len(jobs["merge"])
+    (last,) = drv.run_available_now()[4:]
+    assert last["ddls"] == 1 and len(jobs["merge"]) - n_merges == 2
+    assert [a["pos"] for a in lake._load_meta().applied_ddl] == [500]
+    assert "rating" in lake.read().columns

@@ -132,12 +132,13 @@ def test_binlog_op_validate_apply_and_guards(spark, tmp_path):
         drv._check(
             "binlog_op", {"op": "replace", "file_seq": 0, "pos": 0, "sqls": [POISON_SQL]}
         )
-    plain = CdcStreamDriver(
+    # a driver built without `runner=` runs its own runner, so it takes
+    # binlog ops as well
+    default = CdcStreamDriver(
         spark, drv.feed_dir, str(tmp_path / "cp_plain"),
         runner.pipeline, {"transcripts": runner.lake},
     )
-    with pytest.raises(ValueError, match="runner mode"):
-        plain._check("binlog_op", {"op": "skip", "file_seq": 0, "pos": 0})
+    assert default._check("binlog_op", {"op": "skip", "file_seq": 0, "pos": 0}) is None
 
 
 @pytest.mark.parametrize("sqls, ok", [

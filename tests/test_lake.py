@@ -372,8 +372,12 @@ def test_idle_cow_target_rewrites_at_most_once(spark, tmp_path):
         for t in ("busy", "idle")
     }
     flat_ddl = CHANGE_DDL + ", target_table string"
+
+    def routed(flat, target):  # each target merges the rows routed to it
+        return flat.where(F.col("target_table") == target).drop("target_table")
+
     wide = [ch(f"{t}{i}", 1, "I", "v1", 0, i, 1) + (t,) for t in lakes for i in range(100)]
-    pipe.merge(spark.createDataFrame(wide, flat_ddl), lakes, batch_id=0)
+    pipe.merge(spark.createDataFrame(wide, flat_ddl), lakes, part=routed, batch_id=0)
     idle = lakes["idle"]
     assert idle.lineage_log()[-1]["buckets_touched"] == 4
     want = rows(idle.read())
@@ -385,7 +389,7 @@ def test_idle_cow_target_rewrites_at_most_once(spark, tmp_path):
     for b in range(1, 5):
         dirs = commit_dirs()
         narrow = [ch("busy0", 1, "U", f"v{b}", b, 0, 10 + b) + ("busy",)]
-        s = pipe.merge(spark.createDataFrame(narrow, flat_ddl), lakes, batch_id=b)["idle"]
+        s = pipe.merge(spark.createDataFrame(narrow, flat_ddl), lakes, part=routed, batch_id=b)["idle"]
         meta = idle._load_meta()
         assert not s.skipped and s.n_buckets_touched == 0 and s.rows_written == 0
         assert meta.last_batch_id == b and meta.buckets == buckets

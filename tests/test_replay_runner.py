@@ -1108,3 +1108,37 @@ def test_location_ranges_partition_law(spark, loc):
     assert got == [[], [(0, 1), (0, 5)], [], [(0, 900), (1, 0), (1, 3)], [(2, 7)], []]
     flat = [x for part in got for x in part]
     assert flat == sorted(at)  # each row once, ranges in location order
+
+
+def test_ddl_admission_matches_dml_admission(spark, tmp_path):
+    """A schema event passes the block/allow rules its table's DMLs
+    pass (syncer/filter.go:122-128 skipByTable covers query events
+    too), and changes only the lake its table routes to: an ADD COLUMN
+    on a denied table, or on an unrouted one, reaches no lake. A ghost
+    table answers for its real table, so an admitted table's gh-ost
+    DDL still buffers."""
+    cfg = TaskConfig(
+        routes=[RouteRule(pattern="shard_*.transcripts_*", target="transcripts")],
+        deny_tables=["shard_9.*"],
+    )
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), SCHEMA, KEY, n_buckets=4)
+    runner = ReplayRunner(pipeline=ApplyPipeline(cfg), lake=lake)
+    applied = runner.handle_ddl(
+        DdlEvent("add_column", "shard_9.transcripts_0", 0, 1, column="x", new_type="int"),
+        DdlEvent("add_column", "other.audit", 0, 2, column="y", new_type="int"),
+        DdlEvent("add_column", "shard_0.transcripts_0", 0, 3, column="z", new_type="int"),
+    )
+    assert [a["column"] for a in applied] == ["z"]
+    cols = lake.read().columns
+    assert "z" in cols and "x" not in cols and "y" not in cols
+
+    allow = ReplayRunner(
+        pipeline=ApplyPipeline(TaskConfig(routes=cfg.routes, allow_tables=["shard_1.*"])),
+        lake=lake,
+    )
+    assert allow.handle_ddl(
+        DdlEvent("add_column", "shard_0.transcripts_0", 0, 4, column="w", new_type="int"),
+        DdlEvent("add_column", "shard_1._transcripts_1_gho", 0, 5, column="g", new_type="int"),
+    ) == []
+    assert "w" not in lake.read().columns
+    assert [a["column"] for a in allow.online_ddl.buffered["shard_1.transcripts_1"]] == ["g"]

@@ -260,7 +260,7 @@ def test_side_channel_ddl_survives_failed_batch(spark, sf_dir, tmp_path, monkeyp
     write_feed_chunks(feed, drv.feed_dir, n_chunks=2)
     replay = ReplayRunner.replay
 
-    def fail_once(self, env, due):
+    def fail_once(self, env, due, **gate):
         monkeypatch.setattr(ReplayRunner, "replay", replay)
         raise RuntimeError("interrupted mid-merge")
 

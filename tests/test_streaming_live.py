@@ -643,13 +643,15 @@ def test_operate_schema_ctl_get_set_remove(spark, tmp_path):
     drv._apply_staged()
     assert "db.t" not in runner.registry.schemas
 
-    # plain-pipeline tasks refuse loudly: no tracker to operate on
-    plain = CdcStreamDriver(
+    # a driver built without `runner=` runs its own runner, whose
+    # tracker takes schema ops as well (the shape check still applies)
+    default = CdcStreamDriver(
         spark, str(tmp_path / "feed"), str(tmp_path / "cp2"),
         ApplyPipeline(cfg), {"transcripts": lake},
     )
-    with pytest.raises(ValueError, match="runner mode"):
-        plain._check("schema_op", {"op": "set", "table": "db.t", "create": "x"})
+    assert default._check("schema_op", {"op": "remove", "table": "db.t"}) is None
+    with pytest.raises(ValueError, match="rejected by the DDL grammar"):
+        default._check("schema_op", {"op": "set", "table": "db.t", "create": "x"})
     # malformed ops refuse with the field named
     with pytest.raises(ValueError, match="set|remove"):
         drv._check("schema_op", {"op": "frobnicate", "table": "db.t"})

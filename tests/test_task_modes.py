@@ -11,7 +11,7 @@ from dm_spark import feed as feedmod
 from dm_spark.config import RouteRule, TaskConfig
 from dm_spark.lake import LakeTable
 from dm_spark.sources.relay import write_feed_chunks
-from dm_spark.task import Task, replication_lag_sec
+from dm_spark.task import Task
 
 from tests.test_pipeline_e2e import KEY, SCHEMA, assert_tables_equal, duck_replay, spark_final
 
@@ -48,7 +48,7 @@ def test_mode_all_snapshot_then_catchup(spark, sf_dir, tmp_path):
     task.run_all(snapshot, snap_loc)
 
     assert_tables_equal(spark_final(lake), duck_replay(sf_dir))
-    lag = replication_lag_sec(lake)
+    lag = lake.replication_lag_sec()
     assert lag is not None and lag > 0  # feed ts are in the past
 
 
